@@ -116,7 +116,6 @@ _SLOW = {
     "test_prep.py::test_incremental_refuses_half_landed_state",
     "test_prep.py::test_seed_then_increment_counts_match_full",
     "test_prep.py::test_zero_row_increment_crash_invalidates_seal",
-    "test_prep.py::test_winnow_seeded_state_composes_with_increments",
     "test_vader.py::test_expr_matches_python_twin_fuzz",
     "test_selection.py::test_unimax_closed_form_equals_sequential_hypothesis",
     "test_winnow.py::test_incremental_hybrid_probe_is_batch_local",
@@ -133,7 +132,33 @@ _SLOW = {
 
 
 def pytest_collection_modifyitems(config, items):
+    """Mark the ``_SLOW`` tests, and fail collection on a stale entry.
+
+    An entry names a test (``file::name``, matching every
+    parametrization) or one parametrization (``file::name[param]``).
+    An entry is stale when its file was collected whole but no item
+    matched it — the test was renamed or deleted and the entry would
+    otherwise silently stop deselecting anything. Files selected by
+    node id (``pytest tests/f.py::test_x``) are not checked."""
+    matched: set[str] = set()
+    files: set[str] = set()
     for item in items:
         rel = item.nodeid.split("tests/")[-1]
-        if rel in _SLOW:
-            item.add_marker(pytest.mark.slow)
+        files.add(rel.split("::")[0])
+        for key in (rel, rel.split("[")[0]):
+            if key in _SLOW:
+                item.add_marker(pytest.mark.slow)
+                matched.add(key)
+                break
+    partial = {
+        arg.split("::")[0].split("/")[-1] for arg in config.args if "::" in arg
+    }
+    stale = sorted(
+        e for e in _SLOW - matched
+        if e.split("::")[0] in files - partial
+    )
+    if stale:
+        raise pytest.UsageError(
+            "tests/conftest.py::_SLOW entries match no collected test "
+            f"(renamed or deleted?): {stale}"
+        )

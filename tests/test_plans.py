@@ -288,3 +288,24 @@ def test_committed_plans_md_parses_as_baseline():
     assert len(b) >= 0.9 * len(expected), (len(b), len(expected))
     unknown = set(b) - set(QUERIES)
     assert not unknown, unknown
+
+
+def test_batch_lsh_candidates_exchange_budget(spark):
+    """The batch candidate generator (the increment body with no
+    history index) shuffles the band table exactly twice — the
+    (band, bucket) shuffle shared by the rank cap and the bucket
+    group-by, then the pair dedup — and joins nothing: the history
+    branch (touched buckets, replay anti-join, union) must not leak
+    into the batch plan."""
+    from yahoofinancedatalake_spark.catalog import load_table
+    from yahoofinancedatalake_spark.operators.dedup import (
+        minhash_band_table,
+        minhash_lsh_pairs,
+    )
+
+    docs = load_table(spark, SF_DIR, "documents")
+    bands = minhash_band_table(docs, "text", "doc_id").localCheckpoint()
+    pairs = minhash_lsh_pairs(docs, "text", "doc_id", bands=bands)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+    assert "Join" not in plan, plan

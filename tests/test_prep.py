@@ -121,12 +121,15 @@ def test_prep_is_deterministic(spark, prep_out, tmp_path):
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
-def test_incremental_prep_matches_full_run(spark, tmp_path_factory):
+@pytest.mark.parametrize("split", [0, 40])
+def test_incremental_prep_matches_full_run(spark, tmp_path_factory, split):
     """Base run on history + incremental batch == full run over
     everything, through the dedup/decontam stages (the expensive
     history-touching ones) — provided the split has no cluster
-    bridging two history docs through a batch doc (asserted first;
-    bridge merges are documented as accepted incremental drift)."""
+    bridging two history docs through a batch doc (bridge merges are
+    documented as accepted incremental drift). ``split`` is the first
+    batch id; at 0 the history is empty and the whole corpus is one
+    increment against the empty state a base run lands."""
     from pyspark.sql import functions as F
 
     from yahoofinancedatalake_spark.catalog import fan_out, load_table
@@ -140,8 +143,8 @@ def test_incremental_prep_matches_full_run(spark, tmp_path_factory):
 
     docs = fan_out(load_table(spark, SF, "documents"))
     eval_set = docs.filter(F.col("doc_id") % 37 == 0)
-    hist = docs.filter(F.col("doc_id") < 40)
-    batch = docs.filter(F.col("doc_id") >= 40)
+    hist = docs.filter(F.col("doc_id") < split)
+    batch = docs.filter(F.col("doc_id") >= split)
 
     # ground truth: the full-run survivor set over everything
     full_clean = decontaminate(
@@ -167,6 +170,7 @@ def test_incremental_prep_matches_full_run(spark, tmp_path_factory):
     }
     assert base_ids | inc_ids == full_ids
     assert base_ids.isdisjoint(inc_ids)
+    assert bool(base_ids) == (split > 0)
     assert inc_counts["after_decontam"] == len(inc_ids)
     # state tables extended: next batch would see this one as history
     n_surv = spark.read.parquet(f"{root}/dedup_survivors").count()
@@ -212,7 +216,7 @@ def test_zero_row_increment_crash_invalidates_seal(
     spark, tmp_path_factory, monkeypatch
 ):
     """The append path must invalidate the old seal BEFORE the first
-    append (mirroring _land_dedup_state): a batch that dedups to ZERO
+    append: a batch that dedups to ZERO
     rows leaves every sealed count unchanged, so a crash mid-landing
     would otherwise leave the stale seal trivially certifying a
     half-extended state."""
@@ -298,8 +302,8 @@ def test_incremental_refuses_half_landed_state(spark, tmp_path_factory):
 
 
 # ---------------------------------------------------------------------------
-# Winnow near-dup backend (VERDICT r9 #4): same survivor policy,
-# deterministic matcher, backend-independent state contract.
+# Winnow and hybrid near-dup backends of near_dup_stage: same survivor
+# policy, deterministic matchers.
 # ---------------------------------------------------------------------------
 
 
@@ -344,57 +348,6 @@ def test_unknown_near_dup_backend_raises(spark):
     docs = _planted_corpus(spark)
     with pytest.raises(ValueError, match="unknown near-dup backend"):
         near_dup_stage(docs, backend="simhash")
-
-
-def test_winnow_seeded_state_composes_with_increments(
-    spark, tmp_path_factory
-):
-    """seed_prep_state(near_dup_backend='winnow') lands the same
-    state contract (survivors + fingerprints + LSH band index, all
-    derived from the survivor set), so run_prep_incremental works
-    unchanged against a winnow-seeded history."""
-    import shutil
-
-    from yahoofinancedatalake_spark.prep import (
-        run_prep_incremental,
-        seed_prep_state,
-        verify_dedup_state,
-    )
-
-    docs = _planted_corpus(spark)
-    eval_set = docs.filter(F.col("doc_id") % 37 == 0)
-    root = str(tmp_path_factory.mktemp("prep_winnow_seed"))
-    try:
-        counts = seed_prep_state(
-            spark, root, docs, eval_set, near_dup_backend="winnow"
-        )
-        spark.catalog.clearCache()
-        assert counts["input"] == 23
-        assert counts["quality_pass"] == 23
-        assert counts["after_dedup"] == 21  # clique 100/101/102 → 100
-        verify_dedup_state(spark, root)
-
-        # an increment batch: one exact dup of history, one near-dup
-        # of the kept clique doc, one genuinely new doc
-        base = " ".join(f"dup_{j} word{j}" for j in range(13))
-        new_text = " ".join(f"fresh_{j}" for j in range(25))
-        batch = spark.createDataFrame(
-            [
-                (200, " ".join(f"tok0_{j}" for j in range(25)), 180),
-                (201, base + " extraC", len(base) + 7),
-                (202, new_text, len(new_text)),
-            ],
-            "doc_id long, text string, n_chars int",
-        ).withColumn("n_chars", F.length("text"))
-        inc = run_prep_incremental(spark, root, batch, eval_set)
-        # 200 drops at the exact stage (fingerprint in history); 201
-        # drops at near-dup (component contains history doc 100);
-        # 202 survives
-        assert inc["after_exact"] == 2
-        assert inc["after_dedup"] == 1
-        verify_dedup_state(spark, root)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_hybrid_backend_matches_winnow_on_planted_near_dups(spark):
@@ -550,3 +503,27 @@ def test_state_tables_complete_after_each_increment(
         for r in spark.read.parquet(f"{root}/dedup_survivors").collect()
     }
     assert 20 not in surv2
+
+
+def test_parquet_count_refuses_ambiguous_table_dirs(spark, tmp_path):
+    """A state table directory the seal cannot count faithfully must
+    raise, not seal or verify a silent count: one with no part files
+    (a write that died before committing any), and one whose rows sit
+    in subdirectories a top-level count would miss."""
+    from yahoofinancedatalake_spark.prep import _parquet_count
+
+    with pytest.raises(FileNotFoundError):
+        _parquet_count(str(tmp_path / "absent"))
+
+    no_parts = tmp_path / "no_parts"
+    no_parts.mkdir()
+    (no_parts / "_SUCCESS").write_text("")
+    with pytest.raises(RuntimeError, match="not a flat parquet table"):
+        _parquet_count(str(no_parts))
+
+    flat = str(tmp_path / "flat")
+    spark.range(5).write.parquet(flat)
+    assert _parquet_count(flat) == 5
+    spark.range(3).write.parquet(f"{flat}/nested=1")
+    with pytest.raises(RuntimeError, match="subdirectories"):
+        _parquet_count(flat)

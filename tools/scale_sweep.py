@@ -331,6 +331,7 @@ def lsh_stats(spark, d, table="documents", id_col="doc_id", gated=True):
         docs, "text", id_col, n_hashes=32, n_bands=8, shingle_n=3
     )
     buckets = capped_bucket_members(banded, id_col, 512).persist()
+    cands = None
     try:
         overflow = buckets.agg(F.sum("n_dropped").alias("d")).collect()[0][
             "d"
@@ -349,8 +350,9 @@ def lsh_stats(spark, d, table="documents", id_col="doc_id", gated=True):
                 .count()
             )
             out["n_docs"] = docs.count()
-        cands.unpersist()
     finally:
+        if cands is not None:
+            cands.unpersist()
         buckets.unpersist()
     return out
 

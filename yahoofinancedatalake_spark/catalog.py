@@ -93,12 +93,6 @@ def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(n)
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every synthetic table as a temp view for spark.sql use."""
-    for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def _schema_ddl(schema) -> str:
     """StructType → column DDL (``name TYPE, ...``) for CREATE TABLE."""
     return ", ".join(

@@ -104,11 +104,6 @@ def daily_change_pct(close: str = "close", open_: str = "open") -> Column:
     return F.when(o != 0, (F.col(close) - o) / o * 100.0)
 
 
-def sentiment_text(title: str = "title", summary: str = "summary") -> Column:
-    """F9 — scoring input ``f"{title}. {summary}"`` (finnhub_news.py:98)."""
-    return F.concat_ws(". ", F.col(title), F.col(summary))
-
-
 def sentiment_label(score: Column | str, threshold: float = 0.05) -> Column:
     """F10 — CASE thresholds (finnhub_news.py:41-46):
     score ≥ +t → positive; ≤ −t → negative; else neutral."""

@@ -373,7 +373,17 @@ def capped_bucket_members(
     a spillable sort instead of buffering the bucket like
     ``collect_list`` does.
     """
-    from pyspark.sql import Window
+    return _capped_buckets(banded, id_col, max_bucket_size, F.col(id_col))
+
+
+def _capped_buckets(
+    banded: DataFrame, id_col: str, max_bucket_size: int, member: Column
+) -> DataFrame:
+    """:func:`capped_bucket_members` collecting ``member`` (the id, or
+    a struct led by the id) for each of the first ``max_bucket_size``
+    members in md5(id) order. Sorting the array sorts by id first, so
+    the pair generator emits ``id_a < id_b``."""
+    from pyspark.sql import Window  # noqa: PLC0415
 
     rk = F.row_number().over(
         Window.partitionBy("band", "bucket").orderBy(
@@ -385,11 +395,7 @@ def capped_bucket_members(
         .groupBy("band", "bucket")
         .agg(
             F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("__rk") <= max_bucket_size, F.col(id_col)
-                    )
-                )
+                F.collect_list(F.when(F.col("__rk") <= max_bucket_size, member))
             ).alias("ids"),
             F.greatest(
                 F.count(F.lit(1)) - max_bucket_size, F.lit(0)
@@ -403,9 +409,10 @@ def _bucket_id_pairs(buckets: DataFrame) -> DataFrame:
     """Explode each bucket's sorted ``ids`` array into unique
     unordered (id_a, id_b) candidate pairs (index-based i<j, so each
     pair is emitted once per bucket; cross-bucket repeats are the
-    caller's ``dropDuplicates``). Shared by the batch and incremental
-    MinHash operators — the simhash path keeps its own variant
-    because its members carry probe flags and a hamming payload."""
+    caller's ``dropDuplicates``). The elements pass through as they
+    are — ids, or the (id, new) structs of an increment. The simhash
+    path keeps its own variant because its members carry probe flags
+    and a hamming payload."""
     ids = F.col("ids")
     pair_structs = F.flatten(
         F.transform(
@@ -421,6 +428,72 @@ def _bucket_id_pairs(buckets: DataFrame) -> DataFrame:
     )
 
 
+def _lsh_candidates(
+    new_bands: DataFrame,
+    index: DataFrame | None,
+    id_col: str,
+    max_bucket_size: int,
+    log_drops: bool = False,
+) -> DataFrame:
+    """The one MinHash-LSH candidate generator: the batch's band rows
+    (:func:`minhash_band_table`) against a landed band ``index`` of
+    history, ``None`` when there is no history.
+
+    Emits every candidate pair with at least one batch endpoint. Only
+    history rows in buckets the batch touches take part, and a history
+    row whose id the batch carries again (a replayed batch) is dropped
+    by an anti-join against the batch ids, so every id is a bucket
+    member once and no degenerate (id, id) pair or doubled rank slot
+    arises. The bucket cap ranks the union membership (history ∪
+    batch) with :func:`capped_bucket_members`' md5 order — capping the
+    sides independently would admit pairs a full run drops. Pair set
+    == a full run over (history ∪ batch) minus old×old pairs.
+
+    With no history the band rows feed the capped buckets directly, so
+    the plan is the bucket-key shuffle plus the pair dedup and nothing
+    else: group-by-bucket pair generation, never a self-join that
+    would re-evaluate the scan→signature subtree on both sides.
+    ``log_drops=True`` persists the bucket table, counts the overflow
+    from it and logs it; the pair consumption then reuses the
+    persisted buckets.
+    """
+    banded, member = new_bands, F.col(id_col)
+    if index is not None:
+        touched = new_bands.select("band", "bucket").distinct()
+        old = (
+            index.join(touched, ["band", "bucket"])
+            .join(new_bands.select(id_col), id_col, "left_anti")
+            .select(id_col, "band", "bucket", F.lit(False).alias("__new"))
+        )
+        banded = new_bands.select(
+            id_col, "band", "bucket", F.lit(True).alias("__new")
+        ).unionByName(old)
+        member = F.struct(
+            F.col(id_col).alias("id"), F.col("__new").alias("new")
+        )
+    buckets = _capped_buckets(banded, id_col, max_bucket_size, member)
+    if log_drops:
+        import logging  # noqa: PLC0415
+
+        buckets = buckets.persist()
+        dropped = (
+            buckets.agg(F.sum("n_dropped").alias("d")).collect()[0]["d"]
+        )
+        if dropped:
+            logging.getLogger(__name__).warning(
+                "minhash_lsh_pairs: %d bucket members beyond "
+                "max_bucket_size=%d dropped from pair generation",
+                dropped,
+                max_bucket_size,
+            )
+    pairs = _bucket_id_pairs(buckets)
+    if index is not None:
+        pairs = pairs.filter(F.col("id_a.new") | F.col("id_b.new")).select(
+            F.col("id_a.id").alias("id_a"), F.col("id_b.id").alias("id_b")
+        )
+    return pairs.dropDuplicates(["id_a", "id_b"])
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str,
@@ -433,67 +506,35 @@ def minhash_lsh_pairs(
     log_drops: bool = False,
     bands: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate near-duplicate pairs via MinHash + LSH banding.
+    """Candidate near-duplicate pairs via MinHash + LSH banding — the
+    batch run, i.e. :func:`incremental_minhash_pairs` against an empty
+    band index.
 
     signature → split into bands → explode (band_id, band_hash) →
     group by the bucket key → emit member pairs. The only heavy
     exchange is the bucket-key shuffle; band width
     (n_hashes / n_bands) sets the similarity threshold
-    ~ (1/n_bands)^(band_size⁻¹).
+    ~ (1/n_bands)^(band_size⁻¹). Empty/whitespace-only documents
+    (null signature) are dropped before banding, and buckets are
+    capped at ``max_bucket_size`` members (see
+    :func:`capped_bucket_members`); ``log_drops=True`` logs the
+    overflow (see :func:`_lsh_candidates`).
 
-    Empty/whitespace-only documents (null signature) are dropped
-    before banding: they would all share one bucket and generate
-    O(m²) candidate pairs that the Jaccard verify then discards.
-    Buckets are additionally bounded at ``max_bucket_size`` members
-    (deterministic md5 order — see :func:`capped_bucket_members`) so
-    one boilerplate mega-bucket can't blow a task; with
-    ``log_drops=True`` the bucket table is persisted, the overflow
-    total counted from it and logged, and the subsequent pair
-    consumption reuses the persisted buckets instead of re-running
-    the scan→signature→shuffle pipeline a second time.
-
-    ``bands`` (optional, r13) supplies a precomputed
-    :func:`minhash_band_table` frame for ``df`` (``n_hashes`` /
-    ``n_bands`` / ``shingle_n`` / ``seed`` are then ignored) — the
-    prep pipeline computes the band table once, shares it here AND
-    lands it as the incremental index, instead of paying the
-    signature pass twice (the winnow ``fingerprints=`` convention).
+    ``bands`` supplies a precomputed :func:`minhash_band_table` frame
+    for ``df`` (``n_hashes`` / ``n_bands`` / ``shingle_n`` / ``seed``
+    are then ignored), so a caller that also lands the band table as
+    an index pays the signature pass once.
     """
-    banded = (
-        bands
-        if bands is not None
-        else minhash_band_table(
+    if bands is None:
+        bands = minhash_band_table(
             df, text_col, id_col, n_hashes, n_bands, shingle_n, seed
         )
-    )
-    # group-by-bucket pair generation (not a self-join): the signature
-    # is computed ONCE, and the only exchanges are the bucket-key
-    # shuffle + the pair dedup — a self-join would re-evaluate the
-    # whole scan→signature subtree on both sides.
-    buckets = capped_bucket_members(banded, id_col, max_bucket_size)
-    if log_drops:
-        import logging
-
-        # persist so the eager drop-count job and the lazy pair
-        # consumption share one signature computation (the bucket
-        # table is small: <= n_buckets capped member arrays)
-        buckets = buckets.persist()
-        dropped = (
-            buckets.agg(F.sum("n_dropped").alias("d")).collect()[0]["d"]
-        )
-        if dropped:
-            logging.getLogger(__name__).warning(
-                "minhash_lsh_pairs: %d bucket members beyond "
-                "max_bucket_size=%d dropped from pair generation",
-                dropped,
-                max_bucket_size,
-            )
-    return _bucket_id_pairs(buckets).dropDuplicates(["id_a", "id_b"])
+    return _lsh_candidates(bands, None, id_col, max_bucket_size, log_drops)
 
 
 def incremental_minhash_pairs(
     new_docs: DataFrame,
-    index: DataFrame,
+    index: DataFrame | None,
     text_col: str,
     id_col: str,
     n_hashes: int = 32,
@@ -507,100 +548,26 @@ def incremental_minhash_pairs(
     LSH index — the daily-ingest shape: only the new batch is
     shingled/hashed; history participates through its landed
     (id, band, bucket) rows (:func:`minhash_band_table`), never its
-    text.
+    text. ``index=None`` is an empty history: the batch run.
 
-    Emits every candidate pair with at least one NEW endpoint, from
-    buckets touched by the batch. The bucket-size cap is applied over
-    the UNION membership (history ∪ batch) with the same md5 rank the
-    batch operator uses — capping the two sides independently would
-    admit pairs a full recompute drops, breaking the equivalence
-    below. At 100 TB this turns daily dedup from O(corpus) re-hash
-    into O(batch) hash + one (band, bucket) semi-join against the
-    landed index plus a rank window over only the touched buckets
-    (with the index table bucketed by ``bucket`` at write time the
-    join is exchange-free on the history side); the caller appends
-    the new batch's band rows to the index afterward.
-    Pair set == what a full :func:`minhash_lsh_pairs` over
-    (history ∪ batch) emits, minus old×old pairs (already known) —
-    asserted in tests, including above the cap.
+    At 100 TB this turns daily dedup from O(corpus) re-hash into
+    O(batch) hash + one (band, bucket) join against the landed index
+    plus a rank window over only the touched buckets (with the index
+    bucketed by ``bucket`` at write time the join is exchange-free on
+    the history side); the caller appends the batch's band rows to
+    the index afterward. Pair set and cap semantics: see
+    :func:`_lsh_candidates`.
 
-    ``new_bands`` (optional, r13) supplies the batch's precomputed
-    :func:`minhash_band_table` frame (hash/band parameters are then
-    ignored). The band rows feed TWO consumers here (the touched-
-    bucket set and the union membership), and the caller appends the
-    same rows to the landed index afterward — pass a persisted frame
-    and the batch pays ONE signature pass instead of three.
+    ``new_bands`` supplies the batch's precomputed band table (hash
+    and band parameters are then ignored); the caller that appends
+    the same rows to the index afterward passes a materialized frame
+    and pays one signature pass.
     """
-    from pyspark.sql import Window  # noqa: PLC0415
-
     if new_bands is None:
         new_bands = minhash_band_table(
             new_docs, text_col, id_col, n_hashes, n_bands, shingle_n, seed
         )
-    # only history rows in buckets the batch touches participate
-    touched = new_bands.select("band", "bucket").distinct()
-    old_in_touched = index.join(touched, ["band", "bucket"]).select(
-        F.col(id_col).alias("id"), "band", "bucket", F.lit(False).alias("new")
-    )
-    union_rows = (
-        new_bands.select(
-            F.col(id_col).alias("id"),
-            "band",
-            "bucket",
-            F.lit(True).alias("new"),
-        )
-        .unionByName(old_in_touched)
-        # A re-ingested id (replayed batch: present in BOTH the landed
-        # index and new_docs) would otherwise contribute TWO rows per
-        # (id, band, bucket): the i<j generator then emits a
-        # degenerate (id, id) self-pair and the duplicate consumes a
-        # max_bucket_size rank slot, diverging from the
-        # full-recompute membership this function promises. Collapse
-        # to one row, keeping new=true so its pairs still surface.
-        .groupBy("id", "band", "bucket")
-        .agg(F.max("new").alias("new"))
-    )
-    # the SAME deterministic cap as capped_bucket_members, ranked over
-    # the union membership
-    rk = F.row_number().over(
-        Window.partitionBy("band", "bucket").orderBy(
-            F.md5(F.col("id").cast("string")), F.col("id")
-        )
-    )
-    buckets = (
-        union_rows.withColumn("__rk", rk)
-        .filter(F.col("__rk") <= max_bucket_size)
-        .groupBy("band", "bucket")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("id"), F.col("new")))
-            ).alias("members")
-        )
-        .filter(F.size("members") > 1)
-    )
-    ms = F.col("members")
-    pair_structs = F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.transform(
-                F.slice(ms, i + 2, F.size(ms)),
-                lambda y: F.struct(
-                    F.least(x["id"], y["id"]).alias("id_a"),
-                    F.greatest(x["id"], y["id"]).alias("id_b"),
-                    (x["new"] | y["new"]).alias("any_new"),
-                ),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .filter(F.col("p.any_new"))
-        .select("p.id_a", "p.id_b")
-        # belt-and-suspenders vs the degenerate self-pair class the
-        # groupBy above prevents structurally
-        .filter(F.col("id_a") != F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return _lsh_candidates(new_bands, index, id_col, max_bucket_size)
 
 
 # ---------------------------------------------------------------------------
@@ -1587,13 +1554,16 @@ def hybrid_near_dup_pairs(
     bands: DataFrame | None = None,
 ) -> DataFrame:
     """Hybrid near-dup matcher: MinHash-LSH *proposes* candidate
-    pairs, winnowed-fingerprint overlap *decides* — the composition
-    the r10 scale sweeps recommended (SURVEY §8): the pure winnow
-    matcher's pair generation grows as Σ C(df,2) over the inverted
-    index (736 M candidates measured at 30×, ~8 B extrapolated at
-    100×), while LSH banding's bucket-capped candidate volume grew
-    only to 24.5 M at 100× — so at corpus scale the LSH stage bounds
-    the pair universe and the winnow stage scores ONLY those pairs.
+    pairs, winnowed-fingerprint overlap *decides* — the batch run,
+    i.e. :func:`incremental_hybrid_pairs` against an empty band
+    index, an empty fingerprint index and an empty df table.
+
+    Why the composition: the pure winnow matcher's pair generation
+    grows as Σ C(df,2) over the inverted index (736 M candidates
+    measured at 30×, ~8 B extrapolated at 100×), while LSH banding's
+    bucket-capped candidate volume grew only to 24.5 M at 100× — so
+    at corpus scale the LSH stage bounds the pair universe and the
+    winnow stage scores ONLY those pairs.
 
     Output schema and accept rule are exactly
     :func:`winnow_near_dup_pairs`'s: ``(id_a, id_b, shared bigint,
@@ -1616,59 +1586,118 @@ def hybrid_near_dup_pairs(
     query hash-gates that equality end to end. A pair LSH misses is,
     by construction, low-Jaccard (below the ~0.72 banding knee), i.e.
     outside the near-dup contract both matchers target — with ONE
-    documented exception (ADVICE r11): docs whose normalized text is
-    EMPTY (``""``/whitespace-only) produce a null MinHash signature
-    and are dropped before banding, so a winnow-accepted pair of two
-    such docs (overlap 1.0 over their shared empty fingerprint set)
-    is never proposed here. Those pairs are exact duplicates of the
+    documented exception: docs whose normalized text is EMPTY
+    (``""``/whitespace-only) produce a null MinHash signature and are
+    dropped before banding, so a winnow-accepted pair of two such
+    docs (overlap 1.0 over their shared empty fingerprint set) is
+    never proposed here. Those pairs are exact duplicates of the
     empty string, i.e. exact-dedup's job, and :func:`prep`'s
     ``exact_stage`` runs upstream of every near-dup backend, so the
     composed pipeline never sees the gap; standalone callers on a
     corpus where empty docs survive should run :func:`exact_dedup`
-    first (the same precondition the LSH backend has always had).
+    first (the same precondition the LSH backend has).
 
-    Plan shape: the LSH stage is the bucket-key shuffle +
-    capped-bucket pair explode (never a self-join — see
-    :func:`minhash_lsh_pairs`); the verify stage attaches each doc's
-    df-capped fingerprint ARRAY (int64-rehashed — see below) to the
-    candidate pairs with two id-keyed joins and intersects per pair
-    (``array_intersect``) — the :func:`hashed_ngram_jaccard` shape,
-    measured at the 100× sweep where the first-cut alternative (join
-    candidates with the EXPLODED index on ``id_a`` then ``(id_b,
-    fp)``) died ENOSPC: that intermediate is |candidates| × per-doc
-    density ≈ 5 B rows at 100×, i.e. the very Σ df² spill the hybrid
-    exists to avoid; the array form moves |candidates| rows carrying
-    two ~2 KB arrays. Fingerprints are rehashed ``xxhash64(md5_hex)``
-    for the verify arrays only (8 bytes vs the 32-byte hex string —
-    4× less candidate-join traffic); both sides of every intersection
-    use the same rehash, so ``shared`` equals the md5-string count
-    modulo ~2⁻⁶⁴ collisions (the same documented tolerance as
-    ``hashed_ngram_jaccard``; the md5 VALUES remain the oracle
-    contract of :func:`winnow_fingerprints` itself). Every verify
-    join is hinted shuffle_hash for the same reason as the pure
-    winnow matcher: both sides scale with the corpus, and cached-plan
-    size estimates once picked a 100×-replicated build side for
-    broadcast.
+    ``fingerprints`` / ``bands`` supply a precomputed ``(id_col,
+    fps)`` winnow frame (``k``/``w`` are then ignored) and band table
+    (hash parameters ignored). ``cache=True`` persists the
+    fingerprint table across its consumers — caller releases via
+    ``spark.catalog.clearCache()``.
+    """
+    return incremental_hybrid_pairs(
+        df, None, None, None, text_col, id_col,
+        k=k, w=w, df_cap=df_cap, overlap_threshold=overlap_threshold,
+        n_hashes=n_hashes, n_bands=n_bands, shingle_n=shingle_n,
+        seed=seed, max_bucket_size=max_bucket_size, cache=cache,
+        new_bands=bands, new_fps=fingerprints,
+    )
 
-    ``fingerprints`` optionally supplies a precomputed ``(id_col,
-    fps)`` frame from any winnow family member (``k``/``w`` are then
-    ignored); ``cache=True`` persists the fingerprint table across
-    its four consumers (index explode → dfreq, the kept-array build,
-    sizes) — caller releases via ``spark.catalog.clearCache()``.
-    ``bands`` (optional, r13) forwards a precomputed band table to
-    the LSH proposal stage — see :func:`minhash_lsh_pairs`.
+
+def incremental_hybrid_pairs(
+    new_docs: DataFrame,
+    band_index: DataFrame | None,
+    fp_index: DataFrame | None,
+    fp_df: DataFrame | None,
+    text_col: str,
+    id_col: str,
+    *,
+    k: int = 16,
+    w: int = 8,
+    df_cap: int = 64,
+    overlap_threshold: float = 0.6,
+    n_hashes: int = 32,
+    n_bands: int = 8,
+    shingle_n: int = 3,
+    seed: int = 42,
+    max_bucket_size: int = 512,
+    cache: bool = True,
+    new_bands: DataFrame | None = None,
+    new_fps: DataFrame | None = None,
+) -> DataFrame:
+    """Hybrid near-dup pairs for an INCREMENT against persisted state
+    (the one hybrid body; :func:`hybrid_near_dup_pairs` is the batch
+    run with all three state tables ``None``). Only the new batch is
+    shingled/minhashed/winnowed; history participates through three
+    landed tables and is NEVER rescanned:
+
+    - ``band_index``: the accumulated ``(id, band, bucket)`` rows
+      (:func:`minhash_band_table` output) — candidate generation is
+      :func:`incremental_minhash_pairs` (O(batch) hash + indexed
+      bucket join, pairs with >= 1 new endpoint);
+    - ``fp_index``: the accumulated EXPLODED ``(id, fp)`` winnow
+      fingerprint rows (uncapped) — consumed ONLY via a semi-join on
+      candidate-touched ids, so the verify stage reads O(touched
+      docs x fps/doc) rows, not the corpus (bucketed by id at rest
+      the probe is exchange-free; the locality is pinned by pytest:
+      corrupting every non-touched row changes nothing);
+    - ``fp_df``: the accumulated per-fingerprint document
+      frequencies — consumed only for the touched docs' fingerprints.
+
+    Document frequencies for the df-cap are ``history + batch``
+    (``fp_df`` covers ALL of history, the batch's own counts are one
+    O(batch) aggregation), so every decision this batch makes equals
+    what a full run over (history ∪ batch) decides — the
+    ``stream_hybrid_dedup_batch_eq`` gate asserts the pair sets are
+    identical minus the already-known old×old pairs. Precondition:
+    batch ids are disjoint from history ids (a re-ingested id would
+    double-count its fingerprints in the df — land upserts before
+    re-probing). Each batch is decided under the state SO FAR: a
+    fingerprint whose df later crosses the cap does not retro-revise
+    earlier batches' accepted pairs (a periodic full recompute is the
+    compaction that reconciles, same as for the LSH bucket caps).
+    After the probe the caller appends the batch's band rows, fp rows
+    and merged df counts to state.
+
+    Plan shape: the candidate pairs are materialized (candidate-sized
+    by design) because the verify consumes them twice; each
+    candidate-touched doc's df-capped fingerprint ARRAY is attached to
+    the pairs with two id-keyed joins and intersected per pair
+    (``array_intersect``) — the :func:`hashed_ngram_jaccard` shape.
+    Joining candidates with the EXPLODED index instead died ENOSPC at
+    the 100× sweep: that intermediate is |candidates| × per-doc
+    density ≈ 5 B rows, the very Σ df² spill the hybrid exists to
+    avoid. Fingerprints are rehashed ``xxhash64(md5_hex)`` for the
+    verify arrays only (8 bytes vs the 32-byte hex string); both
+    sides of every intersection use the same rehash, so ``shared``
+    equals the md5-string count modulo ~2⁻⁶⁴ collisions. The
+    corpus-sized joins are hinted shuffle_hash: cached-plan size
+    estimates once picked a 100×-replicated build side for broadcast.
+
+    ``cache=True`` persists the multi-consumed fingerprint frames —
+    without it the winnow extraction re-evaluates inside every join
+    branch (measured 90.8 s vs 1.7 s on a 94-doc batch); caller
+    releases via ``spark.catalog.clearCache()``. ``new_bands`` /
+    ``new_fps`` supply the batch's precomputed band table / winnow
+    fingerprint frame (hash and ``k``/``w`` parameters are then
+    ignored), so a caller that appends both to state pays each
+    extraction once.
     """
     from yahoofinancedatalake_spark.functions.scalars import (  # noqa: PLC0415
         dround,
     )
 
-    # Materialize the candidate pairs (r12): the verify stage below
-    # now consumes them twice — the touched-id set that bounds the
-    # array build, and the pair joins themselves — and the table is
-    # the LSH stage's bounded output (candidate-sized by design), so
-    # the checkpoint is cheap at any corpus size.
-    cand = minhash_lsh_pairs(
-        df,
+    cand = incremental_minhash_pairs(
+        new_docs,
+        band_index,
         text_col,
         id_col,
         n_hashes=n_hashes,
@@ -1676,45 +1705,57 @@ def hybrid_near_dup_pairs(
         shingle_n=shingle_n,
         seed=seed,
         max_bucket_size=max_bucket_size,
-        bands=bands,
+        new_bands=new_bands,
     ).transform(stage_boundary)
-    touched = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias(id_col)
-    ).dropDuplicates([id_col])
-    fps = (
-        fingerprints
-        if fingerprints is not None
-        else winnow_fingerprints(df, text_col, id_col, k=k, w=w)
-    )
+    if new_fps is None:
+        new_fps = winnow_fingerprints(new_docs, text_col, id_col, k=k, w=w)
     if cache:
-        fps = fps.persist()
-    idx = fps.select(F.col(id_col), F.explode("fps").alias("fp"))
-    sizes = fps.select(F.col(id_col), F.size("fps").alias("n_fp"))
+        # persist the ARRAY form before exploding: Generate over the
+        # un-materialized extraction re-evaluates the per-doc
+        # transform per output row
+        new_fps = new_fps.persist()
+    new_idx = new_fps.select(F.col(id_col), F.explode("fps").alias("fp"))
+    # broadcast: the touched-id set is <= 2x candidate pairs
+    touched = F.broadcast(
+        cand.select(F.explode(F.array("id_a", "id_b")).alias(id_col))
+        .dropDuplicates([id_col])
+    )
+    rel_idx = new_idx.join(touched, id_col, "left_semi")
     # document frequencies stay GLOBAL (the df-cap is a corpus-wide
-    # statistic — restricting it would change which fingerprints are
-    # boilerplate and break the winnow-equality contract)
-    dfreq = idx.groupBy("fp").agg(F.count("*").alias("df"))
-    # per-doc df-capped fingerprint arrays, int64-rehashed
-    # (docstring), built ONLY for candidate-touched docs (r12 — the
-    # incremental_hybrid_pairs verify shape applied to the batch
-    # matcher): the downstream pair joins are inner on the ids, so a
-    # left-semi restriction to `touched` is result-invariant and the
-    # collect_list aggregation shrinks from every doc to the pair
-    # universe's endpoints
-    kept_arr = (
-        # broadcast (r13): `touched` is <= 2x candidate pairs — bounded
-        # small by design — so the shuffle_hash hint here paid two
-        # corpus-side Exchanges for a model-sized build side
-        idx.join(F.broadcast(touched), id_col, "left_semi")
-        .join(
-            dfreq.filter(
-                (F.col("df") >= 2) & (F.col("df") <= df_cap)
-            ).hint("shuffle_hash"),
-            "fp",
+    # statistic): the batch's own counts, plus history's for the
+    # fingerprints the touched docs carry
+    df_tot = new_idx.groupBy("fp").agg(F.count("*").alias("df"))
+    if fp_index is not None:
+        rel_idx = rel_idx.unionByName(
+            fp_index.select(F.col(id_col), "fp").join(
+                touched, id_col, "left_semi"
+            )
         )
+        df_tot = (
+            rel_idx.select("fp").distinct()
+            .join(fp_df.hint("shuffle_hash"), "fp", "left")
+            .join(
+                df_tot.withColumnRenamed("df", "bdf").hint("shuffle_hash"),
+                "fp",
+                "left",
+            )
+            .select(
+                "fp",
+                (
+                    F.coalesce(F.col("df"), F.lit(0))
+                    + F.coalesce(F.col("bdf"), F.lit(0))
+                ).alias("df"),
+            )
+        )
+    if cache:
+        rel_idx = rel_idx.persist()
+    kept = df_tot.filter((F.col("df") >= 2) & (F.col("df") <= df_cap))
+    kept_arr = (
+        rel_idx.join(kept.select("fp").hint("shuffle_hash"), "fp")
         .groupBy(id_col)
         .agg(F.collect_list(F.xxhash64("fp")).alias("kfps"))
     )
+    sizes = rel_idx.groupBy(id_col).agg(F.count("*").alias("n_fp"))
     fa = kept_arr.select(F.col(id_col).alias("id_a"), F.col("kfps").alias("fa"))
     fb = kept_arr.select(F.col(id_col).alias("id_b"), F.col("kfps").alias("fb"))
     pairs = (
@@ -1736,12 +1777,7 @@ def hybrid_near_dup_pairs(
         pairs.join(sa.hint("shuffle_hash"), "id_a")
         .join(sb.hint("shuffle_hash"), "id_b")
         .filter(ov >= overlap_threshold)
-        .select(
-            "id_a",
-            "id_b",
-            "shared",
-            dround(ov, 4).alias("overlap"),
-        )
+        .select("id_a", "id_b", "shared", dround(ov, 4).alias("overlap"))
     )
 
 
@@ -1858,172 +1894,4 @@ def paragraph_dedup(
         F.array_join(
             F.transform("__kept_pos", span_at), " "
         ).alias("new_text"),
-    )
-
-
-def incremental_hybrid_pairs(
-    new_docs: DataFrame,
-    band_index: DataFrame,
-    fp_index: DataFrame,
-    fp_df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    k: int = 16,
-    w: int = 8,
-    df_cap: int = 64,
-    overlap_threshold: float = 0.6,
-    n_hashes: int = 32,
-    n_bands: int = 8,
-    shingle_n: int = 3,
-    seed: int = 42,
-    max_bucket_size: int = 512,
-    cache: bool = True,
-    new_bands: DataFrame | None = None,
-    new_fps: DataFrame | None = None,
-) -> DataFrame:
-    """Hybrid near-dup pairs for an INCREMENT against persisted state
-    — the daily-ingest mode of :func:`hybrid_near_dup_pairs`
-    (streaming rung 16, VERDICT r11 #4): only the new batch is
-    shingled/minhashed/winnowed; history participates through three
-    landed tables and is NEVER rescanned:
-
-    - ``band_index``: the accumulated ``(id, band, bucket)`` rows
-      (:func:`minhash_band_table` output) — candidate generation is
-      :func:`incremental_minhash_pairs` (O(batch) hash + indexed
-      bucket join, pairs with >= 1 new endpoint);
-    - ``fp_index``: the accumulated EXPLODED ``(id, fp)`` winnow
-      fingerprint rows (uncapped) — consumed ONLY via a semi-join on
-      candidate-touched ids, so the verify stage reads O(touched
-      docs x fps/doc) rows, not the corpus (bucketed by id at rest
-      the probe is exchange-free; the locality is pinned by pytest:
-      corrupting every non-touched row changes nothing);
-    - ``fp_df``: the accumulated per-fingerprint document
-      frequencies — consumed only for the touched docs' fingerprints
-      (a semi-join on ~batch-sized distinct fps).
-
-    Document frequencies for the df-cap are ``history + batch``
-    (``fp_df`` already covers ALL of history, the batch's own counts
-    are one O(batch) aggregation), so every decision this batch
-    makes equals what a full :func:`hybrid_near_dup_pairs` over
-    (history ∪ batch) decides — the ``stream_hybrid_dedup_batch_eq``
-    gate asserts the pair sets are identical minus the already-known
-    old×old pairs. Precondition: batch ids are disjoint from history
-    ids (a re-ingested id would double-count its fingerprints in the
-    df — land upserts before re-probing; the candidate stage handles
-    replayed ids, see :func:`incremental_minhash_pairs`).
-
-    Multi-epoch semantics (documented, not hidden): each batch is
-    decided under the state SO FAR — a fingerprint whose df later
-    crosses the cap does not retro-revise earlier batches' accepted
-    pairs (exactly the published incremental-dedup contract; a
-    periodic full recompute is the compaction that reconciles, same
-    as for the LSH bucket caps). After the probe the caller appends
-    the batch's band rows, fp rows, and merged df counts to state.
-
-    ``cache=True`` persists the three internally multi-consumed
-    frames (candidates, the batch fingerprint index, the touched-doc
-    index) — without it the interpreted winnow HOF extraction and
-    the whole candidate pipeline re-evaluate inside every join
-    branch, the same measured blowup the batch matcher documents;
-    caller releases via ``spark.catalog.clearCache()``.
-
-    ``new_bands`` / ``new_fps`` (optional, r13) supply the batch's
-    precomputed band table / winnow fingerprint frame (hash and
-    ``k``/``w`` parameters are then ignored). The streaming caller
-    appends both to state after the probe — pass persisted frames
-    and the batch pays each extraction pass once instead of twice.
-    """
-    cand = incremental_minhash_pairs(
-        new_docs,
-        band_index,
-        text_col,
-        id_col,
-        n_hashes=n_hashes,
-        n_bands=n_bands,
-        shingle_n=shingle_n,
-        seed=seed,
-        max_bucket_size=max_bucket_size,
-        new_bands=new_bands,
-    )
-    if new_fps is None:
-        new_fps = winnow_fingerprints(new_docs, text_col, id_col, k=k, w=w)
-    if cache:
-        # persist the ARRAY form before exploding: Generate over the
-        # un-materialized interpreted-HOF extraction re-evaluates the
-        # whole per-doc transform per output row (measured 90.8 s vs
-        # 1.7 s on a 94-doc batch) — the batch matcher's documented
-        # uncached pathology, same fix
-        cand = cand.persist()
-        new_fps = new_fps.persist()
-    new_idx = new_fps.select(
-        F.col(id_col), F.explode("fps").alias("fp")
-    )
-    batch_df = new_idx.groupBy("fp").agg(F.count("*").alias("bdf"))
-    ids = (
-        cand.select(F.col("id_a").alias(id_col))
-        .unionByName(cand.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    rel_idx = (
-        new_idx.join(ids, id_col, "left_semi")
-        .unionByName(
-            fp_index.select(F.col(id_col), "fp").join(
-                ids, id_col, "left_semi"
-            )
-        )
-    )
-    if cache:
-        rel_idx = rel_idx.persist()
-    rel_fps = rel_idx.select("fp").distinct()
-    df_tot = (
-        rel_fps.join(fp_df.hint("shuffle_hash"), "fp", "left")
-        .join(batch_df.hint("shuffle_hash"), "fp", "left")
-        .select(
-            "fp",
-            (
-                F.coalesce(F.col("df"), F.lit(0))
-                + F.coalesce(F.col("bdf"), F.lit(0))
-            ).alias("df_tot"),
-        )
-    )
-    kept = df_tot.filter(
-        (F.col("df_tot") >= 2) & (F.col("df_tot") <= df_cap)
-    ).select("fp")
-    kept_arr = (
-        rel_idx.join(kept.hint("shuffle_hash"), "fp")
-        .groupBy(id_col)
-        .agg(F.collect_list(F.xxhash64("fp")).alias("kfps"))
-    )
-    sizes = rel_idx.groupBy(id_col).agg(F.count("*").alias("n_fp"))
-    fa = kept_arr.select(
-        F.col(id_col).alias("id_a"), F.col("kfps").alias("fa")
-    )
-    fb = kept_arr.select(
-        F.col(id_col).alias("id_b"), F.col("kfps").alias("fb")
-    )
-    pairs = (
-        cand.join(fa.hint("shuffle_hash"), "id_a")
-        .join(fb.hint("shuffle_hash"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("fa", "fb"))
-            .cast("bigint")
-            .alias("shared"),
-        )
-        .filter(F.col("shared") >= 1)
-    )
-    from yahoofinancedatalake_spark.functions.scalars import (  # noqa: PLC0415
-        dround,
-    )
-
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_fp").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_fp").alias("n_b"))
-    ov = F.col("shared").cast("double") / F.least("n_a", "n_b")
-    return (
-        pairs.join(sa.hint("shuffle_hash"), "id_a")
-        .join(sb.hint("shuffle_hash"), "id_b")
-        .filter(ov >= overlap_threshold)
-        .select("id_a", "id_b", "shared", dround(ov, 4).alias("overlap"))
     )

@@ -91,16 +91,6 @@ def fake_decoder(payload: bytes, fmt: str) -> np.ndarray:
     return (arr.astype(np.float64) - 128.0) / 128.0
 
 
-def _decoder_for(kind: str) -> Decoder:
-    if kind not in _DECODERS:
-        raise NotImplementedError(
-            f"no decoder registered for kind={kind!r}; call "
-            "register_decoder() with a real codec (Pillow/soundfile/pyav) "
-            "or multimodal.fake_decoder for tests"
-        )
-    return _DECODERS[kind]
-
-
 def extract_features(df: DataFrame, batch_hint: int | None = None) -> DataFrame:
     """Decode + featurize every asset: Arrow-batched ``mapInPandas``.
 

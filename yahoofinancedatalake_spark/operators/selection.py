@@ -67,10 +67,14 @@ KN_DISCOUNT = 0.75
 
 
 def _const_key(c: Column) -> Column:
-    """Data-derived always-0 key for folding a 1-row total into a big
-    frame via an EQUI-join (BroadcastHashJoin) — a literal key would
-    constant-fold into the BroadcastNestedLoopJoin the plan suite
-    treats as a scale killer (same helper as the query registry's)."""
+    """The data-derived constant key for folding a 1-row aggregate
+    into a big table via an EQUI-join (BroadcastHashJoin): evaluates
+    to 0 on every row, but because the key is DERIVED FROM DATA
+    Catalyst cannot constant-fold the join condition away (a literal
+    key on both sides degenerates straight back to the
+    BroadcastNestedLoopJoin the plan suite treats as a scale killer).
+    Shared by the selection operators and, through the query
+    registry, by every scalar-subquery-shaped query in the pack."""
     return F.pmod(F.xxhash64(c), F.lit(1)).cast("int")
 
 

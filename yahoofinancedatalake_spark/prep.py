@@ -8,10 +8,8 @@ training-data operators into one deterministic Spark job:
     documents
       → quality gate        (length/stopword heuristics, map-side)
       → exact dedup         (16-byte content fingerprint, one shuffle)
-      → near-dup removal    (selectable backend — MinHash-LSH
-                             candidates → hashed-Jaccard verify, or
-                             the deterministic winnowed-inverted-index
-                             matcher — → connected components → keep
+      → near-dup removal    (MinHash-LSH candidates → hashed-Jaccard
+                             verify → connected components → keep
                              the min-id doc per cluster)
       → decontamination     (drop docs sharing an n-gram with the
                              benchmark/eval set — md5 equi-join)
@@ -26,6 +24,11 @@ Every stage is the SAME operator the oracle-gated query pack verifies
 the pipeline's correctness is inherited from the driver gate rather
 than re-proven here; ``tests/test_prep.py`` asserts the composition
 (counts monotone, no contaminated survivors, determinism across runs).
+
+Dedup has one sequence (:func:`_dedup_and_land`): a full run is an
+increment against an empty state, and every run lands the state
+(survivors, fingerprints, LSH band index, sealed by a manifest) that
+the next increment dedups against.
 
 Scale shape: stages 1, 5, 6 are narrow map-side transforms; the wide
 exchanges are exact-dedup's fingerprint agg, LSH's bucket shuffle, the
@@ -94,106 +97,150 @@ def near_dup_stage(
     exact: DataFrame,
     id_col: str = "doc_id",
     backend: str = "lsh",
-    bands: DataFrame | None = None,
 ) -> DataFrame:
     """Stage 3 — near-dup cluster removal over exact-dedup survivors:
-    candidate/verified pairs from the selected matcher → connected
-    components → anti-join away every node that is not its cluster's
-    min id (the deterministic keeper — identical survivor policy for
-    both backends).
+    verified pairs from the selected matcher → connected components →
+    anti-join away every node that is not its cluster's min id (the
+    deterministic keeper — identical survivor policy for every
+    backend).
 
-    Backends (VERDICT r9 #4):
+    Backends:
 
-    - ``"lsh"`` (default): MinHash-LSH candidates → hashed-Jaccard
-      verify at :data:`JACCARD_THRESHOLD`. Probabilistic candidate
-      generation (the bucket cap is partitioning-dependent), so the
-      composed-pipeline oracle needs the engine's own candidate pairs
-      landed as a pre-filter at scale.
+    - ``"lsh"`` (default): the prep pipeline's own candidate → verify
+      → components code (:func:`_lsh_losers`) with no history —
+      MinHash-LSH candidates, hashed-Jaccard verify at
+      :data:`JACCARD_THRESHOLD`.
     - ``"winnow"``: winnowed-fingerprint inverted-index matcher
       (``operators/dedup.py:winnow_near_dup_pairs``, the gated
       ``winnow_near_dup`` query's operator at its exact parameters).
-      Fully DETERMINISTIC — the df-cap depends only on (fingerprint,
-      document frequency) — so this mode is exactly replayable on any
-      engine and its composed gate (``prep_stage_counts_winnow``)
-      needs no candidate-rewrite oracle machinery. Note the matcher
-      persist()s its fingerprint table internally (cache=True): the
-      caller owns the release (``spark.catalog.clearCache()`` after
-      consuming, as bench/driver runs do).
-    - ``"hybrid"`` (r11): MinHash-LSH candidates scored by
+      Fully deterministic — the df-cap depends only on (fingerprint,
+      document frequency) — so its composed gate
+      (``prep_stage_counts_winnow``) needs no candidate-rewrite oracle
+      machinery. The matcher persist()s its fingerprint table
+      internally (cache=True): the caller releases it with
+      ``spark.catalog.clearCache()``.
+    - ``"hybrid"``: MinHash-LSH candidates scored by
       winnowed-fingerprint overlap
       (``operators/dedup.py:hybrid_near_dup_pairs`` at the gated
-      ``hybrid_near_dup`` query's parameters) — the winnow accept
-      rule with LSH bounding the pair universe, the 100 TB scale
-      path for the winnow policy (the pure matcher's Σ C(df,2)
-      candidate growth measured 736 M at the 30× sweep vs LSH's
-      24.5 M at 100×). Deterministic like "winnow" (both caps are
-      partitioning-independent); persists its fingerprint table
-      internally too (same clearCache contract).
+      ``hybrid_near_dup`` query's parameters) — the winnow accept rule
+      with LSH bounding the pair universe. Deterministic like
+      "winnow"; same clearCache contract.
 
     The LSH-vs-winnow thresholds are NOT the same policy (Jaccard
     0.9 exact-ish replicas vs overlap-coefficient 0.5 substring
     containment); the equivalence pytest plants near-dups that trip
     both.
 
-    Precondition (shared by "lsh" and "hybrid", ADVICE r11): docs
-    whose normalized text is empty/whitespace-only carry no MinHash
-    signature, so LSH-proposed backends never pair two of them —
-    the pure "winnow" backend would (overlap 1.0 on the empty
-    fingerprint set). Irrelevant in this pipeline because
-    :func:`exact_stage` runs first and collapses every empty-text
-    group to its min-id keeper before any matcher sees the corpus.
+    Precondition (shared by "lsh" and "hybrid"): docs whose
+    normalized text is empty/whitespace-only carry no MinHash
+    signature, so LSH-proposed backends never pair two of them — the
+    pure "winnow" backend would (overlap 1.0 on the empty fingerprint
+    set). Irrelevant in this pipeline because :func:`exact_stage` runs
+    first and collapses every empty-text group to its min-id keeper.
     """
     from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
-        connected_components,
-        hashed_ngram_jaccard,
         hybrid_near_dup_pairs,
-        minhash_lsh_pairs,
         winnow_near_dup_pairs,
     )
 
     if backend == "lsh":
-        # Materialize the candidate pairs, then verify ONLY the docs a
-        # candidate touches (r12 — the run_prep_incremental verify
-        # shape applied to the batch path): un-restricted, the verify
-        # join computed shingle hashes for EVERY doc on both join
-        # sides — two corpus-sized Python-boundary passes to score a
-        # candidate set that touches a tiny fraction of docs. The
-        # checkpoint is candidate-sized (the LSH stage's bounded
-        # output); the semi-join restricts the shingle recompute to
-        # touched docs. Inner joins on (id_a, id_b) make the
-        # restriction result-invariant.
-        cand = minhash_lsh_pairs(
-            exact, "text", id_col, n_hashes=32, n_bands=8, shingle_n=3,
-            bands=bands,
-        ).transform(stage_boundary)
-        cand_ids = cand.select(
-            F.explode(F.array("id_a", "id_b")).alias(id_col)
-        ).dropDuplicates([id_col])
-        # broadcast (r13): the touched-id set is candidate-bounded, so
-        # the restriction must not cost a corpus-side shuffle
-        verify_docs = exact.join(F.broadcast(cand_ids), id_col, "left_semi")
-        verified = hashed_ngram_jaccard(
-            cand, verify_docs, id_col, "text", shingle_n=3
-        ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        losers = _lsh_losers(exact, id_col)
     elif backend == "winnow":
         # defaults = the gated winnow_near_dup query's parameters
         # (k=16, w=8, df_cap=64, overlap >= 0.5); already verified
         # pairs — the matcher computes exact overlap, no second pass
-        verified = winnow_near_dup_pairs(exact, "text", id_col)
+        losers = _component_losers(
+            winnow_near_dup_pairs(exact, "text", id_col), id_col
+        )
     elif backend == "hybrid":
         # defaults = the gated hybrid_near_dup query's parameters
         # (LSH 32 hashes / 8 bands / 3-shingles proposing; winnow
         # k=16, w=8, df_cap=64, overlap >= 0.6 deciding)
-        verified = hybrid_near_dup_pairs(exact, "text", id_col, bands=bands)
+        losers = _component_losers(
+            hybrid_near_dup_pairs(exact, "text", id_col), id_col
+        )
     else:
         raise ValueError(
             f"unknown near-dup backend {backend!r} (lsh|winnow|hybrid)"
         )
-    comps = connected_components(verified.select("id_a", "id_b"))
-    losers = comps.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
     return exact.join(losers, id_col, "left_anti")
+
+
+def _lsh_losers(
+    batch: DataFrame,
+    id_col: str = "doc_id",
+    bands: DataFrame | None = None,
+    index: DataFrame | None = None,
+    survivors: DataFrame | None = None,
+) -> DataFrame:
+    """The near-dup ids to drop from ``batch``: MinHash-LSH candidates
+    against the history band ``index`` → hashed-Jaccard verify over
+    the candidate-touched docs of ``survivors`` ∪ ``batch`` →
+    components with the history-taint rule (:func:`_component_losers`).
+    ``index``/``survivors`` ``None`` is an empty history (the batch
+    run); ``bands`` is the batch's precomputed band table.
+
+    The candidate pairs are materialized (candidate-sized by design)
+    because the verify consumes them twice; the touched-id set is
+    broadcast so restricting the verify side costs no corpus-side
+    shuffle, and the shingle hashes are computed only for docs some
+    candidate touches. The verify joins are inner on (id_a, id_b), so
+    the restriction is result-invariant.
+    """
+    from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
+        hashed_ngram_jaccard,
+        incremental_minhash_pairs,
+    )
+
+    cand = incremental_minhash_pairs(
+        batch, index, "text", id_col, n_hashes=32, n_bands=8, shingle_n=3,
+        new_bands=bands,
+    ).transform(stage_boundary)
+    cand_ids = cand.select(
+        F.explode(F.array("id_a", "id_b")).alias(id_col)
+    ).dropDuplicates([id_col])
+    docs = batch.select(id_col, "text")
+    if survivors is not None:
+        docs = survivors.select(id_col, "text").unionByName(docs)
+    verified = hashed_ngram_jaccard(
+        cand,
+        docs.join(F.broadcast(cand_ids), id_col, "left_semi"),
+        id_col,
+        "text",
+        shingle_n=3,
+    ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    return _component_losers(verified, id_col, survivors)
+
+
+def _component_losers(
+    verified: DataFrame,
+    id_col: str = "doc_id",
+    survivors: DataFrame | None = None,
+) -> DataFrame:
+    """Connected components of the verified pairs → the ids to drop:
+    every non-min member of a component and, when history
+    ``survivors`` are given, every member of a component that holds a
+    history doc (history is immutable, and its keeper precedes any
+    batch id). Known incremental drift: a batch doc that BRIDGES two
+    history clusters cannot retro-drop history, where a full
+    recompute would keep one fewer doc."""
+    from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
+        connected_components,
+    )
+
+    comps = connected_components(verified.select("id_a", "id_b"))
+    lose = F.col("node") != F.col("component")
+    if survivors is not None:
+        old = survivors.select(F.col(id_col).alias("node"))
+        tainted = (
+            comps.join(F.broadcast(old), "node", "left_semi")
+            .select("component")
+            .distinct()
+            .withColumn("__tainted", F.lit(True))
+        )
+        comps = comps.join(F.broadcast(tainted), "component", "left")
+        lose = lose | F.col("__tainted").isNotNull()
+    return comps.filter(lose).select(F.col("node").alias(id_col))
 
 
 def drop_near_dups(
@@ -215,7 +262,7 @@ def paragraph_stage(
     id_col: str = "doc_id",
     para_words: int = PARA_WORDS,
 ) -> DataFrame:
-    """Stage 3b (r12, off by default) — PARAGRAPH-granularity dedup
+    """Stage 3b (off by default) — PARAGRAPH-granularity dedup
     (Lee et al. 2022; Dolma's paragraph dedup): after the doc-level
     matchers have decided whole documents, duplicated paragraphs
     *inside* the survivors are collapsed to their first occurrence
@@ -419,22 +466,32 @@ def _parquet_count(path: str) -> int:
     """Row count of a landed parquet table from its FOOTERS — no
     Spark job. Sums ``metadata.num_rows`` over the part files, which
     is exactly the number a ``spark.read.parquet(path).count()``
-    returns (the footers are the writers' own committed row counts).
-    Replaces the three count jobs each seal/verify used to launch
-    (r13): a metadata read per file costs ~1 ms where each Spark
-    count paid a full job's scheduling floor; at real scale this is
-    the same O(files) driver metadata work a scan's planning phase
-    already does."""
-    import glob  # noqa: PLC0415
+    returns (the footers are the writers' own committed row counts);
+    a metadata read per file costs ~1 ms where a Spark count pays a
+    full job's scheduling floor.
+
+    Fails loudly instead of returning a silent count: a missing table
+    raises ``FileNotFoundError`` like the Spark read would, and a
+    table directory with no part files (a write that died before
+    committing any) or with subdirectories (partitions whose rows a
+    top-level count would miss) raises ``RuntimeError``."""
     import os  # noqa: PLC0415
 
     import pyarrow.parquet as pq  # noqa: PLC0415
 
-    files = glob.glob(os.path.join(path, "*.parquet"))
-    if not files and not os.path.isdir(path):
-        # keep the pre-r13 failure mode: a missing table raises like
-        # the Spark read did, rather than sealing a silent zero
+    if not os.path.isdir(path):
         raise FileNotFoundError(path)
+    entries = list(os.scandir(path))
+    subdirs = [e.name for e in entries if e.is_dir()]
+    files = [
+        e.path for e in entries
+        if e.name.endswith(".parquet") and not e.name.startswith((".", "_"))
+    ]
+    if subdirs or not files:
+        raise RuntimeError(
+            f"state table {path} is not a flat parquet table "
+            f"(part files: {len(files)}, subdirectories: {subdirs})"
+        )
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
@@ -489,59 +546,123 @@ def verify_dedup_state(spark: SparkSession, root: str) -> dict[str, int]:
     return actual
 
 
-def _land_dedup_state(
+def _dedup_and_land(
     spark: SparkSession,
     root: str,
-    deduped: DataFrame,
-    bands: DataFrame | None = None,
-):
-    """Persist the incremental-dedup state next to the outputs: the
-    post-dedup survivor docs (text included — the near-dup verify side
-    for future increments), their fingerprints, and their LSH band
-    index. These three tables are what lets the NEXT batch dedup
-    against history in O(batch) instead of re-shingling the corpus.
-    The landing is sealed by a manifest written last
-    (:func:`verify_dedup_state` checks it before any increment).
+    docs: DataFrame,
+    counts: dict[str, int],
+    eval_docs: DataFrame | None,
+    fresh: bool,
+) -> None:
+    """The one dedup-and-land sequence behind :func:`run_prep`,
+    :func:`seed_prep_state` and :func:`run_prep_incremental`. History
+    takes part ONLY through the landed state tables, never through a
+    corpus re-scan:
 
-    ``bands`` (optional, r13): a precomputed
-    :func:`minhash_band_table` frame covering a SUPERSET of the
-    survivors (the prep runners compute it once over the exact-dedup
-    survivors and share it with the near-dup matcher). The landed
-    band index is then that frame semi-joined to the survivor ids —
-    identical rows to recomputing, because the band table is a
-    deterministic per-doc map — instead of paying the corpus
-    signature pass a second time."""
+    1. quality gate
+    2. exact dedup within the batch, then against the history
+       fingerprints
+    3. LSH candidates against the history band index
+    4. touched-doc Jaccard verify over history survivors ∪ batch
+    5. connected components with the history-taint loser rule
+    6. append to the state and seal
+
+    ``fresh=True`` is the batch run: it starts from an empty state —
+    the old seal, state tables and ``clean_increments`` are removed
+    first — and steps 2–5 run with no history at all, so the batch
+    pays nothing for it. Otherwise the sealed state is verified first
+    (:func:`verify_dedup_state`). With ``eval_docs`` the deduped batch
+    is also decontaminated and appended to ``clean_increments`` before
+    the seal. Stage counts (``quality_pass``, ``after_exact``,
+    ``after_dedup``, ``after_decontam``) are added to ``counts``.
+
+    Every frame the appends read is lineage-truncated
+    (:func:`stage_boundary`) before the first append: a lazy plan
+    re-executed after an append to the table it reads would see the
+    batch as its own history and drop everything.
+    """
     import os  # noqa: PLC0415
+    import shutil  # noqa: PLC0415
 
     from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
         minhash_band_table,
         normalized_text,
     )
 
-    # Invalidate any PREVIOUS seal before the first overwrite: a
-    # crash mid-relanding over an existing root must not leave an old
-    # manifest whose counts can coincidentally match the mixed
-    # old/new tables (same-size corpus re-prep) and certify them.
-    try:
-        os.remove(_state_manifest_path(root))
-    except FileNotFoundError:
-        pass
-
-    deduped.write.mode("overwrite").parquet(f"{root}/dedup_survivors")
-    survivors = spark.read.parquet(f"{root}/dedup_survivors")
-    survivors.select(
-        "doc_id", F.md5(normalized_text(F.col("text"))).alias("fingerprint")
-    ).write.mode("overwrite").parquet(f"{root}/fingerprints")
-    # no broadcast hint: survivor ids scale with the corpus, so the
-    # semi-join strategy is left to the planner's size estimates
-    band_rows = (
-        bands.join(survivors.select("doc_id"), "doc_id", "left_semi")
-        if bands is not None
-        else minhash_band_table(
-            survivors, "text", "doc_id", n_hashes=32, n_bands=8, shingle_n=3
+    def fingerprint(frame: DataFrame) -> DataFrame:
+        return frame.withColumn(
+            "fingerprint", F.md5(normalized_text(F.col("text")))
         )
-    )
-    band_rows.write.mode("overwrite").parquet(f"{root}/band_index")
+
+    def drop_seal() -> None:
+        try:
+            os.remove(_state_manifest_path(root))
+        except FileNotFoundError:
+            pass
+
+    if fresh:
+        drop_seal()
+        for t in (*_STATE_TABLES, "clean_increments"):
+            shutil.rmtree(f"{root}/{t}", ignore_errors=True)
+        index = survivors = None
+    else:
+        verify_dedup_state(spark, root)
+        index = spark.read.parquet(f"{root}/band_index")
+        survivors = spark.read.parquet(f"{root}/dedup_survivors")
+
+    held: list[DataFrame] = []  # persisted stage frames, released below
+    try:
+        gated = quality_gate(docs).persist()
+        held.append(gated)
+        counts["quality_pass"] = gated.count()
+        exact = exact_stage(gated)
+        if survivors is not None:
+            history_fp = spark.read.parquet(f"{root}/fingerprints")
+            exact = (
+                fingerprint(exact)
+                .join(F.broadcast(history_fp.select("fingerprint")),
+                      "fingerprint", "left_anti")
+                .drop("fingerprint")
+            )
+        # consumed by the band table, the verify side and the loser
+        # anti-join; released once the survivors are materialized
+        exact = exact.persist()
+        held.append(exact)
+        counts["after_exact"] = exact.count()
+        # the batch's band table, computed once: it feeds the
+        # candidate stage and the band-index append
+        bands = stage_boundary(minhash_band_table(
+            exact, "text", "doc_id", n_hashes=32, n_bands=8, shingle_n=3
+        ))
+        losers = _lsh_losers(exact, "doc_id", bands, index, survivors)
+        deduped = exact.join(losers, "doc_id", "left_anti").transform(
+            stage_boundary
+        )
+        counts["after_dedup"] = deduped.count()
+    finally:
+        for frame in held:
+            frame.unpersist()
+
+    clean = None
+    if eval_docs is not None:
+        clean = decontaminate(deduped, eval_docs).transform(stage_boundary)
+        counts["after_decontam"] = clean.count()
+
+    # Invalidate the seal BEFORE the first append: "seal present
+    # implies the landing committed" must hold even for a batch whose
+    # appends leave every sealed count unchanged (a zero-row batch).
+    drop_seal()
+    deduped.write.mode("append").parquet(f"{root}/dedup_survivors")
+    fingerprint(deduped).select("doc_id", "fingerprint").write.mode(
+        "append"
+    ).parquet(f"{root}/fingerprints")
+    # the survivors' band rows are the batch band table filtered to
+    # them (a deterministic per-doc map — the rows a recompute emits)
+    bands.join(deduped.select("doc_id"), "doc_id", "left_semi").write.mode(
+        "append"
+    ).parquet(f"{root}/band_index")
+    if clean is not None:
+        clean.write.mode("append").parquet(f"{root}/clean_increments")
     _seal_dedup_state(spark, root)
 
 
@@ -550,72 +671,18 @@ def seed_prep_state(
     root: str,
     docs: DataFrame,
     eval_docs: DataFrame,
-    near_dup_backend: str = "lsh",
 ) -> dict[str, int]:
     """Seed the incremental-prep state from an initial corpus WITHOUT
-    the full-run packing stages: quality gate → exact dedup → near-dup
-    removal → land + seal the dedup state (the exact composition
-    :func:`run_prep` uses through its state landing), plus the
-    decontamination count so the audit rows line up with
-    :func:`run_prep_incremental`'s. Use this when the downstream
-    rebalance/split/chunk/pack stages belong to a later periodic
-    rebuild — the seed-then-increment shape the gated
+    the full-run packing stages: the first increment, run against an
+    empty state (:func:`_dedup_and_land`). Use this when the
+    downstream rebalance/split/chunk/pack stages belong to a later
+    periodic rebuild — the seed-then-increment shape the gated
     ``incremental_prep_counts`` query verifies. Returns per-stage
-    counts (``input``, ``quality_pass``, ``after_dedup``,
-    ``after_decontam``).
-
-    ``near_dup_backend`` selects the stage-3 matcher (see
-    :func:`near_dup_stage`). The landed state contract is
-    backend-independent: every state table (survivors, exact
-    fingerprints, LSH band index) is derived FROM the survivor set,
-    so increments — which dedup against the landed band index —
-    compose with a winnow-seeded history unchanged.
-
-    Stage boundaries are persist()ed while both their own count and
-    the next stage consume them (the subplan-reuse lesson), and
-    released before returning.
+    counts (``input``, ``quality_pass``, ``after_exact``,
+    ``after_dedup``, ``after_decontam``).
     """
-    from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
-        minhash_band_table,
-    )
-
     counts: dict[str, int] = {"input": docs.count()}
-    persisted: list[DataFrame] = []
-
-    def _stage(frame: DataFrame) -> DataFrame:
-        persisted.append(frame.persist())
-        return persisted[-1]
-
-    try:
-        gated = _stage(quality_gate(docs))
-        counts["quality_pass"] = gated.count()
-        # persist the exact-dedup survivors too (r12): near_dup_stage
-        # consumes them THREE times (LSH candidate generation, the
-        # Jaccard verify side, the final keeper anti-join), and
-        # un-persisted each consumer re-runs the fingerprint shuffle
-        # over the (persisted) quality survivors
-        exact = _stage(exact_stage(gated))
-        # compute the LSH band table ONCE over the exact survivors
-        # (r13) and share it between the matcher's candidate stage
-        # and the landed band index — previously the landing re-ran
-        # the full corpus signature pass the matcher had just paid
-        bands = (
-            _stage(minhash_band_table(
-                exact, "text", "doc_id",
-                n_hashes=32, n_bands=8, shingle_n=3,
-            ))
-            if near_dup_backend in ("lsh", "hybrid")
-            else None
-        )
-        deduped = _stage(
-            near_dup_stage(exact, backend=near_dup_backend, bands=bands)
-        )
-        counts["after_dedup"] = deduped.count()
-        counts["after_decontam"] = decontaminate(deduped, eval_docs).count()
-        _land_dedup_state(spark, root, deduped, bands=bands)
-    finally:
-        for frame in persisted:
-            frame.unpersist()
+    _dedup_and_land(spark, root, docs, counts, eval_docs, fresh=True)
     return counts
 
 
@@ -625,29 +692,28 @@ def run_prep(
     root: str,
     eval_docs: DataFrame | None = None,
     docs: DataFrame | None = None,
-    near_dup_backend: str = "lsh",
     paragraph_level: bool = False,
 ) -> dict[str, int]:
     """Run the whole prep DAG and land each stage under ``root``.
 
-    ``paragraph_level=True`` (r12) inserts :func:`paragraph_stage`
-    between near-dup removal and decontamination — sub-document
-    dedup that rewrites survivors' text to their first-occurrence
-    paragraph stream (Lee et al. 2022 / Dolma); off by default so
-    existing composed gates keep their committed counts.
+    Dedup is the batch run of the incremental sequence
+    (:func:`_dedup_and_land` against an empty state), so the landed
+    state (survivors + fingerprints + LSH band index) lets
+    :func:`run_prep_incremental` process future batches against this
+    run's history. Every later stage reads the LANDED survivors, so
+    the dedup subgraph never re-executes.
+
+    ``paragraph_level=True`` inserts :func:`paragraph_stage` between
+    near-dup removal and decontamination — sub-document dedup that
+    rewrites survivors' text to their first-occurrence paragraph
+    stream (Lee et al. 2022 / Dolma); off by default so existing
+    composed gates keep their committed counts.
 
     ``eval_docs`` defaults to the corpus rows with ``doc_id % 37 = 0``
     (the contamination_ngrams query's stand-in benchmark); pass a real
     benchmark table in production. ``docs`` overrides the input frame
-    (defaults to the full documents table). ``near_dup_backend``
-    selects the stage-3 matcher (``"lsh"`` default | ``"winnow"`` for
-    the exactly-replayable deterministic mode — see
-    :func:`near_dup_stage`). Returns per-stage row counts. Alongside
-    the outputs, the incremental-dedup state (survivors +
-    fingerprints + LSH band index — all derived from the survivor
-    set, so backend-independent) is landed so
-    :func:`run_prep_incremental` can process future batches against
-    this run's history.
+    (defaults to the full documents table). Returns per-stage row
+    counts.
     """
     if docs is None:
         docs = fan_out(load_table(spark, sf_dir, "documents"))
@@ -658,51 +724,7 @@ def run_prep(
     )
 
     counts: dict[str, int] = {"input": docs.count()}
-
-    from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
-        minhash_band_table,
-    )
-
-    # Stage boundaries are persist()ed while both their own count and
-    # the downstream stage consume them (r12 — the same subplan-reuse
-    # convention as seed_prep_state/prep_stage_counts; un-persisted,
-    # every stage count + next-stage consumption re-ran the whole
-    # prefix, compounding with depth). Post-dedup stages read the
-    # LANDED survivor parquet instead of the lazy dedup plan — the
-    # guide's materialize-the-intermediate rule; the state landing
-    # already paid that write.
-    persisted: list[DataFrame] = []
-
-    def _stage(frame: DataFrame) -> DataFrame:
-        persisted.append(frame.persist())
-        return persisted[-1]
-
-    try:
-        gated = _stage(quality_gate(docs))
-        counts["quality_pass"] = gated.count()
-
-        exact = _stage(exact_stage(gated))
-        # one band-table pass shared by the matcher and the landed
-        # index (r13) — see seed_prep_state
-        bands = (
-            _stage(minhash_band_table(
-                exact, "text", "doc_id",
-                n_hashes=32, n_bands=8, shingle_n=3,
-            ))
-            if near_dup_backend in ("lsh", "hybrid")
-            else None
-        )
-        deduped = _stage(
-            near_dup_stage(exact, backend=near_dup_backend, bands=bands)
-        )
-        counts["after_dedup"] = deduped.count()
-        _land_dedup_state(spark, root, deduped, bands=bands)
-    finally:
-        for frame in persisted:
-            frame.unpersist()
-
-    # every downstream consumer reads the landed survivors — the
-    # dedup subgraph never re-executes past this point
+    _dedup_and_land(spark, root, docs, counts, None, fresh=True)
     deduped = spark.read.parquet(f"{root}/dedup_survivors")
 
     if paragraph_level:
@@ -722,13 +744,18 @@ def run_prep(
     for frame in (clean, deduped):
         frame.unpersist()
 
-    chunks = chunk_docs(spark.read.parquet(f"{root}/clean_docs"))
+    # partitioned tables are read back with their schema: an empty
+    # corpus lands no partition directory to infer one from
+    chunks = chunk_docs(
+        spark.read.schema(split.schema).parquet(f"{root}/clean_docs")
+    )
     chunks.write.mode("overwrite").partitionBy("split").parquet(
         f"{root}/chunks"
     )
-    counts["chunks"] = spark.read.parquet(f"{root}/chunks").count()
+    chunks = spark.read.schema(chunks.schema).parquet(f"{root}/chunks")
+    counts["chunks"] = chunks.count()
 
-    manifest = pack_chunks(spark.read.parquet(f"{root}/chunks"))
+    manifest = pack_chunks(chunks)
     manifest.write.mode("overwrite").parquet(f"{root}/pack_manifest")
     counts["bins"] = spark.read.parquet(f"{root}/pack_manifest").count()
     return counts
@@ -741,159 +768,19 @@ def run_prep_incremental(
     eval_docs: DataFrame,
 ) -> dict[str, int]:
     """Process an ingest batch against the landed prep state — the
-    daily-increment shape: history participates ONLY through its
-    landed tables (fingerprints for exact dedup, band index + survivor
-    texts for near-dup), never through a corpus re-scan.
+    daily-increment shape (:func:`_dedup_and_land` against the sealed
+    history). Refuses a half-landed state.
 
     Policy (matches the full run's min-id keeper, given history ids
     precede batch ids): a new doc is dropped if its exact fingerprint
-    exists in history; near-dup components are computed over the
-    incremental candidate pairs, and a new doc survives only if its
+    exists in history; a new doc survives near-dup removal only if its
     component contains no history doc and it is the component's min
-    id. Known incremental-dedup drift: a new doc that BRIDGES two
-    history clusters cannot retro-drop history (history is immutable
-    here); a full recompute would keep one fewer doc. Stages after
-    dedup (decontaminate) are per-doc and land appended; the state
-    tables are extended so the next batch sees this one as history.
-    Rebalance/split/chunk/pack stay full-run stages — sampling rates
-    are corpus-distribution-derived and belong to a periodic rebuild,
-    not a per-batch decision.
+    id. The decontaminated batch lands appended in
+    ``clean_increments``; the state tables are extended so the next
+    batch sees this one as history. Rebalance/split/chunk/pack stay
+    full-run stages — sampling rates are corpus-distribution-derived
+    and belong to a periodic rebuild, not a per-batch decision.
     """
-    from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
-        connected_components,
-        exact_dedup,
-        hashed_ngram_jaccard,
-        incremental_minhash_pairs,
-        minhash_band_table,
-        normalized_text,
-    )
-
-    # refuse to dedup against a half-landed history (manifest sealed
-    # last by _land_dedup_state; mismatch = a prior landing crashed)
-    verify_dedup_state(spark, root)
-
     counts: dict[str, int] = {"batch_input": new_docs.count()}
-
-    gated = quality_gate(new_docs)
-    counts["quality_pass"] = gated.count()
-
-    # exact dedup: within batch, then against history fingerprints
-    batch_exact = exact_dedup(gated, "text", "doc_id")
-    hist_fp = spark.read.parquet(f"{root}/fingerprints")
-    batch_exact = (
-        batch_exact.withColumn(
-            "fingerprint", F.md5(normalized_text(F.col("text")))
-        )
-        .join(F.broadcast(hist_fp.select("fingerprint")), "fingerprint",
-              "left_anti")
-        .drop("fingerprint")
-        # persist (r12): consumed FOUR times below (the stage count,
-        # candidate generation, the verify-side union, the loser
-        # anti-join) — un-persisted each re-runs the quality gate +
-        # within-batch exact dedup + history anti-join; released
-        # after the post-dedup localCheckpoint (its last consumer)
-        .persist()
-    )
-    counts["after_exact"] = batch_exact.count()
-
-    # near-dup: candidates vs history index + within batch, verify,
-    # components over the (small) incremental pair set. The batch's
-    # band table is computed ONCE (r13) and shared by the candidate
-    # stage (which consumes it twice) and the state append below —
-    # previously the batch paid the signature pass three times.
-    index = spark.read.parquet(f"{root}/band_index")
-    # stage_boundary (NOT persist): the band append below runs AFTER
-    # the fingerprint append, and new_bands' lineage reads
-    # root/fingerprints through batch_exact's history anti-join — the
-    # file write invalidates any cache over that path, and the
-    # recompute would see the batch's own fingerprints as history and
-    # emit ZERO band rows (the read-then-append self-reference the
-    # batch_deduped checkpoint below already guards against). A
-    # lineage-truncating checkpoint is immune.
-    new_bands = stage_boundary(minhash_band_table(
-        batch_exact, "text", "doc_id", n_hashes=32, n_bands=8, shingle_n=3
-    ))
-    cand = incremental_minhash_pairs(
-        batch_exact, index, "text", "doc_id",
-        n_hashes=32, n_bands=8, shingle_n=3, new_bands=new_bands,
-    ).persist()
-    cand_ids = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias("doc_id")
-    ).dropDuplicates(["doc_id"])
-    hist_survivors = spark.read.parquet(f"{root}/dedup_survivors")
-    verify_docs = (
-        hist_survivors.select("doc_id", "text")
-        .unionByName(batch_exact.select("doc_id", "text"))
-        .join(F.broadcast(cand_ids), "doc_id")
-    )
-    verified = hashed_ngram_jaccard(
-        cand, verify_docs, "doc_id", "text", shingle_n=3
-    ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    comps = connected_components(verified.select("id_a", "id_b"))
-    old_ids = hist_survivors.select(
-        F.col("doc_id").alias("node"), F.lit(1).alias("__old")
-    )
-    tainted = (
-        comps.join(F.broadcast(old_ids), "node", "left")
-        .groupBy("component")
-        .agg(
-            F.max(F.coalesce("__old", F.lit(0))).alias("has_old"),
-            F.min("node").alias("min_node"),
-        )
-    )
-    # losers: any member of an old-containing component, or a non-min
-    # member of a pure-new component
-    losers = (
-        comps.join(F.broadcast(tainted), "component")
-        .filter(
-            (F.col("has_old") == 1) | (F.col("node") != F.col("min_node"))
-        )
-        .select(F.col("node").alias("doc_id"))
-    )
-    # materialize + truncate lineage BEFORE any state-table write:
-    # the lazy plan reads root/dedup_survivors, and the appends below
-    # extend that very table — re-executing the lineage after the
-    # first append would see the batch as its own history and drop
-    # everything (the classic read-then-append self-reference)
-    batch_deduped = batch_exact.join(
-        losers, "doc_id", "left_anti"
-    ).transform(stage_boundary)
-    counts["after_dedup"] = batch_deduped.count()
-    # the localCheckpoint above was cand's and batch_exact's last
-    # consumer — release both cached tables now, or a long-lived
-    # session running daily increments accumulates orphaned caches
-    # per batch
-    cand.unpersist()
-    batch_exact.unpersist()
-
-    clean = decontaminate(batch_deduped, eval_docs).transform(stage_boundary)
-    counts["after_decontam"] = clean.count()
-
-    # Invalidate the old seal BEFORE the first append, mirroring
-    # _land_dedup_state: the invariant is "seal present implies the
-    # landing committed", and without this a crash mid-append of a
-    # zero-row batch (or any append that happens to leave the sealed
-    # counts intact) would leave the stale seal trivially certifying
-    # a half-extended state.
-    import os  # noqa: PLC0415
-
-    try:
-        os.remove(_state_manifest_path(root))
-    except FileNotFoundError:
-        pass
-
-    # extend the landed state: this batch becomes history for the next
-    batch_deduped.write.mode("append").parquet(f"{root}/dedup_survivors")
-    batch_deduped.select(
-        "doc_id", F.md5(normalized_text(F.col("text"))).alias("fingerprint")
-    ).write.mode("append").parquet(f"{root}/fingerprints")
-    # the deduped batch's band rows are the precomputed batch band
-    # table filtered to survivors (deterministic per-doc map — same
-    # rows a recompute would emit)
-    new_bands.join(
-        batch_deduped.select("doc_id"), "doc_id", "left_semi"
-    ).write.mode("append").parquet(f"{root}/band_index")
-    clean.write.mode("append").parquet(f"{root}/clean_increments")
-    # re-seal: this batch's appends are now part of committed history
-    _seal_dedup_state(spark, root)
+    _dedup_and_land(spark, root, new_docs, counts, eval_docs, fresh=False)
     return counts

@@ -9,7 +9,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from yahoofinancedatalake_spark.catalog import fan_out, load_table
@@ -23,6 +23,9 @@ from yahoofinancedatalake_spark.functions.scalars import (
     dround,
     sentiment_label,
     sql_dround,
+)
+from yahoofinancedatalake_spark.operators.selection import (  # noqa: F401
+    _const_key,
 )
 from yahoofinancedatalake_spark.operators.windows import (
     lag_delta,
@@ -43,17 +46,6 @@ class Query:
 
 
 QUERIES: dict[str, Query] = {}
-
-
-def _const_key(c) -> Column:
-    """The data-derived constant-key for folding a 1-row aggregate
-    into a big table via an EQUI-join (BroadcastHashJoin): evaluates
-    to 0 on every row, but because the key is DERIVED FROM DATA
-    Catalyst cannot constant-fold the join condition away (a literal
-    key on both sides degenerates straight back to the
-    BroadcastNestedLoopJoin the plan suite treats as a scale killer).
-    Shared by every scalar-subquery-shaped query in the pack."""
-    return F.pmod(F.xxhash64(c), F.lit(1)).cast("int")
 
 
 def _register(

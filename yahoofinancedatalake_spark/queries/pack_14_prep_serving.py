@@ -1032,7 +1032,7 @@ def q_stream_incremental_prep(
              (SELECT count(*) FROM dd) - (SELECT count(*) FROM cl)
     ) ORDER BY stage_idx
     """,
-    doc="The composed prep pipeline with near_dup_backend='winnow' "
+    doc="The composed prep pipeline with near_dup_stage(backend='winnow') "
     "(VERDICT r9 #4): prep.py's quality_gate → exact_stage → "
     "near_dup_stage(backend='winnow') → decontaminate run in "
     "sequence and the per-stage audit is value-hashed against one "
@@ -2119,7 +2119,7 @@ _HYB_T = 0.6
     "1 over winnow-accepted pairs (see _HYB_T), so the oracle is "
     "the SAME O(n²)-free winnow ground truth as winnow_near_dup — "
     "the hash gates that the hybrid loses nothing the winnow policy "
-    "accepts. Also prep.py's near_dup_backend='hybrid'. Reference "
+    "accepts. Also prep.near_dup_stage(backend='hybrid'). Reference "
     "analog: none (dedups by exact id, finnhub_news.py:185-188).",
     parts=8,
 )
@@ -2780,7 +2780,7 @@ def q_stream_nb_score(spark: SparkSession, sf_dir: str) -> DataFrame:
              (SELECT count(*) FROM dd) - (SELECT count(*) FROM cl)
     ) ORDER BY stage_idx
     """,
-    doc="The composed prep pipeline with near_dup_backend='hybrid' "
+    doc="The composed prep pipeline with near_dup_stage(backend='hybrid') "
     "(the r11 LSH-proposes/winnow-decides matcher at its gated "
     f"parameters, accept threshold {_HYB_T}): prep.py's quality_gate "
     "→ exact_stage → near_dup_stage(backend='hybrid') → "

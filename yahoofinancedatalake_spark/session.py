@@ -18,6 +18,29 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Default driver heap: ``min(40g, MemTotal / 3)``.
+
+    40g is deliberately NOT most of a large box: an oversized heap
+    lets garbage pile up until multi-second collections hit whatever
+    query runs next (measured: the same 36-query bench takes 110s
+    with a 90g heap, 32s with 40g on a 125G host — the python UDF
+    workers and OS page cache need the rest). On a small host the
+    third keeps the JVM, its Python workers and the page cache inside
+    physical memory. Falls back to 40g when ``meminfo`` is unreadable
+    (non-Linux hosts). ``SPARK_GRAFT_DRIVER_MEM`` overrides it."""
+    cap_mb = 40 * 1024
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_mb = int(line.split()[1]) // 1024
+                    return f"{min(cap_mb, total_mb // 3)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(
     app_name: str = "yahoofinancedatalake_spark",
     master: str | None = None,
@@ -69,12 +92,10 @@ def get_spark(
         # vs 8-13s on runs where its units were evicted). 1000 entries
         # keeps every unit of the full pack resident.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
-        # 40g, deliberately NOT most of the box: an oversized heap lets
-        # garbage pile up until multi-second collections hit whatever
-        # query runs next (measured: the same 36-query bench takes 110s
-        # with a 90g heap, 32s with 40g on a 125G host — the python
-        # UDF workers and OS page cache need the rest).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "40g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
+        )
     )
     if master is not None:
         builder = builder.master(master)

@@ -1,4 +1,4 @@
-"""Fixture-replayable ingestion sources (SURVEY.md §2.1 S6-S8).
+"""Fixture-replayable ingestion sources (SURVEY.md §2.1 S6, S8).
 
 The reference's ingestion is driver-side REST: yfinance 5-year OHLCV
 history + ``ticker.info`` (yahoo_stocks.py:18-44,47-65) and Finnhub
@@ -9,7 +9,7 @@ driver-side seen-id dedup set (finnhub_news.py:54-120,139-158,
 *replayable sources*: same record shapes, same pagination structure,
 fed from local JSONL fixtures — every downstream operator is testable
 hermetically, and a real REST implementation can be swapped in by
-implementing the same three callables.
+implementing the same callables.
 
 Ingestion deliberately stays non-distributed (it is rate-limited API
 paging, not data-parallel work); Spark takes over at the bronze sink.
@@ -34,16 +34,6 @@ def replay_stock_history(fixture_file: str | Path, symbol: str) -> list[dict]:
     open/high/low/close float, volume int, fetched_at ISO instant.
     """
     return [r for r in _load_jsonl(fixture_file) if r["symbol"] == symbol]
-
-
-def replay_company_info(fixture_file: str | Path, symbol: str) -> dict | None:
-    """S7: one company-info record per symbol (yahoo_stocks.py:47-65);
-    None when the provider has no data for the ticker (the pipeline
-    must survive a missing dim row)."""
-    for r in _load_jsonl(fixture_file):
-        if r["symbol"] == symbol:
-            return r
-    return None
 
 
 def month_ranges(now: str, months_back: int = 12) -> list[tuple[str, str]]:
