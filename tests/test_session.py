@@ -24,3 +24,56 @@ def test_driver_mem_caps_at_40g_on_a_large_host(tmp_path):
 
 def test_driver_mem_falls_back_to_40g_without_meminfo(tmp_path):
     assert default_driver_mem(str(tmp_path / "absent")) == "40960m"
+
+
+_RELIABLE_CKPT_PROBE = """
+import json, os, warnings
+from yahoofinancedatalake_spark.session import get_spark, stage_boundary
+spark = get_spark("ckpt_probe", master="local[1]")
+with warnings.catch_warnings(record=True) as caught:
+    warnings.simplefilter("always")
+    stage_boundary(spark.range(10)).count()
+    stage_boundary(spark.range(5)).count()
+ckpt = spark.sparkContext._jsc.sc().getCheckpointDir().get()
+root = os.path.dirname(ckpt.removeprefix("file:"))
+exists_before = os.path.isdir(root)
+spark.stop()
+print(json.dumps({
+    "root": root,
+    "before": exists_before,
+    "after": os.path.exists(root),
+    "warnings": [str(w.message) for w in caught],
+}))
+"""
+
+
+def test_reliable_checkpoint_fallback_dir_removed_at_stop():
+    """Reliable checkpoints without SPARK_GRAFT_CHECKPOINT_DIR land in
+    a fallback dir that is gone once the SparkContext stops, and the
+    fallback warns once. Runs in its own process: it stops its
+    session, which the shared test session must not see."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    env = dict(os.environ)
+    env.pop("SPARK_GRAFT_CHECKPOINT_DIR", None)
+    env.update(
+        SPARK_GRAFT_RELIABLE_CHECKPOINT="1",
+        SPARK_GRAFT_DRIVER_MEM="512m",
+        PYTHONPATH=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _RELIABLE_CKPT_PROBE],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    )
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert os.path.basename(got["root"]).startswith("spark_graft_ckpt_")
+    assert got["before"] and not got["after"], got
+    assert len(got["warnings"]) == 1, got["warnings"]
+    assert "SPARK_GRAFT_CHECKPOINT_DIR" in got["warnings"][0]

@@ -481,85 +481,6 @@ def test_ttl_eviction_boundary_end_to_end(spark, tmp_path):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_transform_with_state_v2_matches_v1_and_batch(
-    spark, event_files, tmp_path
-):
-    """running_last_state_v2 (transformWithStateInPandas) must agree
-    with both the v1 applyInPandasWithState operator and the batch
-    arg-max over the same files — same contract, newer API.
-
-    transformWithState's state-server protocol speaks protobuf; the
-    container has no google.protobuf, so the operator is import-gated
-    the same way the SARIMAX backend is (the API usage itself is the
-    artifact under test where the dependency exists)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state server requires protobuf",
-    )
-    from yahoofinancedatalake_spark.streaming.ops import (
-        running_last_state_v2,
-    )
-
-    path, batch_df = event_files
-    stream = spark.readStream.schema(batch_df.schema).parquet(path)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    oldprov = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", ""
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        _run_to_memory(
-            running_last_state_v2(stream),
-            "tws_v2",
-            "update",
-            str(tmp_path / "ck_v2"),
-        )
-        got = {
-            r.user_id: (r.last_value, r.last_ts, r.n_events)
-            for r in spark.sql(
-                "SELECT * FROM tws_v2"
-            ).collect()
-        }
-        want = {
-            r.user_id: (r.last_value, r.last_ts, r.n_events)
-            for r in batch_df.filter(F.col("ts").isNotNull())
-            .groupBy("user_id")
-            .agg(
-                F.max_by(
-                    "value", F.struct("ts", "value")
-                ).alias("last_value"),
-                F.max("ts").alias("last_ts"),
-                F.count(F.lit(1)).alias("n_events"),
-            )
-            .collect()
-        }
-        # v2 ties on equal ts resolve by arrival order (>=), like v1;
-        # compare on (last_ts, n_events) strictly and value when the
-        # max ts is unique per key
-        assert set(got) == set(want)
-        for k in want:
-            assert got[k][1] == want[k][1], k  # same last_ts
-            assert got[k][2] == want[k][2], k  # same n_events
-        n_exact = sum(1 for k in want if got[k][0] == want[k][0])
-        assert n_exact >= len(want) * 0.95  # ties are rare in testdata
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        if oldprov:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", oldprov
-            )
-        else:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
-
-
 def test_stream_sliding_distinct_matches_batch(spark, event_files, tmp_path):
     """Rung 9: trailing-7-day sliding distinct users — the stateless
     expand-then-single-dedup plan must equal a batch

@@ -7,6 +7,12 @@ name, rows sorted, floats rounded to 6 significant places — a
 slightly *stricter* mimic than the driver so passing here should pass
 there).
 
+A query also fails when it leaves something behind in the caller's
+session or the temp dir: a new entry under ``tempfile.gettempdir()``,
+a temp view, an active stream, or a streaming listener bus left on
+the SparkContext's bus (it keeps its session alive). Each leftover is blamed on the
+query that made it.
+
 Usage: python tools/selfcheck.py [sf_dir] [query ...]
 """
 
@@ -14,7 +20,9 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
+import tempfile
 import time
 from datetime import date, datetime
 
@@ -55,6 +63,32 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()[:16]
 
 
+def residue(spark) -> dict[str, set]:
+    """The caller-visible state a query must leave as it found it."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    return {
+        "temp dir entries": set(os.listdir(tempfile.gettempdir())),
+        "temp views": {
+            t.name for t in spark.catalog.listTables() if t.isTemporary
+        },
+        "active streams": {q.name or q.id for q in spark.streams.active},
+        "streaming listeners": {
+            str(x)
+            for x in bus.listeners()
+            if "StreamingQueryListenerBus" in str(x)
+        },
+    }
+
+
+def leftovers(before: dict[str, set], after: dict[str, set]) -> str:
+    """What appeared between two ``residue`` snapshots ('' if none)."""
+    return "; ".join(
+        f"{k} {sorted(after[k] - before[k])}"
+        for k in before
+        if after[k] - before[k]
+    )
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -65,8 +99,14 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
     qs, oracles = queries(), oracle_sql()
-    failed = []
+    failed: set[str] = set()
     n_run = 0
+    # Once per process, on first use, the JVM unpacks its native codecs
+    # and Spark makes its artifact root in the temp dir; a shuffling
+    # parquet read takes those out of the first query's snapshot.
+    spark.read.parquet(f"{sf_dir}/events.parquet").groupBy(
+        "event_type"
+    ).count().collect()
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -79,6 +119,7 @@ def main() -> int:
         # same hygiene as bench.py, fired on measured pressure rather
         # than a fixed cadence
         drain_if_pressured(spark)
+        before = residue(spark)
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
@@ -86,8 +127,13 @@ def main() -> int:
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
-            failed.append(name)
+            failed.add(name)
             continue
+        finally:
+            left = leftovers(before, residue(spark))
+            if left:
+                print(f"LEAK  {name}: left {left}")
+                failed.add(name)
         if name not in oracles:
             print(f"ok*   {name}: rows-only ({len(srows)} rows, "
                   f"{time.time()-t0:.1f}s)")
@@ -101,7 +147,7 @@ def main() -> int:
             orows = rel.fetchall()
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: duckdb error: {e}")
-            failed.append(name)
+            failed.add(name)
             continue
         problems = []
         # the driver's value hash renders DuckDB INT128/DECIMAL
@@ -137,7 +183,7 @@ def main() -> int:
                         break
         if problems:
             print(f"FAIL  {name}: " + "; ".join(problems))
-            failed.append(name)
+            failed.add(name)
         else:
             print(f"ok    {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
     # denominator = queries actually executed, so a filtered run can't

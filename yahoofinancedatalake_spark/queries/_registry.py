@@ -1,11 +1,14 @@
-"""Query-pack registry: the Query record, the QUERIES dict, and
-the shared registration/runtime helpers every pack_* family
-module uses. Split from pack.py (r7, pure refactor) — see
-pack.py for the pack-wide determinism rules and the driver
-rotation."""
+"""Query-pack registry: the Query record, the QUERIES dict, the
+runner that owns each query's session and scratch space, and the
+shared helpers every pack_* family module uses. See pack.py for the
+pack-wide determinism rules and the driver rotation."""
 
 from __future__ import annotations
 
+import functools
+import re as _re
+import shutil
+import tempfile
 from dataclasses import dataclass
 from typing import Callable, Optional
 
@@ -33,6 +36,7 @@ from yahoofinancedatalake_spark.operators.windows import (
     top_k,
     top_k_with_other,
 )
+from yahoofinancedatalake_spark.session import stage_boundary
 
 
 @dataclass(frozen=True)
@@ -54,40 +58,51 @@ def _register(
     doc: str = "",
     parts: Optional[int] = None,
 ):
-    """Register a query; ``parts`` right-sizes the shuffle for it.
+    """Register a query. Its runner owns the query's Spark state.
 
-    ``spark.sql.shuffle.partitions`` is read at *execution* time, and
-    both the driver and ``bench.py`` execute a query immediately after
-    constructing it — so setting the conf at construction time scopes
-    it to this query in practice. Every runner sets the conf (to
-    ``parts`` or back to the session default), so queries can't
-    inherit a neighbour's setting.
+    Each call runs the query on its own ``spark.newSession()``: a
+    child session with its own SQL conf, temp views and streams that
+    shares the SparkContext and the table cache. ``parts`` sets
+    ``spark.sql.shuffle.partitions`` on that child only. The returned
+    DataFrame stays bound to the child, so the width holds when the
+    caller executes it later, and the caller's session is never
+    written: a query's result and plan cannot depend on a query that
+    ran before it or beside it on another thread. Without ``parts``
+    the child inherits the session's configured width.
 
-    Why: the `documents`/`embeddings` side tables are 3-5 orders of
-    magnitude smaller than the fact tables, and a 32-partition shuffle
-    over 2 000 rows costs more in task scheduling than the work
-    (measured at sf0.1: ivf_recall 7.9s → 1.8s at 8 partitions).
-    AQE's coalescing doesn't recover this because
+    A query that needs scratch space takes it from ``_scratch(spark)``.
+    The runner then materializes the result with ``stage_boundary``
+    (it may read the scratch dir or a memory sink) and closes the
+    scratch on every exit path.
+
+    Why ``parts``: the `documents`/`embeddings` side tables are 3-5
+    orders of magnitude smaller than the fact tables, and a
+    32-partition shuffle over 2 000 rows costs more in task scheduling
+    than the work (measured at sf0.1: ivf_recall 7.9s → 1.8s at 8
+    partitions). AQE's coalescing doesn't recover this because
     ``parallelismFirst`` keeps post-shuffle parallelism at the core
     count (and turning it off globally single-threads the CPU-bound
-    verify stages — measured 3.5s → 18.7s on simhash_near_dup). A
-    production deployment sizes this per workload the same way.
+    verify stages — measured 3.5s → 18.7s on simhash_near_dup).
+    Stateful streaming allocates one state store per shuffle
+    partition per stateful operator, and store setup and commit
+    dominate gate-scale runs (the stream-stream join drops 9.7s →
+    6.5s at sf0.1 going 32 → 8), so the streaming rungs run at 8 too.
+    A production deployment sizes this per workload the same way.
     """
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
-        import functools  # noqa: PLC0415
-
         @functools.wraps(fn)
         def runner(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from yahoofinancedatalake_spark.session import (  # noqa: PLC0415
-                DEFAULT_SHUFFLE_PARTITIONS,
-            )
-
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(parts or DEFAULT_SHUFFLE_PARTITIONS),
-            )
-            return fn(spark, sf_dir)
+            session = spark.newSession()
+            if parts:
+                session.conf.set("spark.sql.shuffle.partitions", str(parts))
+            scratch = _SCRATCH[session] = _Scratch(session)
+            try:
+                df = fn(session, sf_dir)
+                return stage_boundary(df) if scratch.dir else df
+            finally:
+                del _SCRATCH[session]
+                scratch.close()
 
         QUERIES[name] = Query(name=name, spark=runner, oracle=oracle, doc=doc)
         return runner
@@ -95,10 +110,7 @@ def _register(
     return wrap
 
 
-import contextlib
-import re as _re
-
-#: Gate-tier membership (VERDICT r9 #2): queries that exist to VERIFY
+#: Gate-tier membership: queries that exist to VERIFY
 #: the engine — batch-equivalence twins, approximation-accuracy/recall
 #: gates, and the composed-pipeline count gates — as opposed to
 #: production-shaped operator queries a user would run. Derived from
@@ -153,21 +165,80 @@ def _await_stream(q, timeout: int = 300) -> None:
         )
 
 
-@contextlib.contextmanager
-def _scoped_shuffle(spark: SparkSession, n: int):
-    """Temporarily size shuffle partitions to the data.
+class _Scratch:
+    """The scratch space of one query run, owned by its runner.
 
-    Stateful streaming allocates one state store per shuffle partition
-    per stateful operator, and store setup/commit dominates gate-scale
-    runs (measured: the stream-stream join drops 9.7s → 6.5s at sf0.1
-    going 32 → 8). The result set is partitioning-invariant; a real
-    deployment sizes this to key cardinality × arrival rate.
+    It holds a work dir (made on first use), the frames landed into
+    it, availableNow drains of streams over them and the memory sinks
+    those fill. Every drain stops its stream and releases its
+    streaming listeners on the way out; ``close`` drops the sinks and
+    removes the dir, and the runner calls it on every exit path, a
+    drain timeout included. The runner's child session is private to
+    the query, so fixed sink and checkpoint names cannot collide.
     """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+    def __init__(self, session: SparkSession):
+        self.session = session
+        self.dir: Optional[str] = None
+        self.sinks: list[str] = []
+
+    def path(self, name: str) -> str:
+        if self.dir is None:
+            self.dir = tempfile.mkdtemp(prefix="graft_scratch_")
+        return f"{self.dir}/{name}"
+
+    def land(self, df: DataFrame, mode: str = "overwrite") -> None:
+        """Write ``df``, as partitioned, to the parquet dir that
+        ``read_stream`` reads."""
+        df.write.mode(mode).parquet(self.path("landed"))
+
+    def read_stream(self, schema) -> DataFrame:
+        return self.session.readStream.schema(schema).parquet(
+            self.path("landed")
+        )
+
+    def drain(self, writer, ck: str = "ck") -> None:
+        """Run ``writer`` once to the end of its input (availableNow)
+        under checkpoint ``ck``; runs sharing a ``ck`` see only the
+        files landed since the previous one."""
+        q = (
+            writer.option("checkpointLocation", self.path(ck))
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            _await_stream(q)
+        finally:
+            q.stop()
+            # A session that runs a stream, and the clone of it the
+            # stream executes on, each put a streaming listener bus on
+            # the SparkContext's bus for good: left there, it keeps the
+            # session alive and every later Spark event is dispatched
+            # to it.
+            bus = self.session.sparkContext._jsc.sc().listenerBus()
+            clone = q._jsq.streamingQuery().sparkSessionForStream()
+            for session in (self.session._jsparkSession, clone):
+                bus.removeListener(session.streams().listenerBus())
+
+    def to_memory(self, stream: DataFrame, mode: str) -> DataFrame:
+        """Drain ``stream`` into a memory sink; returns the sink table."""
+        name = f"sink_{len(self.sinks)}"
+        self.sinks.append(name)
+        writer = stream.writeStream.format("memory").queryName(name)
+        self.drain(writer.outputMode(mode), ck=name)
+        return self.session.table(name)
+
+    def close(self) -> None:
+        for name in self.sinks:
+            self.session.catalog.dropTempView(name)
+        if self.dir is not None:
+            shutil.rmtree(self.dir, ignore_errors=True)
 
 
+#: child session -> its query's scratch, while the runner runs
+_SCRATCH: dict[SparkSession, _Scratch] = {}
+
+
+def _scratch(spark: SparkSession) -> _Scratch:
+    """The scratch space of the query running on ``spark``."""
+    return _SCRATCH[spark]

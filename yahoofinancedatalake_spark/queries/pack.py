@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from yahoofinancedatalake_spark.queries import _registry as _reg
 from yahoofinancedatalake_spark.queries._registry import (  # noqa: F401
-    QUERIES, Query, _await_stream, _const_key, _register, _scoped_shuffle,
+    QUERIES, Query, _await_stream, _const_key, _register, _scratch,
 )
 
 from yahoofinancedatalake_spark.queries import pack_01_relational as _pack_01_relational  # noqa: E402

@@ -1,4 +1,4 @@
-"""Streaming gate rungs 1-2, JSON extraction, splits, PII, fuzzy match, repetition/BM25, percent_rank (split from pack.py, r7 — pure refactor).
+"""Streaming gate rungs 1-2, JSON extraction, splits, PII, fuzzy match, repetition/BM25, percent_rank.
 
 Registers 11 queries (registration order is the
 import order in pack.py):
@@ -22,11 +22,7 @@ from pyspark.sql import functions as F
 
 from yahoofinancedatalake_spark.catalog import fan_out, load_table
 from yahoofinancedatalake_spark.functions.scalars import dround, sentiment_label, sql_dround
-from yahoofinancedatalake_spark.queries._registry import (
-    _await_stream,
-    _register,
-    _scoped_shuffle,
-)
+from yahoofinancedatalake_spark.queries._registry import _register, _scratch
 from yahoofinancedatalake_spark.queries.pack_02_text import (
     _sql_wordlist,
 )
@@ -58,11 +54,9 @@ from yahoofinancedatalake_spark.queries.pack_05_forecast_search import (
     "materialized result is hash-compared against plain batch SQL. "
     "Proves the streaming plan computes the batch answer, under the "
     "driver's own session.",
+    parts=8,
 )
 def q_stream_daily_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.streaming.ops import (  # noqa: PLC0415
         stream_daily_avg,
     )
@@ -70,23 +64,11 @@ def q_stream_daily_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="stream_eq_")
-    src = f"{work}/events"
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    name = f"s_daily_avg_eq_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle(spark, 8):
-        q = (
-            stream_daily_avg(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q)
-    return spark.table(name)
+    s = _scratch(spark)
+    s.land(batch.repartition(4))
+    return s.to_memory(
+        stream_daily_avg(s.read_stream(batch.schema)), "complete"
+    )
 
 
 @_register(
@@ -119,11 +101,9 @@ def q_stream_daily_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SQL oracle. Proves session-merge state (the hardest streaming "
     "state shape: windows that MERGE as late events bridge gaps) "
     "computes exactly the batch answer.",
+    parts=8,
 )
 def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.streaming.ops import (  # noqa: PLC0415
         stream_sessions,
     )
@@ -131,23 +111,11 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="stream_sess_eq_")
-    src = f"{work}/events"
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    name = f"s_sessions_eq_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle(spark, 8):
-        q = (
-            stream_sessions(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q)
-    return spark.table(name)
+    s = _scratch(spark)
+    s.land(batch.repartition(4))
+    return s.to_memory(
+        stream_sessions(s.read_stream(batch.schema)), "complete"
+    )
 
 
 # ---------------------------------------------------------------------------

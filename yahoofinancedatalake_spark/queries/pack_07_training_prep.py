@@ -33,10 +33,9 @@ from pyspark.sql import functions as F
 from yahoofinancedatalake_spark.catalog import fan_out, load_table
 from yahoofinancedatalake_spark.functions.scalars import dround, sentiment_label, sql_dround
 from yahoofinancedatalake_spark.queries._registry import (
-    _await_stream,
     _const_key,
     _register,
-    _scoped_shuffle,
+    _scratch,
 )
 
 
@@ -428,11 +427,9 @@ def q_corpus_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     "matter which copy survives. Dedup state is bounded by the "
     "watermark horizon (ids seen per window, not per stream "
     "lifetime) — the S11 dedup-by-id sink's streaming twin.",
+    parts=8,
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.streaming.ops import (  # noqa: PLC0415
         stream_dedup_by_id,
     )
@@ -440,30 +437,21 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="stream_dedup_eq_")
-    src = f"{work}/events"
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    batch.repartition(4).write.mode("append").parquet(src)  # duplicates
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    name = f"s_dedup_eq_{uuid.uuid4().hex[:8]}"
+    s = _scratch(spark)
+    s.land(batch.repartition(4))
+    s.land(batch.repartition(4), mode="append")  # duplicates
     # Watermark wider than the data's whole time span: the 8 files fit
     # one availableNow batch today, but if a future driver splits them,
     # no row may be late-dropped instead of dedup-dropped — lateness
     # would make the batch split visible in the result. The production
     # knob stays the horizon (see stream_dedup_by_id); the GATE must be
     # batching-invariant.
-    with _scoped_shuffle(spark, 8):
-        q = (
-            stream_dedup_by_id(stream, ["event_id"], watermark="3650 days")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q)
-    return spark.table(name)
+    return s.to_memory(
+        stream_dedup_by_id(
+            s.read_stream(batch.schema), ["event_id"], watermark="3650 days"
+        ),
+        "append",
+    )
 
 
 @_register(
@@ -483,32 +471,17 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "relation, so the operator scales with the micro-batch, not the "
     "stream lifetime. At 100 TB the landed-id table is the bucketed "
     "band/key index the lake already maintains.",
+    parts=8,
 )
 def q_stream_lake_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     batch = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="stream_lake_dedup_")
-    src = f"{work}/events"
-    batch.repartition(4).write.mode("overwrite").parquet(src)
+    s = _scratch(spark)
+    s.land(batch.repartition(4))
     landed = batch.filter(F.col("event_id") % 4 == 0).select("event_id")
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    name = f"s_lake_dedup_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle(spark, 8):
-        q = (
-            stream.join(landed, "event_id", "left_anti")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q)
-    return spark.table(name)
+    stream = s.read_stream(batch.schema).join(landed, "event_id", "left_anti")
+    return s.to_memory(stream, "append")
 
 
 @_register(
@@ -531,10 +504,9 @@ def q_stream_lake_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exactly-once table state. Write amplification stays O(touched "
     "partitions) — untouched event_type partitions are never "
     "rewritten.",
+    parts=8,
 )
 def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.sources.parquet_io import (  # noqa: PLC0415
         upsert_rows,
     )
@@ -545,25 +517,21 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="stream_upsert_eq_")
-    table = f"{work}/serving"
-    with _scoped_shuffle(spark, 8):
-        upsert_rows(spark, base, table, ["event_id"], "event_type")
-        updates = base.filter(F.col("event_id") % 5 == 0).withColumn(
-            "value", F.col("value") * 2.0
+    s = _scratch(spark)
+    table = s.path("serving")
+    upsert_rows(spark, base, table, ["event_id"], "event_type")
+    updates = base.filter(F.col("event_id") % 5 == 0).withColumn(
+        "value", F.col("value") * 2.0
+    )
+    s.land(updates.repartition(4))
+    for ck in ("ck_deliver", "ck_redeliver"):
+        stream = s.read_stream(base.schema)
+        s.drain(
+            foreach_batch_upsert(
+                stream, table, ["event_id"], "event_type", s.path(ck)
+            ),
+            ck,
         )
-        src = f"{work}/updates"
-        updates.repartition(4).write.mode("overwrite").parquet(src)
-        for ck in ("ck_deliver", "ck_redeliver"):
-            stream = spark.readStream.schema(base.schema).parquet(src)
-            q = (
-                foreach_batch_upsert(
-                    stream, table, ["event_id"], "event_type", f"{work}/{ck}"
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_stream(q)
     return spark.read.parquet(table).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -592,13 +560,11 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     "purchase), availableNow to a memory sink, hash-compared against "
     "the plain batch self-join. Both sides carry watermarks and the "
     "time-bounded condition evicts each side's state as the other's "
-    "watermark passes — the bounded-state stream-stream shape, now "
-    "driver-verified end-to-end (previously pytest-only).",
+    "watermark passes — the bounded-state stream-stream shape, "
+    "driver-verified end-to-end.",
+    parts=8,
 )
 def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.streaming.ops import (  # noqa: PLC0415
         stream_stream_attribution,
     )
@@ -612,9 +578,8 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "ts", "user_id", "event_type", "value")
         .filter(F.col("event_type").isin("purchase", "view"))
     )
-    work = tempfile.mkdtemp(prefix="stream_attr_eq_")
-    src = f"{work}/events"
-    batch.repartition(4).write.mode("overwrite").parquet(src)
+    s = _scratch(spark)
+    s.land(batch.repartition(4))
 
     def side(event_type: str, id_alias: str, keep_value: bool):
         cols = [
@@ -625,8 +590,7 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         if keep_value:
             cols.append(F.col("value").alias("purchase_value"))
         return (
-            spark.readStream.schema(batch.schema)
-            .parquet(src)
+            s.read_stream(batch.schema)
             .filter(F.col("event_type") == event_type)
             .select(*cols)
         )
@@ -645,18 +609,7 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r_ts").alias("view_ts"),
         "purchase_value",
     )
-    name = f"s_attr_eq_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle(spark, 8):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q)
-    return spark.table(name)
+    return s.to_memory(joined, "append")
 
 
 @_register(
@@ -679,11 +632,9 @@ def q_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "running-last choice can never tie. The W1 last-value semantics "
     "done three ways — batch window, streaming max_by, and explicit "
     "state — all provably equal.",
+    parts=8,
 )
 def q_stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.streaming.ops import (  # noqa: PLC0415
         running_last_state,
     )
@@ -691,28 +642,17 @@ def q_stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="stream_state_eq_")
-    src = f"{work}/events"
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    name = f"s_state_eq_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle(spark, 8):
-        q = (
-            running_last_state(stream, evict_idle=False)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q)
+    s = _scratch(spark)
+    s.land(batch.repartition(4))
+    t = s.to_memory(
+        running_last_state(s.read_stream(batch.schema), evict_idle=False),
+        "update",
+    )
     # update-mode memory sink appends the per-batch updated rows; the
     # single-batch availableNow run emits each key once, but guard the
     # multi-batch case deterministically: the LAST update per key is
     # the final state (n_events is monotone, so max_by(struct) on
     # n_events picks it without any batch-id bookkeeping).
-    t = spark.table(name)
     return t.groupBy("user_id").agg(
         F.max_by("last_value", "n_events").alias("last_value"),
         F.max_by("last_ts", "n_events").alias("last_ts"),

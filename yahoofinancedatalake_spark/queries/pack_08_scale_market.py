@@ -24,9 +24,7 @@ from pyspark.sql import functions as F
 
 from yahoofinancedatalake_spark.catalog import fan_out, load_table
 from yahoofinancedatalake_spark.functions.scalars import dround, sentiment_label, sql_dround
-from yahoofinancedatalake_spark.queries._registry import (
-    _register,
-)
+from yahoofinancedatalake_spark.queries._registry import _register, _scratch
 
 
 # ---------------------------------------------------------------------------
@@ -94,8 +92,6 @@ def q_salted_join_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     "read or rewritten).",
 )
 def q_upsert_rows_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.sources.parquet_io import (  # noqa: PLC0415
         upsert_rows,
         write_parquet,
@@ -115,8 +111,7 @@ def q_upsert_rows_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     updates = full.filter(F.col("o_orderkey") % 7 == 0)
-    work = tempfile.mkdtemp(prefix="upsert_eq_")
-    path = f"{work}/orders_serving"
+    path = _scratch(spark).path("orders_serving")
     write_parquet(stale, path, partition_by=["yr"])
     upsert_rows(spark, updates, path, ["o_orderkey"], "yr")
     return spark.read.parquet(path).select(

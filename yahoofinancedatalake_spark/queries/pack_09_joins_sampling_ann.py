@@ -41,10 +41,9 @@ from yahoofinancedatalake_spark.functions.scalars import dround, sentiment_label
 from yahoofinancedatalake_spark.functions.sentiment import NEGATIVE_WORDS, POSITIVE_WORDS, SCALE, sentiment_score_expr
 from yahoofinancedatalake_spark.queries._registry import (
     QUERIES,
-    _await_stream,
     _const_key,
     _register,
-    _scoped_shuffle,
+    _scratch,
 )
 from yahoofinancedatalake_spark.queries.pack_02_text import (
     _sql_wordlist,
@@ -743,8 +742,7 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     """,
     doc="Sixth streaming rung under the ORACLE gate — stream-static "
-    "broadcast enrichment (the last ladder rung that was "
-    "pytest-only): events re-landed as micro-batchable parquet, "
+    "broadcast enrichment: events re-landed as micro-batchable parquet, "
     "read with readStream, joined per micro-batch against the "
     "static nation dimension (streaming/ops.py stream_enrich — the "
     "dim is re-read each batch, so slowly-changing dimensions pick "
@@ -753,11 +751,9 @@ def q_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sink, hash-compared against the plain batch join+agg SQL. "
     "The join key (user_id %% 25) stands in for the usual "
     "fact-to-dim foreign key.",
+    parts=8,
 )
 def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.functions.scalars import (  # noqa: PLC0415
         dround as _dr,
     )
@@ -771,11 +767,9 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name"
     )
-    work = tempfile.mkdtemp(prefix="stream_enrich_eq_")
-    src = f"{work}/events"
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    keyed = stream.withColumn(
+    s = _scratch(spark)
+    s.land(batch.repartition(4))
+    keyed = s.read_stream(batch.schema).withColumn(
         "n_nationkey", F.pmod(F.col("user_id"), F.lit(25))
     )
     enriched = stream_enrich(keyed, dim, ["n_nationkey"], how="inner")
@@ -783,18 +777,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         (_dr(F.sum("value"), 2) / F.count(F.lit(1))).alias("avg_value"),
     ).select("n_name", "n_events", "avg_value")
-    name = f"s_enrich_eq_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle(spark, 8):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q)
-    return spark.table(name)
+    return s.to_memory(agg, "complete")
 
 
 @_register(

@@ -30,10 +30,9 @@ from pyspark.sql import functions as F
 from yahoofinancedatalake_spark.catalog import fan_out, load_table
 from yahoofinancedatalake_spark.functions.scalars import dround, sentiment_label, sql_dround
 from yahoofinancedatalake_spark.queries._registry import (
-    _await_stream,
     _const_key,
     _register,
-    _scoped_shuffle,
+    _scratch,
 )
 
 
@@ -635,9 +634,6 @@ def q_excess_rod_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts=8,
 )
 def q_stream_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.streaming.ops import (  # noqa: PLC0415
         stream_sliding_distinct,
     )
@@ -645,23 +641,11 @@ def q_stream_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="stream_slide_eq_")
-    src = f"{work}/events"
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    name = f"s_slide_eq_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle(spark, 8):
-        q = (
-            stream_sliding_distinct(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q)
-    return spark.table(name)
+    s = _scratch(spark)
+    s.land(batch.repartition(4))
+    return s.to_memory(
+        stream_sliding_distinct(s.read_stream(batch.schema)), "complete"
+    )
 
 
 @_register(

@@ -31,6 +31,7 @@ from yahoofinancedatalake_spark.functions.scalars import dround, sentiment_label
 from yahoofinancedatalake_spark.queries._registry import (
     _const_key,
     _register,
+    _scratch,
 )
 from yahoofinancedatalake_spark.queries.pack_04_dedup_ann import (
     _SQL_SHINGLES,
@@ -937,8 +938,6 @@ def q_session_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts=8,
 )
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.sources.orc_io import (  # noqa: PLC0415
         read_orc,
         write_orc,
@@ -952,8 +951,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
         "l_returnflag",
     )
-    work = tempfile.mkdtemp(prefix="orc_rt_")
-    path = f"{work}/lineitem_orc"
+    path = _scratch(spark).path("lineitem_orc")
     write_orc(li, path, partition_by=["l_returnflag"])
     back = read_orc(spark, path)
     return (
@@ -976,8 +974,8 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_orderkey % 3 = 0
     ORDER BY o_orderkey
     """,
-    doc="Small-files compaction under the DRIVER value gate (was "
-    "pytest-only): an orders slice lands fragmented across 64 tiny "
+    doc="Small-files compaction under the DRIVER value gate: an "
+    "orders slice lands fragmented across 64 tiny "
     "files (the streaming-sink / incremental-upsert accumulation "
     "pattern), compact_parquet rewrites it to ~target-size files via "
     "the crash-safe sibling-dir double-rename, and the compacted "
@@ -990,8 +988,6 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts=8,
 )
 def q_compact_files_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.sources.parquet_io import (  # noqa: PLC0415
         compact_parquet,
     )
@@ -1004,8 +1000,7 @@ def q_compact_files_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    work = tempfile.mkdtemp(prefix="compact_eq_")
-    path = f"{work}/orders_small_files"
+    path = _scratch(spark).path("orders_small_files")
     sl.repartition(64).write.mode("overwrite").parquet(path)
     n_after = compact_parquet(spark, path, target_file_bytes=64 * 1024 * 1024)
     if n_after >= 64:
@@ -1025,8 +1020,8 @@ def q_compact_files_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     ORDER BY o_orderkey
     """,
-    doc="Additive schema evolution under the DRIVER value gate (was "
-    "pytest-only): generation 1 of a bronze dir lands orders WITHOUT "
+    doc="Additive schema evolution under the DRIVER value gate: "
+    "generation 1 of a bronze dir lands orders WITHOUT "
     "o_orderstatus (even keys), generation 2 lands it WITH the new "
     "column (odd keys) — the vendor-added-a-field drift every "
     "long-lived ingest hits. read_parquet_evolving (mergeSchema) "
@@ -1038,15 +1033,12 @@ def q_compact_files_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts=8,
 )
 def q_schema_evolution_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.sources.parquet_io import (  # noqa: PLC0415
         read_parquet_evolving,
     )
 
     orders = load_table(spark, sf_dir, "orders")
-    work = tempfile.mkdtemp(prefix="evolve_eq_")
-    path = f"{work}/orders_bronze"
+    path = _scratch(spark).path("orders_bronze")
     gen1 = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey"
     )

@@ -35,10 +35,9 @@ from pyspark.sql import functions as F
 from yahoofinancedatalake_spark.catalog import fan_out, load_table
 from yahoofinancedatalake_spark.functions.scalars import dround, sentiment_label, sql_dround
 from yahoofinancedatalake_spark.queries._registry import (
-    _await_stream,
     _const_key,
     _register,
-    _scoped_shuffle,
+    _scratch,
 )
 from yahoofinancedatalake_spark.queries.pack_02_text import (
     _sql_wordlist,
@@ -1167,11 +1166,9 @@ def _chi2_from_cells(o: DataFrame) -> DataFrame:
     "against the batch SQL oracle. Chained aggregations are "
     "unsupported in a streaming plan, so statistic-from-state per "
     "trigger is the architecture, not a shortcut.",
+    parts=8,
 )
 def q_stream_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.streaming.ops import (  # noqa: PLC0415
         stream_value_contingency,
     )
@@ -1179,23 +1176,11 @@ def q_stream_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="stream_chi2_")
-    src = f"{work}/events"
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    name = f"s_chi2_eq_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle(spark, 8):
-        q = (
-            stream_value_contingency(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q)
-    return _chi2_from_cells(spark.table(name))
+    s = _scratch(spark)
+    s.land(batch.repartition(4))
+    stream = stream_value_contingency(s.read_stream(batch.schema))
+    cells = s.to_memory(stream, "complete")
+    return _chi2_from_cells(cells)
 
 
 @_register(
@@ -1868,11 +1853,9 @@ def _psi_from_counts(c: DataFrame) -> DataFrame:
     "against the batch SQL oracle — statistic-from-state, the same "
     "architecture as the chi-square rung, monitoring a DIFFERENT "
     "statistic family (index vs test).",
+    parts=8,
 )
 def q_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.streaming.ops import (  # noqa: PLC0415
         stream_psi_counts,
     )
@@ -1880,23 +1863,11 @@ def q_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    work = tempfile.mkdtemp(prefix="stream_psi_")
-    src = f"{work}/events"
-    batch.repartition(4).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(batch.schema).parquet(src)
-    name = f"s_psi_eq_{uuid.uuid4().hex[:8]}"
-    with _scoped_shuffle(spark, 8):
-        q = (
-            stream_psi_counts(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{work}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q)
-    return _psi_from_counts(spark.table(name))
+    s = _scratch(spark)
+    s.land(batch.repartition(4))
+    stream = stream_psi_counts(s.read_stream(batch.schema))
+    cells = s.to_memory(stream, "complete")
+    return _psi_from_counts(cells)
 
 
 @_register(

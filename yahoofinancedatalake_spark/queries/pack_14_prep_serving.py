@@ -59,7 +59,7 @@ from pyspark.sql import functions as F
 
 from yahoofinancedatalake_spark.catalog import fan_out, load_table
 from yahoofinancedatalake_spark.functions.scalars import dround, sql_dround
-from yahoofinancedatalake_spark.queries._registry import _register
+from yahoofinancedatalake_spark.queries._registry import _register, _scratch
 from yahoofinancedatalake_spark.queries.pack_07_training_prep import (
     _CHUNK_S,
     _CHUNK_W,
@@ -525,7 +525,7 @@ _INC_PREP_ORACLE = f"""
     "incremental_prep_counts",
     _INC_PREP_ORACLE,
     doc="The composed INCREMENTAL prep path under the driver gate "
-    "(VERDICT r8 #4 — prep_stage_counts gates the batch composition; "
+    "(prep_stage_counts gates the batch composition; "
     "this gates the seed-then-increment one): documents split "
     "id-ordered 80/20 (threshold = the exact 80th-percentile doc_id; "
     "new docs get new ids, so an increment's ids follow history's — "
@@ -554,9 +554,6 @@ _INC_PREP_ORACLE = f"""
 def q_incremental_prep_counts(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
     from yahoofinancedatalake_spark import prep  # noqa: PLC0415
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
@@ -574,12 +571,9 @@ def q_incremental_prep_counts(
     batch = docs.filter(F.col("doc_id") >= threshold)
     eval_set = docs.filter(F.col("doc_id") % 37 == 0)
 
-    root = tempfile.mkdtemp(prefix="inc_prep_")
-    try:
-        seed_counts = prep.seed_prep_state(spark, root, seed, eval_set)
-        inc_counts = prep.run_prep_incremental(spark, root, batch, eval_set)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    root = _scratch(spark).path("prep")
+    seed_counts = prep.seed_prep_state(spark, root, seed, eval_set)
+    inc_counts = prep.run_prep_incremental(spark, root, batch, eval_set)
 
     rows = [
         (1, "input", seed_counts["input"] + inc_counts["batch_input"]),
@@ -907,14 +901,7 @@ _STREAM_INC_ORACLE = (
 def q_stream_incremental_prep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
     from yahoofinancedatalake_spark import prep  # noqa: PLC0415
-    from yahoofinancedatalake_spark.queries._registry import (  # noqa: PLC0415
-        _await_stream,
-    )
 
     docs = fan_out(load_table(spark, sf_dir, "documents")).filter(
         F.col("doc_id") % 4 == 0
@@ -930,10 +917,8 @@ def q_stream_incremental_prep(
     ]
     eval_set = docs.filter(F.col("doc_id") % 37 == 0)
 
-    root = tempfile.mkdtemp(prefix="stream_inc_prep_")
-    indir = f"{root}/incoming"
-    ckpt = f"{root}/ckpt"
-    os.makedirs(indir)
+    s = _scratch(spark)
+    root = s.path("prep")
     batch_counts: list[dict] = []
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -943,28 +928,17 @@ def q_stream_incremental_prep(
             prep.run_prep_incremental(spark, root, batch_df, eval_set)
         )
 
-    try:
-        seed_counts = prep.seed_prep_state(spark, root, seed, eval_set)
-        for inc in incs:
-            # land this increment as ONE file, then drain it in ONE
-            # availableNow run; the shared checkpoint makes the next
-            # run see only files landed after this point. coalesce(1)
-            # guarantees the run cannot split an increment into
-            # multiple micro-batches (within-increment sub-batch
-            # order would reintroduce the keeper-order dependence the
-            # two-run construction exists to eliminate)
-            inc.coalesce(1).write.mode("append").parquet(indir)
-            q = (
-                spark.readStream.schema(docs.schema)
-                .parquet(indir)
-                .writeStream.foreachBatch(_process)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_stream(q)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    seed_counts = prep.seed_prep_state(spark, root, seed, eval_set)
+    for inc in incs:
+        # land this increment as ONE file, then drain it in ONE
+        # availableNow run; the shared checkpoint makes the next run
+        # see only files landed after this point. coalesce(1)
+        # guarantees the run cannot split an increment into multiple
+        # micro-batches (within-increment sub-batch order would
+        # reintroduce the keeper-order dependence the two-run
+        # construction exists to eliminate)
+        s.land(inc.coalesce(1), mode="append")
+        s.drain(s.read_stream(docs.schema).writeStream.foreachBatch(_process))
 
     def _sum(key: str, seed_key: str) -> int:
         return seed_counts[seed_key] + sum(c[key] for c in batch_counts)
@@ -1325,16 +1299,9 @@ _GRAMS_SQL = """
     parts=8,
 )
 def q_stream_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.operators.selection import (  # noqa: PLC0415
         dsir_model,
         dsir_score,
-    )
-    from yahoofinancedatalake_spark.queries._registry import (  # noqa: PLC0415
-        _await_stream,
     )
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
@@ -1363,27 +1330,23 @@ def q_stream_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ]
 
-    root = tempfile.mkdtemp(prefix="stream_dsir_")
-    indir = f"{root}/incoming"
-    outdir = f"{root}/scored"
-    ckpt = f"{root}/ckpt"
-    os.makedirs(indir)
+    s = _scratch(spark)
+    outdir = s.path("scored")
     model = dsir_model(seed, "toks", "is_t").persist()
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         # size the per-batch score table by the BATCH, not the session
-        # default (r13, VERDICT item 1 / guide §2.2): AQE is off in
-        # streaming plans, so the per-doc agg fanned out to the full
-        # session shuffle width and appended that many near-empty
-        # files per micro-batch — at 32 cores the reduce/task/file
-        # overhead made this rung SLOWER than at 8. coalesce to the
-        # batch's own source-file count (no-op when the batch is
-        # already wider) keeps it scale-adaptive: a production-sized
-        # batch arriving as N files keeps N-way reduce parallelism.
-        # inputFiles() is a metadata read — no job, no .rdd plan
-        # conversion.
+        # width: AQE is off in streaming plans, so the per-doc agg
+        # fanned out to the full session shuffle width and appended
+        # that many near-empty files per micro-batch — at 32 cores
+        # the reduce/task/file overhead made this rung SLOWER than at
+        # 8. coalesce to the batch's own source-file count (no-op
+        # when the batch is already wider) keeps it scale-adaptive: a
+        # production-sized batch arriving as N files keeps N-way
+        # reduce parallelism. inputFiles() is a metadata read — no
+        # job, no .rdd plan conversion.
         width = max(1, len(batch_df.inputFiles()))
         dsir_score(batch_df, "toks", "doc_id", model).coalesce(
             width
@@ -1392,20 +1355,11 @@ def q_stream_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         model.count()  # materialize BEFORE any increment lands
         for inc in incs:
-            inc.coalesce(1).write.mode("append").parquet(indir)
-            q = (
-                spark.readStream.schema(base.schema)
-                .parquet(indir)
-                .writeStream.foreachBatch(_process)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_stream(q)
+            s.land(inc.coalesce(1), mode="append")
+            s.drain(s.read_stream(base.schema).writeStream.foreachBatch(_process))
         rows = spark.read.parquet(outdir).collect()
     finally:
         model.unpersist()
-        shutil.rmtree(root, ignore_errors=True)
 
     return spark.createDataFrame(
         rows, schema="doc_id bigint, n_grams bigint, logw double"
@@ -1796,13 +1750,6 @@ _LATE_B1_SQL = (
     parts=8,
 )
 def q_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
-    from yahoofinancedatalake_spark.queries._registry import (  # noqa: PLC0415
-        _await_stream,
-    )
     from yahoofinancedatalake_spark.streaming.ops import (  # noqa: PLC0415
         stream_daily_avg,
     )
@@ -1817,45 +1764,31 @@ def q_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     incs = [batch.filter(in_b1), batch.filter(~in_b1)]
 
-    root = tempfile.mkdtemp(prefix="stream_late_")
-    indir = f"{root}/incoming"
-    outdir = f"{root}/agg"
-    ckpt = f"{root}/ckpt"
-    os.makedirs(indir)
     # Size the stream's stateful-agg width by the DATA, not the
-    # session default (r13, guide §2.2 — the connected_components
-    # partition rule): AQE cannot coalesce streaming shuffles, so the
-    # windowed agg ran one state-store instance (with its per-batch
-    # commit + output file) per session shuffle partition — at 32
-    # cores the per-partition overhead made the rung slower than at
-    # 8. ~1M events per state partition, floor 2; a production-sized
-    # stream raises it with volume. The first run's value is baked
-    # into the checkpoint and reused on restart, so both availableNow
-    # runs see one consistent width.
+    # query's width (the connected_components partition rule): AQE
+    # cannot coalesce streaming shuffles, so the windowed agg ran one
+    # state-store instance (with its per-batch commit + output file)
+    # per shuffle partition — at 32 cores the per-partition overhead
+    # made the rung slower than at 8. ~1M events per state partition,
+    # floor 2; a production-sized stream raises it with volume. The
+    # first run's value is baked into the checkpoint and reused on
+    # restart, so both availableNow runs see one consistent width.
+    # ``spark`` is this query's own session, so the write stays here.
     n_events = batch.count()
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(2, min(int(old_parts), n_events // 1_000_000 + 2))
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    loop_parts = max(2, min(width, n_events // 1_000_000 + 2))
     spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        for inc in incs:
-            inc.coalesce(1).write.mode("append").parquet(indir)
-            q = (
-                stream_daily_avg(
-                    spark.readStream.schema(batch.schema).parquet(indir),
-                    watermark="36 hours",
-                )
-                .writeStream.format("parquet")
-                .option("path", outdir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_stream(q)
-        rows = spark.read.parquet(outdir).collect()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(root, ignore_errors=True)
+    s = _scratch(spark)
+    outdir = s.path("agg")
+    for inc in incs:
+        s.land(inc.coalesce(1), mode="append")
+        stream = stream_daily_avg(s.read_stream(batch.schema), watermark="36 hours")
+        s.drain(
+            stream.writeStream.format("parquet")
+            .option("path", outdir)
+            .outputMode("append")
+        )
+    rows = spark.read.parquet(outdir).collect()
 
     return spark.createDataFrame(
         rows,
@@ -2658,17 +2591,10 @@ def q_classifier_calibration(
     parts=8,
 )
 def q_stream_nb_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.operators.selection import (  # noqa: PLC0415
         nb_prior,
         nb_quality_model,
         nb_quality_scores,
-    )
-    from yahoofinancedatalake_spark.queries._registry import (  # noqa: PLC0415
-        _await_stream,
     )
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
@@ -2695,11 +2621,8 @@ def q_stream_nb_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ]
 
-    root = tempfile.mkdtemp(prefix="stream_nb_")
-    indir = f"{root}/incoming"
-    outdir = f"{root}/scored"
-    ckpt = f"{root}/ckpt"
-    os.makedirs(indir)
+    s = _scratch(spark)
+    outdir = s.path("scored")
     model = nb_quality_model(seed, "toks", "is_t").persist()
     prior = nb_prior(seed, "is_t").persist()
 
@@ -2716,21 +2639,12 @@ def q_stream_nb_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         model.count()  # materialize BEFORE any increment lands
         prior.count()
         for inc in incs:
-            inc.coalesce(1).write.mode("append").parquet(indir)
-            q = (
-                spark.readStream.schema(base.schema)
-                .parquet(indir)
-                .writeStream.foreachBatch(_process)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_stream(q)
+            s.land(inc.coalesce(1), mode="append")
+            s.drain(s.read_stream(base.schema).writeStream.foreachBatch(_process))
         rows = spark.read.parquet(outdir).collect()
     finally:
         model.unpersist()
         prior.unpersist()
-        shutil.rmtree(root, ignore_errors=True)
 
     return spark.createDataFrame(
         rows,
@@ -3529,17 +3443,11 @@ def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts=8,
 )
 def q_stream_hybrid_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
-
     from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
         hybrid_near_dup_pairs,
         incremental_hybrid_pairs,
         minhash_band_table,
         winnow_fingerprints,
-    )
-    from yahoofinancedatalake_spark.queries._registry import (  # noqa: PLC0415
-        _await_stream,
     )
 
     docs = fan_out(load_table(spark, sf_dir, "documents")).select(
@@ -3549,108 +3457,86 @@ def q_stream_hybrid_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = docs.filter(bucket < 8)
     batch = docs.filter(bucket >= 8)
 
-    root = tempfile.mkdtemp(prefix="stream_hybrid_dedup_")
-    band_dir = f"{root}/state_band"
-    fpi_dir = f"{root}/state_fpi"
-    fpd_dir = f"{root}/state_fpd"
-    indir = f"{root}/incoming"
-    outdir = f"{root}/pairs"
-    ckpt = f"{root}/ckpt"
+    s = _scratch(spark)
+    band_dir = s.path("state_band")
+    fpi_dir = s.path("state_fpi")
+    fpd_dir = s.path("state_fpd")
+    outdir = s.path("pairs")
 
-    try:
-        # land history state once (the seed run's output)
-        minhash_band_table(hist, "text", "doc_id").write.parquet(band_dir)
-        hist_fps = winnow_fingerprints(hist, "text", "doc_id").persist()
-        hist_fps.select(
-            "doc_id", F.explode("fps").alias("fp")
-        ).write.parquet(fpi_dir)
-        spark.read.parquet(fpi_dir).groupBy("fp").agg(
-            F.count("*").alias("df")
-        ).write.parquet(fpd_dir)
-        hist_fps.unpersist()
+    # land history state once (the seed run's output)
+    minhash_band_table(hist, "text", "doc_id").write.parquet(band_dir)
+    hist_fps = winnow_fingerprints(hist, "text", "doc_id").persist()
+    hist_fps.select(
+        "doc_id", F.explode("fps").alias("fp")
+    ).write.parquet(fpi_dir)
+    spark.read.parquet(fpi_dir).groupBy("fp").agg(
+        F.count("*").alias("df")
+    ).write.parquet(fpd_dir)
+    hist_fps.unpersist()
 
-        def _probe(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            band = spark.read.parquet(band_dir)
-            fpi = spark.read.parquet(fpi_dir)
-            fpd = spark.read.parquet(fpd_dir)
-            # compute the batch's band table and winnow fingerprints
-            # ONCE (r13) and share them between the probe and the
-            # state appends — previously each extraction ran twice
-            # per micro-batch (once inside incremental_hybrid_pairs,
-            # once for the append)
-            bband = minhash_band_table(
-                batch_df, "text", "doc_id"
-            ).persist()
-            bfps_arr = winnow_fingerprints(
-                batch_df, "text", "doc_id"
-            ).persist()
-            pairs = incremental_hybrid_pairs(
-                batch_df, band, fpi, fpd, "text", "doc_id",
-                new_bands=bband, new_fps=bfps_arr,
-            )
-            pairs.write.mode("append").parquet(outdir)
-            # daily-ingest state update: append the batch's band and
-            # fingerprint rows; merge its df counts into a new df
-            # version (read-modify-write of the SMALL (fp, df) table)
-            bband.write.mode("append").parquet(band_dir)
-            bfps = bfps_arr.select("doc_id", F.explode("fps").alias("fp"))
-            bfps.write.mode("append").parquet(fpi_dir)
-            merged = (
-                fpd.unionByName(
-                    bfps.groupBy("fp").agg(F.count("*").alias("df"))
-                )
-                .groupBy("fp")
-                .agg(F.sum("df").alias("df"))
-            )
-            merged.write.mode("overwrite").parquet(f"{root}/fpd_next")
-            spark.catalog.clearCache()
-
-        batch.coalesce(1).write.parquet(indir)
-        for _drain in range(2):  # second drain: exactly-once replay
-            q = (
-                spark.readStream.schema(batch.schema)
-                .parquet(indir)
-                .writeStream.foreachBatch(_probe)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _await_stream(q)
-
-        streamed = spark.read.parquet(outdir).select("id_a", "id_b")
-        full = hybrid_near_dup_pairs(docs, "text", "doc_id")
-        a_old = hist.select(F.col("doc_id").alias("id_a"))
-        b_old = hist.select(F.col("doc_id").alias("id_b"))
-        expected = (
-            full.join(
-                F.broadcast(a_old.withColumn("__ha", F.lit(1))),
-                "id_a",
-                "left",
-            )
-            .join(
-                F.broadcast(b_old.withColumn("__hb", F.lit(1))),
-                "id_b",
-                "left",
-            )
-            .filter(F.col("__ha").isNull() | F.col("__hb").isNull())
-            .select("id_a", "id_b")
-            # materialize the small expected-pair table ONCE (r12):
-            # the symmetric diff consumes each side twice, and
-            # un-checkpointed the second consumption re-ran the whole
-            # full-corpus hybrid matcher (the gate's most expensive
-            # subtree) a second time
-            .localCheckpoint()
+    def _probe(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        band = spark.read.parquet(band_dir)
+        fpi = spark.read.parquet(fpi_dir)
+        fpd = spark.read.parquet(fpd_dir)
+        # compute the batch's band table and winnow fingerprints ONCE
+        # and share them between the probe and the state appends
+        bband = minhash_band_table(batch_df, "text", "doc_id").persist()
+        bfps_arr = winnow_fingerprints(batch_df, "text", "doc_id").persist()
+        pairs = incremental_hybrid_pairs(
+            batch_df, band, fpi, fpd, "text", "doc_id",
+            new_bands=bband, new_fps=bfps_arr,
         )
-        sym_diff = expected.exceptAll(streamed).unionByName(
-            streamed.exceptAll(expected)
+        pairs.write.mode("append").parquet(outdir)
+        # daily-ingest state update: append the batch's band and
+        # fingerprint rows; merge its df counts into a new df
+        # version (read-modify-write of the SMALL (fp, df) table)
+        bband.write.mode("append").parquet(band_dir)
+        bfps = bfps_arr.select("doc_id", F.explode("fps").alias("fp"))
+        bfps.write.mode("append").parquet(fpi_dir)
+        merged = (
+            fpd.unionByName(
+                bfps.groupBy("fp").agg(F.count("*").alias("df"))
+            )
+            .groupBy("fp")
+            .agg(F.sum("df").alias("df"))
         )
-        n_bad = sym_diff.count()
-    finally:
+        merged.write.mode("overwrite").parquet(s.path("fpd_next"))
         spark.catalog.clearCache()
-        shutil.rmtree(root, ignore_errors=True)
 
+    s.land(batch.coalesce(1))
+    for _drain in range(2):  # second drain: exactly-once replay
+        s.drain(s.read_stream(batch.schema).writeStream.foreachBatch(_probe))
+
+    streamed = spark.read.parquet(outdir).select("id_a", "id_b")
+    full = hybrid_near_dup_pairs(docs, "text", "doc_id")
+    a_old = hist.select(F.col("doc_id").alias("id_a"))
+    b_old = hist.select(F.col("doc_id").alias("id_b"))
+    expected = (
+        full.join(
+            F.broadcast(a_old.withColumn("__ha", F.lit(1))),
+            "id_a",
+            "left",
+        )
+        .join(
+            F.broadcast(b_old.withColumn("__hb", F.lit(1))),
+            "id_b",
+            "left",
+        )
+        .filter(F.col("__ha").isNull() | F.col("__hb").isNull())
+        .select("id_a", "id_b")
+        # materialize the small expected-pair table ONCE: the
+        # symmetric diff consumes each side twice, and un-checkpointed
+        # the second consumption re-ran the whole full-corpus hybrid
+        # matcher (the gate's most expensive subtree) a second time
+        .localCheckpoint()
+    )
+    sym_diff = expected.exceptAll(streamed).unionByName(
+        streamed.exceptAll(expected)
+    )
+    n_bad = sym_diff.count()
+    spark.catalog.clearCache()
     return spark.createDataFrame(
         [("incremental_hybrid_equals_full", n_bad == 0)],
         schema="metric string, passed boolean",

@@ -120,25 +120,43 @@ def stage_boundary(df):
     the job instead of recomputing the boundary (a documented Spark
     caveat of the API). Set ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` to
     switch every boundary to reliable ``checkpoint()`` — blocks land
-    under the checkpoint dir (``SPARK_GRAFT_CHECKPOINT_DIR``, or a
-    per-session temp dir), surviving executor loss at the cost of a
+    under the checkpoint dir, surviving executor loss at the cost of a
     write+read per boundary. The boundaries the engine materializes
     are model-/key-/candidate-bounded by convention, so the reliable
-    form's extra I/O is bounded too; production deployments should
-    point the dir at the cluster's durable scratch (HDFS/object
-    store).
+    form's extra I/O is bounded too. Production deployments should
+    point ``SPARK_GRAFT_CHECKPOINT_DIR`` at the cluster's durable
+    scratch (HDFS/object store); without it the dir falls back to one
+    under the driver's temp dir, which ``SparkContext.stop`` deletes,
+    and a warning says so once per context.
     """
     if os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT") == "1":
         sc = df.sparkSession.sparkContext
         if sc._jsc.sc().getCheckpointDir().isEmpty():
-            import tempfile  # noqa: PLC0415
-
             sc.setCheckpointDir(
                 os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-                or tempfile.mkdtemp(prefix="spark_graft_ckpt_")
+                or _fallback_checkpoint_dir(sc)
             )
         return df.checkpoint()
     return df.localCheckpoint()
+
+
+def _fallback_checkpoint_dir(sc) -> str:
+    """A checkpoint dir under the driver's temp dir (the SparkFiles
+    root), which Spark deletes when the SparkContext stops."""
+    import tempfile  # noqa: PLC0415
+    import warnings  # noqa: PLC0415
+
+    root = sc._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    d = tempfile.mkdtemp(prefix="spark_graft_ckpt_", dir=root)
+    warnings.warn(
+        "SPARK_GRAFT_RELIABLE_CHECKPOINT=1 without "
+        f"SPARK_GRAFT_CHECKPOINT_DIR: checkpoints go to {d}, on the "
+        "driver's local disk, and are deleted when the SparkContext "
+        "stops",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+    return d
 
 
 def heap_used_fraction(spark: SparkSession) -> float:

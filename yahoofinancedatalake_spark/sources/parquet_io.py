@@ -7,9 +7,7 @@ Elasticsearch indices with keyed upserts (to_elasticsearch.py). Here:
 - real ``mode("overwrite")`` — Spark's commit protocol handles
   atomicity; no rm-then-write window where readers see nothing;
 - the ES "index with keyed ``_id`` upsert" becomes a *keyed gold
-  table*: partition-overwrite upsert on a partition column (Delta
-  ``MERGE INTO`` is the drop-in upgrade when delta-spark is on the
-  cluster; gated behind import so this repo has no hard dependency).
+  table*: partition-overwrite upsert on a partition column.
 """
 
 from __future__ import annotations
@@ -156,8 +154,7 @@ def upsert_rows(
     Untouched partitions are never read, never rewritten — write
     amplification is O(touched partitions' files), not O(history).
     This is exactly Delta/Iceberg ``MERGE`` with copy-on-write
-    granularity = partition; :func:`upsert_delta_merge` is the
-    file-granularity upgrade when delta-spark is on the cluster.
+    granularity = partition.
     Returns the list of swapped partition directory names.
     """
     from pyspark.sql import functions as F  # noqa: PLC0415
@@ -207,33 +204,6 @@ def upsert_rows(
         swapped.append(name)
     fs.delete(spath, True)
     return sorted(swapped)
-
-
-def upsert_delta_merge(
-    spark: SparkSession, df: DataFrame, path: str, key_cols: Sequence[str]
-) -> bool:
-    """Row-level keyed upsert via Delta ``MERGE INTO`` when available.
-
-    Returns False (caller falls back to ``upsert_by_partition``) if
-    delta-spark isn't installed — this container does not ship it.
-    """
-    try:
-        from delta.tables import DeltaTable  # noqa: PLC0415
-    except ImportError:
-        return False
-    if not DeltaTable.isDeltaTable(spark, path):
-        df.write.format("delta").mode("overwrite").save(path)
-        return True
-    target = DeltaTable.forPath(spark, path)
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-    (
-        target.alias("t")
-        .merge(df.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    return True
 
 
 def write_clustered(

@@ -19,7 +19,7 @@ Cost model vs Delta: snapshots are COPIES (write amplification =
 table size per commit), which is the honest plain-parquet trade —
 right for dimension/serving tables where history audits matter and
 the table is ≪ the fact data. Fact-scale history belongs to a real
-table format; ``upsert_delta_merge`` is the gated upgrade path.
+table format.
 """
 
 from __future__ import annotations

@@ -354,85 +354,6 @@ def running_last_state(
     )
 
 
-def running_last_state_v2(
-    events: DataFrame,
-    key_col: str = "user_id",
-    state_ttl_ms: int | None = None,
-) -> DataFrame:
-    """The same running (last_value, last_ts, n_events) per-key
-    operator on the ``transformWithStateInPandas`` API — Spark 4's
-    successor to ``applyInPandasWithState`` and the forward-looking
-    custom-state surface (arbitrary named state variables, per-state
-    TTL, timers, initial-state seeding; SPARK-45939 operator).
-
-    Kept NEXT TO :func:`running_last_state` rather than replacing it:
-    both APIs ship in Spark 4 and a migrating user needs the engine to
-    demonstrate each. Semantics are identical — the batch-equivalence
-    test asserts v1 == v2 == the batch arg-max over the same files.
-
-    Environment note: transformWithState's state server speaks
-    protobuf over a local socket; in containers without
-    ``google.protobuf`` the query fails at worker init
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE), so the test is
-    import-gated the same way the SARIMAX backend is. It also
-    requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``).
-
-    State here is a single ``ValueState`` row per key; idle-key
-    eviction is declarative (``state_ttl_ms``) instead of v1's manual
-    processing-time timer dance — TTL is the 100 TB answer to
-    unbounded key cardinality (expired state is dropped by the store
-    itself, no timer-firing micro-batches needed, which also means an
-    ``availableNow`` replay terminates naturally even WITH eviction
-    configured — the v1 footgun this API removes).
-    """
-    from pyspark.sql.streaming.stateful_processor import (  # noqa: PLC0415
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningLast(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "running_last", _STATE_SCHEMA, ttlDurationMs=state_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd  # noqa: PLC0415
-
-            prior = self._state.get() if self._state.exists() else None
-            last_value, last_ts, n = prior or (None, None, 0)
-            for pdf in rows:
-                pdf = pdf.dropna(subset=["ts"])
-                if pdf.empty:
-                    continue
-                n += len(pdf)
-                idx = pdf["ts"].idxmax()
-                ts = pdf.loc[idx, "ts"]
-                if last_ts is None or ts >= last_ts:
-                    last_ts = ts
-                    last_value = float(pdf.loc[idx, "value"])
-            self._state.update((last_value, last_ts, n))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "last_value": [last_value],
-                    "last_ts": [last_ts],
-                    "n_events": [n],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=RunningLast(),
-        outputStructType=RUNNING_LAST_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def stream_psi_counts(
     events: DataFrame,
     boundary_days: int = 15,
