@@ -273,7 +273,7 @@ def _run(sf_dir: str, sf: float, only: set[str] | None = None) -> None:
 
     # Dedup-shape warm-up: the LSH→verify→connected-components pipeline
     # has its own one-time codegen surface (minhash band expressions,
-    # the hashed-jaccard verify joins, the CC label-propagation round)
+    # the hashed-jaccard verify joins, the components contraction step)
     # that the text warm-up above does not touch. Partial by design:
     # AQE picks different join strategies at 40 rows than at corpus
     # scale, so scale-dependent plan variants still compile on the
@@ -285,7 +285,7 @@ def _run(sf_dir: str, sf: float, only: set[str] | None = None) -> None:
     from yahoofinancedatalake_spark.prep import near_dup_stage  # noqa: PLC0415
 
     # 20 unique docs + 20 sharing one text: the duplicate block forms
-    # verified jaccard-1.0 pairs, so the CC label-propagation loop and
+    # verified jaccard-1.0 pairs, so the components loop and
     # the loser anti-join actually execute (a limit over the whole
     # union would drain the unique partitions first and leave those
     # paths cold — review-caught)

@@ -109,7 +109,6 @@ _SLOW = {
     "test_streaming.py::test_ttl_eviction_boundary_end_to_end",
     "test_streaming.py::test_running_last_state_accumulates_across_restarts",
     "test_streaming.py::test_stream_contingency_accumulates_across_restarts",
-    "test_dedup.py::test_star_components_match_propagation_on_lsh_graph",
     "test_dedup.py::test_mega_bucket_capped",
     "test_dedup.py::test_minhash_lsh_finds_near_dup_not_far",
     "test_prep.py::test_incremental_prep_matches_full_run",

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.dedup_refs import ref_gram_hashes, ref_minhash, ref_simhash
 from yahoofinancedatalake_spark.operators.dedup import (
     exact_dedup,
     gram_hashes,
@@ -13,9 +14,6 @@ from yahoofinancedatalake_spark.operators.dedup import (
     minhash_lsh_pairs,
     minhash_signature,
     ngram_jaccard,
-    ref_gram_hashes,
-    ref_minhash,
-    ref_simhash,
     shingles,
     simhash64,
     simhash_near_dup_pairs,
@@ -330,7 +328,7 @@ def test_star_components_match_union_find_random(spark):
     import random
 
     from yahoofinancedatalake_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
     )
 
     rng = random.Random(5)
@@ -345,54 +343,76 @@ def test_star_components_match_union_find_random(spark):
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {
         r.node: r.component
-        for r in connected_components_star(df).collect()
+        for r in connected_components(df).collect()
     }
     assert got == expected
 
 
 def test_star_components_handle_long_chain(spark):
-    """A 300-link chain: O(diameter) min-label propagation would need
-    300 rounds (far past its max_iter guard); star contraction
-    converges in ~log rounds and labels every node 0."""
+    """A 300-link chain: min-label propagation would need 300 rounds;
+    star contraction converges in O(log n) steps within the default
+    ``max_iter`` and labels every node 0."""
     from yahoofinancedatalake_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
     )
 
     edges = [(i, i + 1) for i in range(300)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {
         r.node: r.component
-        for r in connected_components_star(df).collect()
+        for r in connected_components(df).collect()
     }
     assert set(got) == set(range(301))
     assert set(got.values()) == {0}
 
 
-def test_star_components_match_propagation_on_lsh_graph(spark):
-    from pyspark.sql import functions as F
-
-    from yahoofinancedatalake_spark.catalog import fan_out, load_table
+def test_components_raise_when_out_of_steps(spark):
+    """Running out of steps must fail loudly: partial labels would
+    split one near-dup cluster into several keepers."""
     from yahoofinancedatalake_spark.operators.dedup import (
         connected_components,
-        connected_components_star,
-        hashed_ngram_jaccard,
-        minhash_lsh_pairs,
     )
 
-    docs = fan_out(load_table(spark, "/root/testdata/sf0.01", "documents"))
-    pairs = minhash_lsh_pairs(docs, "text", "doc_id")
-    verified = hashed_ngram_jaccard(pairs, docs, "doc_id", "text").filter(
-        F.col("jaccard") >= 0.9
-    ).select("id_a", "id_b")
-    a = {
-        (r.node, r.component)
-        for r in connected_components(verified).collect()
-    }
-    b = {
-        (r.node, r.component)
-        for r in connected_components_star(verified).collect()
-    }
-    assert a == b
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(60)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="not converged"):
+        connected_components(df, max_iter=2).collect()
+
+
+#: A nightly prep increment's verified-pair graph (perfbench seed 1):
+#: 20 pairs, one of them extending a pair into a 3-node path.
+_INCREMENT_PAIRS = [
+    (305, 695), (384, 641), (391, 667), (476, 785), (478, 707),
+    (516, 727), (37, 788), (379, 653), (490, 732), (118, 604),
+    (521, 621), (528, 619), (540, 758), (51, 661), (56, 703),
+    (86, 711), (412, 692), (448, 722), (641, 659), (656, 701),
+]
+
+
+def test_components_job_budget_on_increment_graph(spark):
+    """Fixed cost per call, pinned: on the increment-shaped graph one
+    components call plus collecting its labels is 5 Spark jobs (two
+    contraction steps, one shuffle job and one materialization job
+    each, and the collect). Min-label propagation took 29 here."""
+    from yahoofinancedatalake_spark.operators.dedup import (
+        connected_components,
+    )
+
+    df = spark.createDataFrame(_INCREMENT_PAIRS, "id_a long, id_b long")
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_job_budget", "components job budget")
+    try:
+        got = {
+            r.node: r.component
+            for r in connected_components(df).collect()
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("cc_job_budget"))
+    nodes = {n for e in _INCREMENT_PAIRS for n in e}
+    assert got == _uf_components(_INCREMENT_PAIRS, nodes)
+    assert n_jobs <= 5, n_jobs
 
 
 def test_mega_bucket_capped(spark):

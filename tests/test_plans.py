@@ -38,6 +38,21 @@ def _plan(spark, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+@pytest.fixture(scope="module")
+def swept_plan(spark):
+    """Executed-plan strings for the registry-wide sweeps, built once
+    per query and shared by every sweep (a scratch query runs in full
+    when its plan is built)."""
+    plans: dict[str, str] = {}
+
+    def plan(name: str) -> str:
+        if name not in plans:
+            plans[name] = _plan(spark, name)
+        return plans[name]
+
+    return plan
+
+
 def test_range_filter_pushed_to_scan(spark):
     plan = _plan(spark, "range_filter_scan")
     assert "PushedFilters: [IsNotNull(l_shipdate), GreaterThanOrEqual(l_shipdate" in plan
@@ -144,22 +159,22 @@ def test_sequence_packing_exchange_budget(spark):
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_no_unexpected_expand(spark, name):
+def test_no_unexpected_expand(swept_plan, name):
     """No query plan may contain an Expand (grouping-sets/unpivot row
     multiplication) unless it is the operator's own semantics."""
     if name in EXPAND_ALLOWED:
         pytest.skip("Expand is the operator itself (unpivot / ROLLUP)")
-    assert "Expand" not in _plan(spark, name), name
+    assert "Expand" not in swept_plan(name), name
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_no_scale_killers_in_any_query(spark, name):
+def test_no_scale_killers_in_any_query(swept_plan, name):
     """No query plan may contain a cartesian product or an unintended
     nested-loop join; collect() never appears in a query path by
     construction (queries return DataFrames)."""
     if name in CARTESIAN_ALLOWED:
         pytest.skip("documented brute-force baseline / oracle kernel")
-    plan = _plan(spark, name)
+    plan = swept_plan(name)
     assert "CartesianProduct" not in plan, name
     assert "BroadcastNestedLoopJoin" not in plan, name
 

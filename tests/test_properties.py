@@ -81,11 +81,7 @@ def test_ref_hash_twins_are_deterministic(text):
     """The pure-python reference twins of the distributed hash kernels
     are total and deterministic on arbitrary unicode (they gate the
     vectorized numpy kernels in the dedup tests)."""
-    from yahoofinancedatalake_spark.operators.dedup import (
-        ref_gram_hashes,
-        ref_minhash,
-        ref_simhash,
-    )
+    from tests.dedup_refs import ref_gram_hashes, ref_minhash, ref_simhash
 
     assert ref_gram_hashes(text, 3) == ref_gram_hashes(text, 3)
     assert ref_minhash(text) == ref_minhash(text)
@@ -216,13 +212,15 @@ def test_mannwhitney_matches_textbook_reference(spark, a_cents, b_cents):
     ]
     import tempfile
 
-    d = tempfile.mkdtemp(prefix="mw_hyp_")
-    spark.createDataFrame(
-        rows,
-        "event_id bigint, ts timestamp, user_id bigint, "
-        "event_type string, value double, props string",
-    ).write.mode("overwrite").parquet(f"{d}/events.parquet")
-    [r] = QUERIES["mannwhitney_drift"].spark(spark, d).collect()
+    # a hypothesis body runs per example, where a pytest tmp dir would
+    # be shared: each example writes and removes its own dir
+    with tempfile.TemporaryDirectory(prefix="mw_hyp_") as d:
+        spark.createDataFrame(
+            rows,
+            "event_id bigint, ts timestamp, user_id bigint, "
+            "event_type string, value double, props string",
+        ).write.mode("overwrite").parquet(f"{d}/events.parquet")
+        [r] = QUERIES["mannwhitney_drift"].spark(spark, d).collect()
     if len(set(a_cents) | set(b_cents)) == 1:
         # every observation tied: variance 0, z undefined -> NULL
         assert r.z_score is None

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import math
 import random
-import tempfile
 
 from yahoofinancedatalake_spark.queries.pack import QUERIES
 
@@ -20,12 +19,13 @@ _EVENTS_SCHEMA = (
 )
 
 
-def _write_events(spark, rows, prefix):
-    d = tempfile.mkdtemp(prefix=prefix)
+def _write_events(spark, rows, d):
+    """Write ``rows`` as ``d/events.parquet``; returns ``d`` as an
+    sf_dir."""
     spark.createDataFrame(rows, _EVENTS_SCHEMA).repartition(6).write.mode(
         "overwrite"
     ).parquet(f"{d}/events.parquet")
-    return d
+    return str(d)
 
 
 def _mannwhitney_ref(a_vals, b_vals):
@@ -57,7 +57,7 @@ def _mannwhitney_ref(a_vals, b_vals):
 
 
 class TestMannWhitney:
-    def test_matches_reference_with_heavy_ties(self, spark):
+    def test_matches_reference_with_heavy_ties(self, spark, tmp_path):
         """A tiny discrete domain (5 distinct cent values) maximizes
         ties — where the rank-rollup identity and the tie-correction
         most easily go wrong."""
@@ -77,14 +77,14 @@ class TestMannWhitney:
             rows.append(
                 (i, base + dt.timedelta(minutes=i), i % 7, kind, v, "{}")
             )
-        d = _write_events(spark, rows, "mw_prop_")
+        d = _write_events(spark, rows, tmp_path / "mw_prop")
         [r] = QUERIES["mannwhitney_drift"].spark(spark, d).collect()
         u, z = _mannwhitney_ref(a_vals, b_vals)
         assert r.n_click == len(a_vals) and r.n_error == len(b_vals)
         assert r.u_stat == u  # exact: engine U is integer-derived
         assert abs(r.z_score - z) < 1e-12
 
-    def test_planted_shift_is_detected(self, spark):
+    def test_planted_shift_is_detected(self, spark, tmp_path):
         """clicks drawn ~100 cents above errors: z must be large
         and positive (rank-sum direction check)."""
         import datetime as dt
@@ -101,13 +101,13 @@ class TestMannWhitney:
                 rows.append(
                     (i, base, i, "error", 1.0 + rng.random(), "{}")
                 )
-        d = _write_events(spark, rows, "mw_shift_")
+        d = _write_events(spark, rows, tmp_path / "mw_shift")
         [r] = QUERIES["mannwhitney_drift"].spark(spark, d).collect()
         assert r.z_score > 5.0
 
 
 class TestChi2Independence:
-    def test_zero_cells_contribute_expected_counts(self, spark):
+    def test_zero_cells_contribute_expected_counts(self, spark, tmp_path):
         """Plant a type that NEVER lands in high buckets: the
         zero-observed cells must still contribute (O=0, E>0), which
         the groupBy alone would silently drop."""
@@ -121,13 +121,13 @@ class TestChi2Independence:
             i += 1
             rows.append((i, base, i, "error", 460.0, "{}"))  # bucket 9
             i += 1
-        d = _write_events(spark, rows, "chi_prop_")
+        d = _write_events(spark, rows, tmp_path / "chi_prop")
         [r] = QUERIES["chi2_independence"].spark(spark, d).collect()
         # perfectly dependent 2x2: chi2 == N, V == 1
         assert r.n_rows == 2 and r.n_cols == 2 and r.dof == 1
         assert abs(r.chi2 - 100.0) < 1e-9
 
-    def test_reference_formula(self, spark):
+    def test_reference_formula(self, spark, tmp_path):
         """Random contingency vs the direct sum((O-E)^2/E)."""
         import datetime as dt
 
@@ -141,7 +141,7 @@ class TestChi2Independence:
             v = vb * 50.0 + 1.0
             obs[(t, vb)] = obs.get((t, vb), 0) + 1
             rows.append((i, base, i, t, v, "{}"))
-        d = _write_events(spark, rows, "chi_ref_")
+        d = _write_events(spark, rows, tmp_path / "chi_ref")
         [r] = QUERIES["chi2_independence"].spark(spark, d).collect()
         types = sorted({t for t, _ in obs})
         cols = sorted({b for _, b in obs})
@@ -158,7 +158,7 @@ class TestChi2Independence:
 
 
 class TestDomainCapSample:
-    def test_threshold_rank_equals_global_rank(self, spark):
+    def test_threshold_rank_equals_global_rank(self, spark, tmp_path):
         """One mega-domain (the skew case the two-pass exists for),
         several tiny ones (below the cap): the nibble-threshold rank
         must equal the naive global per-domain top-K by md5."""
@@ -173,7 +173,7 @@ class TestDomainCapSample:
             for _ in range(cnt):
                 rows.append((did, f"t{did}", "en", src, 10))
                 did += 1
-        d = tempfile.mkdtemp(prefix="cap_prop_")
+        d = str(tmp_path)
         spark.createDataFrame(
             rows,
             "doc_id bigint, text string, lang string, "
@@ -199,7 +199,7 @@ class TestDomainCapSample:
 
 
 class TestBenford:
-    def test_digit_extraction_and_law(self, spark):
+    def test_digit_extraction_and_law(self, spark, tmp_path):
         """Prices planted per leading digit; frequencies must match
         the plant exactly and the expected column the log10 law."""
         rows = []
@@ -210,7 +210,7 @@ class TestBenford:
                 price = digit * 1000.0 + j + 0.37
                 rows.append((i, i, 1, 1, 1.0, price))
                 i += 1
-        d = tempfile.mkdtemp(prefix="ben_prop_")
+        d = str(tmp_path)
         spark.createDataFrame(
             rows,
             "l_orderkey bigint, l_linenumber bigint, l_partkey bigint,"
@@ -231,7 +231,7 @@ class TestBenford:
 
 
 class TestRangeFrame:
-    def test_gap_days_shrink_the_frame(self, spark):
+    def test_gap_days_shrink_the_frame(self, spark, tmp_path):
         """Planted sparse days: the RANGE frame must count calendar
         distance, not row distance — a 7-day trailing window at day 9
         sees only day 9 when days 2..8 are missing (ROWS 6 PRECEDING
@@ -248,7 +248,7 @@ class TestRangeFrame:
                 (eid, t0 + dt.timedelta(days=day), eid, "click", val, "{}")
             )
             eid += 1
-        d = _write_events(spark, rows, "rf_prop_")
+        d = _write_events(spark, rows, tmp_path / "rf_prop")
         from yahoofinancedatalake_spark.queries.pack import QUERIES
 
         got = {
@@ -261,7 +261,9 @@ class TestRangeFrame:
 
 
 class TestTheilSen:
-    def test_outlier_day_barely_moves_the_median_slope(self, spark):
+    def test_outlier_day_barely_moves_the_median_slope(
+        self, spark, tmp_path
+    ):
         """A clean cents-per-day trend of +100 with ONE wild outlier
         day: the pairwise-slope median must stay at ~100 (the
         estimator's whole point), and with the outlier removed it
@@ -280,7 +282,7 @@ class TestTheilSen:
                  cents / 100.0, "{}")
             )
             eid += 1
-        d = _write_events(spark, rows, "ts_prop_")
+        d = _write_events(spark, rows, tmp_path / "ts_prop")
         from yahoofinancedatalake_spark.queries.pack import QUERIES
 
         [r] = (
@@ -289,7 +291,7 @@ class TestTheilSen:
         assert r.n_slopes == 190
         assert abs(r.slope_cents_per_day - 100.0) < 1e-9
 
-    def test_exact_median_on_even_and_odd_counts(self, spark):
+    def test_exact_median_on_even_and_odd_counts(self, spark, tmp_path):
         """3 days -> 3 slopes (odd median = middle); 4 days -> 6
         slopes (even median = mean of middles) — the rank arithmetic
         must hit both branches exactly."""
@@ -303,7 +305,7 @@ class TestTheilSen:
             (i, t0 + dt.timedelta(days=day), i, "click", c / 100.0, "{}")
             for i, (day, c) in enumerate([(0, 0), (1, 100), (2, 400)])
         ]
-        d = _write_events(spark, rows, "ts_odd_")
+        d = _write_events(spark, rows, tmp_path / "ts_odd")
         [r] = QUERIES["theilsen_trend_daily"].spark(spark, d).collect()
         assert r.n_slopes == 3 and r.slope_cents_per_day == 200.0
         # days 0..3 cents 0,100,400,500 -> slopes
@@ -314,7 +316,7 @@ class TestTheilSen:
                 [(0, 0), (1, 100), (2, 400), (3, 500)]
             )
         ]
-        d = _write_events(spark, rows, "ts_even_")
+        d = _write_events(spark, rows, tmp_path / "ts_even")
         [r] = QUERIES["theilsen_trend_daily"].spark(spark, d).collect()
         slopes = sorted(
             [100.0, 200.0, 500.0 / 3.0, 300.0, 200.0, 100.0]
@@ -324,7 +326,7 @@ class TestTheilSen:
 
 
 class TestMannKendall:
-    def test_monotone_and_flat_series(self, spark):
+    def test_monotone_and_flat_series(self, spark, tmp_path):
         """Strictly increasing series: S = C(n,2), z large positive.
         All-tied series: variance degenerates -> NULL z."""
         import datetime as dt
@@ -343,7 +345,7 @@ class TestMannKendall:
                  0.42, "{}")
             )
             eid += 1
-        d = _write_events(spark, rows, "mk_prop_")
+        d = _write_events(spark, rows, tmp_path / "mk_prop")
         from yahoofinancedatalake_spark.queries.pack import QUERIES
 
         got = {
@@ -355,7 +357,7 @@ class TestMannKendall:
         assert got["error"].s_stat == 0
         assert got["error"].z_score is None  # all tied: var_s == 0
 
-    def test_reference_variance_with_ties(self, spark):
+    def test_reference_variance_with_ties(self, spark, tmp_path):
         """Tied daily values: S and the tie-corrected variance must
         match the textbook formula computed independently."""
         import datetime as dt
@@ -368,7 +370,7 @@ class TestMannKendall:
             (i, t0 + dt.timedelta(days=i), i, "click", c / 100.0, "{}")
             for i, c in enumerate(cents)
         ]
-        d = _write_events(spark, rows, "mk_ref_")
+        d = _write_events(spark, rows, tmp_path / "mk_ref")
         from yahoofinancedatalake_spark.queries.pack import QUERIES
 
         [r] = QUERIES["mann_kendall_trend"].spark(spark, d).collect()
@@ -389,7 +391,7 @@ class TestMannKendall:
 
 
 class TestCusum:
-    def test_locates_a_planted_mean_shift(self, spark):
+    def test_locates_a_planted_mean_shift(self, spark, tmp_path):
         """Level 100 cents for days 0-9, level 500 for days 10-19:
         |S_k| peaks exactly at the last pre-shift day (k=9)."""
         import datetime as dt
@@ -402,7 +404,7 @@ class TestCusum:
                 (day, t0 + dt.timedelta(days=day), day, "click",
                  c / 100.0, "{}")
             )
-        d = _write_events(spark, rows, "cusum_prop_")
+        d = _write_events(spark, rows, tmp_path / "cusum_prop")
         from yahoofinancedatalake_spark.queries.pack import QUERIES
 
         [r] = QUERIES["cusum_changepoint"].spark(spark, d).collect()
@@ -411,7 +413,7 @@ class TestCusum:
         # cum=1000, k=10, tot=6000, n=20 -> |20*1000 - 10*6000| = 40000
         assert r.abs_n_cusum == 40_000
 
-    def test_tie_breaks_to_the_earlier_day(self, spark):
+    def test_tie_breaks_to_the_earlier_day(self, spark, tmp_path):
         """A symmetric V-shaped series ties |S_k| at both shoulders;
         the earlier day must win deterministically."""
         import datetime as dt
@@ -422,7 +424,7 @@ class TestCusum:
             (i, t0 + dt.timedelta(days=i), i, "click", c / 100.0, "{}")
             for i, c in enumerate(cents)
         ]
-        d = _write_events(spark, rows, "cusum_tie_")
+        d = _write_events(spark, rows, tmp_path / "cusum_tie")
         from yahoofinancedatalake_spark.queries.pack import QUERIES
 
         [r] = QUERIES["cusum_changepoint"].spark(spark, d).collect()
@@ -481,7 +483,7 @@ def test_theilsen_sampled_is_deterministic_and_bounded(spark):
         assert row["n_slopes"] == m * (m - 1) // 2
 
 
-def test_psi_drift_properties(spark):
+def test_psi_drift_properties(spark, tmp_path):
     """PSI is a sum of termwise-nonnegative contributions ((p-q) and
     ln(p/q) share sign), zero iff the two distributions agree on every
     band; counts must partition the fact table."""
@@ -521,9 +523,7 @@ def test_psi_drift_properties(spark):
         "event_id long, ts timestamp, event_type string, value double,"
         " props string",
     )
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="psi_sym_")
+    d = str(tmp_path)
     sym.write.mode("overwrite").parquet(f"{d}/events.parquet")
     out = q_psi_drift(spark, d).collect()
     assert len(out) == 1 and out[0]["psi"] == 0.0
@@ -596,7 +596,7 @@ def test_seasonal_decomposition_reconstructs(spark):
         assert nulls == set(ds[:3]) | set(ds[-3:])
 
 
-def test_seasonal_anomaly_detects_planted_spike(spark):
+def test_seasonal_anomaly_detects_planted_spike(spark, tmp_path):
     """A flat daily series with one interior spike day: that day must
     surface with is_anomaly and the top |modified z|; a perfectly
     constant type has MAD 0 -> NULL scores, never a false anomaly."""
@@ -619,7 +619,7 @@ def test_seasonal_anomaly_detects_planted_spike(spark):
             rows.append((i, base + dt.timedelta(days=day, hours=2),
                          i % 5, "flat", 10.0, "{}"))
             i += 1
-    d = _write_events(spark, rows, "anom_prop_")
+    d = _write_events(spark, rows, tmp_path / "anom_prop")
     out = QUERIES["seasonal_anomaly_days"].spark(spark, d).collect()
     spiky = [r for r in out if r["event_type"] == "spiky"]
     flat = [r for r in out if r["event_type"] == "flat"]

@@ -38,7 +38,7 @@ def _concurrency_flat(sessions):
 
 
 class TestIntervalConcurrency:
-    def test_two_phase_scan_matches_flat_sweep(self, spark):
+    def test_two_phase_scan_matches_flat_sweep(self, spark, tmp_path):
         """Random sessions incl. midnight spans: the day-partitioned
         two-phase prefix scan must equal the flat global sweep."""
         import datetime as dt
@@ -75,9 +75,7 @@ class TestIntervalConcurrency:
             sessions.append((start, prev))
         expected = _concurrency_flat(sessions)
 
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="ic_prop_")
+        d = str(tmp_path)
         df.repartition(6).write.mode("overwrite").parquet(
             f"{d}/events.parquet"
         )
@@ -91,7 +89,7 @@ class TestIntervalConcurrency:
 
 
 class TestParetoFrontier:
-    def test_matches_brute_force_with_ties(self, spark):
+    def test_matches_brute_force_with_ties(self, spark, tmp_path):
         """Random points with duplicated prices/sizes: the prefix-max
         sweep must equal the NOT-EXISTS dominance definition."""
         rng = random.Random(11)
@@ -107,9 +105,7 @@ class TestParetoFrontier:
                 for _, p2, s2 in pts
             )
         ]
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="pf_prop_")
+        d = str(tmp_path)
         spark.createDataFrame(
             [
                 (k, f"n{k}", "m", "b", f"t{k}", s, "c", p, "x")
@@ -129,7 +125,7 @@ class TestParetoFrontier:
 
 
 class TestEditDistBlocking:
-    def test_blocking_finds_every_lev1_pair(self, spark):
+    def test_blocking_finds_every_lev1_pair(self, spark, tmp_path):
         """Mutated-string corpus: the symmetric-delete blocked join
         must return exactly the lev<=1 pairs the quadratic scan finds
         (substitutions, insertions, deletions, incl. first/last char)."""
@@ -166,9 +162,7 @@ class TestEditDistBlocking:
             for b in names[i + 1:]
             if lev(a, b) <= 1
         )
-        import tempfile
-
-        d = tempfile.mkdtemp(prefix="ed_prop_")
+        d = str(tmp_path)
         spark.createDataFrame(
             [
                 (i, n, "addr", 0, "p", 0.0, "BUILDING", "c")

@@ -11,8 +11,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.dedup_refs import ref_winnow_fingerprints
 from yahoofinancedatalake_spark.operators.dedup import (
-    ref_winnow_fingerprints,
     winnow_fingerprints,
     winnow_near_dup_pairs,
 )

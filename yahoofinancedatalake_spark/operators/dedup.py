@@ -13,6 +13,11 @@ needs the full ladder, all expressed as shuffle-lean DataFrame plans:
 - :func:`ngram_jaccard` / :func:`hashed_ngram_jaccard` — exact
   Jaccard on shingle sets for a candidate pair table (the verify step
   after LSH).
+- :func:`verified_near_dup_pairs` → :func:`connected_components` —
+  the one near-dup closure every dedup consumer shares: LSH
+  candidates, touched-doc Jaccard verify, then components whose
+  min-id member is the keeper. A batch run is an increment against
+  an empty history.
 
 Hot-path design: per-shingle work never runs as Spark higher-order-
 function lambdas (those evaluate interpreted, no whole-stage codegen
@@ -30,7 +35,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from yahoofinancedatalake_spark.session import stage_boundary
@@ -192,7 +197,8 @@ def minhash_signature(
     i, ``min over grams of (a_i * (g mod p) + b_i) mod p``. Null for
     empty text (callers filter before banding). One Arrow-batched
     numpy kernel — ``((a*g + b) % p).min(axis=1)`` is microseconds
-    per document; matches :func:`ref_minhash` bit-for-bit (pytest).
+    per document; matches the pure-Python reference in
+    ``tests/dedup_refs.py`` bit-for-bit.
     """
     coeffs = _minhash_coeffs(n_hashes, seed)
     a = np.array([c[0] for c in coeffs], dtype=_U64)[:, None]
@@ -220,7 +226,8 @@ def simhash64(col: Column, shingle_n: int = 2) -> Column:
     majority vote of the gram-hash bits; near-duplicate texts differ
     in few bits (compare with :func:`hamming64`). Null for empty text.
     Same one-UDF vectorized pipeline as :func:`minhash_signature`;
-    matches :func:`ref_simhash` bit-for-bit (pytest)."""
+    matches the pure-Python reference in ``tests/dedup_refs.py``
+    bit-for-bit."""
     shifts = np.arange(64, dtype=_U64)
 
     def _fp(texts):
@@ -237,67 +244,6 @@ def simhash64(col: Column, shingle_n: int = 2) -> Column:
 
     _fp.__annotations__ = {"texts": pd.Series, "return": pd.Series}
     return F.pandas_udf(_fp, "bigint")(normalized_text(col))
-
-
-# ---------------------------------------------------------------------------
-# Pure-python reference twins (test cross-checks for the numpy kernels)
-# ---------------------------------------------------------------------------
-
-
-def ref_gram_hashes(text: str, n: int) -> set[int]:
-    """Plain-python twin of :func:`_gram_hash_arrays` for one text."""
-    mask = (1 << 64) - 1
-
-    def rotl(x: int, k: int) -> int:
-        return ((x << k) | (x >> (64 - k))) & mask
-
-    def fmix(x: int) -> int:
-        x ^= x >> 33
-        x = (x * int(_FMIX1)) & mask
-        x ^= x >> 33
-        x = (x * int(_FMIX2)) & mask
-        x ^= x >> 33
-        return x
-
-    toks = " ".join(text.lower().strip().split()).split()
-    if not toks:
-        return set()
-    th = [int(v) for v in pd.util.hash_array(np.array(toks, dtype=object))]
-    if len(toks) >= n:
-        windows = [th[i: i + n] for i in range(len(toks) - n + 1)]
-    else:
-        windows = [th]
-    out = set()
-    for w in windows:
-        acc = 0
-        for j, hv in enumerate(w):
-            acc ^= rotl(hv, _ROT[j])
-        out.add(fmix(acc))
-    return out
-
-
-def ref_minhash(text: str, n_hashes: int = 32, seed: int = 42,
-                shingle_n: int = 3) -> list[int] | None:
-    grams = ref_gram_hashes(text, shingle_n)
-    if not grams:
-        return None
-    p = _MERSENNE
-    return [
-        min((a * (g % p) + b) % p for g in grams)
-        for a, b in _minhash_coeffs(n_hashes, seed)
-    ]
-
-
-def ref_simhash(text: str, shingle_n: int = 2) -> int | None:
-    grams = ref_gram_hashes(text, shingle_n)
-    if not grams:
-        return None
-    val = 0
-    for bit in range(64):
-        ones = sum((g >> bit) & 1 for g in grams)
-        if 2 * ones > len(grams):
-            val |= 1 << bit
-    return val - (1 << 64) if val >= (1 << 63) else val
 
 
 # ---------------------------------------------------------------------------
@@ -689,101 +635,6 @@ def simhash_near_dup_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components of the near-dup pair graph → dedup
-    clusters: ``(node, component)`` with component = min node id in
-    the cluster. This is the step that turns pairwise LSH output into
-    a keep-list (keep ``node == component``, drop the rest) when
-    near-duplication is transitive A~B~C.
-
-    Min-label propagation: each round every node takes the min label
-    over itself and its neighbors (one join + one groupBy-min per
-    round, all distributed); converges in O(graph diameter) rounds —
-    near-dup clusters are shallow, and ``max_iter`` guards
-    pathological chains. The driver loop only *counts* changed labels
-    per round (single long per round, no data to the driver); each
-    round's labels are ``localCheckpoint``-ed, which both caches the
-    partitions AND truncates lineage — with plain ``persist`` the
-    logical plan still nests every prior round, so Catalyst
-    analysis/printing cost grows superlinearly with iterations
-    (measured: the audited plan string held ~1900 nested Exchange
-    nodes before the switch, 3 after). The same scheme at 100 TB is
-    the standard alternating large/small-star contraction shape.
-    """
-    edges = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .union(pairs.select(F.col(id_b).alias("a"), F.col(id_a).alias("b")))
-        .distinct()
-        .persist()
-    )
-    n_edges = edges.count()
-    labels = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .persist()
-    )
-    labels.count()
-    held = labels  # the frame whose materialized blocks each round releases
-    # Size the iterative stage by the graph, not the session default:
-    # each round is 3 shuffles of the label/edge tables, and scheduling
-    # 32+ tasks per stage over a few hundred edges costs more than the
-    # work. ~1M edges per partition; the session default caps it.
-    spark = pairs.sparkSession
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(2, min(int(old_parts), n_edges // 1_000_000 + 2))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        for _ in range(max_iter):
-            neighbor_min = (
-                edges.join(labels, edges.b == labels.node)
-                .groupBy("a")
-                .agg(F.min("comp").alias("ncomp"))
-            )
-            # the changed flag rides the checkpointed frame (r13):
-            # labels only ever DECREASE, so "some neighbor label is
-            # strictly lower" == "this round changed the label" — the
-            # convergence count is then one scan of the checkpoint,
-            # not the extra node-keyed self-join per round it used to
-            # be (one join + shuffle saved per round, across every
-            # CC consumer in the pack)
-            new_labels = (
-                labels.join(
-                    neighbor_min, labels.node == neighbor_min.a, "left"
-                )
-                .select(
-                    "node",
-                    F.least(
-                        F.col("comp"), F.coalesce("ncomp", F.col("comp"))
-                    ).alias("comp"),
-                    (
-                        F.coalesce("ncomp", F.col("comp")) < F.col("comp")
-                    ).alias("__chg"),
-                )
-                .transform(stage_boundary)  # materialize + truncate lineage
-            )
-            changed = new_labels.filter(F.col("__chg")).count()
-            # release the PREVIOUS round's materialized blocks (the
-            # derived `labels` view of round >= 2 is not itself the
-            # holder — `held` is)
-            held.unpersist()
-            held = new_labels
-            labels = new_labels.drop("__chg")
-            if changed == 0:
-                break
-        return labels.select(
-            F.col("node"), F.col("comp").alias("component")
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        edges.unpersist()
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit fingerprints (bit_count(xor))."""
     return F.bit_count(a.bitwiseXOR(b))
@@ -857,107 +708,140 @@ def _jaccard_join(pairs: DataFrame, sh: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def connected_components_star(
+# ---------------------------------------------------------------------------
+# Near-dup closure: verified pairs → connected components
+# ---------------------------------------------------------------------------
+
+#: Near-dup verify threshold: a candidate pair is a near-dup when its
+#: exact hashed-shingle Jaccard is at least this.
+JACCARD_THRESHOLD = 0.9
+
+
+def pair_docs(pairs: DataFrame, docs: DataFrame, id_col: str) -> DataFrame:
+    """The rows of ``docs`` that some (id_a, id_b) pair touches. The
+    endpoint-id set is pair-sized by design and broadcast, so the
+    restriction costs no shuffle of the corpus side."""
+    ids = pairs.select(
+        F.explode(F.array("id_a", "id_b")).alias(id_col)
+    ).dropDuplicates([id_col])
+    return docs.join(F.broadcast(ids), id_col, "left_semi")
+
+
+def verified_near_dup_pairs(
+    batch: DataFrame,
+    id_col: str = "doc_id",
+    bands: DataFrame | None = None,
+    index: DataFrame | None = None,
+    survivors: DataFrame | None = None,
+) -> DataFrame:
+    """The one candidate → verify sequence: MinHash-LSH candidates of
+    ``batch``'s ``text`` (32 hashes, 8 bands, 3-shingles) against the
+    history band ``index`` → exact hashed-shingle Jaccard over the
+    candidate-touched docs of ``survivors`` ∪ ``batch`` → the
+    ``(id_a, id_b, jaccard)`` pairs at or above
+    :data:`JACCARD_THRESHOLD`. ``index``/``survivors`` ``None`` is an
+    empty history (the batch run); ``bands`` is the batch's
+    precomputed :func:`minhash_band_table`.
+
+    The candidates are materialized (:func:`stage_boundary`,
+    candidate-sized by design) because the verify reads them twice,
+    and shingle hashes are computed only for the docs a candidate
+    touches (:func:`pair_docs`). The verify joins are inner on
+    (id_a, id_b), so the restriction is result-invariant.
+    """
+    cand = incremental_minhash_pairs(
+        batch, index, "text", id_col, new_bands=bands
+    ).transform(stage_boundary)
+    docs = batch.select(id_col, "text")
+    if survivors is not None:
+        docs = survivors.select(id_col, "text").unionByName(docs)
+    return hashed_ngram_jaccard(
+        cand, pair_docs(cand, docs, id_col), id_col, "text", shingle_n=3
+    ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+
+
+def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 30,
+    max_iter: int = 64,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction — the O(log n)-round algorithm for graphs whose
-    diameter makes min-label propagation (:func:`connected_components`,
-    O(diameter) rounds) impractical: a 1000-link chain converges in
-    ~10 alternations here vs 999 propagation rounds.
+    """Connected components of the near-dup pair graph → dedup
+    clusters: ``(node, component)`` with component = min node id in
+    the cluster, for every node of ``pairs``. This is the step that
+    turns verified pairs into a keep-list (keep ``node == component``,
+    drop the rest) when near-duplication is transitive A~B~C.
 
-    The star operations (Kiveris et al., "Connected Components in
-    MapReduce and Beyond"):
+    Alternating large-star / small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond"), O(log n) steps on
+    any diameter — a 300-link chain converges in 18 steps where
+    min-label propagation needs 300 rounds. Each step is one
+    group-by over the node's arcs: per node u with neighbourhood Γ(u)
+    and m = min(Γ(u) ∪ {u}), a large step links every neighbour
+    larger than u to m, a small step links u and every neighbour
+    smaller than u to m. Neither changes the components (the paper's
+    lemmas), and a node that only pairs with itself keeps a self arc.
 
-    - large-star: per node u with neighborhood Γ(u), connect every
-      neighbor LARGER than u to m = min(Γ(u) ∪ {u});
-    - small-star: connect u and every neighbor ≤ u to that same m.
+    The grouped frame is the step's only materialization
+    (:func:`stage_boundary`), and the convergence test rides it as an
+    observed metric: a node is open when it has a smaller neighbour
+    and more than one neighbour. No open node means the graph is a
+    forest of stars centred at the component minima, and the step's
+    m column is the answer — a graph that is already stars (the usual
+    near-dup graph: pairs and small cliques) costs one group-by. So a
+    step is one shuffle and one job pair, nothing reaches the driver
+    but one count, and the shuffle width is the session's, left to
+    AQE to coalesce.
 
-    Both are one groupBy + one explode; each alternation at least
-    halves the height of every tree, and the fixpoint is a forest of
-    stars whose centers are the component minima. Convergence is
-    detected from a per-round (count, hash-sum) signature of the
-    canonical edge set — two longs to the driver per round, no edge
-    data. Output matches :func:`connected_components`:
-    (node, component = min node id in the component).
+    Raises ``RuntimeError`` when ``max_iter`` steps end with open
+    nodes: partial labels would silently keep duplicates.
     """
-    edges = (
-        pairs.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("u"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates(["u", "v"])
-        .transform(stage_boundary)
+    a, b = F.col(id_a), F.col(id_b)
+    arcs = pairs.select(a.alias("src"), b.alias("dst")).unionByName(
+        pairs.select(b.alias("src"), a.alias("dst"))
     )
-
-    def signature(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: int64 hash sums overflow under ANSI mode
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row.n, row.h)
-
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        # undirected neighborhood, grouped once per node
+    node = F.col("node")
+    for step in range(max_iter):
+        done = Observation()
         nbrs = (
-            e.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-            .unionByName(
-                e.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-            )
-            .groupBy("node")
-            .agg(F.collect_set("nbr").alias("ns"))
-            .withColumn(
-                "m",
-                F.least(F.col("node"), F.array_min("ns")),
-            )
-        )
-        if large:
-            targets = F.filter(F.col("ns"), lambda x: x > F.col("node"))
-        else:
-            targets = F.array_union(
-                F.filter(F.col("ns"), lambda x: x <= F.col("node")),
-                F.array(F.col("node")),
-            )
-        out = (
-            nbrs.select(
-                F.col("m"), F.explode(targets).alias("t")
-            )
-            .filter(F.col("t") != F.col("m"))
+            arcs.groupBy("src")
+            .agg(F.collect_set("dst").alias("ns"))
             .select(
-                F.least("m", "t").alias("u"),
-                F.greatest("m", "t").alias("v"),
+                F.col("src").alias("node"),
+                F.array_remove("ns", F.col("src")).alias("ns"),
             )
-            .dropDuplicates(["u", "v"])
+            .withColumn("m", F.least(node, F.array_min("ns")))
+            .observe(
+                done,
+                F.count_if(
+                    (F.col("m") != node) & (F.size("ns") > 1)
+                ).alias("open"),
+            )
+            .transform(stage_boundary)
         )
-        return out.transform(stage_boundary)
-
-    sig = signature(edges)
-    for _ in range(max_iter):
-        edges = star(edges, large=True)
-        edges = star(edges, large=False)
-        new_sig = signature(edges)
-        if new_sig == sig:
-            break
-        sig = new_sig
-    # fixpoint: stars centered at component minima → label = min
-    # neighbor (or self for centers, which appear only as u)
-    labels = (
-        edges.select(F.col("v").alias("node"), F.col("u").alias("component"))
-        .groupBy("node")
-        .agg(F.min("component").alias("component"))
+        if done.get["open"] == 0:
+            return nbrs.select("node", F.col("m").alias("component"))
+        if step % 2 == 0:  # large: an isolated node keeps a self arc
+            linked = F.when(F.size("ns") == 0, F.array(node)).otherwise(
+                F.filter("ns", lambda x: x > node)
+            )
+        else:
+            linked = F.array_union(
+                F.filter("ns", lambda x: x < node), F.array(node)
+            )
+        t = F.explode(linked).alias("t")
+        arcs = nbrs.select("m", t).select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("t").alias("src"), F.col("m").alias("dst")),
+                    F.struct(F.col("m").alias("src"), F.col("t").alias("dst")),
+                )
+            ).alias("e")
+        ).select("e.src", "e.dst")
+    raise RuntimeError(
+        f"connected_components: not converged after max_iter={max_iter} "
+        "steps"
     )
-    centers = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .join(labels.select("node"), "node", "left_anti")
-        .withColumn("component", F.col("node"))
-    )
-    return labels.unionByName(centers)
 
 
 def prefix_filter_jaccard_pairs(
@@ -1409,30 +1293,6 @@ def winnow_near_dup_pairs(
             dround(ov, 4).alias("overlap"),
         )
     )
-
-
-def ref_winnow_fingerprints(text: str, k: int = 16, w: int = 8) -> set[str]:
-    """Pure-Python reference for :func:`winnow_fingerprints` (same
-    role as :func:`ref_minhash` — the property-test ground truth).
-
-    The normalization mirrors :func:`normalized_text` EXACTLY, not
-    Python's defaults: Spark ``trim`` strips only 0x20 spaces (never
-    tabs/newlines — UTF8String.trim) and Java regex ``\\s`` is the
-    ASCII class ``[ \\t\\n\\x0B\\f\\r]`` (no Unicode whitespace), so
-    ``str.strip()`` + Python ``\\s`` would disagree on tab/newline- or
-    Unicode-whitespace-edged text and yield different k-grams.
-    """
-    import hashlib  # noqa: PLC0415
-    import re  # noqa: PLC0415
-
-    norm = re.sub(r"[ \t\n\x0b\f\r]+", " ", text.strip(" ").lower())
-    if len(norm) < k:
-        grams = [norm]
-    else:
-        grams = [norm[i: i + k] for i in range(len(norm) - k + 1)]
-    hs = [hashlib.md5(g.encode("utf-8")).hexdigest() for g in grams]
-    m = len(hs)
-    return {min(hs[j: j + w]) for j in range(max(m - w + 1, 1))}
 
 
 def _winnow_fast_arrays(

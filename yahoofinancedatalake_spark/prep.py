@@ -32,10 +32,11 @@ the next increment dedups against.
 
 Scale shape: stages 1, 5, 6 are narrow map-side transforms; the wide
 exchanges are exact-dedup's fingerprint agg, LSH's bucket shuffle, the
-component propagation (O(cluster diameter) rounds), the contamination
-hash join (eval side broadcast), and packing's per-(split, source)
-window — each documented at its operator. Nothing collects to the
-driver except the component-convergence counter.
+components' one group-by per star-contraction step (O(log n) steps on
+any cluster diameter), the contamination hash join (eval side
+broadcast), and packing's per-(split, source) window — each documented
+at its operator. Nothing collects to the driver except the stage counts
+and one observed open-node count per components step.
 
 Run: ``python pipeline.py prep --root /tmp/prep [--sf-dir .../sf0.01]``
 """
@@ -52,9 +53,6 @@ from yahoofinancedatalake_spark.catalog import fan_out, load_table
 #: Quality gate thresholds (the text_quality query's length gate).
 MIN_TOKENS = 20
 MIN_CHARS = 100
-
-#: Near-dup verify threshold (the minhash_near_dup query's).
-JACCARD_THRESHOLD = 0.9
 
 #: Split fractions over the md5 hash space (the train_split_assign
 #: query's 80/10/10 boundaries).
@@ -106,10 +104,10 @@ def near_dup_stage(
 
     Backends:
 
-    - ``"lsh"`` (default): the prep pipeline's own candidate → verify
-      → components code (:func:`_lsh_losers`) with no history —
-      MinHash-LSH candidates, hashed-Jaccard verify at
-      :data:`JACCARD_THRESHOLD`.
+    - ``"lsh"`` (default): the engine's one verified-pair operator
+      (``operators/dedup.py:verified_near_dup_pairs``) with no
+      history — MinHash-LSH candidates, hashed-Jaccard verify at
+      ``dedup.JACCARD_THRESHOLD``.
     - ``"winnow"``: winnowed-fingerprint inverted-index matcher
       (``operators/dedup.py:winnow_near_dup_pairs``, the gated
       ``winnow_near_dup`` query's operator at its exact parameters).
@@ -140,11 +138,14 @@ def near_dup_stage(
     """
     from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
         hybrid_near_dup_pairs,
+        verified_near_dup_pairs,
         winnow_near_dup_pairs,
     )
 
     if backend == "lsh":
-        losers = _lsh_losers(exact, id_col)
+        losers = _component_losers(
+            verified_near_dup_pairs(exact, id_col), id_col
+        )
     elif backend == "winnow":
         # defaults = the gated winnow_near_dup query's parameters
         # (k=16, w=8, df_cap=64, overlap >= 0.5); already verified
@@ -166,52 +167,6 @@ def near_dup_stage(
     return exact.join(losers, id_col, "left_anti")
 
 
-def _lsh_losers(
-    batch: DataFrame,
-    id_col: str = "doc_id",
-    bands: DataFrame | None = None,
-    index: DataFrame | None = None,
-    survivors: DataFrame | None = None,
-) -> DataFrame:
-    """The near-dup ids to drop from ``batch``: MinHash-LSH candidates
-    against the history band ``index`` → hashed-Jaccard verify over
-    the candidate-touched docs of ``survivors`` ∪ ``batch`` →
-    components with the history-taint rule (:func:`_component_losers`).
-    ``index``/``survivors`` ``None`` is an empty history (the batch
-    run); ``bands`` is the batch's precomputed band table.
-
-    The candidate pairs are materialized (candidate-sized by design)
-    because the verify consumes them twice; the touched-id set is
-    broadcast so restricting the verify side costs no corpus-side
-    shuffle, and the shingle hashes are computed only for docs some
-    candidate touches. The verify joins are inner on (id_a, id_b), so
-    the restriction is result-invariant.
-    """
-    from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
-        hashed_ngram_jaccard,
-        incremental_minhash_pairs,
-    )
-
-    cand = incremental_minhash_pairs(
-        batch, index, "text", id_col, n_hashes=32, n_bands=8, shingle_n=3,
-        new_bands=bands,
-    ).transform(stage_boundary)
-    cand_ids = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias(id_col)
-    ).dropDuplicates([id_col])
-    docs = batch.select(id_col, "text")
-    if survivors is not None:
-        docs = survivors.select(id_col, "text").unionByName(docs)
-    verified = hashed_ngram_jaccard(
-        cand,
-        docs.join(F.broadcast(cand_ids), id_col, "left_semi"),
-        id_col,
-        "text",
-        shingle_n=3,
-    ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    return _component_losers(verified, id_col, survivors)
-
-
 def _component_losers(
     verified: DataFrame,
     id_col: str = "doc_id",
@@ -228,7 +183,7 @@ def _component_losers(
         connected_components,
     )
 
-    comps = connected_components(verified.select("id_a", "id_b"))
+    comps = connected_components(verified)
     lose = F.col("node") != F.col("component")
     if survivors is not None:
         old = survivors.select(F.col(id_col).alias("node"))
@@ -587,6 +542,7 @@ def _dedup_and_land(
     from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
         minhash_band_table,
         normalized_text,
+        verified_near_dup_pairs,
     )
 
     def fingerprint(frame: DataFrame) -> DataFrame:
@@ -634,7 +590,11 @@ def _dedup_and_land(
         bands = stage_boundary(minhash_band_table(
             exact, "text", "doc_id", n_hashes=32, n_bands=8, shingle_n=3
         ))
-        losers = _lsh_losers(exact, "doc_id", bands, index, survivors)
+        losers = _component_losers(
+            verified_near_dup_pairs(exact, "doc_id", bands, index, survivors),
+            "doc_id",
+            survivors,
+        )
         deduped = exact.join(losers, "doc_id", "left_anti").transform(
             stage_boundary
         )

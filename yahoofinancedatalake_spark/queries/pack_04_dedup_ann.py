@@ -127,31 +127,12 @@ _SQL_SHINGLES = """
 )
 def q_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yahoofinancedatalake_spark.operators.dedup import (
-        hashed_ngram_jaccard,
-        minhash_lsh_pairs,
+        verified_near_dup_pairs,
     )
 
     docs = load_table(spark, sf_dir, "documents")
     docs = fan_out(docs)  # single-row-group file → parallelize the hot compute
-    # checkpoint the candidate-sized pair table, then verify only the
-    # docs a candidate touches (r12 — the incremental verify shape on
-    # the batch path): un-restricted, the Jaccard join computed
-    # shingle hashes for EVERY doc on both sides; inner joins on the
-    # pair ids make the semi-join restriction result-invariant
-    cand = minhash_lsh_pairs(
-        docs, "text", "doc_id", n_hashes=32, n_bands=8, shingle_n=3
-    ).localCheckpoint()
-    cand_ids = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias("doc_id")
-    ).dropDuplicates(["doc_id"])
-    # broadcast (r13): the touched set is <= 2x candidate pairs —
-    # bounded and small by design — so the semi-join must not shuffle
-    # the corpus side (the +2 Exchanges the r12 plan paid for nothing;
-    # dedup_clusters already did this)
-    touched = docs.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-    return hashed_ngram_jaccard(
-        cand, touched, "doc_id", "text", shingle_n=3
-    ).filter(F.col("jaccard") >= 0.9)
+    return verified_near_dup_pairs(docs, "doc_id")
 
 
 @_register(
@@ -285,41 +266,29 @@ def q_incremental_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node AS doc_id, min(comp) AS cluster_id
     FROM reach GROUP BY node
     """,
-    doc="Dedup clusters: near-dup PAIRS (minhash-LSH + Jaccard >= 0.9 "
-    "verify) closed into connected components, component = min doc_id "
-    "— the keep-list step (keep doc_id == cluster_id) that handles "
-    "transitive near-duplication A~B~C. Spark side is distributed "
-    "min-label propagation (join + groupBy-min per round, O(diameter) "
-    "rounds, only a changed-count per round reaches the driver); the "
-    "oracle closes the same pair graph with a recursive CTE.",
+    doc="Dedup clusters by the engine's one near-dup closure: verified "
+    "pairs, then star-contraction components, cluster_id = min doc_id. "
+    "Near-dup PAIRS (minhash-LSH + Jaccard >= 0.9 verify, "
+    "operators/dedup.verified_near_dup_pairs) closed into connected "
+    "components — the keep-list step (keep doc_id == cluster_id) that "
+    "handles transitive near-duplication A~B~C, and the same closure "
+    "the prep pipeline runs. Spark side is "
+    "operators/dedup.connected_components: "
+    "alternating large/small-star contraction, one group-by per step, "
+    "O(log n) steps on any cluster diameter, one observed open-node "
+    "count per step to the driver, and an error instead of partial "
+    "labels if it runs out of steps; the oracle closes the same pair "
+    "graph with a recursive CTE.",
     parts=8,
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yahoofinancedatalake_spark.operators.dedup import (
         connected_components,
-        hashed_ngram_jaccard,
-        minhash_lsh_pairs,
+        verified_near_dup_pairs,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    docs = fan_out(docs)  # single-row-group file → parallelize the hot compute
-    # checkpoint the candidate-sized pair table, then verify only the
-    # docs a candidate touches (r12 — the minhash_near_dup shape):
-    # un-restricted, the Jaccard join re-shingled EVERY doc on both
-    # sides to score a candidate set that touches a vanishing
-    # fraction; inner joins on the pair ids make the semi-join
-    # restriction result-invariant
-    cand = minhash_lsh_pairs(
-        docs, "text", "doc_id", n_hashes=32, n_bands=8, shingle_n=3
-    ).localCheckpoint()
-    cand_ids = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias("doc_id")
-    ).dropDuplicates(["doc_id"])
-    touched = docs.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-    pairs = hashed_ngram_jaccard(cand, touched, "doc_id", "text", 3).filter(
-        F.col("jaccard") >= 0.9
-    )
-    cc = connected_components(pairs.select("id_a", "id_b"))
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    cc = connected_components(verified_near_dup_pairs(docs, "doc_id"))
     return cc.select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from yahoofinancedatalake_spark.catalog import fan_out, load_table
 from yahoofinancedatalake_spark.functions.scalars import dround, sentiment_label, sql_dround
 from yahoofinancedatalake_spark.queries._registry import _register, _scratch
+from yahoofinancedatalake_spark.session import stage_boundary
 
 
 # ---------------------------------------------------------------------------
@@ -740,34 +741,28 @@ def q_pairwise_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "SF). A broken hash family or banding regression pushes the "
     "mean toward ~0.5 and fails "
     "the driver's hash check instead of silently shifting dedup "
-    "output. Fully distributed: signatures ride the existing "
-    "candidate join; one final 1-row aggregation. The candidate set "
-    "(~0.1%% of all pairs) is persisted and every exact-verify scan "
-    "(gram hashes, signatures) runs over a broadcast semi-join onto "
-    "candidate docs only — the full corpus is shingled exactly once, "
-    "inside the LSH pass. At 100 TB: the cached candidates are a "
-    "temp table, the verify side touches only near-dup docs.",
+    "output. Fully distributed: the pairs come from the engine's "
+    "one verified-pair operator (operators/dedup."
+    "verified_near_dup_pairs), signatures ride the pair join; one "
+    "final 1-row aggregation. The candidate set (~0.1%% of all "
+    "pairs) is materialized and every exact-verify scan (gram "
+    "hashes, signatures) runs over a broadcast semi-join onto "
+    "touched docs only — the full corpus is shingled exactly once, "
+    "inside the LSH pass. At 100 TB the verify side touches only "
+    "near-dup docs.",
     parts=8,
 )
 def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yahoofinancedatalake_spark.operators.dedup import (
-        hashed_ngram_jaccard,
-        minhash_lsh_pairs,
         minhash_signature,
+        pair_docs,
+        verified_near_dup_pairs,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    docs = fan_out(docs)
-    cand = minhash_lsh_pairs(
-        docs, "text", "doc_id", n_hashes=32, n_bands=8, shingle_n=3
-    ).persist()
-    cand_ids = (
-        cand.select(F.explode(F.array("id_a", "id_b")).alias("doc_id"))
-        .dropDuplicates(["doc_id"])
-    )
-    cdocs = docs.join(F.broadcast(cand_ids), "doc_id")
-    exact = hashed_ngram_jaccard(cand, cdocs, "doc_id", "text", shingle_n=3)
-    sigs = cdocs.select(
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    # read twice: for the touched docs and for the scored join
+    pairs = stage_boundary(verified_near_dup_pairs(docs, "doc_id"))
+    sigs = pair_docs(pairs, docs, "doc_id").select(
         F.col("doc_id"),
         minhash_signature(F.col("text"), 32, 42, 3).alias("sig"),
     ).filter(F.col("sig").isNotNull())
@@ -783,8 +778,7 @@ def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.lit(32.0)
     )
     scored = (
-        exact.filter(F.col("jaccard") >= 0.9)
-        .join(sa, "id_a")
+        pairs.join(sa, "id_a")
         .join(sb, "id_b")
         .select((F.abs(est - F.col("jaccard"))).alias("err"))
     )

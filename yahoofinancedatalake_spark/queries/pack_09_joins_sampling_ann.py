@@ -41,6 +41,7 @@ from yahoofinancedatalake_spark.functions.scalars import dround, sentiment_label
 from yahoofinancedatalake_spark.functions.sentiment import NEGATIVE_WORDS, POSITIVE_WORDS, SCALE, sentiment_score_expr
 from yahoofinancedatalake_spark.queries._registry import (
     QUERIES,
+    Query,
     _const_key,
     _register,
     _scratch,
@@ -52,6 +53,7 @@ from yahoofinancedatalake_spark.queries.pack_05_forecast_search import (
     _ann_queries,
     _recall_gate,
 )
+from yahoofinancedatalake_spark.session import stage_boundary
 
 
 # ---------------------------------------------------------------------------
@@ -1412,30 +1414,21 @@ def q_variant_shred_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yahoofinancedatalake_spark.operators.dedup import (
         hamming64,
-        hashed_ngram_jaccard,
-        minhash_lsh_pairs,
+        pair_docs,
         simhash64,
+        verified_near_dup_pairs,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
-    docs = fan_out(docs)
-    cand = minhash_lsh_pairs(
-        docs, "text", "doc_id", n_hashes=32, n_bands=8, shingle_n=3
-    ).persist()
-    cand_ids = (
-        cand.select(F.explode(F.array("id_a", "id_b")).alias("doc_id"))
-        .dropDuplicates(["doc_id"])
-    )
-    cdocs = docs.join(F.broadcast(cand_ids), "doc_id")
-    exact = hashed_ngram_jaccard(cand, cdocs, "doc_id", "text", shingle_n=3)
-    sh = cdocs.select(
+    docs = fan_out(load_table(spark, sf_dir, "documents"))
+    # read twice: for the touched docs and for the scored join
+    pairs = stage_boundary(verified_near_dup_pairs(docs, "doc_id"))
+    sh = pair_docs(pairs, docs, "doc_id").select(
         "doc_id", simhash64(F.col("text"), 2).alias("sh")
     ).filter(F.col("sh").isNotNull())
     sa = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     scored = (
-        exact.filter(F.col("jaccard") >= 0.9)
-        .join(sa, "id_a")
+        pairs.join(sa, "id_a")
         .join(sb, "id_b")
         .select(hamming64(F.col("sh_a"), F.col("sh_b")).alias("d"))
     )
@@ -1526,44 +1519,13 @@ def q_media_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("media_id")
 
 
-@_register(
-    "dedup_clusters_star",
-    QUERIES["dedup_clusters"].oracle,  # same recursive-CTE ground truth
-    doc="Dedup clusters via alternating large-star/small-star "
-    "contraction (operators/dedup.connected_components_star) — the "
-    "O(log n)-round algorithm, driver-verified against the SAME "
-    "recursive-CTE oracle as the O(diameter) min-label propagation "
-    "in dedup_clusters. Same pair graph, same min-id component "
-    "labels, different round complexity: on a long-chain graph "
-    "propagation needs diameter rounds (capped at max_iter) while "
-    "star contraction halves every tree height per alternation — "
-    "the 100 TB choice when cluster topology is unknown.",
-    parts=8,
+QUERIES["dedup_clusters_star"] = Query(
+    name="dedup_clusters_star",
+    spark=QUERIES["dedup_clusters"].spark,
+    oracle=QUERIES["dedup_clusters"].oracle,
+    doc="Dedup clusters under the star-contraction name: the same "
+    "function, plan and oracle as dedup_clusters. The engine has one "
+    "components operator (operators/dedup.connected_components, "
+    "alternating large/small-star contraction); this name is kept "
+    "for its callers.",
 )
-def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from yahoofinancedatalake_spark.operators.dedup import (
-        connected_components_star,
-        hashed_ngram_jaccard,
-        minhash_lsh_pairs,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    docs = fan_out(docs)
-    # candidate-touched verify restriction (r12 — the minhash_near_dup
-    # shape; result-invariant, the Jaccard joins are inner on pair ids)
-    cand = minhash_lsh_pairs(
-        docs, "text", "doc_id", n_hashes=32, n_bands=8, shingle_n=3
-    ).localCheckpoint()
-    cand_ids = cand.select(
-        F.explode(F.array("id_a", "id_b")).alias("doc_id")
-    ).dropDuplicates(["doc_id"])
-    touched = docs.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-    pairs = hashed_ngram_jaccard(cand, touched, "doc_id", "text", 3).filter(
-        F.col("jaccard") >= 0.9
-    )
-    cc = connected_components_star(pairs.select("id_a", "id_b"))
-    return cc.select(
-        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
-    )
-
-

@@ -68,8 +68,8 @@ from yahoofinancedatalake_spark.queries.pack_07_training_prep import (
     _WORD_TOKS_SQL,
     _word_toks,
 )
+from yahoofinancedatalake_spark.operators.dedup import JACCARD_THRESHOLD as _PREP_JT
 from yahoofinancedatalake_spark.prep import (
-    JACCARD_THRESHOLD as _PREP_JT,
     MIN_CHARS as _PREP_MIN_CHARS,
     MIN_TOKENS as _PREP_MIN_TOKENS,
 )
@@ -1765,10 +1765,9 @@ def q_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     incs = [batch.filter(in_b1), batch.filter(~in_b1)]
 
     # Size the stream's stateful-agg width by the DATA, not the
-    # query's width (the connected_components partition rule): AQE
-    # cannot coalesce streaming shuffles, so the windowed agg ran one
-    # state-store instance (with its per-batch commit + output file)
-    # per shuffle partition — at 32 cores the per-partition overhead
+    # query's width: AQE cannot coalesce streaming shuffles, so the
+    # windowed agg ran one state-store instance (with its per-batch
+    # commit + output file) per shuffle partition — at 32 cores the per-partition overhead
     # made the rung slower than at 8. ~1M events per state partition,
     # floor 2; a production-sized stream raises it with volume. The
     # first run's value is baked into the checkpoint and reused on
