@@ -317,7 +317,7 @@ def _run(sf_dir: str, sf: float, only: set[str] | None = None) -> None:
         "orc_roundtrip", "schema_evolution_eq", "prep_stage_counts",
         "incremental_prep_counts",
         # r9: the winnow matcher explodes fingerprint arrays and the
-        # sandwich gate runs two matchers + persists both pair sets —
+        # sandwich gate runs two matchers + materializes both pair sets —
         # the same young-gen burst profile as the LSH family above
         "winnow_near_dup", "winnow_fast_accuracy",
         # r9: streaming rung 12 — two incremental prep runs + state
@@ -362,12 +362,12 @@ def _run(sf_dir: str, sf: float, only: set[str] | None = None) -> None:
         except Exception as e:  # noqa: BLE001
             errors[name] = f"{type(e).__name__}: {e}"[:300]
             print(f"BENCH ERROR {name}: {errors[name]}", file=sys.stderr)
-        # A few queries persist() intermediates (LSH candidate pairs,
-        # tf tables). Those caches are correct within a query but must
-        # not leak into the next one's timing — executor storage fills
-        # up and later queries pay the GC bill (measured: doc_keywords
-        # 6.9s standalone vs 15.5s mid-bench). Each query is timed as
-        # a standalone run against cold storage, matching the driver.
+        # A cached relation left behind would fill executor storage
+        # and charge later queries the GC bill (measured: doc_keywords
+        # 6.9s standalone vs 15.5s mid-bench when it leaked its tf
+        # table). Registered queries release what they cache
+        # (tests/test_cache_lifetime.py); this clear keeps an ad-hoc
+        # caller's cache out of the next query's timing too.
         spark.catalog.clearCache()
 
     if only is not None:

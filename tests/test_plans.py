@@ -201,13 +201,16 @@ def test_region_nation_revenue_broadcasts_dims(spark):
 
 def test_span_dedup_scans_corpus_once_via_cache(spark):
     # corpus-frequency removal must read+explode the corpus ONCE: the
-    # persisted span table feeds BOTH the frequency aggregate and the
-    # count-back join (the skew-safe formulation — the frequency side
-    # partial-aggregates map-side, the join side gets AQE skew
+    # materialized span table feeds BOTH the frequency aggregate and
+    # the count-back join (the skew-safe formulation — the frequency
+    # side partial-aggregates map-side, the join side gets AQE skew
     # splitting; a window count would have neither). Both consumers
-    # must read the cache, not the file.
-    plan = _plan(spark, "span_dedup_c4")
-    assert plan.count("InMemoryTableScan") >= 2, plan
+    # must read that one table, not the file.
+    df = QUERIES["span_dedup_c4"].spark(spark, SF_DIR)
+    found = df._jdf.queryExecution().executedPlan().inputPlan().collectLeaves()
+    leaves = [found.apply(i) for i in range(found.length())]
+    assert [leaf.nodeName() for leaf in leaves] == ["Scan ExistingRDD"] * 2
+    assert len({leaf.rdd().id() for leaf in leaves}) == 1
 
 
 # ---------------------------------------------------------------------------

@@ -336,7 +336,6 @@ def test_winnow_backend_matches_lsh_on_planted_near_dups(spark):
     win = {
         r.doc_id for r in drop_near_dups(docs, backend="winnow").collect()
     }
-    spark.catalog.clearCache()  # the winnow matcher's internal persist
     expected = set(range(20)) | {100}  # clique keeper = min id
     assert lsh == expected
     assert win == expected
@@ -359,7 +358,6 @@ def test_hybrid_backend_matches_winnow_on_planted_near_dups(spark):
     hyb = {
         r.doc_id for r in drop_near_dups(docs, backend="hybrid").collect()
     }
-    spark.catalog.clearCache()  # the hybrid matcher's internal persist
     assert hyb == set(range(20)) | {100}
 
 

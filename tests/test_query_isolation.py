@@ -9,7 +9,14 @@ import sys
 from concurrent.futures import ThreadPoolExecutor
 
 from __spark_entry__ import queries
-from tools.selfcheck import leftovers, residue, value_hash
+from tools.selfcheck import (
+    CACHED_VIEW,
+    cache_leftovers,
+    hold_cached_view,
+    leftovers,
+    residue,
+    value_hash,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -36,6 +43,21 @@ SCRATCH_QUERIES = (
     "stream_dsir_score_batch_eq",
     "stream_late_data_drop_batch_eq",
     "stream_nb_score_batch_eq",
+    "stream_hybrid_dedup_batch_eq",
+)
+
+#: registered queries that materialize intermediates, inside an
+#: operator or between their own stages
+CACHING_QUERIES = (
+    "winnow_near_dup",
+    "hybrid_near_dup",
+    "prefix_filter_jaccard",
+    "span_dedup_c4",
+    "doc_keywords",
+    "winnow_fast_accuracy",
+    "prep_stage_counts_winnow",
+    "prep_stage_counts_hybrid",
+    "prep_stage_counts_paragraph",
     "stream_hybrid_dedup_batch_eq",
 )
 
@@ -72,6 +94,24 @@ def test_scratch_queries_leave_nothing_behind(spark, tmp_path):
         spark.conf.set(_WIDTH, old_width)
     assert left == ""
     assert width == "3"
+
+
+def test_queries_leave_the_table_cache_as_they_found_it(spark):
+    """The SparkContext's one table cache is shared by every session.
+    With a caller's view cached, each caching query leaves exactly
+    that view in it: nothing of its own, and the caller's view not
+    cleared."""
+    qs = queries()
+    spark.catalog.clearCache()
+    hold_cached_view(spark)
+    try:
+        left = {}
+        for name in CACHING_QUERIES:
+            qs[name](spark, SF_DIR).collect()
+            left[name] = cache_leftovers(spark)
+    finally:
+        spark.catalog.dropTempView(CACHED_VIEW)
+    assert {name: x for name, x in left.items() if x} == {}
 
 
 def test_concurrent_queries_match_serial_runs(spark):

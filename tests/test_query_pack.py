@@ -74,6 +74,7 @@ def test_driver_rotation_ordering_invariants():
     coverage."""
     from yahoofinancedatalake_spark.queries.pack import (
         QUERIES,
+        REGISTRATION_ORDER,
         _driver_history,
     )
 
@@ -93,6 +94,10 @@ def test_driver_rotation_ordering_invariants():
     # within the green tier, last-green rounds ascend
     greens = [hist[n][1] for n, t in zip(names, tiers) if t == 2]
     assert greens == sorted(greens), "greens must be stalest-first"
+    # ties keep registration order: no hand-kept pin list reorders them
+    reg = {n: i for i, n in enumerate(REGISTRATION_ORDER)}
+    keys = [(t, hist.get(n, (0, 0, 0))[1], reg[n]) for n, t in zip(names, tiers)]
+    assert keys == sorted(keys), "ties must keep registration order"
     # NOTE: no assertion that every tier is POPULATED — which tiers
     # exist is a property of the committed driver artifacts (e.g. a
     # round that fixes all reds empties tier 0), not of the rotation

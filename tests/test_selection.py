@@ -698,9 +698,9 @@ def test_mixture_plan_is_consistent_run_config(spark):
 
 
 def test_kn_prob_table_releases_cache(spark):
-    """kn_prob_table(cache=True) must not leave a catalog-cached
-    table behind (VERDICT r12 #8): the bigram count table's persist
-    is released inside the function after the model checkpoint, so a
+    """kn_prob_table must not leave a catalog-cached table behind:
+    the bigram count table's persist is released inside the function
+    after the model checkpoint, so a
     long-lived serving session invoking KN queries holds no cached
     table per call."""
     from pyspark.sql import functions as F

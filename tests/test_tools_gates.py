@@ -336,3 +336,14 @@ def test_bench_adjudicate_no_flags_and_disabled(monkeypatch):
                if v["adjudication"].startswith("probe_error")]
     assert len(unprobed) == len(names) - bench.ADJ_MAX_PROBES
     assert len(errored) == bench.ADJ_MAX_PROBES
+
+
+def test_query_index_regenerates_committed_file():
+    """QUERIES.md is exactly what ``tools/query_index.py`` writes, so
+    a doc change regenerates the rows it touches and nothing else."""
+    from pathlib import Path
+
+    from tools.query_index import render
+
+    committed = Path(__file__).resolve().parents[1] / "QUERIES.md"
+    assert render() == committed.read_text()

@@ -108,9 +108,7 @@ def test_density_bound(spark, docs):
 def test_near_dup_pairs_semantics(spark, docs):
     pairs = {
         (r["id_a"], r["id_b"]): r["overlap"]
-        for r in winnow_near_dup_pairs(
-            docs, "text", "id", cache=False
-        ).collect()
+        for r in winnow_near_dup_pairs(docs, "text", "id").collect()
     }
     # the exact normalized duplicate pairs at overlap 1.0
     assert pairs[(1, 2)] == 1.0
@@ -119,7 +117,6 @@ def test_near_dup_pairs_semantics(spark, docs):
     assert 0.5 <= pairs[(1, 3)] < 1.0
     # FAR doc pairs with nothing
     assert not any(4 in p for p in pairs)
-    spark.catalog.clearCache()
 
 
 def test_df_cap_drops_boilerplate(spark):
@@ -130,27 +127,13 @@ def test_df_cap_drops_boilerplate(spark):
             for i in range(10)]
     d = spark.createDataFrame(rows, "id long, text string")
     capped = winnow_near_dup_pairs(
-        d, "text", "id", df_cap=5, overlap_threshold=0.1, cache=False
+        d, "text", "id", df_cap=5, overlap_threshold=0.1
     ).count()
     uncapped = winnow_near_dup_pairs(
-        d, "text", "id", df_cap=64, overlap_threshold=0.1, cache=False
+        d, "text", "id", df_cap=64, overlap_threshold=0.1
     ).count()
     assert uncapped == 45  # all 10 docs share the boilerplate run
     assert capped == 0  # every shared fingerprint sits above the cap
-    spark.catalog.clearCache()
-
-
-def test_cache_false_matches_cached(spark, docs):
-    a = sorted(
-        map(tuple, winnow_near_dup_pairs(
-            docs, "text", "id", cache=True).collect())
-    )
-    b = sorted(
-        map(tuple, winnow_near_dup_pairs(
-            docs, "text", "id", cache=False).collect())
-    )
-    assert a == b
-    spark.catalog.clearCache()
 
 
 def test_bad_params_raise():
@@ -256,15 +239,14 @@ def test_fast_family_same_near_dups_on_fixture(spark, docs):
     (they are far from the threshold) — the corpus-level agreement is
     gated by the winnow_fast_accuracy driver query."""
     fast = winnow_near_dup_pairs(
-        docs, "text", "id", cache=False,
+        docs, "text", "id",
         fingerprints=winnow_fingerprints_fast(docs, "text", "id"),
     )
-    md5 = winnow_near_dup_pairs(docs, "text", "id", cache=False)
+    md5 = winnow_near_dup_pairs(docs, "text", "id")
     assert (
         {(r.id_a, r.id_b) for r in fast.collect()}
         == {(r.id_a, r.id_b) for r in md5.collect()}
     )
-    spark.catalog.clearCache()
 
 
 def test_hybrid_equals_winnow_at_gate_threshold(spark):
@@ -290,10 +272,9 @@ def test_hybrid_equals_winnow_at_gate_threshold(spark):
     win = {
         (r["id_a"], r["id_b"], r["shared"], r["overlap"])
         for r in winnow_near_dup_pairs(
-            d, "text", "id", overlap_threshold=0.6, cache=False
+            d, "text", "id", overlap_threshold=0.6
         ).collect()
     }
-    spark.catalog.clearCache()
     assert hyb == win
     # the clique is actually found (the equality is not vacuous)
     assert {(a, b) for a, b, _, _ in hyb} == {
@@ -318,17 +299,12 @@ def test_hybrid_empty_doc_exception_documented(spark):
     d = spark.createDataFrame(rows, "id long, text string")
     win = {
         (r["id_a"], r["id_b"])
-        for r in winnow_near_dup_pairs(
-            d, "text", "id", cache=False
-        ).collect()
+        for r in winnow_near_dup_pairs(d, "text", "id").collect()
     }
     hyb = {
         (r["id_a"], r["id_b"])
-        for r in hybrid_near_dup_pairs(
-            d, "text", "id", cache=False
-        ).collect()
+        for r in hybrid_near_dup_pairs(d, "text", "id").collect()
     }
-    spark.catalog.clearCache()
     assert win == {(1, 3)}   # pure winnow pairs the empty docs
     assert hyb == set()      # LSH never proposes them
     # the documented mitigation: exact dedup collapses the group
@@ -353,12 +329,7 @@ def test_sharded_pair_count_equals_unsharded(spark, tmp_path):
         spark, d, 1, str(tmp_path), n_shards=4
     )
     docs = fan_out(load_table(spark, d, "documents"))
-    # cache=True: at corpus size the UNCACHED plan re-derives the
-    # extraction inside every join branch with the window transform
-    # un-materialized (measured 396.7 s vs 7.2 s cached on this very
-    # corpus — see the operator docstring)
     want = winnow_near_dup_pairs(docs, "text", "doc_id").count()
-    spark.catalog.clearCache()
     assert n == want
     assert len(slice_secs) == 4
 

@@ -68,15 +68,13 @@ MATERIALIZING = {
 def audit_one(spark, name: str) -> dict | None:
     if name in MATERIALIZING:
         return None
-    # order-insensitivity: queries that persist() a subplan at build
-    # time (the dedup accuracy gates share an identical LSH candidate
-    # plan) register it with the session cache manager, so a LATER
-    # query building the same logical plan gets an InMemoryTableScan
-    # and fewer counted exchanges. QUERIES iteration order follows the
-    # driver rotation (_reorder_for_driver), which changes when round
-    # artifacts are committed — without this reset the audit flipped
-    # minhash/simhash_accuracy's counts (47<->32) purely on rotation
-    # order (caught by the r9 open-of-round gate).
+    # order-insensitivity: a relation left in the shared cache manager
+    # would give a LATER query building the same logical plan an
+    # InMemoryTableScan and fewer counted exchanges (the audit once
+    # flipped minhash/simhash_accuracy's counts 47<->32 on rotation
+    # order alone). Registered queries no longer leave one
+    # (tests/test_cache_lifetime.py); the reset keeps the audit
+    # independent of anything else cached in this session.
     spark.catalog.clearCache()
     df = QUERIES[name].spark(spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()

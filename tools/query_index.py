@@ -13,7 +13,10 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-from yahoofinancedatalake_spark.queries.pack import QUERIES  # noqa: E402
+from yahoofinancedatalake_spark.queries.pack import (  # noqa: E402
+    QUERIES,
+    REGISTRATION_ORDER,
+)
 
 
 def first_sentence(doc: str, limit: int = 160) -> str:
@@ -25,29 +28,34 @@ def first_sentence(doc: str, limit: int = 160) -> str:
     return s[:limit] + ("…" if len(s) > limit else "")
 
 
+def render() -> str:
+    """QUERIES.md's text: one row per query in registration order,
+    which does not depend on the driver rotation."""
+    n_oracle = sum(1 for q in QUERIES.values() if q.oracle)
+    lines = [
+        "# Query registry index\n\n"
+        f"{len(QUERIES)} queries; {n_oracle} hash-gated against the "
+        "DuckDB oracle (rows + schema + order-insensitive value "
+        f"hash), {len(QUERIES) - n_oracle} rows-only by construction "
+        "(non-SQL-expressible hash families / codecs — each ANN "
+        "index additionally carries an oracle-gated recall row). "
+        "Listed in registration order (pack module, then definition "
+        "order). Regenerate: `python tools/query_index.py`.\n\n"
+        "| # | query | oracle | what it covers |\n"
+        "|---|---|---|---|\n"
+    ]
+    for i, name in enumerate(REGISTRATION_ORDER, 1):
+        q = QUERIES[name]
+        kind = "hash" if q.oracle else "rows"
+        lines.append(f"| {i} | {name} | {kind} | {first_sentence(q.doc)} |\n")
+    return "".join(lines)
+
+
 def main() -> int:
     out = sys.argv[1] if len(sys.argv) > 1 else "QUERIES.md"
-    n_oracle = sum(1 for q in QUERIES.values() if q.oracle)
     with open(out, "w") as f:
-        f.write(
-            "# Query registry index\n\n"
-            f"{len(QUERIES)} queries; {n_oracle} hash-gated against the "
-            "DuckDB oracle (rows + schema + order-insensitive value "
-            f"hash), {len(QUERIES) - n_oracle} rows-only by construction "
-            "(non-SQL-expressible hash families / codecs — each ANN "
-            "index additionally carries an oracle-gated recall row). "
-            "Listed in registry order — the driver checks from the "
-            "top, so the freshest queries come first. Regenerate: "
-            "`python tools/query_index.py`.\n\n"
-            "| # | query | oracle | what it covers |\n"
-            "|---|---|---|---|\n"
-        )
-        for i, (name, q) in enumerate(QUERIES.items(), 1):
-            kind = "hash" if q.oracle else "rows"
-            f.write(
-                f"| {i} | {name} | {kind} | {first_sentence(q.doc)} |\n"
-            )
-    print(f"wrote {out} ({len(QUERIES)} queries, {n_oracle} hash-gated)")
+        f.write(render())
+    print(f"wrote {out} ({len(QUERIES)} queries)")
     return 0
 
 

@@ -728,11 +728,10 @@ def main() -> int:
             results.setdefault(qn, {})[factor] = cell
             n_rows = rows if isinstance(rows, int) else len(rows)
             print(f"{qn} x{factor}: {cell} ({n_rows} rows)", flush=True)
-            # Release per-cell caches (ADVICE r9): operators that
-            # persist internally (winnow_near_dup cache=True, the
-            # prep stage) would otherwise accumulate up to 6 cached
-            # corpus-sized tables across the sweep and skew the very
-            # timings this tool reports — bench.py clears, so do we.
+            # The operators release what they cache, but a cell's
+            # timing must not depend on anything this sweep cached
+            # before it (ADVICE r9: up to 6 corpus-sized tables once
+            # accumulated across cells) — bench.py clears, so do we.
             spark.catalog.clearCache()
     print(json.dumps(results))
     return 0

@@ -10,8 +10,12 @@ there).
 A query also fails when it leaves something behind in the caller's
 session or the temp dir: a new entry under ``tempfile.gettempdir()``,
 a temp view, an active stream, or a streaming listener bus left on
-the SparkContext's bus (it keeps its session alive). Each leftover is blamed on the
-query that made it.
+the SparkContext's bus (it keeps its session alive). It fails as well
+when it leaves a cached relation in the SparkContext's table cache or
+drops a view the caller cached there. Each leftover is blamed on the
+query that made it. The JVM, its Python workers and this process keep
+their temp entries under a private temp root, so another Spark JVM on
+the host is never blamed on a query.
 
 Usage: python tools/selfcheck.py [sf_dir] [query ...]
 """
@@ -21,6 +25,7 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import shutil
 import sys
 import tempfile
 import time
@@ -80,6 +85,33 @@ def residue(spark) -> dict[str, set]:
     }
 
 
+#: a caller's view, held in the table cache while queries run
+CACHED_VIEW = "selfcheck_cached_view"
+
+
+def hold_cached_view(spark) -> None:
+    """Cache ``CACHED_VIEW`` on ``spark``, as a caller's view would be."""
+    spark.range(3).createOrReplaceTempView(CACHED_VIEW)
+    spark.catalog.cacheTable(CACHED_VIEW)
+
+
+def cache_leftovers(spark) -> str:
+    """What a query did to the table cache ('' if nothing), given that
+    it held only ``CACHED_VIEW`` before. The SparkContext's one cache
+    manager is shared by every session, so a relation a query leaves
+    there outlives it, and a ``clearCache`` drops what its caller
+    cached. Resets the cache to the held view alone."""
+    found = []
+    if not spark.catalog.isCached(CACHED_VIEW):
+        found.append(f"dropped the caller's cached view {CACHED_VIEW}")
+    spark.catalog.uncacheTable(CACHED_VIEW)
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        found.append("left cached relations")
+        spark.catalog.clearCache()
+    spark.catalog.cacheTable(CACHED_VIEW)
+    return "; ".join(found)
+
+
 def leftovers(before: dict[str, set], after: dict[str, set]) -> str:
     """What appeared between two ``residue`` snapshots ('' if none)."""
     return "; ".join(
@@ -92,7 +124,23 @@ def leftovers(before: dict[str, set], after: dict[str, set]) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("selfcheck")
+    # The JVM (java.io.tmpdir), its Python workers (TMPDIR) and this
+    # process (tempfile.tempdir) make their temp entries here, so the
+    # temp-dir check sees this process's entries and no other's.
+    root = tempfile.mkdtemp(prefix="selfcheck_")
+    os.environ["TMPDIR"] = tempfile.tempdir = root
+    spark = get_spark(
+        "selfcheck",
+        extra_conf={"spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={root}"},
+    )
+    try:
+        return _check(spark, sf_dir, only)
+    finally:
+        spark.stop()
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _check(spark, sf_dir: str, only: set[str]) -> int:
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.execute(
@@ -107,13 +155,11 @@ def main() -> int:
     spark.read.parquet(f"{sf_dir}/events.parquet").groupBy(
         "event_type"
     ).count().collect()
+    hold_cached_view(spark)
     for name, fn in qs.items():
         if only and name not in only:
             continue
         n_run += 1
-        # run each query against cold storage, like the driver does —
-        # persisted intermediates from earlier queries must not leak
-        spark.catalog.clearCache()
         # drain the ContextCleaner backlog (localCheckpoint blocks,
         # broadcast remnants) whenever driver-heap pressure builds —
         # same hygiene as bench.py, fired on measured pressure rather
@@ -130,7 +176,10 @@ def main() -> int:
             failed.add(name)
             continue
         finally:
-            left = leftovers(before, residue(spark))
+            left = "; ".join(
+                x for x in (leftovers(before, residue(spark)),
+                            cache_leftovers(spark)) if x
+            )
             if left:
                 print(f"LEAK  {name}: left {left}")
                 failed.add(name)

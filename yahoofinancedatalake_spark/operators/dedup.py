@@ -399,9 +399,10 @@ def _lsh_candidates(
     the plan is the bucket-key shuffle plus the pair dedup and nothing
     else: group-by-bucket pair generation, never a self-join that
     would re-evaluate the scan→signature subtree on both sides.
-    ``log_drops=True`` persists the bucket table, counts the overflow
-    from it and logs it; the pair consumption then reuses the
-    persisted buckets.
+    ``log_drops=True`` materializes the bucket table
+    (:func:`stage_boundary`), counts the overflow on that same job
+    with an ``Observation`` and logs it; the pair consumption then
+    reads the materialized buckets.
     """
     banded, member = new_bands, F.col(id_col)
     if index is not None:
@@ -421,10 +422,11 @@ def _lsh_candidates(
     if log_drops:
         import logging  # noqa: PLC0415
 
-        buckets = buckets.persist()
-        dropped = (
-            buckets.agg(F.sum("n_dropped").alias("d")).collect()[0]["d"]
-        )
+        drops = Observation()
+        buckets = buckets.observe(
+            drops, F.sum("n_dropped").alias("d")
+        ).transform(stage_boundary)
+        dropped = drops.get["d"]
         if dropped:
             logging.getLogger(__name__).warning(
                 "minhash_lsh_pairs: %d bucket members beyond "
@@ -850,7 +852,6 @@ def prefix_filter_jaccard_pairs(
     id_col: str,
     threshold: float,
     shingle_n: int = 3,
-    cache: bool = True,
 ) -> DataFrame:
     """Exact all-pairs Jaccard >= ``threshold`` via PREFIX FILTERING
     (Chaudhuri/Ganti/Kaushik ICDE'06; Bayardo/Ma/Srikant "Scaling Up
@@ -884,17 +885,10 @@ def prefix_filter_jaccard_pairs(
     ``floor(log(m)/log(1/t))`` — omitted here because the testdata's
     doc lengths are homogeneous.
 
-    ``cache=True`` (default) ``persist()``\\ s two intermediates (the
-    hashed-shingle table and the prefix table — each is consumed by
-    2-3 downstream branches; uncached they re-execute per branch) and
-    their lifetime is CALLER-OWNED: the result is lazy, so this
-    function cannot unpersist them. Call
-    ``spark.catalog.clearCache()`` (or unpersist via
-    ``spark.sparkContext._jsc.getPersistentRDDs``) after consuming
-    the result if you invoke this in a loop over parameters;
-    otherwise executor storage accumulates one cached copy per call.
-    Pass ``cache=False`` to trade recomputation for zero retained
-    storage.
+    The hashed-shingle table and the prefix table are each read by
+    2-3 branches, so both are persisted for the call, and the
+    candidate pairs are materialized (:func:`stage_boundary`) before
+    both are unpersisted: the returned frame holds no cached table.
     """
     from fractions import Fraction  # noqa: PLC0415
 
@@ -947,14 +941,8 @@ def prefix_filter_jaccard_pairs(
             F.explode(shingles(F.col(text_col), shingle_n)).alias("gs"),
         )
         .select("pid", F.xxhash64("gs").alias("g"))
+        .persist()
     )
-    if cache:
-        # Cache lifetime is CALLER-OWNED: the frame is returned lazily
-        # so this function cannot unpersist; the pack's runners call
-        # spark.catalog.clearCache() between queries, and a library
-        # caller looping over parameters should do the same (or pass
-        # cache=False and accept the recomputation).
-        sh = sh.persist()
     sz = sh.groupBy("pid").agg(F.count(F.lit(1)).alias("m"))
     dfreq = sh.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     wdoc = Window.partitionBy("pid").orderBy(
@@ -976,9 +964,8 @@ def prefix_filter_jaccard_pairs(
             )
         )
         .select("pid", "g", "m", "rn")
+        .persist()  # referenced by both self-join sides
     )
-    if cache:
-        pref = pref.persist()  # referenced by both self-join sides
     a = pref.select(
         F.col("pid").alias("id_a"),
         "g",
@@ -1009,20 +996,25 @@ def prefix_filter_jaccard_pairs(
     ubound = F.lit(1) + F.least(
         F.col("ma") - F.col("pa"), F.col("mb") - F.col("pb")
     )
-    return (
-        a.join(b, "g")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            (F.lit(tn) * F.col("ma") <= F.lit(td) * F.col("mb"))
-            & (F.lit(tn) * F.col("mb") <= F.lit(td) * F.col("ma"))
+    try:
+        return (
+            a.join(b, "g")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .filter(
+                (F.lit(tn) * F.col("ma") <= F.lit(td) * F.col("mb"))
+                & (F.lit(tn) * F.col("mb") <= F.lit(td) * F.col("ma"))
+            )
+            .filter(
+                ubound * F.lit(tn + td)
+                >= F.lit(tn) * (F.col("ma") + F.col("mb"))
+            )
+            .select("id_a", "id_b")
+            .distinct()
+            .transform(stage_boundary)
         )
-        .filter(
-            ubound * F.lit(tn + td)
-            >= F.lit(tn) * (F.col("ma") + F.col("mb"))
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    finally:
+        pref.unpersist()
+        sh.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -1175,7 +1167,6 @@ def winnow_near_dup_pairs(
     w: int = 8,
     df_cap: int = 64,
     overlap_threshold: float = 0.5,
-    cache: bool = True,
     fingerprints: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs from a winnowed inverted index (the MOSS match
@@ -1204,23 +1195,18 @@ def winnow_near_dup_pairs(
     per-doc fingerprint counts (a doc's identity does not shrink
     because its boilerplate got capped).
 
-    ``cache=True`` (default) ``persist()``\\ s the per-doc fingerprint
-    table — it feeds the exploded index (hence df-counts, both join
-    sides) AND both size lookups; uncached, the md5-per-k-gram
-    extraction re-executes per branch, and WORSE: with the extraction
-    inlined into each consumer plan the optimizer can collapse the
-    window-min transform onto the un-materialized k-gram-hash array,
-    re-evaluating the whole per-doc hash array PER WINDOW — measured
-    396.7 s uncached vs 7.2 s cached for the identical 25-pair answer
-    on the 500-doc sf0.01 corpus (r11; jstack shows workers inside
-    the per-gram expression evaluators). ``cache=False`` is therefore
-    a fixture-scale testing mode only; at corpus scale use the
-    default, or land the fingerprint table to parquet first and pass
-    it via ``fingerprints`` (what tools/scale_sweep.py's sharded
-    runner does). Same caller-owned lifetime contract as
-    :func:`prefix_filter_jaccard_pairs`: the result is lazy so this
-    function cannot unpersist — call ``spark.catalog.clearCache()``
-    after consuming the result when looping over parameters.
+    The per-doc fingerprint table is materialized
+    (:func:`stage_boundary`): it feeds the exploded index (hence
+    df-counts, both join sides) AND both size lookups. Left inline,
+    the md5-per-k-gram extraction re-executes per branch, and WORSE:
+    the optimizer can collapse the window-min transform onto the
+    un-materialized k-gram-hash array, re-evaluating the whole
+    per-doc hash array PER WINDOW — measured 396.7 s inline vs 7.2 s
+    materialized for the identical 25-pair answer on the 500-doc
+    sf0.01 corpus (jstack shows workers inside the per-gram
+    expression evaluators). At corpus scale land the fingerprint
+    table to parquet first and pass it via ``fingerprints`` (what
+    tools/scale_sweep.py's sharded runner does).
 
     ``fingerprints`` (optional) supplies a precomputed
     ``(id_col, fps)`` frame — any member of the winnow hash family
@@ -1236,9 +1222,7 @@ def winnow_near_dup_pairs(
         fingerprints
         if fingerprints is not None
         else winnow_fingerprints(df, text_col, id_col, k=k, w=w)
-    )
-    if cache:
-        fps = fps.persist()
+    ).transform(stage_boundary)
     idx = fps.select(
         F.col(id_col), F.explode("fps").alias("fp")
     )
@@ -1248,7 +1232,7 @@ def winnow_near_dup_pairs(
     # sides of each one (the exploded index, the df-filtered
     # fingerprint list, the per-doc sizes) grow with the corpus, so no
     # side is ever broadcast-safe — and without the hint the static
-    # planner, seeing only the cached plan's optimistic size estimate,
+    # planner, seeing only a materialized input's optimistic size estimate,
     # picked the 100x-replicated index as a broadcast build side and
     # overflowed spark.driver.maxResultSize (caught by the scale
     # sweep). Shuffle-hash beats sort-merge here because neither input
@@ -1409,7 +1393,6 @@ def hybrid_near_dup_pairs(
     shingle_n: int = 3,
     seed: int = 42,
     max_bucket_size: int = 512,
-    cache: bool = True,
     fingerprints: DataFrame | None = None,
     bands: DataFrame | None = None,
 ) -> DataFrame:
@@ -1459,15 +1442,13 @@ def hybrid_near_dup_pairs(
 
     ``fingerprints`` / ``bands`` supply a precomputed ``(id_col,
     fps)`` winnow frame (``k``/``w`` are then ignored) and band table
-    (hash parameters ignored). ``cache=True`` persists the
-    fingerprint table across its consumers — caller releases via
-    ``spark.catalog.clearCache()``.
+    (hash parameters ignored).
     """
     return incremental_hybrid_pairs(
         df, None, None, None, text_col, id_col,
         k=k, w=w, df_cap=df_cap, overlap_threshold=overlap_threshold,
         n_hashes=n_hashes, n_bands=n_bands, shingle_n=shingle_n,
-        seed=seed, max_bucket_size=max_bucket_size, cache=cache,
+        seed=seed, max_bucket_size=max_bucket_size,
         new_bands=bands, new_fps=fingerprints,
     )
 
@@ -1489,7 +1470,6 @@ def incremental_hybrid_pairs(
     shingle_n: int = 3,
     seed: int = 42,
     max_bucket_size: int = 512,
-    cache: bool = True,
     new_bands: DataFrame | None = None,
     new_fps: DataFrame | None = None,
 ) -> DataFrame:
@@ -1542,10 +1522,11 @@ def incremental_hybrid_pairs(
     corpus-sized joins are hinted shuffle_hash: cached-plan size
     estimates once picked a 100×-replicated build side for broadcast.
 
-    ``cache=True`` persists the multi-consumed fingerprint frames —
-    without it the winnow extraction re-evaluates inside every join
-    branch (measured 90.8 s vs 1.7 s on a 94-doc batch); caller
-    releases via ``spark.catalog.clearCache()``. ``new_bands`` /
+    The multi-consumed fingerprint frames (the batch's array form and
+    the touched docs' exploded rows) are materialized
+    (:func:`stage_boundary`): inline, the winnow extraction
+    re-evaluates inside every join branch (measured 90.8 s vs 1.7 s
+    on a 94-doc batch). ``new_bands`` /
     ``new_fps`` supply the batch's precomputed band table / winnow
     fingerprint frame (hash and ``k``/``w`` parameters are then
     ignored), so a caller that appends both to state pays each
@@ -1569,11 +1550,10 @@ def incremental_hybrid_pairs(
     ).transform(stage_boundary)
     if new_fps is None:
         new_fps = winnow_fingerprints(new_docs, text_col, id_col, k=k, w=w)
-    if cache:
-        # persist the ARRAY form before exploding: Generate over the
-        # un-materialized extraction re-evaluates the per-doc
-        # transform per output row
-        new_fps = new_fps.persist()
+    # materialize the ARRAY form before exploding: Generate over the
+    # un-materialized extraction re-evaluates the per-doc transform per
+    # output row
+    new_fps = stage_boundary(new_fps)
     new_idx = new_fps.select(F.col(id_col), F.explode("fps").alias("fp"))
     # broadcast: the touched-id set is <= 2x candidate pairs
     touched = F.broadcast(
@@ -1581,16 +1561,18 @@ def incremental_hybrid_pairs(
         .dropDuplicates([id_col])
     )
     rel_idx = new_idx.join(touched, id_col, "left_semi")
-    # document frequencies stay GLOBAL (the df-cap is a corpus-wide
-    # statistic): the batch's own counts, plus history's for the
-    # fingerprints the touched docs carry
-    df_tot = new_idx.groupBy("fp").agg(F.count("*").alias("df"))
     if fp_index is not None:
         rel_idx = rel_idx.unionByName(
             fp_index.select(F.col(id_col), "fp").join(
                 touched, id_col, "left_semi"
             )
         )
+    rel_idx = stage_boundary(rel_idx)
+    # document frequencies stay GLOBAL (the df-cap is a corpus-wide
+    # statistic): the batch's own counts, plus history's for the
+    # fingerprints the touched docs carry
+    df_tot = new_idx.groupBy("fp").agg(F.count("*").alias("df"))
+    if fp_index is not None:
         df_tot = (
             rel_idx.select("fp").distinct()
             .join(fp_df.hint("shuffle_hash"), "fp", "left")
@@ -1607,8 +1589,6 @@ def incremental_hybrid_pairs(
                 ).alias("df"),
             )
         )
-    if cache:
-        rel_idx = rel_idx.persist()
     kept = df_tot.filter((F.col("df") >= 2) & (F.col("df") <= df_cap))
     kept_arr = (
         rel_idx.join(kept.select("fp").hint("shuffle_hash"), "fp")

@@ -246,7 +246,6 @@ def kn_prob_table(
     toks_col: str,
     *,
     discount: float = KN_DISCOUNT,
-    cache: bool = True,
 ) -> DataFrame:
     """Train an interpolated Kneser-Ney bigram LM on the corpus:
     returns the model as ``(w1, w2, lp)`` over every SEEN bigram type,
@@ -263,21 +262,16 @@ def kn_prob_table(
     ``lp = dround(ln P, 6)`` is pinned here once so scoring engines
     sum identical doubles.
 
-    ``cache=True`` (default, r12) ``persist()``\\ s the bigram count
-    table ``bc``: it feeds FOUR consumers (ctx, cont, dtot, the final
-    join), and un-materialized each reference re-executes the
-    corpus-sized bigram explode+count shuffle — four corpus passes
-    for one vocabulary-sized table (the winnow-matcher fingerprint
-    lesson; see OPTIMIZATION_r12.md for the measured delta).
-
-    Lifetime (r13, VERDICT r12 #8): the persist no longer leaks to the
-    caller. The returned model is ``localCheckpoint()``\\ ed here —
-    materializing all four ``bc`` consumers eagerly — and ``bc`` is
-    unpersisted before returning, so a long-lived serving session
-    invoking KN queries holds no cached table per call (checkpoint
-    blocks are released by the ContextCleaner when the frame is
-    collected). The checkpointed model is bigram-TYPE-bounded
-    (vocabulary-sized), never corpus-sized."""
+    The bigram count table ``bc`` is persisted for the call: it feeds
+    FOUR consumers (ctx, cont, dtot, the final join), and
+    un-materialized each reference re-executes the corpus-sized
+    bigram explode+count shuffle — four corpus passes for one
+    vocabulary-sized table (see OPTIMIZATION_r12.md for the measured
+    delta). The returned model is materialized here
+    (:func:`stage_boundary`) and ``bc`` unpersisted in ``finally``,
+    so the call leaves no cached table behind; the checkpoint blocks
+    are freed by the ContextCleaner with the frame. The model is
+    bigram-TYPE-bounded (vocabulary-sized), never corpus-sized."""
     base = df.filter(F.size(toks_col) >= 2)
     bg = base.select(
         F.explode(
@@ -288,9 +282,7 @@ def kn_prob_table(
             )
         ).alias("x")
     ).select("x.w1", "x.w2")
-    bc = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
-    if cache:
-        bc = bc.persist()
+    bc = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c")).persist()
     ctx = bc.groupBy("w1").agg(
         F.sum("c").alias("cv"), F.count(F.lit(1)).alias("n1v")
     )
@@ -313,10 +305,10 @@ def kn_prob_table(
         .join(cont_d, "w2")
         .select("w1", "w2", dround(F.log(p), 6).alias("lp"))
     )
-    if cache:
-        model = model.transform(stage_boundary)
+    try:
+        return stage_boundary(model)
+    finally:
         bc.unpersist()
-    return model
 
 
 def kneser_ney_scores(

@@ -1210,16 +1210,16 @@ def kmeans_lloyd_rounds(
     from pyspark.sql import Window as W
     from yahoofinancedatalake_spark.functions.scalars import dround
 
-    # persisted: every round's distance AND update join re-reads this
-    # byte-identical table — without the persist the scan+posexplode
-    # subtree re-executes 2*rounds+1 times (r5 review finding). Small:
-    # N x dim narrow rows; bench/selfcheck clearCache between queries.
+    # materialized: every round's distance AND update join re-reads
+    # this byte-identical table — inline, the scan+posexplode subtree
+    # re-executes 2*rounds+1 times (r5 review finding). Small: N x dim
+    # narrow rows.
     comp = vectors.select(
         F.col(id_col).alias("vid"),
         F.posexplode(_as_double(F.col(vec_col))).alias("pos0", "x0"),
     ).select(
         "vid", (F.col("pos0") + 1).alias("pos"), dround(F.col("x0"), 4).alias("x")
-    ).persist()
+    ).transform(stage_boundary)
 
     # DISTINCT mirrors the oracle's seeds CTE (duplicate ids must not
     # seed two clusters); orderBy().limit(k) plans as a distributed
@@ -1277,13 +1277,9 @@ def kmeans_lloyd_rounds(
             )
             # eager localCheckpoint per round: bounds the otherwise
             # rounds-deep lineage (the connected_components
-            # convention) and materializes the k x dim table so comp
-            # can be unpersisted before returning
+            # convention)
             .transform(stage_boundary)
         )
-    # safe for rounds=0 too: unpersist only drops the cache, the
-    # lazy seed frame recomputes from source if consumed afterwards
-    comp.unpersist()
     return cent.select(
         "cluster", "pos", F.col("c").alias("centroid"), "n_members"
     )
@@ -1457,10 +1453,11 @@ def _cosine_dup_rollup(clustered: DataFrame, threshold: float) -> DataFrame:
         )
         .orderBy("cluster")
     )
-    # materialize before unpersisting the build table the plan reads
-    out = out.transform(stage_boundary)
-    clustered.unpersist()
-    return out
+    try:
+        # materialized before the build table the plan reads is released
+        return stage_boundary(out)
+    finally:
+        clustered.unpersist()
 
 
 def auto_semdedup_k(n: int) -> int:

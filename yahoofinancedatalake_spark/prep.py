@@ -114,15 +114,17 @@ def near_dup_stage(
       Fully deterministic — the df-cap depends only on (fingerprint,
       document frequency) — so its composed gate
       (``prep_stage_counts_winnow``) needs no candidate-rewrite oracle
-      machinery. The matcher persist()s its fingerprint table
-      internally (cache=True): the caller releases it with
-      ``spark.catalog.clearCache()``.
+      machinery.
     - ``"hybrid"``: MinHash-LSH candidates scored by
       winnowed-fingerprint overlap
       (``operators/dedup.py:hybrid_near_dup_pairs`` at the gated
       ``hybrid_near_dup`` query's parameters) — the winnow accept rule
       with LSH bounding the pair universe. Deterministic like
-      "winnow"; same clearCache contract.
+      "winnow".
+
+    Every backend materializes what its matcher reads twice with
+    ``stage_boundary`` and leaves no cached table behind; the result
+    is lazy.
 
     The LSH-vs-winnow thresholds are NOT the same policy (Jaccard
     0.9 exact-ish replicas vs overlap-coefficient 0.5 substring
@@ -687,22 +689,27 @@ def run_prep(
     _dedup_and_land(spark, root, docs, counts, None, fresh=True)
     deduped = spark.read.parquet(f"{root}/dedup_survivors")
 
-    if paragraph_level:
-        deduped = paragraph_stage(deduped).persist()
-        counts["after_paragraph"] = deduped.count()
+    held: list[DataFrame] = []  # persisted stage frames, released below
+    try:
+        if paragraph_level:
+            deduped = paragraph_stage(deduped).persist()
+            held.append(deduped)
+            counts["after_paragraph"] = deduped.count()
 
-    clean = decontaminate(deduped, eval_set).persist()
-    counts["after_decontam"] = clean.count()
+        clean = decontaminate(deduped, eval_set).persist()
+        held.append(clean)
+        counts["after_decontam"] = clean.count()
 
-    rebalanced = rebalance_languages(clean)
-    counts["after_rebalance"] = rebalanced.count()
+        rebalanced = rebalance_languages(clean)
+        counts["after_rebalance"] = rebalanced.count()
 
-    split = assign_splits(rebalanced)
-    split.write.mode("overwrite").partitionBy("split").parquet(
-        f"{root}/clean_docs"
-    )
-    for frame in (clean, deduped):
-        frame.unpersist()
+        split = assign_splits(rebalanced)
+        split.write.mode("overwrite").partitionBy("split").parquet(
+            f"{root}/clean_docs"
+        )
+    finally:
+        for frame in held:
+            frame.unpersist()
 
     # partitioned tables are read back with their schema: an empty
     # corpus lands no partition directory to infer one from

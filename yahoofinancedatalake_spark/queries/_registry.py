@@ -62,7 +62,11 @@ def _register(
 
     Each call runs the query on its own ``spark.newSession()``: a
     child session with its own SQL conf, temp views and streams that
-    shares the SparkContext and the table cache. ``parts`` sets
+    shares the SparkContext. The table cache belongs to the
+    SparkContext and is shared by every session, so a query leaves it
+    as it found it: what it persists it unpersists in a ``finally``,
+    what its lazy result reads twice it takes from ``stage_boundary``,
+    and it never clears the cache. ``parts`` sets
     ``spark.sql.shuffle.partitions`` on that child only. The returned
     DataFrame stays bound to the child, so the width holds when the
     caller executes it later, and the caller's session is never

@@ -104,53 +104,8 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 #      fix must re-confirm before anything else),
 #   2. then never driver-checked (brand-new queries land here too),
 #   3. then green, stalest last-green round first,
-# with ties broken by the _PIN_FIRST hint list (fresh code this round /
-# judge-named must-checks) and then registration order. Every query is
-# guaranteed to eventually rotate into the driver window.
-
-_PIN_FIRST: list[str] = [
-    # new in round 5
-    "vader_sentiment",
-    "centroid_classifier",
-    "stream_sliding_distinct_batch_eq",
-    "nation_trade_volume",
-    "product_profit_yearly",
-    "returned_item_customers",
-    "promo_revenue_monthly",
-    "excess_rod_suppliers",
-    "revenue_delta_q6",
-    "cheapest_supplier_per_part",
-    "kmeans_lloyd_gate",
-    "rolling_median_15",
-    "spearman_trend",
-    "ks_drift_gate",
-    "stream_upsert_batch_eq",
-    "sarimax_seasonal_forecast",
-    "span_dedup_c4",
-    "incremental_dedup_gate",
-    "stream_lake_dedup_batch_eq",
-    "bitmap_distinct_rollup",
-    # round-5 judge-named must-checks (never driver-reached before)
-    "stream_daily_avg_batch_eq",
-    "stream_sessions_batch_eq",
-    "stream_dedup_batch_eq",
-    "stream_attribution_batch_eq",
-    "stream_custom_state_batch_eq",
-    "ivf_recall",
-    "pq_recall",
-    "upsert_rows_eq",
-    "salted_join_eq",
-    # r3 training-data wave, never driver-reached
-    "doc_chunking",
-    "contamination_ngrams",
-    "train_split_assign",
-    "stratified_sample",
-    "pii_redaction",
-    "fuzzy_match",
-    "repetition_quality",
-    "bm25_rank",
-    "unigram_logprob_quality",
-]
+# with ties broken by registration order. Every query is guaranteed to
+# eventually rotate into the driver window.
 
 
 def _driver_history() -> dict[str, tuple[int, int, int]]:
@@ -201,8 +156,6 @@ def _driver_history() -> dict[str, tuple[int, int, int]]:
 
 def _reorder_for_driver() -> None:
     hist = _driver_history()
-    pin = {n: i for i, n in enumerate(_PIN_FIRST)}
-    reg = {n: i for i, n in enumerate(QUERIES)}
 
     def key(name: str) -> tuple:
         lc, lo, lr = hist.get(name, (0, 0, 0))
@@ -212,12 +165,16 @@ def _reorder_for_driver() -> None:
             tier = 0          # latest driver result was red
         else:
             tier = 2          # green — stalest first
-        return (tier, lo, pin.get(name, len(pin)), reg[name])
+        return (tier, lo)
 
+    # sorted() is stable: ties keep registration order
     ordered = sorted(QUERIES, key=key)
     snapshot = dict(QUERIES)
     QUERIES.clear()
     QUERIES.update({n: snapshot[n] for n in ordered})
 
 
+#: query names in registration order (pack module, then definition
+#: order), which the driver rotation below does not change
+REGISTRATION_ORDER: tuple[str, ...] = tuple(QUERIES)
 _reorder_for_driver()

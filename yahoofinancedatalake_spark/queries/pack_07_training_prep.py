@@ -37,6 +37,7 @@ from yahoofinancedatalake_spark.queries._registry import (
     _register,
     _scratch,
 )
+from yahoofinancedatalake_spark.session import stage_boundary
 
 
 # ---------------------------------------------------------------------------
@@ -100,9 +101,9 @@ def _word_toks() -> Column:
     "pair-level duplication actually exercises the removal path "
     "(both are parameters of the rule, not the shape). Plan: spans "
     "carry only (doc_id, md5, length) — the text never shuffles — "
-    "and the exploded span table is persisted so the corpus is "
-    "scanned+exploded ONCE while feeding both the frequency "
-    "aggregate and the count-back join (at 100 TB the persist is a "
+    "and the exploded span table is materialized (stage_boundary) "
+    "so the corpus is scanned+exploded ONCE while feeding both the "
+    "frequency aggregate and the count-back join (at 100 TB it is a "
     "landed table). The frequency side is a groupBy count with "
     "MAP-SIDE partial aggregation, so a boilerplate mega-span "
     "('all rights reserved …' x 100M occurrences) collapses per "
@@ -136,7 +137,7 @@ def q_span_dedup_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.md5("span").alias("h"),
         F.length("span").alias("span_len"),
-    ).persist()
+    ).transform(stage_boundary)
     freq = spans.groupBy("h").agg(F.count(F.lit(1)).alias("occ"))
     return (
         spans.join(freq, "h")

@@ -896,11 +896,11 @@ def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ex = docs.select("doc_id", F.explode(toks).alias("term"))
     # (doc, term) tf feeds BOTH the idf aggregate and the final score
-    # join — persist the (small, vocab×docs-bounded) table so the
+    # join — materialize the (small, vocab×docs-bounded) table so the
     # tokenize-explode-agg subtree runs once, not once per branch; at
-    # 100 TB this is the materialized term-frequency table an
-    # inverted-index build would land anyway
-    tf = ex.groupBy("doc_id", "term").agg(F.count("*").alias("tf")).persist()
+    # 100 TB this is the term-frequency table an inverted-index build
+    # would land anyway
+    tf = stage_boundary(ex.groupBy("doc_id", "term").agg(F.count("*").alias("tf")))
     # fold the 1-row corpus count into the vocab table via the
     # data-derived constant-key equi-join (see unigram_logprob_quality:
     # a bare 1-row crossJoin plans as BroadcastNestedLoopJoin)

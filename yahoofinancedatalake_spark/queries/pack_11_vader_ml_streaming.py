@@ -34,6 +34,7 @@ from yahoofinancedatalake_spark.queries._registry import (
     _register,
     _scratch,
 )
+from yahoofinancedatalake_spark.session import stage_boundary
 
 
 # ---------------------------------------------------------------------------
@@ -1383,7 +1384,7 @@ def q_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("u").alias("src"), F.col("e").alias("dst")
     ).unionByName(
         pairs.select(F.col("e").alias("src"), F.col("u").alias("dst"))
-    ).persist()
+    ).transform(stage_boundary)
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     tot = deg.agg(F.count(F.lit(1)).alias("n")).withColumn(
         "__k", _const_key(F.col("n"))
@@ -1420,7 +1421,6 @@ def q_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    edges.unpersist()
     hubs = ranks.filter(F.col("node").startswith("e:")).select(
         "node", "rank"
     )

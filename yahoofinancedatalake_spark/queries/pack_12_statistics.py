@@ -40,6 +40,7 @@ from yahoofinancedatalake_spark.queries.pack_07_training_prep import (
     _WORD_TOKS_SQL,
     _word_toks,
 )
+from yahoofinancedatalake_spark.session import stage_boundary
 
 
 # ---------------------------------------------------------------------------
@@ -745,8 +746,8 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("sk_hi").alias("sk_hi"),
         )
 
-    zfiles = files("zf").persist()
-    nfiles = files("nf").persist()
+    zfiles = stage_boundary(files("zf"))
+    nfiles = stage_boundary(files("nf"))
 
     def probe(fdf: DataFrame, layout: str, dim: str) -> DataFrame:
         lo, hi, mn, mx = (
@@ -771,17 +772,13 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rows_kept",
         )
 
-    out = (
+    return (
         probe(zfiles, "zorder", "partkey")
         .unionByName(probe(zfiles, "zorder", "suppkey"))
         .unionByName(probe(nfiles, "natural", "partkey"))
         .unionByName(probe(nfiles, "natural", "suppkey"))
         .orderBy("layout", "probe_dim")
     )
-    out = out.localCheckpoint(eager=True)
-    zfiles.unpersist()
-    nfiles.unpersist()
-    return out
 
 
 @_register(
@@ -1139,7 +1136,7 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionByName(
         eu.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).persist()
+    ).transform(stage_boundary)
     visited = (
         eu.agg(F.min("a").alias("node"))
         .withColumn("level", F.lit(0))
@@ -1156,7 +1153,6 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
             visited.select("node"), "node", "left_anti"
         ).withColumn("level", F.lit(i))
         visited = visited.unionByName(fresh).localCheckpoint(eager=True)
-    edges.unpersist()
     return (
         visited.groupBy("level")
         .agg(

@@ -54,7 +54,7 @@ pack.py — new queries go at the END of this module):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from yahoofinancedatalake_spark.catalog import fan_out, load_table
@@ -73,6 +73,7 @@ from yahoofinancedatalake_spark.prep import (
     MIN_CHARS as _PREP_MIN_CHARS,
     MIN_TOKENS as _PREP_MIN_TOKENS,
 )
+from yahoofinancedatalake_spark.session import stage_boundary
 
 # ---------------------------------------------------------------------------
 # The composed prep pipeline, oracle-gated end to end.
@@ -294,10 +295,10 @@ _PREP_STAGES_ORACLE = f"""
     "— is value-hashed against one DuckDB statement recomputing all "
     "eight stages from first principles (recursive-CTE connected "
     "components for the near-dup stage, same as dedup_clusters). "
-    "Each stage boundary is persist()ed so the expensive LSH→verify→"
-    "CC subgraph executes once while feeding both its own count and "
-    "every later stage (the prefix_filter_jaccard subplan-reuse "
-    "lesson); per-stage counts are single-long driver scalars, the "
+    "Each stage is materialized (stage_boundary) so the expensive "
+    "LSH→verify→CC subgraph executes once while feeding both its own "
+    "count and every later stage, and its count is observed on the "
+    "same job; per-stage counts are single-long driver scalars, the "
     "adjudicated collect shape. Scale: inherits each operator's "
     "documented posture — bucketed LSH (never all-pairs), broadcast "
     "eval grams, broadcast 5-row rate table, per-(split,source) "
@@ -314,49 +315,42 @@ def q_prep_stage_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     eval_set = docs.filter(F.col("doc_id") % 37 == 0)
+    return _staged_counts(
+        docs,
+        ("quality_gate", prep.quality_gate),
+        ("exact_dedup", prep.exact_stage),
+        ("near_dedup", prep.near_dup_stage),
+        ("decontaminate", lambda f: prep.decontaminate(f, eval_set)),
+        ("rebalance", prep.rebalance_languages),
+        ("chunk", lambda f: prep.chunk_docs(prep.assign_splits(f))),
+        ("pack", prep.pack_chunks),
+        regrained=2,
+    )
 
-    # try/finally: bench/driver runs catch per-query exceptions and
-    # keep the session — a mid-pipeline failure must not leave up to
-    # six frames pinned in executor storage for the rest of the run
-    persisted: list = []
 
-    def _stage(frame):
-        persisted.append(frame.persist())
-        return persisted[-1]
+def _staged_counts(docs: DataFrame, *stages, regrained: int = 0) -> DataFrame:
+    """The per-stage ``(stage_idx, stage, rows_in, rows_out, dropped)``
+    audit of prep stages run in sequence over ``docs`` — the manifest
+    a real prep run reports. ``stages`` are ``(name, fn)`` pairs, each
+    ``fn`` mapping the previous stage's frame to its own.
 
-    try:
-        n_input = docs.count()
-        gated = _stage(prep.quality_gate(docs))
-        n_gate = gated.count()
-        exact = _stage(prep.exact_stage(gated))
-        n_exact = exact.count()
-        deduped = _stage(prep.near_dup_stage(exact))
-        n_dedup = deduped.count()
-        clean = _stage(prep.decontaminate(deduped, eval_set))
-        n_clean = clean.count()
-        reb = _stage(prep.rebalance_languages(clean))
-        n_reb = reb.count()
-        chunks = _stage(prep.chunk_docs(prep.assign_splits(reb)))
-        n_chunks = chunks.count()
-        n_bins = prep.pack_chunks(chunks).count()
-    finally:
-        for frame in persisted:
-            frame.unpersist()
-
-    stages = [
-        (1, "quality_gate", n_input, n_gate),
-        (2, "exact_dedup", n_gate, n_exact),
-        (3, "near_dedup", n_exact, n_dedup),
-        (4, "decontaminate", n_dedup, n_clean),
-        (5, "rebalance", n_clean, n_reb),
-        (6, "chunk", n_reb, n_chunks),
-        (7, "pack", n_chunks, n_bins),
-    ]
-    rows = [
-        (i, s, a, b, (a - b) if i <= 5 else None)
-        for i, s, a, b in stages
-    ]
-    return spark.createDataFrame(
+    Each stage is materialized with ``stage_boundary``, so the
+    expensive LSH→verify→CC subgraph executes once while feeding its
+    own count and every later stage, and its row count is an
+    ``Observation`` on that same job: one job per stage, and no cached
+    table is left behind. ``dropped`` is NULL for the last
+    ``regrained`` stages, whose rows are no longer documents."""
+    rows, n_in, frame = [], docs.count(), docs
+    for i, (name, step) in enumerate(stages, 1):
+        seen = Observation()
+        frame = stage_boundary(
+            step(frame).observe(seen, F.count(F.lit(1)).alias("n"))
+        )
+        n_out = seen.get["n"]
+        dropped = n_in - n_out if i <= len(stages) - regrained else None
+        rows.append((i, name, n_in, n_out, dropped))
+        n_in = n_out
+    return docs.sparkSession.createDataFrame(
         rows,
         schema="stage_idx int, stage string, rows_in bigint, "
         "rows_out bigint, dropped bigint",
@@ -812,7 +806,7 @@ def q_winnow_fast_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             norm, "text", "doc_id", k=_WIN_K, w=_WIN_W,
             pre_normalized=True,
         ),
-    ).select("id_a", "id_b").persist()
+    ).select("id_a", "id_b").transform(stage_boundary)
     # ONE md5 matcher run at the relaxed floor; the high-margin truth
     # set is a filter over its overlap column (matcher output is
     # monotone in threshold, so this equals a second run at 0.65)
@@ -823,7 +817,7 @@ def q_winnow_fast_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             norm, "text", "doc_id", k=_WIN_K, w=_WIN_W,
             pre_normalized=True,
         ),
-    ).persist()
+    ).transform(stage_boundary)
     truth = md5_relaxed.filter(F.col("overlap") >= 0.65).select(
         "id_a", "id_b"
     )
@@ -833,7 +827,6 @@ def q_winnow_fast_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         relaxed, ["id_a", "id_b"], "left_anti"
     ).count()
     n_truth = truth.count()
-    spark.catalog.clearCache()  # release the three matchers' persists
     return spark.createDataFrame(
         [(
             "winnow_fast_sandwich",
@@ -1026,8 +1019,7 @@ def q_stream_incremental_prep(
     "tests/test_prep.py pins backend equivalence on planted "
     "near-dups. Scale: inherits winnow_near_dup's posture — "
     "bucketed inverted index, sum(df²) pair cost, SHUFFLE_HASH "
-    "joins; the matcher's internal fingerprint persist is released "
-    "in the query's finally.",
+    "joins.",
     parts=8,
 )
 def q_prep_stage_counts_winnow(
@@ -1037,48 +1029,13 @@ def q_prep_stage_counts_winnow(
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     eval_set = docs.filter(F.col("doc_id") % 37 == 0)
-
-    persisted: list = []
-
-    def _stage(frame):
-        persisted.append(frame.persist())
-        return persisted[-1]
-
-    try:
-        n_input = docs.count()
-        gated = _stage(prep.quality_gate(docs))
-        n_gate = gated.count()
-        exact = _stage(prep.exact_stage(gated))
-        n_exact = exact.count()
-        deduped = _stage(prep.near_dup_stage(exact, backend="winnow"))
-        n_dedup = deduped.count()
-        n_clean = prep.decontaminate(deduped, eval_set).count()
-    finally:
-        for frame in persisted:
-            frame.unpersist()
-        # the winnow matcher persists its fingerprint table
-        # internally (cache=True, caller-owned release)
-        spark.catalog.clearCache()
-
-    stages = [
-        (1, "quality_gate", n_input, n_gate),
-        (2, "exact_dedup", n_gate, n_exact),
-        (3, "near_dedup_winnow", n_exact, n_dedup),
-        (4, "decontaminate", n_dedup, n_clean),
-    ]
-    rows = [(i, s, a, b, a - b) for i, s, a, b in stages]
-    return spark.createDataFrame(
-        rows,
-        schema="stage_idx int, stage string, rows_in bigint, "
-        "rows_out bigint, dropped bigint",
-    ).orderBy("stage_idx")
-
-
-# ---------------------------------------------------------------------------
-# r10: the training-data SELECTION tier — which docs to train on, not
-# just which are copies. Operators live in operators/selection.py;
-# both are production-shaped (operator tier, not gates).
-# ---------------------------------------------------------------------------
+    return _staged_counts(
+        docs,
+        ("quality_gate", prep.quality_gate),
+        ("exact_dedup", prep.exact_stage),
+        ("near_dedup_winnow", lambda f: prep.near_dup_stage(f, backend="winnow")),
+        ("decontaminate", lambda f: prep.decontaminate(f, eval_set)),
+    )
 
 
 @_register(
@@ -2708,8 +2665,7 @@ def q_stream_nb_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "independent code already composed under prep_stage_counts. "
     "Scale: inherits the hybrid matcher's posture — LSH-bounded "
     "candidate volume, array-intersect verify moving |candidates| "
-    "rows; the matcher's internal fingerprint persist is released "
-    "in the query's finally.",
+    "rows.",
     parts=8,
 )
 def q_prep_stage_counts_hybrid(
@@ -2719,40 +2675,13 @@ def q_prep_stage_counts_hybrid(
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     eval_set = docs.filter(F.col("doc_id") % 37 == 0)
-
-    persisted: list = []
-
-    def _stage(frame):
-        persisted.append(frame.persist())
-        return persisted[-1]
-
-    try:
-        n_input = docs.count()
-        gated = _stage(prep.quality_gate(docs))
-        n_gate = gated.count()
-        exact = _stage(prep.exact_stage(gated))
-        n_exact = exact.count()
-        deduped = _stage(prep.near_dup_stage(exact, backend="hybrid"))
-        n_dedup = deduped.count()
-        n_clean = prep.decontaminate(deduped, eval_set).count()
-    finally:
-        for frame in persisted:
-            frame.unpersist()
-        # the hybrid matcher persists its fingerprint table
-        # internally (cache=True, caller-owned release)
-        spark.catalog.clearCache()
-
-    stages = [
-        (1, "quality_gate", n_input, n_gate),
-        (2, "exact_dedup", n_gate, n_exact),
-        (3, "near_dedup_hybrid", n_exact, n_dedup),
-        (4, "decontaminate", n_dedup, n_clean),
-    ]
-    rows = [(i, s, a, b, a - b) for i, s, a, b in stages]
-    return spark.createDataFrame(
-        rows, schema="stage_idx int, stage string, rows_in bigint, "
-        "rows_out bigint, dropped bigint"
-    ).orderBy("stage_idx")
+    return _staged_counts(
+        docs,
+        ("quality_gate", prep.quality_gate),
+        ("exact_dedup", prep.exact_stage),
+        ("near_dedup_hybrid", lambda f: prep.near_dup_stage(f, backend="hybrid")),
+        ("decontaminate", lambda f: prep.decontaminate(f, eval_set)),
+    )
 
 
 @_register(
@@ -3464,14 +3393,13 @@ def q_stream_hybrid_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # land history state once (the seed run's output)
     minhash_band_table(hist, "text", "doc_id").write.parquet(band_dir)
-    hist_fps = winnow_fingerprints(hist, "text", "doc_id").persist()
+    hist_fps = stage_boundary(winnow_fingerprints(hist, "text", "doc_id"))
     hist_fps.select(
         "doc_id", F.explode("fps").alias("fp")
     ).write.parquet(fpi_dir)
     spark.read.parquet(fpi_dir).groupBy("fp").agg(
         F.count("*").alias("df")
     ).write.parquet(fpd_dir)
-    hist_fps.unpersist()
 
     def _probe(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -3481,8 +3409,10 @@ def q_stream_hybrid_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         fpd = spark.read.parquet(fpd_dir)
         # compute the batch's band table and winnow fingerprints ONCE
         # and share them between the probe and the state appends
-        bband = minhash_band_table(batch_df, "text", "doc_id").persist()
-        bfps_arr = winnow_fingerprints(batch_df, "text", "doc_id").persist()
+        bband = stage_boundary(minhash_band_table(batch_df, "text", "doc_id"))
+        bfps_arr = stage_boundary(
+            winnow_fingerprints(batch_df, "text", "doc_id")
+        )
         pairs = incremental_hybrid_pairs(
             batch_df, band, fpi, fpd, "text", "doc_id",
             new_bands=bband, new_fps=bfps_arr,
@@ -3502,7 +3432,6 @@ def q_stream_hybrid_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("df").alias("df"))
         )
         merged.write.mode("overwrite").parquet(s.path("fpd_next"))
-        spark.catalog.clearCache()
 
     s.land(batch.coalesce(1))
     for _drain in range(2):  # second drain: exactly-once replay
@@ -3535,7 +3464,6 @@ def q_stream_hybrid_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         streamed.exceptAll(expected)
     )
     n_bad = sym_diff.count()
-    spark.catalog.clearCache()
     return spark.createDataFrame(
         [("incremental_hybrid_equals_full", n_bad == 0)],
         schema="metric string, passed boolean",
@@ -3623,38 +3551,11 @@ def q_prep_stage_counts_paragraph(
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     eval_set = docs.filter(F.col("doc_id") % 37 == 0)
-
-    persisted: list = []
-
-    def _stage(frame):
-        persisted.append(frame.persist())
-        return persisted[-1]
-
-    try:
-        n_input = docs.count()
-        gated = _stage(prep.quality_gate(docs))
-        n_gate = gated.count()
-        exact = _stage(prep.exact_stage(gated))
-        n_exact = exact.count()
-        deduped = _stage(prep.near_dup_stage(exact, backend="lsh"))
-        n_dedup = deduped.count()
-        rewritten = _stage(prep.paragraph_stage(deduped))
-        n_para = rewritten.count()
-        n_clean = prep.decontaminate(rewritten, eval_set).count()
-    finally:
-        for frame in persisted:
-            frame.unpersist()
-        spark.catalog.clearCache()
-
-    stages = [
-        (1, "quality_gate", n_input, n_gate),
-        (2, "exact_dedup", n_gate, n_exact),
-        (3, "near_dedup", n_exact, n_dedup),
-        (4, "paragraph_rewrite", n_dedup, n_para),
-        (5, "decontaminate", n_para, n_clean),
-    ]
-    rows = [(i, s, a, b, a - b) for i, s, a, b in stages]
-    return spark.createDataFrame(
-        rows, schema="stage_idx int, stage string, rows_in bigint, "
-        "rows_out bigint, dropped bigint"
-    ).orderBy("stage_idx")
+    return _staged_counts(
+        docs,
+        ("quality_gate", prep.quality_gate),
+        ("exact_dedup", prep.exact_stage),
+        ("near_dedup", prep.near_dup_stage),
+        ("paragraph_rewrite", prep.paragraph_stage),
+        ("decontaminate", lambda f: prep.decontaminate(f, eval_set)),
+    )

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from yahoofinancedatalake_spark.session import stage_boundary
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -55,10 +57,10 @@ def read_csv_quarantine(
     column and a quarantine frame of the raw offending lines — the
     bronze-layer pattern that lets a 10-bad-rows vendor file load
     instead of failing the whole batch, while losing nothing.
-    (Spark requires caching/materializing the frame before filtering
-    on the corrupt column — referencing it straight off the scan is
-    unsupported; the filter here runs after a checkpoint-free
-    ``cache()`` of only the scanned batch.)
+    (Spark requires materializing the frame before filtering on the
+    corrupt column — referencing it straight off the scan is
+    unsupported; the scanned batch goes through ``stage_boundary``,
+    so the call scans eagerly and leaves no cached table behind.)
     """
     full_schema = T.StructType(
         list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
@@ -70,7 +72,7 @@ def read_csv_quarantine(
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .option("sep", sep)
         .csv(path)
-        .cache()
+        .transform(stage_boundary)
     )
     clean = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     quarantine = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
