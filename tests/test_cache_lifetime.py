@@ -8,7 +8,8 @@ the source: no ``clearCache`` call anywhere in the package, and a
 function that calls ``.persist(``/``.cache(`` also calls
 ``.unpersist(`` inside a ``finally`` of its own. A lazy result that
 reads an intermediate twice takes it from ``session.stage_boundary``,
-whose blocks the ContextCleaner frees with the frame.
+whose blocks the ContextCleaner frees with the frame, and nothing
+else in the package checkpoints.
 """
 
 from __future__ import annotations
@@ -74,3 +75,17 @@ def test_every_persist_is_released_in_finally():
                 line = min(c.func.end_lineno for c in persists)
                 unreleased.append(f"{path}:{line} {fn.name}")
     assert unreleased == []
+
+
+def test_every_materialization_goes_through_stage_boundary():
+    """``session.stage_boundary`` is the one place that picks how an
+    intermediate is materialized (local or reliable checkpoint), so
+    ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` holds only if no other code
+    checkpoints directly."""
+    found = [
+        f"{path}:{call.func.end_lineno}"
+        for path, tree in _sources()
+        if path.name != "session.py"
+        for call in _calls(ast.walk(tree), {"localCheckpoint", "checkpoint"})
+    ]
+    assert found == []

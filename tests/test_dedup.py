@@ -214,7 +214,6 @@ def test_incremental_minhash_matches_full_recompute(spark):
     table."""
     from yahoofinancedatalake_spark.catalog import fan_out, load_table
     from yahoofinancedatalake_spark.operators.dedup import (
-        incremental_minhash_pairs,
         minhash_band_table,
         minhash_lsh_pairs,
     )
@@ -235,8 +234,8 @@ def test_incremental_minhash_matches_full_recompute(spark):
     index = minhash_band_table(hist, "text", "doc_id")
     inc_pairs = {
         (r.id_a, r.id_b)
-        for r in incremental_minhash_pairs(
-            inc, index, "text", "doc_id"
+        for r in minhash_lsh_pairs(
+            inc, "text", "doc_id", index=index
         ).collect()
     }
     assert hist_pairs | inc_pairs == full
@@ -254,7 +253,6 @@ def test_incremental_minhash_reingested_id_no_self_pairs(spark):
     still equal the full recompute."""
     from yahoofinancedatalake_spark.catalog import fan_out, load_table
     from yahoofinancedatalake_spark.operators.dedup import (
-        incremental_minhash_pairs,
         minhash_band_table,
         minhash_lsh_pairs,
     )
@@ -268,8 +266,8 @@ def test_incremental_minhash_reingested_id_no_self_pairs(spark):
     index = minhash_band_table(hist, "text", "doc_id")
     inc_pairs = {
         (r.id_a, r.id_b)
-        for r in incremental_minhash_pairs(
-            inc, index, "text", "doc_id"
+        for r in minhash_lsh_pairs(
+            inc, "text", "doc_id", index=index
         ).collect()
     }
     assert all(a != b for a, b in inc_pairs)  # no degenerate self-pairs
@@ -286,8 +284,8 @@ def test_incremental_minhash_reingested_id_no_self_pairs(spark):
     # would diverge from the full recompute's capped membership
     inc_capped = {
         (r.id_a, r.id_b)
-        for r in incremental_minhash_pairs(
-            inc, index, "text", "doc_id", max_bucket_size=3
+        for r in minhash_lsh_pairs(
+            inc, "text", "doc_id", max_bucket_size=3, index=index
         ).collect()
     }
     full_capped = {
@@ -493,7 +491,6 @@ def test_incremental_cap_matches_full_recompute_above_cap(spark):
     from pyspark.sql import functions as F
 
     from yahoofinancedatalake_spark.operators.dedup import (
-        incremental_minhash_pairs,
         minhash_band_table,
         minhash_lsh_pairs,
     )
@@ -516,8 +513,8 @@ def test_incremental_cap_matches_full_recompute_above_cap(spark):
     index = minhash_band_table(hist, "text", "doc_id")
     inc = {
         (r.id_a, r.id_b)
-        for r in incremental_minhash_pairs(
-            batch, index, "text", "doc_id", max_bucket_size=cap
+        for r in minhash_lsh_pairs(
+            batch, "text", "doc_id", max_bucket_size=cap, index=index
         ).collect()
     }
     assert inc == expected

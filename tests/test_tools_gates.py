@@ -347,3 +347,34 @@ def test_query_index_regenerates_committed_file():
 
     committed = Path(__file__).resolve().parents[1] / "QUERIES.md"
     assert render() == committed.read_text()
+
+
+def test_codelines_counts_code_not_docstrings_or_comments():
+    """tools/codelines.py's rule: a line counts when it holds a
+    non-comment token outside every module, class and function
+    docstring; every line of a multi-line call counts."""
+    from tools.codelines import code_lines
+
+    snippet = '''"""Module docstring,
+on two lines."""
+
+import os  # trailing comment
+
+
+def f(a):
+    """Function docstring."""
+    # a comment-only line
+    return os.path.join(
+        a,
+        "b",
+    )
+
+
+class C:
+    """Class docstring."""
+
+    x = """not a docstring,
+    two lines"""
+'''
+    # import, def, return + 3 call lines, class, 2 string lines
+    assert code_lines(snippet) == 9

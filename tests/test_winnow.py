@@ -345,7 +345,6 @@ def test_incremental_hybrid_probe_is_batch_local(spark):
     history would see the corruption."""
     from yahoofinancedatalake_spark.operators.dedup import (
         hybrid_near_dup_pairs,
-        incremental_hybrid_pairs,
         minhash_band_table,
         winnow_fingerprints,
     )
@@ -369,8 +368,9 @@ def test_incremental_hybrid_probe_is_batch_local(spark):
     def pairs(fpi_frame):
         got = {
             (r["id_a"], r["id_b"], r["shared"], r["overlap"])
-            for r in incremental_hybrid_pairs(
-                batch, band, fpi_frame, fpd, "text", "id"
+            for r in hybrid_near_dup_pairs(
+                batch, "text", "id",
+                band_index=band, fp_index=fpi_frame, fp_df=fpd,
             ).collect()
         }
         spark.catalog.clearCache()

@@ -29,6 +29,11 @@ the sample is compared pair-for-pair, jaccard value included,
 against the engine's output. A planted pair the banding misses
 fails the sweep.
 
+The table cache is not cleared between queries: a caller's cached
+view is held there (selfcheck's ``hold_cached_view``), and a query
+that leaves a cached relation behind or drops that view fails with a
+LEAK line, so a leaking query shows instead of being hidden.
+
 Every oracle also runs under a wall-clock budget (default 180 s,
 ``con.interrupt()`` on expiry) so one pathological oracle can never
 stall the sweep.
@@ -47,9 +52,15 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-from tools.selfcheck import _norm, value_hash  # noqa: E402
+from tools.selfcheck import (  # noqa: E402
+    _norm,
+    cache_leftovers,
+    hold_cached_view,
+    value_hash,
+)
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 from yahoofinancedatalake_spark.schemas import TESTDATA_TABLES  # noqa: E402
@@ -222,13 +233,13 @@ def main() -> int:
     qs, oracles = queries(), oracle_sql()
     n_cand = _load_candidates(spark, sf_dir, con)
     print(f"candidate table: {n_cand} LSH pairs at {sf_dir}")
+    hold_cached_view(spark)
 
     results: dict[str, dict] = {}
     failed = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        spark.catalog.clearCache()
         # drain localCheckpoint/broadcast refs the ContextCleaner is
         # waiting on — same pressure-triggered hygiene as bench.py
         drain_if_pressured(spark)
@@ -243,6 +254,14 @@ def main() -> int:
             results[name] = rec
             failed.append(name)
             print(f"FAIL  {name}: spark error: {str(e)[:200]}")
+            continue
+        finally:
+            leak = cache_leftovers(spark)
+        if leak:
+            rec.update(status="leak", err=leak)
+            results[name] = rec
+            failed.append(name)
+            print(f"LEAK  {name}: left {leak}")
             continue
         rec["spark_secs"] = round(time.time() - t0, 2)
         if name not in oracles:
@@ -306,7 +325,6 @@ def main() -> int:
             )
 
     if not only or "minhash_near_dup" in only:
-        spark.catalog.clearCache()
         rec = _block_recall_check(spark, sf_dir, con, qs, oracles)
         results["__lsh_anchor_recall"] = rec
         if rec["status"] != "ok":
@@ -321,7 +339,7 @@ def main() -> int:
         "results": results,
     }
     if not only:
-        with open("/root/repo/PARITY_SWEEP.json", "w") as f:
+        with open(os.path.join(REPO, "PARITY_SWEEP.json"), "w") as f:
             json.dump(summary, f, indent=1)
         print("wrote PARITY_SWEEP.json")
     print(f"\n{n_run - len(failed)}/{n_run} passed"

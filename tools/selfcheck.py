@@ -33,7 +33,8 @@ from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 from yahoofinancedatalake_spark.schemas import TESTDATA_TABLES  # noqa: E402

@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from yahoofinancedatalake_spark.functions.scalars import dround
 from yahoofinancedatalake_spark.session import stage_boundary
 
 # Mersenne prime permutation family for minhash: h_i(x) = (a_i*x + b_i) mod p.
@@ -263,7 +264,7 @@ def minhash_band_table(
     """The persistable LSH index: one (id, band, bucket) row per band
     per doc. Land this table (bucketed by ``bucket``) and incremental
     dedup never re-shingles history — see
-    :func:`incremental_minhash_pairs`. Null signatures (empty docs)
+    :func:`minhash_lsh_pairs`' ``index``. Null signatures (empty docs)
     are dropped here, once, for every consumer."""
     rows_per_band = n_hashes // n_bands
     sig = minhash_signature(F.col(text_col), n_hashes, seed, shingle_n)
@@ -453,10 +454,11 @@ def minhash_lsh_pairs(
     max_bucket_size: int = 512,
     log_drops: bool = False,
     bands: DataFrame | None = None,
+    index: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate near-duplicate pairs via MinHash + LSH banding — the
-    batch run, i.e. :func:`incremental_minhash_pairs` against an empty
-    band index.
+    """Candidate near-duplicate pairs via MinHash + LSH banding, for
+    ``df`` against a landed band ``index`` of history (``None``, the
+    default, is an empty history: the batch run).
 
     signature → split into bands → explode (band_id, band_hash) →
     group by the bucket key → emit member pairs. The only heavy
@@ -466,7 +468,16 @@ def minhash_lsh_pairs(
     (null signature) are dropped before banding, and buckets are
     capped at ``max_bucket_size`` members (see
     :func:`capped_bucket_members`); ``log_drops=True`` logs the
-    overflow (see :func:`_lsh_candidates`).
+    overflow. Pair set and cap semantics: see :func:`_lsh_candidates`.
+
+    With an ``index`` this is the daily-ingest shape: only ``df`` is
+    shingled/hashed; history takes part through its landed
+    (id, band, bucket) rows (:func:`minhash_band_table`), never its
+    text — O(batch) hash + one (band, bucket) join against the index
+    plus a rank window over only the touched buckets (with the index
+    bucketed by ``bucket`` at write time the join is exchange-free on
+    the history side). The caller appends the batch's band rows to the
+    index afterward.
 
     ``bands`` supplies a precomputed :func:`minhash_band_table` frame
     for ``df`` (``n_hashes`` / ``n_bands`` / ``shingle_n`` / ``seed``
@@ -477,45 +488,7 @@ def minhash_lsh_pairs(
         bands = minhash_band_table(
             df, text_col, id_col, n_hashes, n_bands, shingle_n, seed
         )
-    return _lsh_candidates(bands, None, id_col, max_bucket_size, log_drops)
-
-
-def incremental_minhash_pairs(
-    new_docs: DataFrame,
-    index: DataFrame | None,
-    text_col: str,
-    id_col: str,
-    n_hashes: int = 32,
-    n_bands: int = 8,
-    shingle_n: int = 3,
-    seed: int = 42,
-    max_bucket_size: int = 512,
-    new_bands: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup candidate pairs for an INCREMENT against a persisted
-    LSH index — the daily-ingest shape: only the new batch is
-    shingled/hashed; history participates through its landed
-    (id, band, bucket) rows (:func:`minhash_band_table`), never its
-    text. ``index=None`` is an empty history: the batch run.
-
-    At 100 TB this turns daily dedup from O(corpus) re-hash into
-    O(batch) hash + one (band, bucket) join against the landed index
-    plus a rank window over only the touched buckets (with the index
-    bucketed by ``bucket`` at write time the join is exchange-free on
-    the history side); the caller appends the batch's band rows to
-    the index afterward. Pair set and cap semantics: see
-    :func:`_lsh_candidates`.
-
-    ``new_bands`` supplies the batch's precomputed band table (hash
-    and band parameters are then ignored); the caller that appends
-    the same rows to the index afterward passes a materialized frame
-    and pays one signature pass.
-    """
-    if new_bands is None:
-        new_bands = minhash_band_table(
-            new_docs, text_col, id_col, n_hashes, n_bands, shingle_n, seed
-        )
-    return _lsh_candidates(new_bands, index, id_col, max_bucket_size)
+    return _lsh_candidates(bands, index, id_col, max_bucket_size, log_drops)
 
 
 # ---------------------------------------------------------------------------
@@ -751,8 +724,8 @@ def verified_near_dup_pairs(
     touches (:func:`pair_docs`). The verify joins are inner on
     (id_a, id_b), so the restriction is result-invariant.
     """
-    cand = incremental_minhash_pairs(
-        batch, index, "text", id_col, new_bands=bands
+    cand = minhash_lsh_pairs(
+        batch, "text", id_col, bands=bands, index=index
     ).transform(stage_boundary)
     docs = batch.select(id_col, "text")
     if survivors is not None:
@@ -1138,25 +1111,155 @@ def winnow_fingerprints(
     the same selection with the ~3× cheaper numpy polynomial kernel
     for deployments that never cross-check engines.
     """
+    return _winnow_udf(
+        df, text_col, id_col, k, w, pre_normalized,
+        _winnow_md5_arrays, "array<string>",
+    )
+
+
+def _winnow_udf(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    w: int,
+    pre_normalized: bool,
+    kernel,
+    return_type: str,
+) -> DataFrame:
+    """The one winnow extraction wrapper: ``kernel(texts, k, w)`` as
+    an Arrow-batched pandas UDF over the normalized ``text_col`` →
+    ``(id_col, fps return_type)``.
+
+    ``pre_normalized=True``: ``text_col`` already holds
+    :func:`normalized_text` output (the accuracy gate shares ONE
+    normalization pass between both hash families), so the second,
+    identical regex projection is skipped. normalized_text is
+    idempotent, so this is a pure cost knob, never a semantic one.
+    """
     if w < 1 or k < 1:
         raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
 
     def _f(texts):
-        return pd.Series(_winnow_md5_arrays(texts, k, w))
+        return pd.Series(kernel(texts, k, w))
 
     _f.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    udf = F.pandas_udf(_f, "array<string>")
-    # ``pre_normalized=True`` (r13): ``text_col`` already holds
-    # :func:`normalized_text` output (the accuracy gate shares ONE
-    # normalization pass between both hash families) — skip the
-    # second, identical regex projection. normalized_text is
-    # idempotent, so this is a pure cost knob, never a semantic one.
-    src = (
-        F.col(text_col)
-        if pre_normalized
-        else normalized_text(F.col(text_col))
+    src = F.col(text_col) if pre_normalized else normalized_text(F.col(text_col))
+    return df.select(
+        F.col(id_col), F.pandas_udf(_f, return_type)(src).alias("fps")
     )
-    return df.select(F.col(id_col), udf(src).alias("fps"))
+
+
+def _overlap_pairs(
+    cand: DataFrame,
+    fps: DataFrame,
+    fp_index: DataFrame | None,
+    fp_df: DataFrame | None,
+    id_col: str,
+    df_cap: int,
+    overlap_threshold: float,
+) -> DataFrame:
+    """The overlap verify of materialized candidate pairs ``cand``
+    (id_a < id_b) from a generator that does not count shared
+    fingerprints itself (LSH): ``shared`` is the size of the
+    intersection of the two docs' df-capped fingerprint sets, then
+    :func:`_overlap_accept`.
+
+    ``fps`` is the batch's materialized ``(id_col, fps)`` array frame.
+    History takes part through two landed tables, ``None`` when there
+    is none, and is never rescanned:
+
+    - ``fp_index``: the accumulated EXPLODED ``(id, fp)`` fingerprint
+      rows (uncapped), read only for candidate-touched ids
+      (:func:`pair_docs`), so the verify reads O(touched docs ×
+      fps/doc) rows, not the corpus;
+    - ``fp_df``: the accumulated per-fingerprint document frequencies,
+      read only for the touched docs' fingerprints.
+
+    Document frequencies are ``history + batch`` (the batch's own
+    counts are one O(batch) aggregation), so every decision equals
+    what a full run over (history ∪ batch) decides. Precondition:
+    batch ids are disjoint from history ids (a re-ingested id would
+    double-count its fingerprints in the df).
+
+    Plan shape: one per-doc aggregation gives each touched doc its
+    df-capped fingerprint ARRAY and its uncapped count; both attach to
+    the pairs with two id-keyed joins, and the arrays are intersected
+    per pair (``array_intersect``) — the :func:`hashed_ngram_jaccard`
+    shape. Joining candidates with the EXPLODED index instead died
+    ENOSPC at the 100× sweep: that intermediate is |candidates| ×
+    per-doc density ≈ 5 B rows. Fingerprints are rehashed
+    ``xxhash64(fp)`` for the verify arrays only (8 bytes vs a 32-byte
+    md5 hex string); both sides of every intersection use the same
+    rehash, so ``shared`` equals the fingerprint count modulo ~2⁻⁶⁴
+    collisions. The touched docs' exploded rows are materialized
+    (:func:`stage_boundary`): the per-doc aggregation feeds both join
+    sides, and with history the df lookup reads them too. The
+    corpus-sized joins are hinted shuffle_hash, because cached-plan
+    size estimates once picked a 100×-replicated build side for
+    broadcast.
+    """
+    new_idx = fps.select(F.col(id_col), F.explode("fps").alias("fp"))
+    idx = new_idx
+    if fp_index is not None:
+        idx = idx.unionByName(fp_index.select(F.col(id_col), "fp"))
+    rel_idx = stage_boundary(pair_docs(cand, idx, id_col))
+    # document frequencies stay GLOBAL (the df-cap is a corpus-wide
+    # statistic): the batch's own counts, plus history's for the
+    # fingerprints the touched docs carry
+    df_tot = _doc_freq(new_idx)
+    if fp_df is not None:
+        old = fp_df.join(rel_idx.select("fp").distinct(), "fp", "left_semi")
+        df_tot = old.unionByName(df_tot).groupBy("fp").agg(F.sum("df").alias("df"))
+    kept = _df_capped(df_tot, df_cap).withColumn("__k", F.lit(True))
+    per_doc = (
+        rel_idx.join(kept.hint("shuffle_hash"), "fp", "left")
+        .groupBy(id_col)
+        .agg(
+            F.collect_list(F.when(F.col("__k"), F.xxhash64("fp"))).alias("f"),
+            F.count("*").alias("n"),
+        )
+    )
+    a, b = (per_doc.toDF(f"id_{s}", f"f{s}", f"n_{s}") for s in "ab")
+    pairs = (
+        cand.join(a.hint("shuffle_hash"), "id_a")
+        .join(b.hint("shuffle_hash"), "id_b")
+        .withColumn("shared", F.size(F.array_intersect("fa", "fb")))
+    )
+    return _overlap_accept(pairs, overlap_threshold)
+
+
+def _overlap_accept(pairs: DataFrame, overlap_threshold: float) -> DataFrame:
+    """The one winnow accept rule, over ``(id_a, id_b, shared, n_a,
+    n_b)`` rows: ``shared`` counted over the df-capped fingerprint
+    index (:func:`_df_capped`: a fingerprint outside ``[2, df_cap]``
+    contributes to neither candidates nor scores), ``n_a``/``n_b``
+    the UNCAPPED per-doc fingerprint counts (a doc's identity does not
+    shrink because its boilerplate got capped). Keeps
+    ``overlap = shared / min(n_a, n_b) >= overlap_threshold`` →
+    ``(id_a, id_b, shared bigint, overlap double)``, overlap
+    dround(4)-rounded."""
+    ov = F.col("shared").cast("double") / F.least("n_a", "n_b")
+    return pairs.filter((F.col("shared") >= 1) & (ov >= overlap_threshold)).select(
+        "id_a",
+        "id_b",
+        F.col("shared").cast("bigint").alias("shared"),
+        dround(ov, 4).alias("overlap"),
+    )
+
+
+def _doc_freq(idx: DataFrame) -> DataFrame:
+    """``(fp, df)``: the document frequency of each fingerprint of an
+    exploded ``(id, fp)`` index."""
+    return idx.groupBy("fp").agg(F.count("*").alias("df"))
+
+
+def _df_capped(df_counts: DataFrame, df_cap: int) -> DataFrame:
+    """The fingerprints of ``(fp, df)`` that take part in matching:
+    df = 1 pairs with nothing, and df > ``df_cap`` is boilerplate."""
+    return df_counts.filter(
+        (F.col("df") >= 2) & (F.col("df") <= df_cap)
+    ).select("fp")
 
 
 def winnow_near_dup_pairs(
@@ -1174,37 +1277,34 @@ def winnow_near_dup_pairs(
     fingerprints (overlap coefficient — the paper reports matches as
     fraction-of-document covered, which the containment form mirrors;
     plain Jaccard would under-score a small doc embedded in a large
-    one).
+    one). Output and accept rule: :func:`_overlap_accept`.
 
-    Output: (id_a, id_b, shared bigint, overlap double) with
-    id_a < id_b, overlap dround(4)-rounded.
-
-    Scale posture: the inverted index has ~2/(w+1) entries per char
-    (winnowing's density guarantee), and pair generation joins the
-    index with itself ON the fingerprint — cost is sum over
-    fingerprints of df², NOT corpus². Fingerprints with document
-    frequency > ``df_cap`` are dropped from pair generation (df=1
-    too: they pair with nothing): a fingerprint shared by thousands
-    of docs is boilerplate (the same rationale as the LSH bucket cap
-    above and a DF-cap in the set-similarity literature), and unlike
-    the LSH cap this one is DETERMINISTIC — membership depends only
-    on (fp, df), never on partitioning — so the full operator is
-    exactly oracle-checkable. The `shared` counts use the SAME capped
-    index, so a capped fingerprint consistently contributes to
-    neither candidates nor scores. Denominators use the UNCAPPED
-    per-doc fingerprint counts (a doc's identity does not shrink
-    because its boilerplate got capped).
+    Generator and count in one: the inverted index has ~2/(w+1)
+    entries per char (winnowing's density guarantee), and pair
+    generation joins the df-capped index with itself ON the
+    fingerprint — cost is sum over fingerprints of df², NOT corpus² —
+    so the join's row count per pair IS the exact ``shared``. Unlike
+    the LSH-proposed hybrid, no array verify (:func:`_overlap_pairs`)
+    follows: most self-join pairs share one or two coincidental
+    fingerprints (538 k candidates for 258 accepted pairs at sf0.1),
+    and carrying two fingerprint arrays per candidate through the
+    verify measured 2× slower than this count. The df-cap (a
+    fingerprint shared by thousands of docs is boilerplate — the same
+    rationale as the LSH bucket cap above) is DETERMINISTIC —
+    membership depends only on (fp, df), never on partitioning — so
+    the full operator is exactly oracle-checkable. Every join is
+    hinted SHUFFLE_HASH: at corpus scale both sides grow with the
+    corpus, and without the hint the static planner, seeing a
+    materialized input's optimistic size estimate, picked the
+    100×-replicated index as a broadcast build side and overflowed
+    spark.driver.maxResultSize (caught by the scale sweep).
 
     The per-doc fingerprint table is materialized
     (:func:`stage_boundary`): it feeds the exploded index (hence
-    df-counts, both join sides) AND both size lookups. Left inline,
-    the md5-per-k-gram extraction re-executes per branch, and WORSE:
-    the optimizer can collapse the window-min transform onto the
-    un-materialized k-gram-hash array, re-evaluating the whole
-    per-doc hash array PER WINDOW — measured 396.7 s inline vs 7.2 s
-    materialized for the identical 25-pair answer on the 500-doc
-    sf0.01 corpus (jstack shows workers inside the per-gram
-    expression evaluators). At corpus scale land the fingerprint
+    df-counts, both join sides) AND the size lookups. Left inline, the
+    per-k-gram extraction re-executes per branch (measured 396.7 s
+    inline vs 7.2 s materialized for the identical 25-pair answer on
+    the 500-doc sf0.01 corpus). At corpus scale land the fingerprint
     table to parquet first and pass it via ``fingerprints`` (what
     tools/scale_sweep.py's sharded runner does).
 
@@ -1214,69 +1314,23 @@ def winnow_near_dup_pairs(
     fingerprint table); ``k``/``w`` are then ignored. The matcher is
     family-agnostic: it only does set algebra on ``fps``.
     """
-    from yahoofinancedatalake_spark.functions.scalars import (  # noqa: PLC0415
-        dround,
-    )
-
-    fps = (
-        fingerprints
-        if fingerprints is not None
-        else winnow_fingerprints(df, text_col, id_col, k=k, w=w)
-    ).transform(stage_boundary)
-    idx = fps.select(
-        F.col(id_col), F.explode("fps").alias("fp")
-    )
-    sizes = fps.select(F.col(id_col), F.size("fps").alias("n_fp"))
-    dfreq = idx.groupBy("fp").agg(F.count("*").alias("df"))
-    # Every join below is hinted SHUFFLE_HASH: at corpus scale BOTH
-    # sides of each one (the exploded index, the df-filtered
-    # fingerprint list, the per-doc sizes) grow with the corpus, so no
-    # side is ever broadcast-safe — and without the hint the static
-    # planner, seeing only a materialized input's optimistic size estimate,
-    # picked the 100x-replicated index as a broadcast build side and
-    # overflowed spark.driver.maxResultSize (caught by the scale
-    # sweep). Shuffle-hash beats sort-merge here because neither input
-    # arrives sorted on fp and the aggregates downstream don't reuse a
-    # sort order.
-    kept = (
-        idx.join(
-            dfreq.filter(
-                (F.col("df") >= 2) & (F.col("df") <= df_cap)
-            ).hint("shuffle_hash"),
-            "fp",
-        )
-        .select(id_col, "fp")
-    )
-    a = kept.select(
-        F.col(id_col).alias("id_a"), F.col("fp")
-    )
-    b = kept.select(
-        F.col(id_col).alias("id_b"), F.col("fp")
-    )
+    if fingerprints is None:
+        fingerprints = winnow_fingerprints(df, text_col, id_col, k=k, w=w)
+    fps = stage_boundary(fingerprints)
+    idx = fps.select(F.col(id_col), F.explode("fps").alias("fp"))
+    kept = idx.join(_df_capped(_doc_freq(idx), df_cap).hint("shuffle_hash"), "fp")
+    a, b = (kept.select(F.col(id_col).alias(c), "fp") for c in ("id_a", "id_b"))
+    sizes = fps.select(F.col(id_col), F.size("fps"))
+    sa, sb = (sizes.toDF(f"id_{s}", f"n_{s}") for s in "ab")
     pairs = (
         a.join(b.hint("shuffle_hash"), "fp")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("shared"))
-    )
-    sa = sizes.select(
-        F.col(id_col).alias("id_a"), F.col("n_fp").alias("n_a")
-    )
-    sb = sizes.select(
-        F.col(id_col).alias("id_b"), F.col("n_fp").alias("n_b")
-    )
-    ov = F.col("shared").cast("double") / F.least("n_a", "n_b")
-    return (
-        pairs.join(sa.hint("shuffle_hash"), "id_a")
+        .join(sa.hint("shuffle_hash"), "id_a")
         .join(sb.hint("shuffle_hash"), "id_b")
-        .filter(ov >= overlap_threshold)
-        .select(
-            "id_a",
-            "id_b",
-            "shared",
-            dround(ov, 4).alias("overlap"),
-        )
     )
+    return _overlap_accept(pairs, overlap_threshold)
 
 
 def _winnow_fast_arrays(
@@ -1361,22 +1415,10 @@ def winnow_fingerprints_fast(
     ``winnow_fast_accuracy`` gate pins the two families to the same
     near-dup answer.
     """
-    if w < 1 or k < 1:
-        raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
-
-    def _f(texts):
-        return pd.Series(_winnow_fast_arrays(texts, k, w))
-
-    _f.__annotations__ = {"texts": pd.Series, "return": pd.Series}
-    udf = F.pandas_udf(_f, "array<bigint>")
-    # pre_normalized: see winnow_fingerprints — share one
-    # normalization pass when the caller already applied it
-    src = (
-        F.col(text_col)
-        if pre_normalized
-        else normalized_text(F.col(text_col))
+    return _winnow_udf(
+        df, text_col, id_col, k, w, pre_normalized,
+        _winnow_fast_arrays, "array<bigint>",
     )
-    return df.select(F.col(id_col), udf(src).alias("fps"))
 
 
 def hybrid_near_dup_pairs(
@@ -1388,18 +1430,17 @@ def hybrid_near_dup_pairs(
     w: int = 8,
     df_cap: int = 64,
     overlap_threshold: float = 0.6,
-    n_hashes: int = 32,
-    n_bands: int = 8,
-    shingle_n: int = 3,
-    seed: int = 42,
-    max_bucket_size: int = 512,
     fingerprints: DataFrame | None = None,
     bands: DataFrame | None = None,
+    band_index: DataFrame | None = None,
+    fp_index: DataFrame | None = None,
+    fp_df: DataFrame | None = None,
 ) -> DataFrame:
     """Hybrid near-dup matcher: MinHash-LSH *proposes* candidate
-    pairs, winnowed-fingerprint overlap *decides* — the batch run,
-    i.e. :func:`incremental_hybrid_pairs` against an empty band
-    index, an empty fingerprint index and an empty df table.
+    pairs (:func:`minhash_lsh_pairs` at its defaults: 32 hashes,
+    8 bands, 3-shingles, buckets capped at 512), winnowed-fingerprint
+    overlap *decides* (:func:`_overlap_pairs`, with the accept rule
+    and output of :func:`winnow_near_dup_pairs`).
 
     Why the composition: the pure winnow matcher's pair generation
     grows as Σ C(df,2) over the inverted index (736 M candidates
@@ -1408,14 +1449,20 @@ def hybrid_near_dup_pairs(
     at corpus scale the LSH stage bounds the pair universe and the
     winnow stage scores ONLY those pairs.
 
-    Output schema and accept rule are exactly
-    :func:`winnow_near_dup_pairs`'s: ``(id_a, id_b, shared bigint,
-    overlap double)`` with ``id_a < id_b``, ``shared`` counted over
-    the df-capped fingerprint index (a fingerprint with document
-    frequency outside ``[2, df_cap]`` contributes to neither
-    candidates nor scores), denominators from the UNCAPPED per-doc
-    fingerprint counts, ``overlap = shared / min(n_a, n_b)`` kept at
-    ``>= overlap_threshold``.
+    Increment: ``band_index`` / ``fp_index`` / ``fp_df`` are the
+    landed history state — the ``(id, band, bucket)`` rows, the
+    exploded ``(id, fp)`` fingerprint rows and the per-fingerprint
+    document frequencies; ``None`` (the default) is an empty history,
+    the batch run. Only ``df`` is shingled/minhashed/winnowed; the
+    pairs have at least one ``df`` endpoint, and equal a full run over
+    (history ∪ batch) minus the old×old pairs — the
+    ``stream_hybrid_dedup_batch_eq`` gate asserts it. Each batch is
+    decided under the state SO FAR: a fingerprint whose df later
+    crosses the cap does not retro-revise earlier batches' accepted
+    pairs (a periodic full recompute is the compaction that
+    reconciles, same as for the LSH bucket caps). After the probe the
+    caller appends the batch's band rows, fp rows and merged df counts
+    to state.
 
     Determinism: both stages are deterministic — the LSH bucket cap
     ranks members by ``md5(id)`` (partitioning-independent, see
@@ -1440,184 +1487,23 @@ def hybrid_near_dup_pairs(
     corpus where empty docs survive should run :func:`exact_dedup`
     first (the same precondition the LSH backend has).
 
-    ``fingerprints`` / ``bands`` supply a precomputed ``(id_col,
-    fps)`` winnow frame (``k``/``w`` are then ignored) and band table
-    (hash parameters ignored).
+    The candidates (read twice by the verify) and the batch's
+    fingerprint arrays are materialized (:func:`stage_boundary`):
+    inline, the winnow extraction re-evaluates inside every join
+    branch (measured 90.8 s vs 1.7 s on a 94-doc batch).
+    ``fingerprints`` / ``bands`` supply the batch's precomputed
+    ``(id_col, fps)`` winnow frame (``k``/``w`` are then ignored) and
+    :func:`minhash_band_table`, so a caller that appends both to state
+    pays each extraction once.
     """
-    return incremental_hybrid_pairs(
-        df, None, None, None, text_col, id_col,
-        k=k, w=w, df_cap=df_cap, overlap_threshold=overlap_threshold,
-        n_hashes=n_hashes, n_bands=n_bands, shingle_n=shingle_n,
-        seed=seed, max_bucket_size=max_bucket_size,
-        new_bands=bands, new_fps=fingerprints,
-    )
-
-
-def incremental_hybrid_pairs(
-    new_docs: DataFrame,
-    band_index: DataFrame | None,
-    fp_index: DataFrame | None,
-    fp_df: DataFrame | None,
-    text_col: str,
-    id_col: str,
-    *,
-    k: int = 16,
-    w: int = 8,
-    df_cap: int = 64,
-    overlap_threshold: float = 0.6,
-    n_hashes: int = 32,
-    n_bands: int = 8,
-    shingle_n: int = 3,
-    seed: int = 42,
-    max_bucket_size: int = 512,
-    new_bands: DataFrame | None = None,
-    new_fps: DataFrame | None = None,
-) -> DataFrame:
-    """Hybrid near-dup pairs for an INCREMENT against persisted state
-    (the one hybrid body; :func:`hybrid_near_dup_pairs` is the batch
-    run with all three state tables ``None``). Only the new batch is
-    shingled/minhashed/winnowed; history participates through three
-    landed tables and is NEVER rescanned:
-
-    - ``band_index``: the accumulated ``(id, band, bucket)`` rows
-      (:func:`minhash_band_table` output) — candidate generation is
-      :func:`incremental_minhash_pairs` (O(batch) hash + indexed
-      bucket join, pairs with >= 1 new endpoint);
-    - ``fp_index``: the accumulated EXPLODED ``(id, fp)`` winnow
-      fingerprint rows (uncapped) — consumed ONLY via a semi-join on
-      candidate-touched ids, so the verify stage reads O(touched
-      docs x fps/doc) rows, not the corpus (bucketed by id at rest
-      the probe is exchange-free; the locality is pinned by pytest:
-      corrupting every non-touched row changes nothing);
-    - ``fp_df``: the accumulated per-fingerprint document
-      frequencies — consumed only for the touched docs' fingerprints.
-
-    Document frequencies for the df-cap are ``history + batch``
-    (``fp_df`` covers ALL of history, the batch's own counts are one
-    O(batch) aggregation), so every decision this batch makes equals
-    what a full run over (history ∪ batch) decides — the
-    ``stream_hybrid_dedup_batch_eq`` gate asserts the pair sets are
-    identical minus the already-known old×old pairs. Precondition:
-    batch ids are disjoint from history ids (a re-ingested id would
-    double-count its fingerprints in the df — land upserts before
-    re-probing). Each batch is decided under the state SO FAR: a
-    fingerprint whose df later crosses the cap does not retro-revise
-    earlier batches' accepted pairs (a periodic full recompute is the
-    compaction that reconciles, same as for the LSH bucket caps).
-    After the probe the caller appends the batch's band rows, fp rows
-    and merged df counts to state.
-
-    Plan shape: the candidate pairs are materialized (candidate-sized
-    by design) because the verify consumes them twice; each
-    candidate-touched doc's df-capped fingerprint ARRAY is attached to
-    the pairs with two id-keyed joins and intersected per pair
-    (``array_intersect``) — the :func:`hashed_ngram_jaccard` shape.
-    Joining candidates with the EXPLODED index instead died ENOSPC at
-    the 100× sweep: that intermediate is |candidates| × per-doc
-    density ≈ 5 B rows, the very Σ df² spill the hybrid exists to
-    avoid. Fingerprints are rehashed ``xxhash64(md5_hex)`` for the
-    verify arrays only (8 bytes vs the 32-byte hex string); both
-    sides of every intersection use the same rehash, so ``shared``
-    equals the md5-string count modulo ~2⁻⁶⁴ collisions. The
-    corpus-sized joins are hinted shuffle_hash: cached-plan size
-    estimates once picked a 100×-replicated build side for broadcast.
-
-    The multi-consumed fingerprint frames (the batch's array form and
-    the touched docs' exploded rows) are materialized
-    (:func:`stage_boundary`): inline, the winnow extraction
-    re-evaluates inside every join branch (measured 90.8 s vs 1.7 s
-    on a 94-doc batch). ``new_bands`` /
-    ``new_fps`` supply the batch's precomputed band table / winnow
-    fingerprint frame (hash and ``k``/``w`` parameters are then
-    ignored), so a caller that appends both to state pays each
-    extraction once.
-    """
-    from yahoofinancedatalake_spark.functions.scalars import (  # noqa: PLC0415
-        dround,
-    )
-
-    cand = incremental_minhash_pairs(
-        new_docs,
-        band_index,
-        text_col,
-        id_col,
-        n_hashes=n_hashes,
-        n_bands=n_bands,
-        shingle_n=shingle_n,
-        seed=seed,
-        max_bucket_size=max_bucket_size,
-        new_bands=new_bands,
+    cand = minhash_lsh_pairs(
+        df, text_col, id_col, bands=bands, index=band_index
     ).transform(stage_boundary)
-    if new_fps is None:
-        new_fps = winnow_fingerprints(new_docs, text_col, id_col, k=k, w=w)
-    # materialize the ARRAY form before exploding: Generate over the
-    # un-materialized extraction re-evaluates the per-doc transform per
-    # output row
-    new_fps = stage_boundary(new_fps)
-    new_idx = new_fps.select(F.col(id_col), F.explode("fps").alias("fp"))
-    # broadcast: the touched-id set is <= 2x candidate pairs
-    touched = F.broadcast(
-        cand.select(F.explode(F.array("id_a", "id_b")).alias(id_col))
-        .dropDuplicates([id_col])
-    )
-    rel_idx = new_idx.join(touched, id_col, "left_semi")
-    if fp_index is not None:
-        rel_idx = rel_idx.unionByName(
-            fp_index.select(F.col(id_col), "fp").join(
-                touched, id_col, "left_semi"
-            )
-        )
-    rel_idx = stage_boundary(rel_idx)
-    # document frequencies stay GLOBAL (the df-cap is a corpus-wide
-    # statistic): the batch's own counts, plus history's for the
-    # fingerprints the touched docs carry
-    df_tot = new_idx.groupBy("fp").agg(F.count("*").alias("df"))
-    if fp_index is not None:
-        df_tot = (
-            rel_idx.select("fp").distinct()
-            .join(fp_df.hint("shuffle_hash"), "fp", "left")
-            .join(
-                df_tot.withColumnRenamed("df", "bdf").hint("shuffle_hash"),
-                "fp",
-                "left",
-            )
-            .select(
-                "fp",
-                (
-                    F.coalesce(F.col("df"), F.lit(0))
-                    + F.coalesce(F.col("bdf"), F.lit(0))
-                ).alias("df"),
-            )
-        )
-    kept = df_tot.filter((F.col("df") >= 2) & (F.col("df") <= df_cap))
-    kept_arr = (
-        rel_idx.join(kept.select("fp").hint("shuffle_hash"), "fp")
-        .groupBy(id_col)
-        .agg(F.collect_list(F.xxhash64("fp")).alias("kfps"))
-    )
-    sizes = rel_idx.groupBy(id_col).agg(F.count("*").alias("n_fp"))
-    fa = kept_arr.select(F.col(id_col).alias("id_a"), F.col("kfps").alias("fa"))
-    fb = kept_arr.select(F.col(id_col).alias("id_b"), F.col("kfps").alias("fb"))
-    pairs = (
-        cand.join(fa.hint("shuffle_hash"), "id_a")
-        .join(fb.hint("shuffle_hash"), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("fa", "fb"))
-            .cast("bigint")
-            .alias("shared"),
-        )
-        .filter(F.col("shared") >= 1)
-    )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("n_fp").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_fp").alias("n_b"))
-    ov = F.col("shared").cast("double") / F.least("n_a", "n_b")
-    return (
-        pairs.join(sa.hint("shuffle_hash"), "id_a")
-        .join(sb.hint("shuffle_hash"), "id_b")
-        .filter(ov >= overlap_threshold)
-        .select("id_a", "id_b", "shared", dround(ov, 4).alias("overlap"))
+    if fingerprints is None:
+        fingerprints = winnow_fingerprints(df, text_col, id_col, k=k, w=w)
+    fps = stage_boundary(fingerprints)
+    return _overlap_pairs(
+        cand, fps, fp_index, fp_df, id_col, df_cap, overlap_threshold
     )
 
 

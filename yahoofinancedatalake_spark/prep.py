@@ -102,25 +102,25 @@ def near_dup_stage(
     deterministic keeper — identical survivor policy for every
     backend).
 
-    Backends:
+    ``backend`` only picks the candidate generator; each is one
+    generator → verify sequence in ``operators/dedup.py``, at the
+    parameters of its gated query:
 
-    - ``"lsh"`` (default): the engine's one verified-pair operator
-      (``operators/dedup.py:verified_near_dup_pairs``) with no
-      history — MinHash-LSH candidates, hashed-Jaccard verify at
+    - ``"lsh"`` (default): ``verified_near_dup_pairs`` with no history
+      — MinHash-LSH candidates, hashed-Jaccard verify at
       ``dedup.JACCARD_THRESHOLD``.
-    - ``"winnow"``: winnowed-fingerprint inverted-index matcher
-      (``operators/dedup.py:winnow_near_dup_pairs``, the gated
-      ``winnow_near_dup`` query's operator at its exact parameters).
-      Fully deterministic — the df-cap depends only on (fingerprint,
+    - ``"winnow"``: ``winnow_near_dup_pairs`` — the df-capped
+      winnowed-fingerprint self-join proposes and counts shared
+      fingerprints, the overlap accept rule (overlap >= 0.5)
+      decides. Fully
+      deterministic — the df-cap depends only on (fingerprint,
       document frequency) — so its composed gate
       (``prep_stage_counts_winnow``) needs no candidate-rewrite oracle
       machinery.
-    - ``"hybrid"``: MinHash-LSH candidates scored by
-      winnowed-fingerprint overlap
-      (``operators/dedup.py:hybrid_near_dup_pairs`` at the gated
-      ``hybrid_near_dup`` query's parameters) — the winnow accept rule
-      with LSH bounding the pair universe. Deterministic like
-      "winnow".
+    - ``"hybrid"``: ``hybrid_near_dup_pairs`` — MinHash-LSH proposes,
+      the overlap verify (fingerprint-set intersection, then the same
+      accept rule at overlap >= 0.6) decides, so LSH bounds the pair
+      universe. Deterministic like "winnow".
 
     Every backend materializes what its matcher reads twice with
     ``stage_boundary`` and leaves no cached table behind; the result
@@ -144,28 +144,16 @@ def near_dup_stage(
         winnow_near_dup_pairs,
     )
 
-    if backend == "lsh":
-        losers = _component_losers(
-            verified_near_dup_pairs(exact, id_col), id_col
-        )
-    elif backend == "winnow":
-        # defaults = the gated winnow_near_dup query's parameters
-        # (k=16, w=8, df_cap=64, overlap >= 0.5); already verified
-        # pairs — the matcher computes exact overlap, no second pass
-        losers = _component_losers(
-            winnow_near_dup_pairs(exact, "text", id_col), id_col
-        )
-    elif backend == "hybrid":
-        # defaults = the gated hybrid_near_dup query's parameters
-        # (LSH 32 hashes / 8 bands / 3-shingles proposing; winnow
-        # k=16, w=8, df_cap=64, overlap >= 0.6 deciding)
-        losers = _component_losers(
-            hybrid_near_dup_pairs(exact, "text", id_col), id_col
-        )
-    else:
+    matchers = {
+        "lsh": lambda: verified_near_dup_pairs(exact, id_col),
+        "winnow": lambda: winnow_near_dup_pairs(exact, "text", id_col),
+        "hybrid": lambda: hybrid_near_dup_pairs(exact, "text", id_col),
+    }
+    if backend not in matchers:
         raise ValueError(
             f"unknown near-dup backend {backend!r} (lsh|winnow|hybrid)"
         )
+    losers = _component_losers(matchers[backend](), id_col)
     return exact.join(losers, id_col, "left_anti")
 
 

@@ -196,7 +196,7 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_id, 80/20) into history and a daily batch; history lands "
     "its (id, band, bucket) index once (minhash_band_table) and the "
     "increment is deduped against it WITHOUT re-shingling history "
-    "(incremental_minhash_pairs: O(batch) hash + indexed bucket "
+    "(minhash_lsh_pairs with index=: O(batch) hash + indexed bucket "
     "join — the shape that turns daily dedup at 100 TB from "
     "O(corpus) into O(batch)). Gate: the incremental pair set must "
     "EQUAL the full recompute over history ∪ batch minus known "
@@ -208,7 +208,6 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_incremental_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yahoofinancedatalake_spark.operators.dedup import (
-        incremental_minhash_pairs,
         minhash_band_table,
         minhash_lsh_pairs,
     )
@@ -218,7 +217,7 @@ def q_incremental_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = docs.filter(bucket < 8)
     batch = docs.filter(bucket >= 8)
     index = minhash_band_table(hist, "text", "doc_id")
-    inc = incremental_minhash_pairs(batch, index, "text", "doc_id")
+    inc = minhash_lsh_pairs(batch, "text", "doc_id", index=index)
     full = minhash_lsh_pairs(docs, "text", "doc_id")
     old_ids = hist.select("doc_id")
     # expected = full pairs minus the already-known old×old pairs:

@@ -713,7 +713,7 @@ def q_unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = (
         words.groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
     # fold the single-row total into the frequency table via a
     # constant-key EQUI-join (BroadcastHashJoin): a bare crossJoin of a
@@ -1093,7 +1093,7 @@ def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
     tot = counts.agg(
         F.sum("n").alias("total"), F.max("n").alias("mx")

@@ -48,6 +48,7 @@ from yahoofinancedatalake_spark.queries.pack_07_training_prep import (
     _WORD_TOKS_SQL,
     _word_toks,
 )
+from yahoofinancedatalake_spark.session import stage_boundary
 
 
 # ---------------------------------------------------------------------------
@@ -650,7 +651,7 @@ def q_bigram_logprob_quality(
     bc = (
         bgrows.groupBy("b")
         .agg(F.count(F.lit(1)).alias("bc"))
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
     uc = (
         bc.groupBy(F.substring_index("b", " ", 1).alias("w1"))
@@ -1379,7 +1380,7 @@ def q_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pv = (
         li.groupBy("l_partkey")
         .agg(F.sum(cents).alias("value_cents"))
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
     tot = pv.agg(
         F.sum("value_cents").alias("t"), F.count(F.lit(1)).alias("n")

@@ -1419,7 +1419,7 @@ def q_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
                     8,
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
+            .transform(stage_boundary)
         )
     hubs = ranks.filter(F.col("node").startswith("e:")).select(
         "node", "rank"

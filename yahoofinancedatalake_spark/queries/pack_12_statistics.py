@@ -399,7 +399,7 @@ def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join — un-materialized, the lineitem scan + distinct shuffle
     # re-executed three times (plan: 8 parquet scans for a 1-scan
     # pipeline). The checkpoint holds (order, part) key rows only.
-    items = li.distinct().localCheckpoint()
+    items = li.distinct().transform(stage_boundary)
     freq = (
         items.groupBy("pk")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -480,7 +480,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the edge list it builds, so the join itself now runs once too)
     items = li.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    ).distinct().localCheckpoint()
+    ).distinct().transform(stage_boundary)
     a = items.select("ok", F.col("pk").alias("a"))
     b = items.select("ok", F.col("pk").alias("b"))
     edges = (
@@ -1122,7 +1122,7 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join subtree
     items = li.select(
         F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
-    ).distinct().localCheckpoint()
+    ).distinct().transform(stage_boundary)
     a = items.select("ok", F.col("pk").alias("a"))
     b = items.select("ok", F.col("pk").alias("b"))
     eu = (
@@ -1130,7 +1130,7 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a") < F.col("b"))
         .select("a", "b")
         .distinct()
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
     edges = eu.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
@@ -1140,7 +1140,7 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     visited = (
         eu.agg(F.min("a").alias("node"))
         .withColumn("level", F.lit(0))
-        .localCheckpoint(eager=True)
+        .transform(stage_boundary)
     )
     for i in range(1, 4):
         frontier = visited.filter(F.col("level") == i - 1)
@@ -1152,7 +1152,7 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         fresh = reached.join(
             visited.select("node"), "node", "left_anti"
         ).withColumn("level", F.lit(i))
-        visited = visited.unionByName(fresh).localCheckpoint(eager=True)
+        visited = visited.unionByName(fresh).transform(stage_boundary)
     return (
         visited.groupBy("level")
         .agg(
@@ -1242,7 +1242,7 @@ def q_interval_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint is one (user, sid, start, end) row per session.
     sess = numbered.groupBy("user_id", "sid").agg(
         F.min("ts").alias("s_ts"), F.max("ts").alias("e_ts")
-    ).localCheckpoint()
+    ).transform(stage_boundary)
     bnd = sess.select(
         F.col("s_ts").alias("ts"),
         F.lit(1).alias("st"),
@@ -1261,7 +1261,7 @@ def q_interval_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("st").alias("starts"), F.sum("en").alias("ends"))
         .withColumn("day", F.to_date("ts"))
         .withColumn("net", F.col("starts") - F.col("ends"))
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
     wday = (
         Window.partitionBy("day")
@@ -1434,7 +1434,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     bgc = (
         bigrams.groupBy("b")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
     words = toks.filter(F.size("toks") >= 1).select(
         F.explode("toks").alias("w")
@@ -1442,7 +1442,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni = (
         words.groupBy("w")
         .agg(F.count(F.lit(1)).alias("cw"))
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
     nuni = (
         uni.agg(F.sum("cw").cast("double").alias("nu"))

@@ -49,6 +49,7 @@ from yahoofinancedatalake_spark.queries.pack_07_training_prep import (
     _WORD_TOKS_SQL,
     _word_toks,
 )
+from yahoofinancedatalake_spark.session import stage_boundary
 
 
 @_register(
@@ -668,7 +669,7 @@ FROM rec ORDER BY event_type, day_index
     "UnionLoop re-evaluates every plan the recursive member "
     "references on EACH iteration, so an inline `daily` CTE re-scans "
     "and re-aggregates the full fact table once per day — measured "
-    "9.2 s for 30 steps at sf0.1, vs 5.5 s after localCheckpointing "
+    "9.2 s for 30 steps at sf0.1, vs 5.5 s after materializing "
     "the rollup once, the residual being UnionLoop's ~180 ms/step "
     "job-scheduling floor; at 100 TB the difference is 30 fact "
     "scans vs one). Depth is additionally bounded at 90 days: each "
@@ -694,7 +695,7 @@ def q_recursive_compound_growth(
             events="__rec_events",
             datediff="datediff(CAST(ts AS DATE), DATE '2024-01-01')",
         )
-    ).coalesce(1).localCheckpoint()
+    ).coalesce(1).transform(stage_boundary)
     daily.createOrReplaceTempView("__rec_daily")
     return spark.sql(
         _RECURSIVE_GROWTH_SQL.format(daily="SELECT * FROM __rec_daily")

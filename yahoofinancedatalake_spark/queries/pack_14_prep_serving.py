@@ -540,7 +540,8 @@ _INC_PREP_ORACLE = f"""
     "corpus (doc_id % 37 = 0) for both runs, as a real benchmark "
     "list would be. Scale: seed cost is the batch pipeline's; the "
     "increment is O(batch) hash + indexed bucket join "
-    "(incremental_minhash_pairs) — the 100 TB daily-ingest shape. "
+    "(minhash_lsh_pairs against the landed band index) — the 100 TB "
+    "daily-ingest shape. "
     "Gate cost, not per-query cost: state lands under a tempdir and "
     "is removed after.",
     parts=8,
@@ -795,7 +796,7 @@ def q_winnow_fast_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprints are bit-identical to the un-shared form.
     norm = docs.select(
         "doc_id", normalized_text(F.col("text")).alias("text")
-    ).localCheckpoint()
+    ).transform(stage_boundary)
     fast = winnow_near_dup_pairs(
         norm,
         "text",
@@ -1891,8 +1892,8 @@ def q_selection_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the KN model build, the KN scoring bigrams, AND the kept-pool
     # join — each reference otherwise re-executes the scan +
     # tokenize + HOF rule filter. CCNet materializes each funnel
-    # stage to disk; localCheckpoint is the in-session form.
-    ).localCheckpoint()
+    # stage to disk; stage_boundary is the in-session form.
+    ).transform(stage_boundary)
 
     from yahoofinancedatalake_spark.operators.selection import (  # noqa: PLC0415
         kneser_ney_scores,
@@ -1904,7 +1905,7 @@ def q_selection_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     pplt = (
         kneser_ney_scores(stage1, "t", "doc_id")
         .select("doc_id", "ppl")
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
     thr = pplt.agg(
         F.percentile(
@@ -1936,7 +1937,7 @@ def q_selection_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # blowup is compile cost and reuse-miss risk at 100 TB). The
         # production funnel materializes each stage anyway — CCNet
         # writes the bucket assignment to disk before selection.
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
     kt = stage1.join(keep.select("doc_id"), "doc_id")
     w = dsir_logweights(kt, "t", "doc_id", "is_t")
@@ -2139,8 +2140,8 @@ def q_quality_classifier_select(
     # prior once, and un-checkpointed each consumer re-executes the
     # corpus-sized train-gram aggregation under it — 3-4 train passes
     # for tables that are O(model), not O(corpus)
-    model = nb_quality_model(train, "toks", "is_t").localCheckpoint()
-    prior = nb_prior(train, "is_t").localCheckpoint()
+    model = nb_quality_model(train, "toks", "is_t").transform(stage_boundary)
+    prior = nb_prior(train, "is_t").transform(stage_boundary)
     return (
         nb_quality_scores(held_out, "toks", "doc_id", model, prior)
         .withColumn("predicted", F.col("logodds") >= 0)
@@ -2213,7 +2214,7 @@ def q_quality_classifier_select(
     "keeping predicted-positive docs (logodds >= 0 — the posterior "
     "0.5 threshold), (3) DSIR top-50 over the kept pool with "
     "hash-seeded Gumbel keys. Output (doc_id, logodds, prob, logw, "
-    "gkey). The classifier-keep table is localCheckpoint()ed "
+    "gkey). The classifier-keep table is materialized "
     "between stages for the same reason selection_funnel's tercile "
     "table is (the r10 430-Exchange plan-blowup lesson; CCNet "
     "materializes each funnel stage too). Scale: every stage's "
@@ -2257,13 +2258,13 @@ def q_selection_funnel_cls(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the NB model build, the prior, the scoring grams, AND the
     # kept-pool join — four re-executions of the scan + tokenize +
     # HOF rule filter otherwise. CCNet materializes each funnel
-    # stage to disk for the same reason; localCheckpoint is the
+    # stage to disk for the same reason; stage_boundary is the
     # in-session form.
-    ).localCheckpoint()
+    ).transform(stage_boundary)
     # model/prior materialized for the same reason as
     # quality_classifier_select's (3-4 train passes → 1)
-    model = nb_quality_model(stage1, "t", "is_t").localCheckpoint()
-    prior = nb_prior(stage1, "is_t").localCheckpoint()
+    model = nb_quality_model(stage1, "t", "is_t").transform(stage_boundary)
+    prior = nb_prior(stage1, "is_t").transform(stage_boundary)
     keep = (
         nb_quality_scores(stage1, "t", "doc_id", model, prior)
         .filter(F.col("logodds") >= 0)
@@ -2272,7 +2273,7 @@ def q_selection_funnel_cls(spark: SparkSession, sf_dir: str) -> DataFrame:
         # `keep` feeds both the pool join and the final projection,
         # and each reference would otherwise inline the whole
         # stage1→NB-model→scoring subtree into the plan twice
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
     kt = stage1.join(keep.select("doc_id"), "doc_id")
     w = dsir_logweights(kt, "t", "doc_id", "is_t")
@@ -2384,8 +2385,8 @@ def q_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prior once, and un-checkpointed each consumer re-executes the
     # corpus-sized train-gram aggregation under it — 3-4 train passes
     # for tables that are O(model), not O(corpus)
-    model = nb_quality_model(train, "toks", "is_t").localCheckpoint()
-    prior = nb_prior(train, "is_t").localCheckpoint()
+    model = nb_quality_model(train, "toks", "is_t").transform(stage_boundary)
+    prior = nb_prior(train, "is_t").transform(stage_boundary)
     scores = nb_quality_scores(held_out, "toks", "doc_id", model, prior)
     lab = scores.join(held_out.select("doc_id", "is_t"), "doc_id")
     ar = (
@@ -2475,8 +2476,8 @@ def q_classifier_calibration(
     # prior once, and un-checkpointed each consumer re-executes the
     # corpus-sized train-gram aggregation under it — 3-4 train passes
     # for tables that are O(model), not O(corpus)
-    model = nb_quality_model(train, "toks", "is_t").localCheckpoint()
-    prior = nb_prior(train, "is_t").localCheckpoint()
+    model = nb_quality_model(train, "toks", "is_t").transform(stage_boundary)
+    prior = nb_prior(train, "is_t").transform(stage_boundary)
     scores = nb_quality_scores(held_out, "toks", "doc_id", model, prior)
     lab = scores.join(held_out.select("doc_id", "is_t"), "doc_id")
     return (
@@ -2842,8 +2843,8 @@ def q_classifier_pr_points(
     # prior once, and un-checkpointed each consumer re-executes the
     # corpus-sized train-gram aggregation under it — 3-4 train passes
     # for tables that are O(model), not O(corpus)
-    model = nb_quality_model(train, "toks", "is_t").localCheckpoint()
-    prior = nb_prior(train, "is_t").localCheckpoint()
+    model = nb_quality_model(train, "toks", "is_t").transform(stage_boundary)
+    prior = nb_prior(train, "is_t").transform(stage_boundary)
     scores = nb_quality_scores(held_out, "toks", "doc_id", model, prior)
     lab = scores.join(held_out.select("doc_id", "is_t"), "doc_id")
     exploded = lab.withColumn(
@@ -2999,8 +3000,8 @@ def _nb_held_out_scored(spark: SparkSession, sf_dir: str):
     # prior once, and un-checkpointed each consumer re-executes the
     # corpus-sized train-gram aggregation under it — 3-4 train passes
     # for tables that are O(model), not O(corpus)
-    model = nb_quality_model(train, "toks", "is_t").localCheckpoint()
-    prior = nb_prior(train, "is_t").localCheckpoint()
+    model = nb_quality_model(train, "toks", "is_t").transform(stage_boundary)
+    prior = nb_prior(train, "is_t").transform(stage_boundary)
     scores = nb_quality_scores(held_out, "toks", "doc_id", model, prior)
     return scores.join(held_out.select("doc_id", "is_t"), "doc_id")
 
@@ -3073,7 +3074,7 @@ def q_classifier_auc_scaled(
         # NB train+score subtree; bt/lower/cum each reference it, so
         # un-materialized the subtree re-executes 3x (plan audit: 90
         # exchanges vs the exact form's 28 before this line)
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
     bt = hist.groupBy("bucket").agg(F.sum("neg").alias("neg_tot"))
     # cross-bucket offsets WITHOUT a window or an inequality join (a
@@ -3314,7 +3315,7 @@ def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # output projection both reference it (un-materialized, the
     # corpus agg would run twice — plan audit: 15 exchanges vs
     # unimax_mixture's 7)
-    al = unimax_allocation(counts, "gkey").localCheckpoint()
+    al = unimax_allocation(counts, "gkey").transform(stage_boundary)
     tot = al.agg(F.sum("alloc").alias("ta")).withColumn(
         "__k", _const_key(F.col("ta"))
     )
@@ -3353,7 +3354,8 @@ def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "LSH (id, band, bucket) index, the exploded winnow fingerprint "
     "index, and the per-fingerprint document frequencies — and the "
     "batch streams in as parquet, probed by foreachBatch via "
-    "incremental_hybrid_pairs: O(batch) shingle/minhash/winnow + "
+    "hybrid_near_dup_pairs against the three state tables: "
+    "O(batch) shingle/minhash/winnow + "
     "indexed bucket join for candidates + id-semi-joined fingerprint "
     "arrays for the verify stage; history text is NEVER rescanned. "
     "After the probe the batch's band/fp/df rows are appended+merged "
@@ -3362,8 +3364,9 @@ def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     "nothing (exactly-once). Gate: the streamed accepted pairs must "
     "EQUAL the full batch hybrid_near_dup_pairs over history ∪ batch "
     "minus the already-known old×old pairs — empty symmetric "
-    "difference, passed=TRUE hash-matches the constant oracle only "
-    "then. Multi-epoch semantics are the operator's documented "
+    "difference — and after the drains the df state must equal a "
+    "recount of the fingerprint index; passed=TRUE hash-matches the "
+    "constant oracle only then. Multi-epoch semantics are the operator's documented "
     "contract (decisions under state-so-far; periodic full recompute "
     "is the compaction). Scale: turns daily hybrid dedup at 100 TB "
     "from O(corpus) re-fingerprint into O(batch) probe against "
@@ -3373,7 +3376,6 @@ def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_hybrid_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
         hybrid_near_dup_pairs,
-        incremental_hybrid_pairs,
         minhash_band_table,
         winnow_fingerprints,
     )
@@ -3413,25 +3415,27 @@ def q_stream_hybrid_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bfps_arr = stage_boundary(
             winnow_fingerprints(batch_df, "text", "doc_id")
         )
-        pairs = incremental_hybrid_pairs(
-            batch_df, band, fpi, fpd, "text", "doc_id",
-            new_bands=bband, new_fps=bfps_arr,
+        pairs = hybrid_near_dup_pairs(
+            batch_df, "text", "doc_id",
+            bands=bband, fingerprints=bfps_arr,
+            band_index=band, fp_index=fpi, fp_df=fpd,
         )
         pairs.write.mode("append").parquet(outdir)
         # daily-ingest state update: append the batch's band and
-        # fingerprint rows; merge its df counts into a new df
-        # version (read-modify-write of the SMALL (fp, df) table)
+        # fingerprint rows; merge its df counts into the df table the
+        # next probe reads (read-modify-write of the SMALL (fp, df)
+        # table, materialized first: the overwrite deletes its input)
         bband.write.mode("append").parquet(band_dir)
         bfps = bfps_arr.select("doc_id", F.explode("fps").alias("fp"))
         bfps.write.mode("append").parquet(fpi_dir)
-        merged = (
+        merged = stage_boundary(
             fpd.unionByName(
                 bfps.groupBy("fp").agg(F.count("*").alias("df"))
             )
             .groupBy("fp")
             .agg(F.sum("df").alias("df"))
         )
-        merged.write.mode("overwrite").parquet(s.path("fpd_next"))
+        merged.write.mode("overwrite").parquet(fpd_dir)
 
     s.land(batch.coalesce(1))
     for _drain in range(2):  # second drain: exactly-once replay
@@ -3458,14 +3462,22 @@ def q_stream_hybrid_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # symmetric diff consumes each side twice, and un-checkpointed
         # the second consumption re-ran the whole full-corpus hybrid
         # matcher (the gate's most expensive subtree) a second time
-        .localCheckpoint()
+        .transform(stage_boundary)
     )
-    sym_diff = expected.exceptAll(streamed).unionByName(
-        streamed.exceptAll(expected)
+
+    def _sym_diff(x: DataFrame, y: DataFrame) -> int:
+        return x.exceptAll(y).unionByName(y.exceptAll(x)).count()
+
+    # the df state the next probe would read equals a recount of the
+    # fingerprint index it describes
+    recount = spark.read.parquet(fpi_dir).groupBy("fp").agg(
+        F.count("*").alias("df")
     )
-    n_bad = sym_diff.count()
+    ok = _sym_diff(expected, streamed) == 0 and (
+        _sym_diff(spark.read.parquet(fpd_dir), recount) == 0
+    )
     return spark.createDataFrame(
-        [("incremental_hybrid_equals_full", n_bad == 0)],
+        [("incremental_hybrid_equals_full", ok)],
         schema="metric string, passed boolean",
     )
 
