@@ -37,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from yahoofinancedatalake_spark.queries.pack import QUERIES, _await_stream  # noqa: E402
 from yahoofinancedatalake_spark.session import (  # noqa: E402
-    drain_if_pressured,
+    boundary_scope,
     get_spark,
     tmpfs_release,
     tmpfs_scratch,
@@ -189,7 +189,7 @@ def _run(sf_dir: str, sf: float, only: set[str] | None = None) -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warm-up: JIT/codegen + parquet footer reads, excluded from timings.
-    force(QUERIES["pricing_summary"].spark(spark, sf_dir))
+    QUERIES["pricing_summary"].run(spark, sf_dir, force)
     # Spin up the Python UDF worker pool too (one worker per core,
     # ~2s total) so the first pandas_udf query isn't charged session
     # startup — worker processes are session infrastructure, reused
@@ -295,69 +295,23 @@ def _run(sf_dir: str, sf: float, only: set[str] | None = None) -> None:
             F.lit("warm up token stream alpha beta 7").alias("text"),
         )
     )
-    force(near_dup_stage(tdup))
+    with boundary_scope():
+        force(near_dup_stage(tdup))
 
     # Fail-soft per query: one crash must never wipe the whole bench
     # artifact (a single TIMESTAMP_NTZ bug once cost an entire round's
     # numbers). Errors are recorded, every other query still gets
     # timed, and the process exits nonzero so the failure is visible.
-    # The pack's highest-allocation-rate queries (shingle explosions,
-    # file-rewrite round-trips): in local mode their young-gen burst
-    # shares the driver JVM, and whether G1 trips a mixed/full
-    # collection MID-QUERY depends on the old-gen occupancy ~190
-    # prior queries left — the same 2.6-3.3s-warm query read 8-19s in
-    # about half of otherwise-identical runs (r7 runs 2/3/5/7/9). A
-    # forced compact immediately before each gives the burst maximal
-    # headroom; ~0.5s per drain, outside every query's clock.
-    heavy_alloc = {
-        "prefix_filter_jaccard", "minhash_accuracy", "simhash_accuracy",
-        "minhash_near_dup", "dedup_clusters", "dedup_clusters_star",
-        "cluster_canonical_docs", "span_dedup_c4", "variant_shred_agg",
-        "zorder_layout", "compact_files_eq", "bfs_levels",
-        "orc_roundtrip", "schema_evolution_eq", "prep_stage_counts",
-        "incremental_prep_counts",
-        # r9: the winnow matcher explodes fingerprint arrays and the
-        # sandwich gate runs two matchers + materializes both pair sets —
-        # the same young-gen burst profile as the LSH family above
-        "winnow_near_dup", "winnow_fast_accuracy",
-        # r9: streaming rung 12 — two incremental prep runs + state
-        # landings, same profile as incremental_prep_counts
-        "stream_incremental_prep_batch_eq",
-        # r10: winnow-backend prep gate — fingerprint explode + the
-        # composed quality/exact/CC stages, same burst profile
-        "prep_stage_counts_winnow",
-        # r11: LSH banding + fingerprint explode + array-intersect
-        # verify — the union of the two families' burst profiles
-        "hybrid_near_dup", "prep_stage_counts_hybrid",
-        # r12: paragraph explode + keep-first join + reassembly; and
-        # rung 16 runs the full incremental hybrid stack (banding +
-        # fingerprint explode + verify) twice plus state landings
-        "paragraph_dedup", "stream_hybrid_dedup_batch_eq",
-        "prep_stage_counts_paragraph",
-    }
-    # Guard against silent staleness: a renamed query would otherwise
-    # keep its old name here and lose the forced pre-query drain.
-    unknown = heavy_alloc - QUERIES.keys()
-    if unknown:
-        raise AssertionError(
-            f"heavy_alloc names not in QUERIES: {sorted(unknown)}"
-        )
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    n_drains = 0
     for name, q in QUERIES.items():
         if only is not None and name not in only:
             continue
-        # Pressure-triggered drain BEFORE the clock starts: frees the
-        # localCheckpoint/broadcast backlog exactly when heap fill
-        # would otherwise land a multi-second old-gen pause inside the
-        # next heavy query (see session.drain_if_pressured). Replaces
-        # r6's fixed every-25 cadence, which still let the r6 judge
-        # observe a 7.3s GC transient between drains.
-        n_drains += drain_if_pressured(spark, force=name in heavy_alloc)
+        # the query's stage boundaries are released inside the run,
+        # on its clock, so no query pays for another's cleanup
         t0 = time.perf_counter()
         try:
-            force(q.spark(spark, sf_dir))
+            q.run(spark, sf_dir, force)
             timings[name] = round(time.perf_counter() - t0, 3)
         except Exception as e:  # noqa: BLE001
             errors[name] = f"{type(e).__name__}: {e}"[:300]
@@ -391,14 +345,11 @@ def _run(sf_dir: str, sf: float, only: set[str] | None = None) -> None:
     # exact brute-force top-k over the same queries. Both results are
     # tiny (k rows per query) — the collect is on the final top-k only.
     try:
-        truth = {
-            (r.query_id, r.neighbor_id)
-            for r in QUERIES["cosine_topk"].spark(spark, sf_dir).collect()
-        }
-        approx = {
-            (r.query_id, r.neighbor_id)
-            for r in QUERIES["ann_topk"].spark(spark, sf_dir).collect()
-        }
+        def neighbors(df) -> set:
+            return {(r.query_id, r.neighbor_id) for r in df.collect()}
+
+        truth = QUERIES["cosine_topk"].run(spark, sf_dir, neighbors)
+        approx = QUERIES["ann_topk"].run(spark, sf_dir, neighbors)
         recall = (
             round(len(truth & approx) / len(truth), 4) if truth else None
         )
@@ -456,10 +407,7 @@ def _run(sf_dir: str, sf: float, only: set[str] | None = None) -> None:
         # committed baseline (see module docstring) — placed near the
         # line's tail so the driver's truncated BENCH_r*.json keeps it
         "adjudications": _adjudicate(timings, sf_dir),
-        "notes": {
-            "ann_index_training": "memoized_first_query_pays",
-            "gc_drains": n_drains,
-        },
+        "notes": {"ann_index_training": "memoized_first_query_pays"},
     }
     if errors:
         out["errors"] = errors

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import os
 import sys
+import tempfile
 from pathlib import Path
 
 import pytest
@@ -15,9 +17,19 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark("tests", shuffle_partitions=4)
-    yield s
+def spark(tmp_path_factory):
+    """The suite's one session. Its JVM (java.io.tmpdir), its Python
+    workers (TMPDIR) and the test process (tempfile.tempdir) keep their
+    temp entries under a private root inside pytest's base temp dir,
+    so a test that diffs the temp dir sees this run's entries and no
+    other process's."""
+    root = str(tmp_path_factory.mktemp("tmp"))
+    os.environ["TMPDIR"] = tempfile.tempdir = root
+    return get_spark(
+        "tests",
+        shuffle_partitions=4,
+        extra_conf={"spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={root}"},
+    )
 
 
 @pytest.fixture(scope="session")

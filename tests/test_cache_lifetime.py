@@ -8,8 +8,8 @@ the source: no ``clearCache`` call anywhere in the package, and a
 function that calls ``.persist(``/``.cache(`` also calls
 ``.unpersist(`` inside a ``finally`` of its own. A lazy result that
 reads an intermediate twice takes it from ``session.stage_boundary``,
-whose blocks the ContextCleaner frees with the frame, and nothing
-else in the package checkpoints.
+whose blocks the caller's boundary scope releases (``Query.run``
+opens one per query), and nothing else in the package checkpoints.
 """
 
 from __future__ import annotations

@@ -9,9 +9,13 @@ broadcast-nested-loop join.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from yahoofinancedatalake_spark.queries.pack import QUERIES
+
+REPO = Path(__file__).resolve().parents[1]
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -229,9 +233,6 @@ def _row(name, **over):
 
 
 def test_plan_diff_gate_flags_injected_regressions():
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import diff_rows
 
     baseline = {n: _row(n) for n in ("a", "b", "c", "d", "e", "f")}
@@ -256,9 +257,6 @@ def test_plan_diff_gate_flags_injected_regressions():
 
 
 def test_plan_diff_gate_passes_on_improvements():
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import diff_rows
 
     baseline = {"a": _row("a", exchanges=4, expand=1, pushed=False)}
@@ -269,9 +267,6 @@ def test_plan_diff_gate_passes_on_improvements():
 
 
 def test_plan_baseline_roundtrips_through_markdown(tmp_path):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import parse_baseline
 
     md = tmp_path / "PLANS.md"
@@ -293,12 +288,9 @@ def test_plan_baseline_roundtrips_through_markdown(tmp_path):
 def test_committed_plans_md_parses_as_baseline():
     """The regression gate is only real if the committed PLANS.md
     actually parses — pin the row count to the registered queries."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.plan_audit import MATERIALIZING, parse_baseline
 
-    b = parse_baseline("/root/repo/PLANS.md")
+    b = parse_baseline(str(REPO / "PLANS.md"))
     # every non-materializing registered query has a baseline row
     # (new queries registered after the last snapshot may be absent,
     # but the file must cover the overwhelming majority)

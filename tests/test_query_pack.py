@@ -10,8 +10,9 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from __spark_entry__ import entry, oracle_sql, queries
-from tools.selfcheck import value_hash
+from __spark_entry__ import entry, oracle_sql
+from tools.selfcheck import collected, value_hash
+from yahoofinancedatalake_spark.queries.pack import QUERIES
 from yahoofinancedatalake_spark.schemas import TESTDATA_TABLES
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -36,15 +37,14 @@ def oracle_con():
     return con
 
 
-_QUERIES = queries()
 _ORACLES = oracle_sql()
 
 
-@pytest.mark.parametrize("name", sorted(_QUERIES))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, oracle_con, name):
-    sdf = _QUERIES[name](spark, _SF_OVERRIDE.get(name, SF_DIR))
-    scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
+    scols, srows = QUERIES[name].run(
+        spark, _SF_OVERRIDE.get(name, SF_DIR), collected
+    )
     if name not in _ORACLES:
         assert len(srows) >= 0  # rows-only check (non-SQL-expressible op)
         return
@@ -73,7 +73,6 @@ def test_driver_rotation_ordering_invariants():
     refactors — a wrong order silently starves queries of driver
     coverage."""
     from yahoofinancedatalake_spark.queries.pack import (
-        QUERIES,
         REGISTRATION_ORDER,
         _driver_history,
     )

@@ -10,12 +10,13 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
 from tools.bench_diff import MIN_ABS_S, diff, load
 
-REPO = "/root/repo"
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _bench_line(queries: dict, **extra) -> str:
@@ -341,12 +342,9 @@ def test_bench_adjudicate_no_flags_and_disabled(monkeypatch):
 def test_query_index_regenerates_committed_file():
     """QUERIES.md is exactly what ``tools/query_index.py`` writes, so
     a doc change regenerates the rows it touches and nothing else."""
-    from pathlib import Path
-
     from tools.query_index import render
 
-    committed = Path(__file__).resolve().parents[1] / "QUERIES.md"
-    assert render() == committed.read_text()
+    assert render() == (REPO / "QUERIES.md").read_text()
 
 
 def test_codelines_counts_code_not_docstrings_or_comments():

@@ -317,20 +317,26 @@ def test_sharded_pair_count_equals_unsharded(spark, tmp_path):
     protocol) is EXACT: fingerprint-hash slicing partitions each
     pair's shared-fp contributions across slices, so sum-of-partials
     reproduces the un-sharded matcher — pinned at factor 1 against
-    the gated query's own operator."""
+    the gated query's own operator, pair for pair."""
     from tools.scale_sweep import winnow_sharded_count
     from yahoofinancedatalake_spark.catalog import fan_out, load_table
     from yahoofinancedatalake_spark.operators.dedup import (
         winnow_near_dup_pairs,
     )
 
+    def pair_set(df) -> set:
+        return {(r.id_a, r.id_b) for r in df.select("id_a", "id_b").collect()}
+
     d = "/root/testdata/sf0.01"
     n, slice_secs, _reduce_sec = winnow_sharded_count(
         spark, d, 1, str(tmp_path), n_shards=4
     )
+    got = pair_set(spark.read.parquet(str(tmp_path / "pairs")))
     docs = fan_out(load_table(spark, d, "documents"))
-    want = winnow_near_dup_pairs(docs, "text", "doc_id").count()
-    assert n == want
+    want = pair_set(winnow_near_dup_pairs(docs, "text", "doc_id"))
+    assert want
+    assert got == want
+    assert n == len(want)
     assert len(slice_secs) == 4
 
 

@@ -32,7 +32,10 @@ fails the sweep.
 The table cache is not cleared between queries: a caller's cached
 view is held there (selfcheck's ``hold_cached_view``), and a query
 that leaves a cached relation behind or drops that view fails with a
-LEAK line, so a leaking query shows instead of being hidden.
+LEAK line, so a leaking query shows instead of being hidden. Each
+query runs through ``Query.run``, which releases its stage boundaries
+once its rows are collected; a query that still leaves a persistent
+RDD fails with a LEAK line too.
 
 Every oracle also runs under a wall-clock budget (default 180 s,
 ``con.interrupt()`` on expiry) so one pathological oracle can never
@@ -58,13 +61,17 @@ sys.path.insert(0, REPO)
 from tools.selfcheck import (  # noqa: E402
     _norm,
     cache_leftovers,
+    collected,
     hold_cached_view,
+    leftovers,
+    persistent_rdds,
     value_hash,
 )
 
-from __spark_entry__ import oracle_sql, queries  # noqa: E402
+from __spark_entry__ import oracle_sql  # noqa: E402
+from yahoofinancedatalake_spark.queries.pack import QUERIES  # noqa: E402
 from yahoofinancedatalake_spark.schemas import TESTDATA_TABLES  # noqa: E402
-from yahoofinancedatalake_spark.session import drain_if_pressured, get_spark  # noqa: E402
+from yahoofinancedatalake_spark.session import boundary_scope, get_spark  # noqa: E402
 
 #: Queries whose oracle output is candidate-insensitive (the pair
 #: source is filtered to near-dups downstream) — the rewrite is only
@@ -111,9 +118,10 @@ def _load_candidates(spark, sf_dir: str, con) -> int:
     from yahoofinancedatalake_spark.operators.dedup import minhash_lsh_pairs
 
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    cand = minhash_lsh_pairs(
-        docs, "text", "doc_id", n_hashes=32, n_bands=8, shingle_n=3
-    ).toPandas()
+    with boundary_scope():
+        cand = minhash_lsh_pairs(
+            docs, "text", "doc_id", n_hashes=32, n_bands=8, shingle_n=3
+        ).toPandas()
     con.register("swp_cand_df", cand)
     con.execute(
         "CREATE OR REPLACE TABLE swp_cand AS SELECT * FROM swp_cand_df"
@@ -156,7 +164,7 @@ def _run_oracle(con, sql: str):
 _ANCHOR_PREFIX = os.environ.get("SWEEP_ANCHOR_PREFIX", "08")
 
 
-def _block_recall_check(spark, sf_dir: str, con, qs, oracles) -> dict:
+def _block_recall_check(spark, sf_dir: str, con, oracles) -> dict:
     """Exact recall check: every true near-dup pair with at least one
     endpoint in the md5-sampled anchor set, from an UNPRUNED anchor ×
     corpus join, vs the engine's pairs touching the same anchors."""
@@ -191,12 +199,13 @@ def _block_recall_check(spark, sf_dir: str, con, qs, oracles) -> dict:
             F.lit(_ANCHOR_PREFIX)
         )
 
-    got = {
-        (r.id_a, r.id_b, round(float(r.jaccard), 6))
-        for r in qs["minhash_near_dup"](spark, sf_dir)
-        .filter(in_anchor("id_a") | in_anchor("id_b"))
-        .collect()
-    }
+    def anchor_pairs(df) -> set:
+        return {
+            (r.id_a, r.id_b, round(float(r.jaccard), 6))
+            for r in df.filter(in_anchor("id_a") | in_anchor("id_b")).collect()
+        }
+
+    got = QUERIES["minhash_near_dup"].run(spark, sf_dir, anchor_pairs)
     missed, extra = want - got, got - want
     status = "ok" if not missed and not extra else "mismatch"
     rec = {
@@ -230,25 +239,21 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    qs, oracles = queries(), oracle_sql()
+    oracles = oracle_sql()
     n_cand = _load_candidates(spark, sf_dir, con)
     print(f"candidate table: {n_cand} LSH pairs at {sf_dir}")
     hold_cached_view(spark)
 
     results: dict[str, dict] = {}
     failed = []
-    for name, fn in qs.items():
+    for name, q in QUERIES.items():
         if only and name not in only:
             continue
-        # drain localCheckpoint/broadcast refs the ContextCleaner is
-        # waiting on — same pressure-triggered hygiene as bench.py
-        drain_if_pressured(spark)
+        before = {"persistent RDDs": persistent_rdds(spark)}
         t0 = time.time()
         rec: dict = {"sweep_oracle": False}
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            scols, srows = q.run(spark, sf_dir, collected)
         except Exception as e:  # noqa: BLE001
             rec.update(status="spark_error", err=str(e)[:300])
             results[name] = rec
@@ -256,7 +261,10 @@ def main() -> int:
             print(f"FAIL  {name}: spark error: {str(e)[:200]}")
             continue
         finally:
-            leak = cache_leftovers(spark)
+            after = {"persistent RDDs": persistent_rdds(spark)}
+            leak = "; ".join(
+                filter(None, (leftovers(before, after), cache_leftovers(spark)))
+            )
         if leak:
             rec.update(status="leak", err=leak)
             results[name] = rec
@@ -325,7 +333,7 @@ def main() -> int:
             )
 
     if not only or "minhash_near_dup" in only:
-        rec = _block_recall_check(spark, sf_dir, con, qs, oracles)
+        rec = _block_recall_check(spark, sf_dir, con, oracles)
         results["__lsh_anchor_recall"] = rec
         if rec["status"] != "ok":
             failed.append("__lsh_anchor_recall")
@@ -343,7 +351,7 @@ def main() -> int:
             json.dump(summary, f, indent=1)
         print("wrote PARITY_SWEEP.json")
     print(f"\n{n_run - len(failed)}/{n_run} passed"
-          + ("" if n_run == len(qs) else f" (of {len(qs)} registered)"))
+          + ("" if n_run == len(QUERIES) else f" (of {len(QUERIES)} registered)"))
     return 1 if failed else 0
 
 

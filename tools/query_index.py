@@ -9,9 +9,10 @@ driver's CORRECTNESS_r*.json rows map onto.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from yahoofinancedatalake_spark.queries.pack import (  # noqa: E402
     QUERIES,

@@ -36,11 +36,12 @@ measured, not asserted.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -443,19 +444,21 @@ def winnow_sharded_count(spark, d, factor, workdir, n_shards=8):
     sizes, and applies the overlap threshold. Slicing on the
     FINGERPRINT is exact: every (pair, shared-fp) contribution lands
     in exactly one slice, so sum-of-partials equals the un-sharded
-    ``shared``. Returns (pair_count, per-slice seconds, reduce
-    seconds)."""
+    ``shared``. The df-cap and the accept rule are the operator's own
+    (``dedup._df_capped``, ``dedup._overlap_accept``); the accepted
+    ``(id_a, id_b, shared, overlap)`` pairs land under
+    ``{workdir}/pairs``. Returns (pair_count, per-slice seconds,
+    reduce seconds)."""
     import gc  # noqa: PLC0415
     import time as _t  # noqa: PLC0415
 
     from pyspark.sql import functions as FF  # noqa: PLC0415
 
-    from yahoofinancedatalake_spark.session import (  # noqa: PLC0415
-        drain_if_pressured,
-    )
     from yahoofinancedatalake_spark.catalog import fan_out, load_table  # noqa: PLC0415
-    from yahoofinancedatalake_spark.functions.scalars import dround  # noqa: PLC0415
     from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
+        _df_capped,
+        _doc_freq,
+        _overlap_accept,
         winnow_fingerprints,
     )
     from yahoofinancedatalake_spark.queries.pack_14_prep_serving import (  # noqa: PLC0415
@@ -479,12 +482,8 @@ def winnow_sharded_count(spark, d, factor, workdir, n_shards=8):
     fps = spark.read.parquet(f"{workdir}/fps")
     idx = fps.select(FF.col("doc_id"), FF.explode("fps").alias("fp"))
     sizes = fps.select("doc_id", FF.size("fps").alias("n_fp"))
-    dfreq = idx.groupBy("fp").agg(FF.count("*").alias("df"))
     kept = idx.join(
-        dfreq.filter(
-            (FF.col("df") >= 2) & (FF.col("df") <= cap)
-        ).hint("shuffle_hash"),
-        "fp",
+        _df_capped(_doc_freq(idx), cap).hint("shuffle_hash"), "fp"
     ).select("doc_id", "fp")
     kept.write.mode("overwrite").parquet(f"{workdir}/kept_idx")
     sizes.write.mode("overwrite").parquet(f"{workdir}/sizes")
@@ -515,7 +514,7 @@ def winnow_sharded_count(spark, d, factor, workdir, n_shards=8):
         # JVM GC that lets ContextCleaner unlink the files.
         del part
         gc.collect()
-        drain_if_pressured(spark, force=True)
+        spark.sparkContext._jvm.System.gc()
     # The reduce is sliced too (4 sequential id_a-hash sub-reduces):
     # the landed partials total ~34 GB at the 100× point and a
     # one-shot groupBy over them ENOSPC'd with 41 GB free — the same
@@ -529,7 +528,6 @@ def winnow_sharded_count(spark, d, factor, workdir, n_shards=8):
     sa = sz.select(FF.col("doc_id").alias("id_a"), FF.col("n_fp").alias("n_a"))
     sb = sz.select(FF.col("doc_id").alias("id_b"), FF.col("n_fp").alias("n_b"))
     n_slices = 4
-    n = 0
     for i in range(n_slices):
         p = parts.filter(
             FF.pmod(FF.xxhash64(FF.col("id_a")), FF.lit(n_slices)) == i
@@ -537,17 +535,15 @@ def winnow_sharded_count(spark, d, factor, workdir, n_shards=8):
         pairs = p.groupBy("id_a", "id_b").agg(
             FF.sum("shared").alias("shared")
         )
-        ov = FF.col("shared").cast("double") / FF.least("n_a", "n_b")
-        n += (
+        _overlap_accept(
             pairs.join(sa.hint("shuffle_hash"), "id_a")
-            .join(sb.hint("shuffle_hash"), "id_b")
-            .filter(ov >= _WIN_T)
-            .select(
-                "id_a", "id_b", "shared", dround(ov, 4).alias("overlap")
-            )
-            .count()
+            .join(sb.hint("shuffle_hash"), "id_b"),
+            _WIN_T,
+        ).write.mode("overwrite" if i == 0 else "append").parquet(
+            f"{workdir}/pairs"
         )
-        drain_if_pressured(spark, force=True)
+        spark.sparkContext._jvm.System.gc()
+    n = spark.read.parquet(f"{workdir}/pairs").count()
     reduce_sec = round(_t.time() - t0, 1)
     return n, slice_secs, reduce_sec
 
@@ -560,6 +556,7 @@ def winnow_stats(spark, d, factor):
     with real pair volume while the cap bounds posting lists."""
     from yahoofinancedatalake_spark.catalog import fan_out, load_table  # noqa: PLC0415
     from yahoofinancedatalake_spark.operators.dedup import (  # noqa: PLC0415
+        _doc_freq,
         winnow_fingerprints,
     )
     from yahoofinancedatalake_spark.queries.pack_14_prep_serving import (  # noqa: PLC0415
@@ -571,11 +568,7 @@ def winnow_stats(spark, d, factor):
     cap = _WIN_CAP * factor
     docs = fan_out(load_table(spark, d, "documents"))
     fps = winnow_fingerprints(docs, "text", "doc_id", k=_WIN_K, w=_WIN_W)
-    dfreq = (
-        fps.select(F.explode("fps").alias("fp"))
-        .groupBy("fp")
-        .agg(F.count("*").alias("df"))
-    )
+    dfreq = _doc_freq(fps.select(F.explode("fps").alias("fp")))
     row = dfreq.agg(
         F.sum(
             F.when(

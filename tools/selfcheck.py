@@ -1,16 +1,19 @@
 """Local mimic of the driver's correctness gate.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin
-on DuckDB over the same parquet tables, then compares row count,
-column names, and an order-insensitive value hash (columns sorted by
-name, rows sorted, floats rounded to 6 significant places — a
-slightly *stricter* mimic than the driver so passing here should pass
-there).
+Runs every registered query (the driver's ``queries()`` entries) on
+Spark and its ``oracle_sql()`` twin on DuckDB over the same parquet
+tables, then compares row count, column names, and an
+order-insensitive value hash (columns sorted by name, rows sorted,
+floats rounded to 6 significant places — a slightly *stricter* mimic
+than the driver so passing here should pass there).
 
-A query also fails when it leaves something behind in the caller's
-session or the temp dir: a new entry under ``tempfile.gettempdir()``,
-a temp view, an active stream, or a streaming listener bus left on
-the SparkContext's bus (it keeps its session alive). It fails as well
+Each query runs through ``Query.run``, which releases the stage
+boundaries it took once its rows are collected. A query also fails
+when it leaves something behind in the caller's session or the temp
+dir: a new entry under ``tempfile.gettempdir()``, a temp view, an
+active stream, a streaming listener bus left on the SparkContext's
+bus (it keeps its session alive), or a persistent RDD (a cached
+relation or an unreleased stage boundary). It fails as well
 when it leaves a cached relation in the SparkContext's table cache or
 drops a view the caller cached there. Each leftover is blamed on the
 query that made it. The JVM, its Python workers and this process keep
@@ -36,9 +39,10 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from __spark_entry__ import oracle_sql, queries  # noqa: E402
+from __spark_entry__ import oracle_sql  # noqa: E402
+from yahoofinancedatalake_spark.queries.pack import QUERIES  # noqa: E402
 from yahoofinancedatalake_spark.schemas import TESTDATA_TABLES  # noqa: E402
-from yahoofinancedatalake_spark.session import drain_if_pressured, get_spark  # noqa: E402
+from yahoofinancedatalake_spark.session import get_spark  # noqa: E402
 
 
 def _norm(v):
@@ -69,6 +73,17 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
     return h.hexdigest()[:16]
 
 
+def persistent_rdds(spark) -> set[int]:
+    """Ids of the SparkContext's persistent RDDs: the blocks of cached
+    relations and of stage boundaries not yet released."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def collected(df) -> tuple[list[str], list[tuple]]:
+    """A ``Query.run`` consumer: the frame's columns and rows."""
+    return df.columns, [tuple(r) for r in df.collect()]
+
+
 def residue(spark) -> dict[str, set]:
     """The caller-visible state a query must leave as it found it."""
     bus = spark.sparkContext._jsc.sc().listenerBus()
@@ -83,6 +98,7 @@ def residue(spark) -> dict[str, set]:
             for x in bus.listeners()
             if "StreamingQueryListenerBus" in str(x)
         },
+        "persistent RDDs": persistent_rdds(spark),
     }
 
 
@@ -147,7 +163,7 @@ def _check(spark, sf_dir: str, only: set[str]) -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    qs, oracles = queries(), oracle_sql()
+    oracles = oracle_sql()
     failed: set[str] = set()
     n_run = 0
     # Once per process, on first use, the JVM unpacks its native codecs
@@ -157,21 +173,14 @@ def _check(spark, sf_dir: str, only: set[str]) -> int:
         "event_type"
     ).count().collect()
     hold_cached_view(spark)
-    for name, fn in qs.items():
+    for name, q in QUERIES.items():
         if only and name not in only:
             continue
         n_run += 1
-        # drain the ContextCleaner backlog (localCheckpoint blocks,
-        # broadcast remnants) whenever driver-heap pressure builds —
-        # same hygiene as bench.py, fired on measured pressure rather
-        # than a fixed cadence
-        drain_if_pressured(spark)
         before = residue(spark)
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            scols, srows = q.run(spark, sf_dir, collected)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
             failed.add(name)
@@ -239,7 +248,7 @@ def _check(spark, sf_dir: str, only: set[str]) -> int:
     # denominator = queries actually executed, so a filtered run can't
     # read as a clean full pass
     print(f"\n{n_run - len(failed)}/{n_run} passed"
-          + ("" if n_run == len(qs) else f" (of {len(qs)} registered)"))
+          + ("" if n_run == len(QUERIES) else f" (of {len(QUERIES)} registered)"))
     return 1 if failed else 0
 
 

@@ -205,8 +205,8 @@ def dsir_logweights(
     consumer re-executes the corpus-sized gram aggregation under it —
     three corpus passes where train-once needs one. The checkpoint is
     ≤``N_BUCKETS`` rows, so materialization is O(model), not
-    O(corpus); blocks are released by the ContextCleaner when the
-    frame is garbage-collected."""
+    O(corpus); its blocks belong to the caller's boundary scope
+    (:func:`~yahoofinancedatalake_spark.session.boundary_scope`)."""
     model = dsir_model(df, toks_col, target_col).transform(stage_boundary)
     return dsir_score(df, toks_col, id_col, model)
 
@@ -270,7 +270,7 @@ def kn_prob_table(
     delta). The returned model is materialized here
     (:func:`stage_boundary`) and ``bc`` unpersisted in ``finally``,
     so the call leaves no cached table behind; the checkpoint blocks
-    are freed by the ContextCleaner with the frame. The model is
+    belong to the caller's boundary scope. The model is
     bigram-TYPE-bounded (vocabulary-sized), never corpus-sized."""
     base = df.filter(F.size(toks_col) >= 2)
     bg = base.select(

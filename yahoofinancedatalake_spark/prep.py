@@ -46,7 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from yahoofinancedatalake_spark.session import stage_boundary
+from yahoofinancedatalake_spark.session import boundary_scope, stage_boundary
 
 from yahoofinancedatalake_spark.catalog import fan_out, load_table
 
@@ -491,6 +491,7 @@ def verify_dedup_state(spark: SparkSession, root: str) -> dict[str, int]:
     return actual
 
 
+@boundary_scope()
 def _dedup_and_land(
     spark: SparkSession,
     root: str,
@@ -524,7 +525,9 @@ def _dedup_and_land(
     Every frame the appends read is lineage-truncated
     (:func:`stage_boundary`) before the first append: a lazy plan
     re-executed after an append to the table it reads would see the
-    batch as its own history and drop everything.
+    batch as its own history and drop everything. Those boundaries
+    are released when the call returns (:func:`boundary_scope`):
+    nothing it returns reads them.
     """
     import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415

@@ -5,12 +5,13 @@ pack-wide determinism rules and the driver rotation."""
 
 from __future__ import annotations
 
+import contextvars
 import functools
 import re as _re
 import shutil
 import tempfile
 from dataclasses import dataclass
-from typing import Callable, Optional
+from typing import Any, Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -36,7 +37,7 @@ from yahoofinancedatalake_spark.operators.windows import (
     top_k,
     top_k_with_other,
 )
-from yahoofinancedatalake_spark.session import stage_boundary
+from yahoofinancedatalake_spark.session import boundary_scope, stage_boundary
 
 
 @dataclass(frozen=True)
@@ -47,6 +48,21 @@ class Query:
     spark: Callable[[SparkSession, str], DataFrame]
     oracle: Optional[str]  # None → non-SQL-expressible, rows-only check
     doc: str = ""
+
+    def run(
+        self,
+        spark: SparkSession,
+        sf_dir: str,
+        consume: Callable[[DataFrame], Any],
+    ) -> Any:
+        """Run the query, hand its frame to ``consume`` (a collect, a
+        noop write, a value hash) and return what that returns. The
+        stage boundaries the run took are released on the way out, on
+        every exit path, so the session keeps nothing of the query and
+        the next query does not pay for its cleanup. The frame must
+        not be read after ``consume`` returns."""
+        with boundary_scope():
+            return consume(self.spark(spark, sf_dir))
 
 
 QUERIES: dict[str, Query] = {}
@@ -78,6 +94,13 @@ def _register(
     The runner then materializes the result with ``stage_boundary``
     (it may read the scratch dir or a memory sink) and closes the
     scratch on every exit path.
+
+    The blocks of every ``stage_boundary`` the query takes, the
+    runner's own included, belong to the boundary scope of its
+    caller: ``Query.run`` releases them once the result is consumed.
+    A caller of the bare runner (``Query.spark``) outside any scope
+    leaves them to the ContextCleaner, which frees them only after a
+    driver GC.
 
     Why ``parts``: the `documents`/`embeddings` side tables are 3-5
     orders of magnitude smaller than the fact tables, and a
@@ -200,6 +223,15 @@ class _Scratch:
         return self.session.readStream.schema(schema).parquet(
             self.path("landed")
         )
+
+    def drain_batches(self, schema, fn) -> None:
+        """Drain the landed files once through ``foreachBatch(fn)``.
+        py4j calls ``fn`` on its own thread, which starts in an empty
+        context; ``fn`` runs in this caller's, so the stage boundaries
+        it takes belong to the caller's boundary scope."""
+        ctx = contextvars.copy_context()
+        writer = self.read_stream(schema).writeStream
+        self.drain(writer.foreachBatch(lambda df, i: ctx.run(fn, df, i)))
 
     def drain(self, writer, ck: str = "ck") -> None:
         """Run ``writer`` once to the end of its input (availableNow)

@@ -30,6 +30,8 @@ import order in pack.py):
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -718,7 +720,8 @@ def q_bucket_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # over reference-shaped JSONL fixtures (driver-oracle-checked)
 # ---------------------------------------------------------------------------
 
-_BRONZE = "/root/repo/tests/fixtures/bronze"
+#: the checkout's bronze fixtures, resolved from this file
+_BRONZE = str(Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "bronze")
 
 
 @_register(

@@ -932,7 +932,7 @@ def q_stream_incremental_prep(
         # reintroduce the keeper-order dependence the two-run
         # construction exists to eliminate)
         s.land(inc.coalesce(1), mode="append")
-        s.drain(s.read_stream(docs.schema).writeStream.foreachBatch(_process))
+        s.drain_batches(docs.schema, _process)
 
     def _sum(key: str, seed_key: str) -> int:
         return seed_counts[seed_key] + sum(c[key] for c in batch_counts)
@@ -1314,7 +1314,7 @@ def q_stream_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         model.count()  # materialize BEFORE any increment lands
         for inc in incs:
             s.land(inc.coalesce(1), mode="append")
-            s.drain(s.read_stream(base.schema).writeStream.foreachBatch(_process))
+            s.drain_batches(base.schema, _process)
         rows = spark.read.parquet(outdir).collect()
     finally:
         model.unpersist()
@@ -2597,7 +2597,7 @@ def q_stream_nb_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         prior.count()
         for inc in incs:
             s.land(inc.coalesce(1), mode="append")
-            s.drain(s.read_stream(base.schema).writeStream.foreachBatch(_process))
+            s.drain_batches(base.schema, _process)
         rows = spark.read.parquet(outdir).collect()
     finally:
         model.unpersist()
@@ -3439,7 +3439,7 @@ def q_stream_hybrid_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s.land(batch.coalesce(1))
     for _drain in range(2):  # second drain: exactly-once replay
-        s.drain(s.read_stream(batch.schema).writeStream.foreachBatch(_probe))
+        s.drain_batches(batch.schema, _probe)
 
     streamed = spark.read.parquet(outdir).select("id_a", "id_b")
     full = hybrid_near_dup_pairs(docs, "text", "doc_id")

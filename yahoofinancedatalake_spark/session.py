@@ -12,7 +12,10 @@ parallelism at hand rather than the 200 default.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -128,6 +131,13 @@ def stage_boundary(df):
     scratch (HDFS/object store); without it the dir falls back to one
     under the driver's temp dir, which ``SparkContext.stop`` deletes,
     and a warning says so once per context.
+
+    Lifetime: inside a :func:`boundary_scope` the boundary belongs to
+    that scope, which releases its blocks (and, for the reliable form,
+    its checkpoint files) when it exits; a frame that reads it fails
+    loudly after that instead of recomputing. Outside any scope the
+    blocks stay until the ContextCleaner sees the frame collected
+    after a driver GC, and reliable checkpoint files stay on disk.
     """
     if os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT") == "1":
         sc = df.sparkSession.sparkContext
@@ -136,8 +146,40 @@ def stage_boundary(df):
                 os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
                 or _fallback_checkpoint_dir(sc)
             )
-        return df.checkpoint()
-    return df.localCheckpoint()
+        out = df.checkpoint()
+    else:
+        out = df.localCheckpoint()
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope.append(out._jdf.queryExecution().logical().rdd())
+    return out
+
+
+#: the RDDs of the boundaries taken in the current boundary scope, or
+#: None outside any scope; a context variable, so threads do not mix
+_SCOPE: ContextVar[list | None] = ContextVar("boundary_scope", default=None)
+
+
+@contextmanager
+def boundary_scope():
+    """Own every :func:`stage_boundary` taken inside the block, and
+    release them all when it exits, on every exit path: unpersist the
+    blocks and delete reliable checkpoint files. Scopes nest; an
+    inner scope releases only its own boundaries, so nothing that
+    outlives it may read them."""
+    rdds: list = []
+    token = _SCOPE.set(rdds)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for rdd in rdds:
+            rdd.unpersist(True)
+            ckpt = rdd.getCheckpointFile()
+            if ckpt.isDefined():
+                path = SparkContext._jvm.org.apache.hadoop.fs.Path(ckpt.get())
+                fs = path.getFileSystem(rdd.context().hadoopConfiguration())
+                fs.delete(path, True)
 
 
 def _fallback_checkpoint_dir(sc) -> str:
@@ -157,55 +199,6 @@ def _fallback_checkpoint_dir(sc) -> str:
         stacklevel=3,
     )
     return d
-
-
-def heap_used_fraction(spark: SparkSession) -> float:
-    """Fraction of the driver JVM heap currently holding live+garbage
-    objects. One py4j round-trip (~1 ms) — cheap enough per query."""
-    rt = spark.sparkContext._jvm.Runtime.getRuntime()
-    return float(rt.totalMemory() - rt.freeMemory()) / float(rt.maxMemory())
-
-
-def drain_if_pressured(
-    spark: SparkSession,
-    frac: float = 0.35,
-    every: int = 25,
-    force: bool = False,
-) -> bool:
-    """``System.gc()`` the driver when used heap exceeds ``frac`` of
-    max, and in any case every ``every``-th call.
-
-    Long single-JVM sessions over ~200 queries accumulate
-    localCheckpoint blocks and broadcast remnants that the
-    ContextCleaner can only free after a driver GC; left alone, the
-    old-gen collection lands as a 3-7s pause on whatever heavy query
-    runs next (r6: simhash 2.7s warm → 20.3s mid-bench). Two triggers
-    because each misses alone: the heap fraction is measured against
-    MAX heap while the JVM grows committed heap lazily, so a run can
-    stay under any fraction threshold yet still take organic full-GC
-    pauses mid-query (r7 run 3: zero fraction-triggered drains, one
-    13s transient on a 2.6s-warm query); the fixed cadence (r6's fix,
-    measured 321s → 228s) bounds that backlog but can lag a genuine
-    pressure spike between drains. Callers invoke this OUTSIDE any
-    query's clock.
-
-    ``force=True`` drains unconditionally — callers pass it before the
-    pack's highest-allocation-RATE queries (the shingle-explosion
-    dedup family): in local mode the executors share the driver JVM,
-    so those queries' young-gen burst rides on whatever old-gen
-    occupancy ~190 prior queries left, and whether the G1 IHOP
-    threshold trips MID-QUERY is what made the same 2.6-3.3s-warm
-    query read 8-19s in half the otherwise-identical runs. A forced
-    compact immediately before gives the burst maximal headroom.
-    """
-    n = _DRAIN_STATE["calls"] = _DRAIN_STATE["calls"] + 1
-    if force or heap_used_fraction(spark) > frac or n % every == 0:
-        spark.sparkContext._jvm.System.gc()
-        return True
-    return False
-
-
-_DRAIN_STATE = {"calls": 0}
 
 
 def tmpfs_scratch(prefix: str = "spark_graft_") -> str | None:
