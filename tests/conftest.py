@@ -11,7 +11,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from yahoofinancedatalake_spark.session import get_spark
+from yahoofinancedatalake_spark.session import boundary_scope, get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -30,6 +30,16 @@ def spark(tmp_path_factory):
         shuffle_partitions=4,
         extra_conf={"spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={root}"},
     )
+
+
+@pytest.fixture(autouse=True)
+def _test_boundaries():
+    """The stage boundaries a test takes (directly, or through
+    ``Query.spark`` and the operators) are released when it ends, so
+    no test leaves blocks pinned in the shared session until a driver
+    GC."""
+    with boundary_scope():
+        yield
 
 
 @pytest.fixture(scope="session")

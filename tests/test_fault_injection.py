@@ -1,18 +1,10 @@
-"""Fault injection for the durability seams (r7, VERDICT r6 item #6).
+"""Fault injection for the manifest seam.
 
 The r6 manifest tz bug showed where silent row loss hides: the window
-between "data landed" and "commit made it visible". These tests kill
-each writer INSIDE that window and assert the reader-side invariants:
-
-- readers keep serving the previous committed state,
-- nothing half-written ever becomes visible,
-- recovery (abort / the next successful write) leaves no orphans that
-  a reader or a manifest could pick up.
-
-Covered seams: the jsonl_sink two-phase commit (sources/pyds.py), the
-versioned-snapshot marker commit (sources/versioned.py), and
-write_manifest over a directory holding crashed-job leftovers
-(sources/manifest.py).
+between "data landed" and "commit made it visible". A table dir that
+holds a crashed job's leftovers must get a manifest that references
+only the committed parts, so nothing half-written ever becomes visible
+to a pruned read (write_manifest, sources/manifest.py).
 """
 
 from __future__ import annotations
@@ -20,147 +12,11 @@ from __future__ import annotations
 import json
 import os
 
-import pytest
-from pyspark.sql import Row
-
-import yahoofinancedatalake_spark.sources.versioned as V
 from yahoofinancedatalake_spark.sources.manifest import (
     MANIFEST_NAME,
     read_pruned,
     write_manifest,
 )
-from yahoofinancedatalake_spark.sources.pyds import _JsonlWriter
-
-
-def _jsonl_rows(path: str) -> list[dict]:
-    out = []
-    for name in sorted(os.listdir(path)):
-        if name.endswith(".jsonl"):
-            with open(os.path.join(path, name)) as f:
-                out.extend(json.loads(line) for line in f)
-    return out
-
-
-# ---------------------------------------------------------------------------
-# jsonl_sink: crash between task-land and driver-commit
-# ---------------------------------------------------------------------------
-
-
-def test_jsonl_sink_crash_window_keeps_old_snapshot(spark, tmp_path):
-    """Tasks landed their files in _temporary/, the driver died before
-    commit(): readers must still see exactly the previous state, and
-    abort() (Spark's recovery call) must remove every attempt file."""
-    out = str(tmp_path / "t")
-    os.makedirs(out)
-
-    # committed baseline: one completed job
-    w0 = _JsonlWriter({"path": out})
-    m0 = w0.write(iter([Row(id=1), Row(id=2)]))
-    w0.commit([m0])
-    assert {r["id"] for r in _jsonl_rows(out)} == {1, 2}
-
-    # crashed job: both tasks landed, driver never called commit
-    w1 = _JsonlWriter({"path": out})
-    w1.write(iter([Row(id=10)]))
-    w1.write(iter([Row(id=11)]))
-    assert len(os.listdir(w1._job_dir())) == 2
-    # reader invariant DURING the window: old snapshot only
-    assert {r["id"] for r in _jsonl_rows(out)} == {1, 2}
-    assert spark.read.json(out).count() == 2  # _temporary is invisible
-
-    # Spark calls abort() on job failure: attempt files must vanish
-    w1.abort([None, None])  # failed tasks report None messages
-    assert not os.path.exists(w1._job_dir())
-    assert {r["id"] for r in _jsonl_rows(out)} == {1, 2}
-
-
-def test_jsonl_sink_commit_moves_only_its_own_job(spark, tmp_path):
-    """A zombie job's attempt dir must survive another job's commit
-    (wholesale _temporary cleanup would eat a LIVE concurrent job),
-    and its files must never become visible."""
-    out = str(tmp_path / "t")
-    os.makedirs(out)
-
-    zombie = _JsonlWriter({"path": out})
-    zombie.write(iter([Row(id=99)]))
-
-    live = _JsonlWriter({"path": out})
-    mlive = live.write(iter([Row(id=1)]))
-    live.commit([mlive])
-
-    assert {r["id"] for r in _jsonl_rows(out)} == {1}
-    # the zombie's dir is untouched — only ITS driver may reclaim it
-    assert os.path.exists(zombie._job_dir())
-    zombie.abort([])
-    assert not os.path.exists(zombie._job_dir())
-    # last abort also removes the now-empty _temporary root
-    assert not os.path.exists(os.path.join(out, "_temporary"))
-
-
-def test_jsonl_sink_commit_skips_failed_task_messages(tmp_path):
-    """Spark passes None for failed tasks; commit must rename only the
-    successful ones and count only their rows."""
-    out = str(tmp_path / "t")
-    os.makedirs(out)
-    w = _JsonlWriter({"path": out})
-    m1 = w.write(iter([Row(id=1), Row(id=2)]))
-    w.write(iter([Row(id=3)]))  # task attempt whose message was lost
-    w.commit([m1, None])
-    assert {r["id"] for r in _jsonl_rows(out)} == {1, 2}
-    with open(os.path.join(out, "_SUCCESS")) as f:
-        assert f.read() == "2"
-    # the lost task's attempt file went with the job dir
-    assert not os.path.exists(os.path.join(out, "_temporary"))
-
-
-# ---------------------------------------------------------------------------
-# versioned snapshots: crash between parquet land and marker commit
-# ---------------------------------------------------------------------------
-
-
-def _df(spark, rows):
-    return spark.createDataFrame(rows, ["k", "v"])
-
-
-def test_versioned_crash_before_marker_keeps_old_version(
-    spark, tmp_path, monkeypatch
-):
-    """Kill write_version AFTER the parquet data lands but BEFORE the
-    _SNAPSHOT_COMMITTED marker: readers serve the old version, the
-    orphan number is never reused, and the next write commits past it."""
-    path = str(tmp_path / "dim")
-    V.write_version(spark, _df(spark, [(1, "a")]), path)
-
-    real_fs = V._fs
-    calls = {"n": 0}
-
-    def crashing_fs(s, p):
-        # call 1 is _all_version_dirs' listing (pre-write); call 2 is
-        # write_version's own, made only after df.write landed the
-        # data — the exact commit window
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise RuntimeError("injected crash before commit marker")
-        return real_fs(s, p)
-
-    monkeypatch.setattr(V, "_fs", crashing_fs)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        V.write_version(spark, _df(spark, [(9, "zz")]), path)
-    monkeypatch.setattr(V, "_fs", real_fs)
-
-    # data landed (the crash was post-write)…
-    assert os.path.exists(os.path.join(path, "v=000001", "_SUCCESS"))
-    # …but the snapshot is invisible: no marker, readers serve v0
-    assert V.list_versions(spark, path) == [0]
-    assert [tuple(r) for r in V.read_version(spark, path).collect()] == [
-        (1, "a")
-    ]
-    # recovery: next writer numbers PAST the orphan and commits
-    assert V.write_version(spark, _df(spark, [(2, "b")]), path) == 2
-    assert V.list_versions(spark, path) == [0, 2]
-    assert [tuple(r) for r in V.read_version(spark, path).collect()] == [
-        (2, "b")
-    ]
 
 
 # ---------------------------------------------------------------------------

@@ -43,10 +43,12 @@ def daily(spark):
 @pytest.fixture(scope="module")
 def forecast_df(spark, daily):
     df = spark.createDataFrame(daily, "k string, day date, v double")
-    return forecast_by_group(
+    out = forecast_by_group(
         df, "k", "day", "v", horizon=HORIZON, min_points=MIN_POINTS,
         history=90, future_freq="D",
     ).cache()
+    yield out
+    out.unpersist()
 
 
 def test_output_shape_per_group(forecast_df):

@@ -1,4 +1,5 @@
-"""Bucketed co-located joins and salted skew joins."""
+"""Salted skew joins and the parquet sinks: keyed upserts, clustered and
+Z-ordered layouts, schema-merge reads and partition pruning."""
 
 from __future__ import annotations
 
@@ -6,45 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from yahoofinancedatalake_spark.operators.skew import salted_join
-from yahoofinancedatalake_spark.sources.parquet_io import write_bucketed
-
-
-@pytest.fixture()
-def two_tables(spark):
-    a = spark.range(0, 2000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("va")
-    )
-    b = spark.range(0, 2000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("vb")
-    )
-    return a, b
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path, two_tables):
-    """Two tables bucketed on the join key must join with ZERO
-    exchange and zero sort — the co-located-join contract that turns a
-    recurring fact-join from a full shuffle into a bucket zip."""
-    a, b = two_tables
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # the fixture tables are tiny, so the planner would prefer a
-        # broadcast join (and skip bucketing); force the shuffle-family
-        # path the bucketing exists to eliminate at scale
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(a.repartition(8, "k"), "bt_a", str(tmp_path / "a"),
-                       ["k"], 8)
-        write_bucketed(b.repartition(8, "k"), "bt_b", str(tmp_path / "b"),
-                       ["k"], 8)
-        joined = spark.table("bt_a").join(spark.table("bt_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan  # co-located: no shuffle either side
-        assert joined.count() == 2000
-        got = joined.filter(F.col("k") == 7).collect()[0]
-        assert (got.va, got.vb) == (14, 21)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        for t in ("bt_a", "bt_b"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -304,33 +266,3 @@ def test_hive_partition_pruning_reaches_scan(spark, tmp_path):
     assert "ingest_date" in plan.split("PartitionFilters:")[1].split("]")[0]
     assert df.count() == 250
 
-
-def test_file_report_and_compaction_trigger(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from yahoofinancedatalake_spark.sources.maintenance import (
-        compaction_needed,
-        file_report,
-    )
-    from yahoofinancedatalake_spark.sources.parquet_io import (
-        compact_parquet,
-    )
-
-    p = str(tmp_path / "sprawl")
-    # 16 tiny files — the micro-batch sprawl shape
-    spark.range(0, 1600).repartition(16).write.mode(
-        "overwrite"
-    ).parquet(p)
-    rep = file_report(spark, p, target_bytes=1024 * 1024)
-    n = rep.count()
-    assert n == 16
-    assert rep.filter(F.col("is_small")).count() == 16
-    assert compaction_needed(
-        spark, p, target_bytes=1024 * 1024, min_files=8
-    )
-    # after compaction the trigger clears (file count below min_files)
-    compact_parquet(spark, p, target_file_bytes=1024 * 1024)
-    assert not compaction_needed(
-        spark, p, target_bytes=1024 * 1024, min_files=8
-    )
-    assert spark.read.parquet(p).count() == 1600

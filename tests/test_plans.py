@@ -312,9 +312,10 @@ def test_batch_lsh_candidates_exchange_budget(spark):
         minhash_band_table,
         minhash_lsh_pairs,
     )
+    from yahoofinancedatalake_spark.session import stage_boundary
 
     docs = load_table(spark, SF_DIR, "documents")
-    bands = minhash_band_table(docs, "text", "doc_id").localCheckpoint()
+    bands = stage_boundary(minhash_band_table(docs, "text", "doc_id"))
     pairs = minhash_lsh_pairs(docs, "text", "doc_id", bands=bands)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 2, plan

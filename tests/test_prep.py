@@ -5,11 +5,21 @@ decontaminate → split → chunk → pack, landed as parquet."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yahoofinancedatalake_spark.prep import run_prep
+from yahoofinancedatalake_spark.prep import exact_stage, near_dup_stage, run_prep
 
 SF = "/root/testdata/sf0.001"
+
+
+def drop_near_dups(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    backend: str = "lsh",
+) -> DataFrame:
+    """Stages 2+3 — exact dedup, then near-dup cluster removal."""
+    return near_dup_stage(exact_stage(docs, id_col), id_col, backend)
 
 
 @pytest.fixture(scope="module")
@@ -48,7 +58,6 @@ def test_rebalance_flattens_language_mix(spark, prep_out):
     languages' (which approach 1.0), and the stage is deterministic."""
     from yahoofinancedatalake_spark.prep import (
         decontaminate,
-        drop_near_dups,
         quality_gate,
         rebalance_languages,
     )
@@ -135,7 +144,6 @@ def test_incremental_prep_matches_full_run(spark, tmp_path_factory, split):
     from yahoofinancedatalake_spark.catalog import fan_out, load_table
     from yahoofinancedatalake_spark.prep import (
         decontaminate,
-        drop_near_dups,
         quality_gate,
         run_prep,
         run_prep_incremental,
@@ -184,7 +192,6 @@ def test_seed_then_increment_counts_match_full(spark, tmp_path_factory):
     from yahoofinancedatalake_spark.catalog import fan_out, load_table
     from yahoofinancedatalake_spark.prep import (
         decontaminate,
-        drop_near_dups,
         quality_gate,
         run_prep_incremental,
         seed_prep_state,
@@ -329,8 +336,6 @@ def _planted_corpus(spark):
 
 
 def test_winnow_backend_matches_lsh_on_planted_near_dups(spark):
-    from yahoofinancedatalake_spark.prep import drop_near_dups
-
     docs = _planted_corpus(spark)
     lsh = {r.doc_id for r in drop_near_dups(docs, backend="lsh").collect()}
     win = {
@@ -352,8 +357,6 @@ def test_unknown_near_dup_backend_raises(spark):
 def test_hybrid_backend_matches_winnow_on_planted_near_dups(spark):
     """near_dup_stage(backend='hybrid') keeps the same survivors as
     the winnow backend on planted near-dups the LSH stage proposes."""
-    from yahoofinancedatalake_spark.prep import drop_near_dups
-
     docs = _planted_corpus(spark)
     hyb = {
         r.doc_id for r in drop_near_dups(docs, backend="hybrid").collect()

@@ -10,7 +10,6 @@ from yahoofinancedatalake_spark.operators.quality import (
     matches,
     not_null,
     one_of,
-    uniqueness_violations,
 )
 from yahoofinancedatalake_spark.sources.parquet_io import compact_parquet
 
@@ -42,15 +41,6 @@ def test_check_counts_planted_violations(spark):
     # one aggregation pass: the plan has exactly one aggregate pair
     plan = check(df, [not_null("id")])._jdf.queryExecution().executedPlan().toString()
     assert plan.count("HashAggregate") <= 2  # partial + final, one scan
-
-
-def test_uniqueness_violations(spark):
-    df = spark.createDataFrame(
-        [(1, "a"), (1, "b"), (2, "c"), (3, "d"), (3, "e"), (3, "f")],
-        "k long, v string",
-    )
-    out = {r.k: r.n_dupes for r in uniqueness_violations(df, ["k"]).collect()}
-    assert out == {1: 2, 3: 3}
 
 
 def test_compact_parquet_reduces_files(spark, tmp_path):

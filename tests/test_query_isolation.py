@@ -154,10 +154,8 @@ def test_concurrent_queries_match_serial_runs(spark):
     query that registers a fixed-name temp view, and two dashboard
     panels. Every result hash-equals the serial run, so no run
     released a boundary another thread's run still read (that read
-    fails loudly), and the pool leaves no persistent RDD that was not
-    there before it. (The check is "no new RDD", not set equality:
-    the ContextCleaner may free an earlier test's unscoped boundary
-    meanwhile.)"""
+    fails loudly), and the pool leaves the persistent RDDs exactly as
+    it found them."""
     mix = (
         "dedup_clusters",
         "stream_daily_avg_batch_eq",
@@ -186,7 +184,7 @@ def test_concurrent_queries_match_serial_runs(spark):
         sys.setswitchinterval(old_interval)
     assert len(runs) == len(mix) * 2
     assert {name: h for name, h in runs if h != serial[name]} == {}
-    assert persistent_rdds(spark) - before == set()
+    assert persistent_rdds(spark) == before
 
 
 def test_reliable_checkpoint_files_go_with_the_run(spark, monkeypatch, tmp_path):

@@ -8,15 +8,12 @@ loader for the driver's synthetic test tables.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from yahoofinancedatalake_spark.schemas import TESTDATA_TABLES
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 @dataclass(frozen=True)
@@ -92,50 +89,3 @@ def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
         return df
     return df.repartition(n)
 
-
-def _schema_ddl(schema) -> str:
-    """StructType → column DDL (``name TYPE, ...``) for CREATE TABLE."""
-    return ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
-    )
-
-
-def bootstrap_table(
-    spark: SparkSession, name: str, schema, location: str
-) -> bool:
-    """S13 — create-if-absent DDL bootstrap with a typed schema.
-
-    The reference probes for the serving index and creates it with an
-    explicit typed mapping when missing (to_elasticsearch.py:33-63,
-    112-145: ``indices.exists`` → ``indices.create(mappings=...)``).
-    The Spark-native analog is metastore DDL: ``CREATE TABLE IF NOT
-    EXISTS <name>(<typed cols>) USING PARQUET LOCATION <path>`` — the
-    schema is declared, not inferred, so downstream readers get the
-    contract even over an empty/absent directory, and writers that
-    violate it fail loudly. Idempotent like the reference's
-    exists-check. Returns True when the table was newly created.
-    """
-    existed = spark.catalog.tableExists(name)
-    loc = location.replace("'", "''")
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {name} ({_schema_ddl(schema)}) "
-        f"USING PARQUET LOCATION '{loc}'"
-    )
-    return not existed
-
-
-def bootstrap_lake(spark: SparkSession, catalog: LakeCatalog) -> dict[str, bool]:
-    """Bootstrap the gold/serving tables of a lake root (DDL analog of
-    the reference's index bootstrap at pipeline start)."""
-    from yahoofinancedatalake_spark import schemas  # noqa: PLC0415
-
-    return {
-        "enriched_gold": bootstrap_table(
-            spark, "enriched_gold", schemas.ENRICHED_GOLD,
-            catalog.path("gold", "enriched_gold"),
-        ),
-        "predictions": bootstrap_table(
-            spark, "predictions", schemas.PREDICTIONS,
-            catalog.path("gold", "predictions"),
-        ),
-    }

@@ -85,12 +85,3 @@ def check(df: DataFrame, rules: list[Rule]) -> DataFrame:
         )
     )
 
-
-def uniqueness_violations(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Keys appearing more than once: (key..., n_dupes). Hash-agg on
-    the key — the exact-dedup plan shape."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.count(F.lit(1)).alias("n_dupes"))
-        .filter(F.col("n_dupes") > 1)
-    )

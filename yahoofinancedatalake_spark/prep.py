@@ -188,15 +188,6 @@ def _component_losers(
     return comps.filter(lose).select(F.col("node").alias(id_col))
 
 
-def drop_near_dups(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    backend: str = "lsh",
-) -> DataFrame:
-    """Stages 2+3 — exact dedup, then near-dup cluster removal."""
-    return near_dup_stage(exact_stage(docs, id_col), id_col, backend)
-
-
 #: paragraph unit for paragraph_stage on the no-newline synthetic
 #: corpus (the gated paragraph_dedup query's parameter).
 PARA_WORDS = 20

@@ -34,19 +34,6 @@ STOCKS_RAW = T.StructType(
     ]
 )
 
-STOCKS_SILVER = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("date", T.DateType(), False),
-        T.StructField("open", T.DoubleType(), True),
-        T.StructField("high", T.DoubleType(), True),
-        T.StructField("low", T.DoubleType(), True),
-        T.StructField("close", T.DoubleType(), True),
-        T.StructField("volume", T.LongType(), True),
-        T.StructField("fetched_at_utc", T.TimestampType(), True),
-    ]
-)
-
 COMPANY_RAW = T.StructType(
     [
         T.StructField("symbol", T.StringType(), False),
@@ -57,19 +44,6 @@ COMPANY_RAW = T.StructType(
         T.StructField("market_cap", T.LongType(), True),
         T.StructField("currency", T.StringType(), True),
         T.StructField("fetched_at", T.StringType(), True),
-    ]
-)
-
-COMPANY_SILVER = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("sector", T.StringType(), True),
-        T.StructField("industry", T.StringType(), True),
-        T.StructField("country", T.StringType(), True),
-        T.StructField("market_cap", T.LongType(), True),
-        T.StructField("currency", T.StringType(), True),
-        T.StructField("fetched_at_utc", T.TimestampType(), True),
     ]
 )
 
@@ -87,23 +61,6 @@ NEWS_RAW = T.StructType(
         T.StructField("sentiment_score", T.DoubleType(), True),
         T.StructField("sentiment_label", T.StringType(), True),
         T.StructField("fetched_at", T.StringType(), True),
-    ]
-)
-
-NEWS_SILVER = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("summary", T.StringType(), True),
-        T.StructField("pub_date_utc", T.TimestampType(), True),
-        T.StructField("provider", T.StringType(), True),
-        T.StructField("category", T.StringType(), True),
-        T.StructField("url", T.StringType(), True),
-        T.StructField("image", T.StringType(), True),
-        T.StructField("sentiment_score", T.DoubleType(), True),
-        T.StructField("sentiment_label", T.StringType(), True),
-        T.StructField("fetched_at_utc", T.TimestampType(), True),
     ]
 )
 

@@ -50,36 +50,6 @@ def upsert_by_partition(
     )
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    path: str,
-    bucket_cols: Sequence[str],
-    n_buckets: int,
-    mode: str = "overwrite",
-) -> None:
-    """Write-time hash bucketing: the co-located-join primitive.
-
-    ``bucketBy(n, keys) + sortBy(keys)`` persists the table
-    pre-partitioned AND pre-sorted on the join/aggregation key, so two
-    tables bucketed the same way join with **zero exchange and zero
-    sort** — at 100 TB this converts every recurring fact⋈fact join
-    from a full shuffle of both sides into a streaming zip of
-    co-numbered buckets. ``tests/test_parquet_io.py`` asserts the
-    exchange-free plan. Bucketed writes go through the session catalog
-    (``saveAsTable``) because bucket metadata lives in the metastore;
-    pass an explicit LOCATION-style ``path`` to keep data on the lake.
-    """
-    (
-        df.write.mode(mode)
-        .option("path", path)
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
 def compact_parquet(
     spark: SparkSession,
     path: str,

@@ -1,4 +1,4 @@
-"""Fixture-replayable ingestion sources (SURVEY.md §2.1 S6, S8).
+"""Fixture-replayable ingestion sources (SURVEY.md §2.1 S8).
 
 The reference's ingestion is driver-side REST: yfinance 5-year OHLCV
 history + ``ticker.info`` (yahoo_stocks.py:18-44,47-65) and Finnhub
@@ -9,7 +9,9 @@ driver-side seen-id dedup set (finnhub_news.py:54-120,139-158,
 *replayable sources*: same record shapes, same pagination structure,
 fed from local JSONL fixtures — every downstream operator is testable
 hermetically, and a real REST implementation can be swapped in by
-implementing the same callables.
+implementing the same callables. Stock history and company info
+have no pagination, so ``Pipeline.ingest`` reads their fixtures whole
+(:func:`_load_jsonl`).
 
 Ingestion deliberately stays non-distributed (it is rate-limited API
 paging, not data-parallel work); Spark takes over at the bronze sink.
@@ -25,15 +27,6 @@ from pathlib import Path
 def _load_jsonl(path: str | Path) -> list[dict]:
     with Path(path).open() as f:
         return [json.loads(line) for line in f if line.strip()]
-
-
-def replay_stock_history(fixture_file: str | Path, symbol: str) -> list[dict]:
-    """S6: OHLCV history records for one symbol.
-
-    Shape: yahoo_stocks.py:30-39 — symbol, date ('%Y-%m-%d' string),
-    open/high/low/close float, volume int, fetched_at ISO instant.
-    """
-    return [r for r in _load_jsonl(fixture_file) if r["symbol"] == symbol]
 
 
 def month_ranges(now: str, months_back: int = 12) -> list[tuple[str, str]]:
