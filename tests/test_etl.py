@@ -87,25 +87,37 @@ def test_etl_gold_contract_planted_edges(spark):
     from yahoofinancedatalake_spark.queries.pack import QUERIES
 
     gold = QUERIES["etl_gold_contract"].spark(spark, "").cache()
-    assert gold.columns == [
-        "symbol", "name", "sector", "industry", "date", "open", "high",
-        "low", "close", "volume", "market_cap", "daily_range",
-        "daily_change_pct", "news_count", "latest_news_date",
-        "fetched_at_utc",
-    ]
-    assert gold.count() == 600  # 10 symbols x 60 business days survive
-    jpm = gold.filter(F.col("symbol") == "JPM").collect()
-    assert jpm and all(r.name is None and r.market_cap is None for r in jpm)
-    wmt = gold.filter(F.col("symbol") == "WMT").collect()
-    assert wmt and all(
-        r.news_count is None and r.latest_news_date is None for r in wmt
-    )
-    # news_count constant per symbol; pre-2020 artifacts never dominate
-    # latest_news_date; derived-metric identities hold
-    bad = gold.filter(
-        (F.abs(F.col("daily_range") - (F.col("high") - F.col("low"))) > 1e-12)
-        | (F.col("latest_news_date") < F.lit("2020-01-01").cast("timestamp"))
-    ).count()
-    assert bad == 0
-    aapl = gold.filter(F.col("symbol") == "AAPL").select("news_count").distinct()
-    assert aapl.count() == 1
+    try:
+        assert gold.columns == [
+            "symbol", "name", "sector", "industry", "date", "open", "high",
+            "low", "close", "volume", "market_cap", "daily_range",
+            "daily_change_pct", "news_count", "latest_news_date",
+            "fetched_at_utc",
+        ]
+        assert gold.count() == 600  # 10 symbols x 60 business days survive
+        jpm = gold.filter(F.col("symbol") == "JPM").collect()
+        assert jpm and all(
+            r.name is None and r.market_cap is None for r in jpm
+        )
+        wmt = gold.filter(F.col("symbol") == "WMT").collect()
+        assert wmt and all(
+            r.news_count is None and r.latest_news_date is None for r in wmt
+        )
+        # news_count constant per symbol; pre-2020 artifacts never dominate
+        # latest_news_date; derived-metric identities hold
+        range_off = F.abs(
+            F.col("daily_range") - (F.col("high") - F.col("low"))
+        ) > 1e-12
+        stale = F.col("latest_news_date") < F.lit("2020-01-01").cast(
+            "timestamp"
+        )
+        bad = gold.filter(range_off | stale).count()
+        assert bad == 0
+        aapl = (
+            gold.filter(F.col("symbol") == "AAPL")
+            .select("news_count")
+            .distinct()
+        )
+        assert aapl.count() == 1
+    finally:
+        gold.unpersist()

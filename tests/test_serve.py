@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.test_catalog import jobs_in_group
 from yahoofinancedatalake_spark.queries.serve import TEMPLATES, bound
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -208,18 +209,37 @@ def test_exhaustive_binding_oracle_parity(spark):
         assert got == want, f"uid={uid}: spark={got[:2]} duckdb={want[:2]}"
 
 
+EXAMPLES = {
+    "top_flop_for_symbol": {"uid": 0},
+    "type_window_daily": {
+        "uid": 0,
+        "etype": "view",
+        "start_day": "2024-01-01",
+        "end_day": "2024-01-02",
+    },
+    "source_quality_drill": {"src": "src0", "min_chars": 1},
+}
+
+
 def test_every_template_parses_with_example_bindings(spark):
-    examples = {
-        "top_flop_for_symbol": {"uid": 0},
-        "type_window_daily": {
-            "uid": 0,
-            "etype": "view",
-            "start_day": "2024-01-01",
-            "end_day": "2024-01-02",
-        },
-        "source_quality_drill": {"src": "src0", "min_chars": 1},
-    }
-    assert set(examples) == set(TEMPLATES)
-    for name, params in examples.items():
+    assert set(EXAMPLES) == set(TEMPLATES)
+    for name, params in EXAMPLES.items():
         # schema resolution proves the template parses and binds
         assert len(bound(spark, SF_DIR, name, **params).columns) >= 3
+
+
+def test_templates_build_without_jobs_or_range_sort(spark):
+    """A request pays only for its own query: binding a template runs
+    no Spark job (no schema inference), and its final ORDER BY sorts
+    one partition, so the plan has no range exchange (whose sampling
+    is a job of its own on every request)."""
+    sc = spark.sparkContext
+    for name, params in EXAMPLES.items():
+        plan, n_jobs = jobs_in_group(
+            sc,
+            "serve_build_jobs",
+            lambda: bound(spark, SF_DIR, name, **params)
+            ._jdf.queryExecution().executedPlan().toString(),
+        )
+        assert n_jobs == 0, (name, n_jobs)
+        assert "rangepartitioning" not in plan.lower(), plan

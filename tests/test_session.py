@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from yahoofinancedatalake_spark.session import default_driver_mem
+from yahoofinancedatalake_spark.session import default_cpus, default_driver_mem
 
 
 def _meminfo(tmp_path, total_kb: int) -> str:
@@ -24,6 +24,17 @@ def test_driver_mem_caps_at_40g_on_a_large_host(tmp_path):
 
 def test_driver_mem_falls_back_to_40g_without_meminfo(tmp_path):
     assert default_driver_mem(str(tmp_path / "absent")) == "40960m"
+
+
+def test_cpus_default_to_the_process_affinity(monkeypatch):
+    """Unset, the session's cores and shuffle partitions are the CPUs
+    this process may run on, not a fixed count; read at call time."""
+    import os
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
 
 
 _RELIABLE_CKPT_PROBE = """

@@ -35,36 +35,46 @@ class LakeCatalog:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver synthetic table (parquet, schema from footer).
+    """Read one driver synthetic table, its schema taken from the footer.
+
+    The schema is read from the footer on the driver with pyarrow (the
+    path may be one file or a Spark-written directory) and handed to
+    the reader, so building the frame runs no Spark job. Without it,
+    Spark's parquet schema inference launches a merge-schemas job on
+    every read, a large share of a small drill-down's time.
 
     The driver's parquet carries ``timestamp[us]`` with
-    ``isAdjustedToUTC=false``, which Spark 4 infers as TIMESTAMP_NTZ.
-    Batch plans tolerate NTZ, but event-time streaming does not
-    (``withWatermark`` → EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE), and the
-    engine's single-timestamp-truth is session-TZ=UTC TimestampType.
-    So every NTZ column is cast to TimestampType on load: under a UTC
-    session the wall-clock values are unchanged, and DuckDB (which has
-    no NTZ/LTZ split for these files) sees identical instants. Older
-    drivers wrote TIMESTAMP(NANOS), which Spark rejects outright
-    (PARQUET_TYPE_ILLEGAL) — the nanos-as-long branch truncates those
-    to micros, matching DuckDB's own nanos→micros truncation.
+    ``isAdjustedToUTC=false``, which Spark 4 would infer as
+    TIMESTAMP_NTZ. Batch plans tolerate NTZ, but event-time streaming
+    does not (``withWatermark`` → EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE),
+    and the engine's single timestamp truth is session-TZ=UTC
+    TimestampType. So every zone-less timestamp column is read as
+    TimestampType: under a UTC session the wall-clock values are
+    unchanged, and DuckDB (which has no NTZ/LTZ split for these files)
+    sees identical instants. Older drivers wrote TIMESTAMP(NANOS),
+    which Spark cannot read as a timestamp (PARQUET_TYPE_ILLEGAL):
+    such a column is read as its int64 and truncated to micros,
+    matching DuckDB's own nanos→micros truncation.
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown test table {name!r}; have {TESTDATA_TABLES}")
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
     from pyspark.sql import functions as F  # noqa: PLC0415
+    from pyspark.sql.pandas.types import from_arrow_schema  # noqa: PLC0415
 
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    ntz_cols = [c for c, t in df.dtypes if t.startswith("timestamp_ntz")]
-    for c in ntz_cols:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
+    path = f"{sf_dir}/{name}.parquet"
+    arrow = pq.ParquetDataset(path).schema
+    nanos = [
+        f.name for f in arrow
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
+    for c in nanos:
+        i = arrow.get_field_index(c)
+        arrow = arrow.set(i, arrow.field(i).with_type(pa.int64()))
+    df = spark.read.schema(from_arrow_schema(arrow)).parquet(path)
+    for c in nanos:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
 
 

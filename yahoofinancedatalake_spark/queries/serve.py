@@ -27,6 +27,11 @@ session-global temp view: concurrent ``bound()`` calls — the normal
 state of a dashboard backend — each see exactly the frame they were
 given, with no create-view/analyze race and no catalog churn.
 
+Each template's final ``ORDER BY`` sorts a key-bounded result, so the
+SELECT it sorts carries ``/*+ COALESCE(1) */``: a sort in one
+partition needs no range exchange, which costs a sampling job and a
+sort stage per request (DuckDB reads the hint as a comment).
+
 The pack registers oracle-gated entries for two bindings of the
 ``top_flop_for_symbol`` template plus a 3-parameter windowed
 drill-down (``queries/pack_14_prep_serving.py``), proving the surface
@@ -62,7 +67,7 @@ TEMPLATES: dict[str, str] = {
           WHERE user_id = :uid
           GROUP BY user_id, date_trunc('day', ts)
         )
-        SELECT user_id, day, daily_value,
+        SELECT /*+ COALESCE(1) */ user_id, day, daily_value,
                daily_value - lag(daily_value) OVER (
                  PARTITION BY user_id ORDER BY day) AS delta
         FROM daily
@@ -71,7 +76,7 @@ TEMPLATES: dict[str, str] = {
     # Windowed per-day drill-down for (symbol, event_type, date
     # range) — the panel-filter combination the saved objects expose.
     "type_window_daily": f"""
-        SELECT date_trunc('day', ts) AS day,
+        SELECT /*+ COALESCE(1) */ date_trunc('day', ts) AS day,
                count(*) AS n_events,
                {spark_sql_dround("sum(value)", 2)} AS total_value
         FROM {{events}}
@@ -87,7 +92,7 @@ TEMPLATES: dict[str, str] = {
     # panel (proves the surface is not events-specific; any
     # ``load_table`` name can be a slot).
     "source_quality_drill": f"""
-        SELECT lang,
+        SELECT /*+ COALESCE(1) */ lang,
                count(*) AS n_docs,
                CAST(sum(n_chars) AS BIGINT) AS sum_chars,
                {spark_sql_dround("avg(n_chars)", 2)} AS avg_chars

@@ -18,7 +18,13 @@ from contextvars import ContextVar
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """The session's cores and shuffle partitions: ``SPARK_GRAFT_CPUS``,
+    else the CPUs this process may run on. Read when a session is
+    built, not at import."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
 
 
 def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
@@ -62,12 +68,12 @@ def get_spark(
       stage; AQE re-plans from runtime statistics.
     - Arrow on: every applyInPandas/pandas_udf crosses the JVM↔Python
       boundary in columnar batches, not pickled rows.
-    - shuffle partitions default to the local core count for tests;
+    - cores and shuffle partitions default to :func:`default_cpus`;
       a real cluster deployment overrides via ``extra_conf`` or
       ``spark-submit --conf`` (rule of thumb: 2-3× total cores, or
       let AQE coalesce from a high initial number).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -77,7 +83,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # Spark still defaults timestamp output to deprecated INT96,
