@@ -35,6 +35,91 @@ def test_ingest_dedups_news_ids_across_windows(lake):
     assert counts["news"] == 174
 
 
+def test_ingest_lands_the_list_path_rows(spark, lake):
+    """Bronze landed from Arrow tables holds exactly the rows that
+    ``createDataFrame`` over the fetched dicts gives, for all three
+    sources of the 10-symbol fixture."""
+    from collections import Counter
+    from pathlib import Path
+
+    from yahoofinancedatalake_spark.pipeline import SYMBOLS
+    from yahoofinancedatalake_spark.schemas import (
+        COMPANY_RAW,
+        NEWS_RAW,
+        STOCKS_RAW,
+    )
+    from yahoofinancedatalake_spark.sources.replay import (
+        _load_jsonl,
+        ingest_news,
+    )
+
+    pipe, _ = lake
+    fx = Path(pipe.fixtures)
+    fetched = {
+        "stocks": [
+            r for r in _load_jsonl(fx / "stocks.jsonl")
+            if r["symbol"] in SYMBOLS
+        ],
+        "company_info": [
+            r for r in _load_jsonl(fx / "company_info.jsonl")
+            if r["symbol"] in SYMBOLS
+        ],
+        "news": ingest_news(fx / "news.jsonl", SYMBOLS, now="2024-04-01"),
+    }
+    for name, schema in (
+        ("stocks", STOCKS_RAW),
+        ("company_info", COMPANY_RAW),
+        ("news", NEWS_RAW),
+    ):
+        want = spark.createDataFrame(fetched[name], schema).collect()
+        got = pipe._bronze(name, schema, "2024-04-01").collect()
+        assert want and Counter(map(tuple, got)) == Counter(map(tuple, want))
+
+
+def test_day_without_news_lands_an_empty_partition(spark, tmp_path):
+    """A day whose sources fetch no news lands an empty ``news``
+    partition, read with NEWS_RAW's columns, and it replaces what an
+    earlier ingest of that day landed; format then runs over it."""
+    from yahoofinancedatalake_spark.schemas import NEWS_RAW
+
+    root = str(tmp_path / "lake")
+    Pipeline(spark, root, symbols=["AAPL"]).ingest("2024-04-01")
+    # the fixture has no news for WMT
+    quiet = Pipeline(spark, root, symbols=["WMT"])
+    assert quiet.ingest("2024-04-01")["news"] == 0
+    news = quiet._bronze("news", NEWS_RAW, "2024-04-01")
+    assert news.columns == NEWS_RAW.names
+    assert news.count() == 0
+    quiet.format("2024-04-01")
+
+
+def test_lake_reads_run_no_job_and_keep_the_inferred_schema(spark, lake):
+    """The stages read every silver, gold and serving table with its
+    footer schema: building the frame runs no Spark job, and the
+    schema is the one Spark's inference job would give."""
+    from tests.test_catalog import jobs_in_group
+    from yahoofinancedatalake_spark.sources.parquet_io import read_parquet
+
+    pipe, _ = lake
+    sc = spark.sparkContext
+    for layer, table in (
+        ("silver", "stocks"),
+        ("silver", "company_info"),
+        ("silver", "news"),
+        ("gold", "enriched_stocks"),
+        ("gold", "predictions"),
+        ("serving", "stock_analysis"),
+        ("serving", "stock_news"),
+        ("serving", "predictions"),
+    ):
+        path = pipe.cat.path(layer, table)
+        df, n_jobs = jobs_in_group(
+            sc, "lake_reads", lambda: read_parquet(spark, path)
+        )
+        assert n_jobs == 0, (layer, table, n_jobs)
+        assert df.schema == spark.read.parquet(path).schema, (layer, table)
+
+
 def test_silver_types_and_filters(spark, lake):
     pipe, _ = lake
     stocks = spark.read.parquet(pipe.cat.path("silver", "stocks"))

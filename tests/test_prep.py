@@ -29,6 +29,29 @@ def prep_out(spark, tmp_path_factory):
     return root, counts
 
 
+def test_state_reads_run_no_job_and_keep_the_inferred_schema(
+    spark, prep_out
+):
+    """Prep reads its landed tables with their footer schema: building
+    the frame runs no Spark job, and the schema is the one Spark's
+    inference job would give."""
+    from tests.test_catalog import jobs_in_group
+    from yahoofinancedatalake_spark.sources.parquet_io import read_parquet
+
+    root, _ = prep_out
+    sc = spark.sparkContext
+    for table in (
+        "dedup_survivors", "fingerprints", "band_index", "clean_docs",
+        "chunks", "pack_manifest",
+    ):
+        path = f"{root}/{table}"
+        df, n_jobs = jobs_in_group(
+            sc, "state_reads", lambda: read_parquet(spark, path)
+        )
+        assert n_jobs == 0, (table, n_jobs)
+        assert df.schema == spark.read.parquet(path).schema, table
+
+
 def test_stage_counts_monotone(prep_out):
     _, c = prep_out
     assert (

@@ -14,6 +14,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from yahoofinancedatalake_spark.schemas import TESTDATA_TABLES
+from yahoofinancedatalake_spark.sources.parquet_io import read_parquet
 
 
 @dataclass(frozen=True)
@@ -35,47 +36,22 @@ class LakeCatalog:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver synthetic table, its schema taken from the footer.
-
-    The schema is read from the footer on the driver with pyarrow (the
-    path may be one file or a Spark-written directory) and handed to
-    the reader, so building the frame runs no Spark job. Without it,
-    Spark's parquet schema inference launches a merge-schemas job on
-    every read, a large share of a small drill-down's time.
+    """Read one driver synthetic table, its schema taken from the footer
+    (:func:`~yahoofinancedatalake_spark.sources.parquet_io.read_parquet`:
+    building the frame runs no Spark job).
 
     The driver's parquet carries ``timestamp[us]`` with
     ``isAdjustedToUTC=false``, which Spark 4 would infer as
     TIMESTAMP_NTZ. Batch plans tolerate NTZ, but event-time streaming
     does not (``withWatermark`` → EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE),
-    and the engine's single timestamp truth is session-TZ=UTC
-    TimestampType. So every zone-less timestamp column is read as
-    TimestampType: under a UTC session the wall-clock values are
-    unchanged, and DuckDB (which has no NTZ/LTZ split for these files)
-    sees identical instants. Older drivers wrote TIMESTAMP(NANOS),
-    which Spark cannot read as a timestamp (PARQUET_TYPE_ILLEGAL):
-    such a column is read as its int64 and truncated to micros,
-    matching DuckDB's own nanos→micros truncation.
+    so the reader maps it to TimestampType; DuckDB (which has no
+    NTZ/LTZ split for these files) sees identical instants. Older
+    drivers wrote TIMESTAMP(NANOS), read as micros, matching DuckDB's
+    own nanos→micros truncation.
     """
     if name not in TESTDATA_TABLES:
         raise KeyError(f"unknown test table {name!r}; have {TESTDATA_TABLES}")
-    import pyarrow as pa  # noqa: PLC0415
-    import pyarrow.parquet as pq  # noqa: PLC0415
-    from pyspark.sql import functions as F  # noqa: PLC0415
-    from pyspark.sql.pandas.types import from_arrow_schema  # noqa: PLC0415
-
-    path = f"{sf_dir}/{name}.parquet"
-    arrow = pq.ParquetDataset(path).schema
-    nanos = [
-        f.name for f in arrow
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    ]
-    for c in nanos:
-        i = arrow.get_field_index(c)
-        arrow = arrow.set(i, arrow.field(i).with_type(pa.int64()))
-    df = spark.read.schema(from_arrow_schema(arrow)).parquet(path)
-    for c in nanos:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:

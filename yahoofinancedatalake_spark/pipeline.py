@@ -32,6 +32,7 @@ by article id (:159), ``predictions`` is a full refresh (:199-201).
 from __future__ import annotations
 
 import argparse
+import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -54,6 +55,7 @@ from yahoofinancedatalake_spark.sources.json_source import (
     write_jsonl_partitioned,
 )
 from yahoofinancedatalake_spark.sources.parquet_io import (
+    read_parquet,
     upsert_by_partition,
     upsert_rows,
     write_parquet,
@@ -85,7 +87,15 @@ class Pipeline:
 
     def ingest(self, ingest_date: str) -> dict[str, int]:
         """Drive the replay sources and land date-partitioned bronze
-        JSONL (S9, yahoo_stocks.py:68-81 layout → hive partitions)."""
+        JSONL (S9, yahoo_stocks.py:68-81 layout → hive partitions).
+
+        The fetched rows reach Spark as one Arrow table per source: a
+        list of dicts would be reserialized through a Python ``map``,
+        one Python task per input partition, while an Arrow table is
+        read by the JVM directly, so ingest starts no Python worker."""
+        import pyarrow as pa  # noqa: PLC0415
+        from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
         spark = self.spark
         stocks = _load_jsonl(Path(self.fixtures) / "stocks.jsonl")
         stocks = [r for r in stocks if r["symbol"] in self.symbols]
@@ -103,11 +113,22 @@ class Pipeline:
             ("company_info", company, COMPANY_RAW),
             ("news", news, NEWS_RAW),
         ):
-            df = spark.createDataFrame(rows, schema).withColumn(
+            out[name] = len(rows)
+            if not rows:
+                # Spark lands no partition for no rows, and format would
+                # then read a missing path: land the day empty instead,
+                # replacing whatever an earlier ingest of it landed
+                day = Path(
+                    self.cat.path("bronze", name), f"ingest_date={ingest_date}"
+                )
+                shutil.rmtree(day, ignore_errors=True)
+                day.mkdir(parents=True)
+                continue
+            table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+            df = spark.createDataFrame(table, schema).withColumn(
                 "ingest_date", F.lit(ingest_date)
             )
             write_jsonl_partitioned(df, self.cat.path("bronze", name))
-            out[name] = len(rows)
         return out
 
     # -- format (DAG: format_data, format_to_parquet.py) ----------------
@@ -207,9 +228,9 @@ class Pipeline:
         )
 
         spark = self.spark
-        stocks = spark.read.parquet(self.cat.path("silver", "stocks"))
-        company = spark.read.parquet(self.cat.path("silver", "company_info"))
-        news = spark.read.parquet(self.cat.path("silver", "news"))
+        stocks = read_parquet(spark, self.cat.path("silver", "stocks"))
+        company = read_parquet(spark, self.cat.path("silver", "company_info"))
+        news = read_parquet(spark, self.cat.path("silver", "news"))
         gold = combine(stocks, company, aggregate_news(news))
         observed, obs = observe_contract(
             gold, ["symbol", "date"], "gold_contract"
@@ -224,8 +245,8 @@ class Pipeline:
         """Gold close series + silver news sentiment → predictions
         (X2+J3, parallel across symbols via applyInPandas)."""
         spark = self.spark
-        gold = spark.read.parquet(self.cat.path("gold", "enriched_stocks"))
-        news = spark.read.parquet(self.cat.path("silver", "news"))
+        gold = read_parquet(spark, self.cat.path("gold", "enriched_stocks"))
+        news = read_parquet(spark, self.cat.path("silver", "news"))
         preds = forecast_predictions(
             gold.select("symbol", "date", "close"),
             daily_mean_sentiment(news),
@@ -241,18 +262,18 @@ class Pipeline:
         symbol_date`` analog), stock_news (dedup by id), predictions
         (full refresh)."""
         spark = self.spark
-        gold = spark.read.parquet(self.cat.path("gold", "enriched_stocks"))
+        gold = read_parquet(spark, self.cat.path("gold", "enriched_stocks"))
         upsert_by_partition(
             spark, gold, self.cat.path("serving", "stock_analysis"), "symbol"
         )
-        news = spark.read.parquet(self.cat.path("silver", "news"))
+        news = read_parquet(spark, self.cat.path("silver", "news"))
         upsert_by_partition(
             spark,
             news.dropDuplicates(["id"]),
             self.cat.path("serving", "stock_news"),
             "symbol",
         )
-        preds = spark.read.parquet(self.cat.path("gold", "predictions"))
+        preds = read_parquet(spark, self.cat.path("gold", "predictions"))
         write_parquet(preds, self.cat.path("serving", "predictions"))
 
     # -- the DAG edge list ----------------------------------------------
@@ -266,11 +287,11 @@ class Pipeline:
         self.predict()
         self.serve()
         spark = self.spark
-        counts["enriched_stocks"] = spark.read.parquet(
-            self.cat.path("gold", "enriched_stocks")
+        counts["enriched_stocks"] = read_parquet(
+            spark, self.cat.path("gold", "enriched_stocks")
         ).count()
-        counts["predictions"] = spark.read.parquet(
-            self.cat.path("gold", "predictions")
+        counts["predictions"] = read_parquet(
+            spark, self.cat.path("gold", "predictions")
         ).count()
         return counts
 
@@ -311,7 +332,7 @@ def main(argv: list[str] | None = None) -> None:
         )
 
         if args.incremental_batch:
-            batch = spark.read.parquet(args.incremental_batch)
+            batch = read_parquet(spark, args.incremental_batch)
             eval_set = load_table(
                 spark, args.sf_dir, "documents"
             ).filter(F.col("doc_id") % 37 == 0)

@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from yahoofinancedatalake_spark.session import boundary_scope, stage_boundary
 
 from yahoofinancedatalake_spark.catalog import fan_out, load_table
+from yahoofinancedatalake_spark.sources.parquet_io import read_parquet
 
 #: Quality gate thresholds (the text_quality query's length gate).
 MIN_TOKENS = 20
@@ -547,8 +548,8 @@ def _dedup_and_land(
         index = survivors = None
     else:
         verify_dedup_state(spark, root)
-        index = spark.read.parquet(f"{root}/band_index")
-        survivors = spark.read.parquet(f"{root}/dedup_survivors")
+        index = read_parquet(spark, f"{root}/band_index")
+        survivors = read_parquet(spark, f"{root}/dedup_survivors")
 
     held: list[DataFrame] = []  # persisted stage frames, released below
     try:
@@ -557,7 +558,7 @@ def _dedup_and_land(
         counts["quality_pass"] = gated.count()
         exact = exact_stage(gated)
         if survivors is not None:
-            history_fp = spark.read.parquet(f"{root}/fingerprints")
+            history_fp = read_parquet(spark, f"{root}/fingerprints")
             exact = (
                 fingerprint(exact)
                 .join(F.broadcast(history_fp.select("fingerprint")),
@@ -669,7 +670,7 @@ def run_prep(
 
     counts: dict[str, int] = {"input": docs.count()}
     _dedup_and_land(spark, root, docs, counts, None, fresh=True)
-    deduped = spark.read.parquet(f"{root}/dedup_survivors")
+    deduped = read_parquet(spark, f"{root}/dedup_survivors")
 
     held: list[DataFrame] = []  # persisted stage frames, released below
     try:
@@ -706,7 +707,7 @@ def run_prep(
 
     manifest = pack_chunks(chunks)
     manifest.write.mode("overwrite").parquet(f"{root}/pack_manifest")
-    counts["bins"] = spark.read.parquet(f"{root}/pack_manifest").count()
+    counts["bins"] = read_parquet(spark, f"{root}/pack_manifest").count()
     return counts
 
 

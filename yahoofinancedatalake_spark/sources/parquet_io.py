@@ -30,6 +30,45 @@ def write_parquet(
     writer.parquet(path)
 
 
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet file or directory with the schema of its footer.
+
+    pyarrow reads one data file's footer on the driver and the schema
+    is handed to the reader, so building the frame runs no Spark job;
+    without it, Spark's schema inference launches a merge-schemas job
+    on every read. Hive partition columns are not in the footer: Spark
+    discovers them from the directory listing, as it does without a
+    schema. A path with no data file is read without a schema, so
+    Spark raises as it would.
+
+    Every zone-less timestamp column is read as TimestampType, the
+    engine's single timestamp truth (Spark would infer TIMESTAMP_NTZ):
+    under the session's UTC time zone the wall-clock values are
+    unchanged. TIMESTAMP(NANOS), which Spark cannot read as a
+    timestamp (PARQUET_TYPE_ILLEGAL), is read as its int64 and
+    truncated to micros.
+    """
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.dataset as ds  # noqa: PLC0415
+    from pyspark.sql import functions as F  # noqa: PLC0415
+    from pyspark.sql.pandas.types import from_arrow_schema  # noqa: PLC0415
+
+    arrow = ds.dataset(path, format="parquet").schema
+    if not arrow.names:
+        return spark.read.parquet(path)
+    nanos = [
+        f.name for f in arrow
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
+    for c in nanos:
+        i = arrow.get_field_index(c)
+        arrow = arrow.set(i, arrow.field(i).with_type(pa.int64()))
+    df = spark.read.schema(from_arrow_schema(arrow)).parquet(path)
+    for c in nanos:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return df
+
+
 def upsert_by_partition(
     spark: SparkSession, df: DataFrame, path: str, partition_col: str
 ) -> None:
@@ -144,7 +183,7 @@ def upsert_rows(
     touched = [
         r[0] for r in df.select(partition_col).distinct().collect()
     ]
-    existing = spark.read.parquet(path).filter(
+    existing = read_parquet(spark, path).filter(
         F.col(partition_col).isin(touched)
     )
     survivors = existing.join(
