@@ -97,89 +97,3 @@ def company_df(spark):
     from yahoofinancedatalake_spark.schemas import COMPANY_RAW
 
     return spark.createDataFrame(rows, COMPANY_RAW)
-
-
-# ---------------------------------------------------------------------------
-# Suite tiering (r13, VERDICT r12 #7): the full suite (~1080 tests,
-# 25-45 min on this box) outgrew the driver's verify budget — the r12
-# driver capture ended mid-run with zero failures visible, an
-# incomplete gate. The driver-budget DEFAULT run deselects the tests
-# below (`addopts = -m "not slow"` in pyproject.toml) and completes
-# with an explicit "N passed, M deselected" count; the full suite
-# stays the builder's closing gate via `pytest tests/ -m ""`.
-#
-# Selection rule: the slowest measured tests (>= ~9 s each, ~13 min
-# total) whose SUBJECT stays covered in the fast tier — every heavy
-# composed-gate oracle replay deselected here is re-proven by the
-# driver's own oracle gate and tools/selfcheck.py, and each operator
-# family keeps at least one fast test (noted per entry in the r13
-# optimization log).
-_SLOW = {
-    "test_dedup.py::test_simhash_hamming_orders_similarity",
-    "test_aqe_skew.py::test_aqe_splits_skewed_join_partition",
-    "test_graph.py::test_prefix_length_integer_exact",
-    "test_graph.py::test_ppjoin_filters_lossless_on_skewed_lengths",
-    "test_graph.py::test_prefix_filter_is_lossless",
-    "test_query_pack.py::test_query_matches_oracle[incremental_prep_counts]",
-    "test_query_pack.py::test_query_matches_oracle[cluster_canonical_docs]",
-    "test_query_pack.py::test_query_matches_oracle[prep_stage_counts]",
-    "test_query_pack.py::test_query_matches_oracle[prep_stage_counts_paragraph]",
-    "test_query_pack.py::test_query_matches_oracle[dedup_clusters_star]",
-    "test_query_pack.py::test_query_matches_oracle[dedup_clusters]",
-    "test_query_pack.py::test_query_matches_oracle[stream_incremental_prep_batch_eq]",
-    "test_query_pack.py::test_query_matches_oracle[minhash_near_dup]",
-    "test_streaming.py::test_ttl_eviction_boundary_end_to_end",
-    "test_streaming.py::test_running_last_state_accumulates_across_restarts",
-    "test_streaming.py::test_stream_contingency_accumulates_across_restarts",
-    "test_dedup.py::test_mega_bucket_capped",
-    "test_dedup.py::test_minhash_lsh_finds_near_dup_not_far",
-    "test_prep.py::test_incremental_prep_matches_full_run",
-    "test_prep.py::test_incremental_refuses_half_landed_state",
-    "test_prep.py::test_seed_then_increment_counts_match_full",
-    "test_prep.py::test_zero_row_increment_crash_invalidates_seal",
-    "test_vader.py::test_expr_matches_python_twin_fuzz",
-    "test_selection.py::test_unimax_closed_form_equals_sequential_hypothesis",
-    "test_winnow.py::test_incremental_hybrid_probe_is_batch_local",
-    "test_parquet_io.py::test_upsert_rows_replaces_exactly_the_incoming_keys",
-    "test_parquet_io.py::test_upsert_rows_write_amplification_is_touched_partitions",
-    "test_pipeline.py::test_incremental_format_reads_only_new_partition_and_matches_full",
-    "test_plans.py::test_no_unexpected_expand[incremental_prep_counts]",
-    "test_plans.py::test_no_unexpected_expand[stream_incremental_prep_batch_eq]",
-    "test_plans.py::test_no_scale_killers_in_any_query[incremental_prep_counts]",
-    "test_plans.py::test_no_scale_killers_in_any_query[stream_incremental_prep_batch_eq]",
-    "test_plans.py::test_no_scale_killers_in_any_query[stream_hybrid_dedup_batch_eq]",
-    "test_streaming_sinks.py::test_stream_upsert_maintains_latest_row_per_key",
-}
-
-
-def pytest_collection_modifyitems(config, items):
-    """Mark the ``_SLOW`` tests, and fail collection on a stale entry.
-
-    An entry names a test (``file::name``, matching every
-    parametrization) or one parametrization (``file::name[param]``).
-    An entry is stale when its file was collected whole but no item
-    matched it — the test was renamed or deleted and the entry would
-    otherwise silently stop deselecting anything. Files selected by
-    node id (``pytest tests/f.py::test_x``) are not checked."""
-    matched: set[str] = set()
-    files: set[str] = set()
-    for item in items:
-        rel = item.nodeid.split("tests/")[-1]
-        files.add(rel.split("::")[0])
-        for key in (rel, rel.split("[")[0]):
-            if key in _SLOW:
-                item.add_marker(pytest.mark.slow)
-                matched.add(key)
-                break
-    partial = {
-        arg.split("::")[0].split("/")[-1] for arg in config.args if "::" in arg
-    }
-    stale = sorted(
-        e for e in _SLOW - matched
-        if e.split("::")[0] in files - partial
-    )
-    if stale:
-        raise pytest.UsageError(
-            "tests/conftest.py::_SLOW entries match no collected test "
-            f"(renamed or deleted?): {stale}"
-        )

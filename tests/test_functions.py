@@ -4,8 +4,10 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pandas as pd
 from pyspark.sql import functions as F
 
+from tests.sentiment_refs import _score_batch
 from yahoofinancedatalake_spark.functions.scalars import (
     business_days,
     daily_change_pct,
@@ -15,10 +17,7 @@ from yahoofinancedatalake_spark.functions.scalars import (
     iso_instant,
     sentiment_label,
 )
-from yahoofinancedatalake_spark.functions.sentiment import (
-    sentiment_score_expr,
-    sentiment_score_udf,
-)
+from yahoofinancedatalake_spark.functions.sentiment import sentiment_score_expr
 
 
 def test_dround_half_values(spark):
@@ -72,7 +71,7 @@ def test_sentiment_label_thresholds(spark):
     assert out == ["positive", "neutral", "negative", "neutral", "neutral"]
 
 
-def test_sentiment_expr_matches_udf(spark):
+def test_sentiment_expr_matches_python_twin(spark):
     texts = [
         ("great great win",),
         ("bad loss and fear of fraud",),
@@ -80,19 +79,17 @@ def test_sentiment_expr_matches_udf(spark):
         ("",),
         (None,),
         # punctuated: split() keeps empty tokens around separators —
-        # the expr must drop them or n is inflated vs the udf/oracle
+        # the expr must drop them or n is inflated vs the twin/oracle
         ("good a a a a a a a a a.",),
         ("Great!! Profit... (gain) -- win; really?",),
         ("...",),
         ("!?.,;",),
     ]
     df = spark.createDataFrame(texts, "t string")
-    rows = df.select(
-        sentiment_score_expr("t").alias("e"),
-        sentiment_score_udf("t").alias("u"),
-    ).collect()
-    for r in rows:
-        assert r.e == r.u  # JVM expression ≡ pandas_udf semantics
+    rows = df.select(sentiment_score_expr("t").alias("e")).collect()
+    twin = _score_batch(pd.Series([t for (t,) in texts]))
+    for r, u in zip(rows, twin):
+        assert r.e == u  # JVM expression ≡ Python twin semantics
     assert rows[0].e > 0.05
     assert rows[1].e < -0.05
     assert rows[2].e == 0.0

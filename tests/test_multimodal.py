@@ -147,18 +147,11 @@ def test_wav_feature_decoder_separates_frequencies():
 
 
 def test_bmp_decode_and_features():
-    from yahoofinancedatalake_spark.operators.multimodal import (
-        bmp_decode,
-        bmp_feature_decoder,
-    )
+    from yahoofinancedatalake_spark.operators.multimodal import bmp_decode
 
     px = bmp_decode(_make_bmp(5, 3, (200, 100, 50)))
     assert px.shape == (3, 5, 3)
     assert (px[0, 0] == [200, 100, 50]).all()
-    feats = bmp_feature_decoder(_make_bmp(5, 3, (200, 100, 50)), "bmp")
-    assert feats[0] == 5.0 and feats[1] == 3.0
-    assert feats[2] == 200.0 and feats[3] == 100.0 and feats[4] == 50.0
-    assert feats[7] == 0.0  # uniform image → no edges
 
 
 def test_real_codecs_through_mapinpandas_pipeline(spark):
@@ -167,21 +160,16 @@ def test_real_codecs_through_mapinpandas_pipeline(spark):
     rows = [
         (1, "audio", bytearray(_make_wav(440.0)), "wav",
          None, None, None, 8000),
-        (2, "image", bytearray(_make_bmp(8, 4, (10, 20, 30))), "bmp",
-         8, 4, None, None),
     ]
     df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
     old = dict(mm._DECODERS)
     try:
         mm.register_decoder("audio", mm.wav_feature_decoder)
-        mm.register_decoder("image", mm.bmp_feature_decoder)
         out = {r.media_id: r for r in mm.extract_features(df).collect()}
     finally:
         mm._DECODERS.clear()
         mm._DECODERS.update(old)
     assert len(out[1].feature) == 12 and out[1].feature[1] == 8000.0
-    assert len(out[2].feature) == 8 and out[2].feature[0] == 8.0
-    assert out[2].feature[2] == 10.0
 
 
 def test_resize_nearest_exact_index_sampling():

@@ -140,95 +140,6 @@ def test_upsert_rows_write_amplification_is_touched_partitions(spark, tmp_path):
     assert before == after  # byte-identical file set, never rewritten
 
 
-def test_write_clustered_produces_disjoint_selective_row_groups(
-    spark, tmp_path
-):
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from yahoofinancedatalake_spark.sources.parquet_io import (
-        write_clustered,
-    )
-
-    df = spark.range(0, 10_000).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 97).alias("v"),
-    # write in shuffled order so clustering has real work to do
-    ).orderBy(F.md5(F.col("k").cast("string")))
-    out = str(tmp_path / "clustered")
-    write_clustered(df, out, ["k"], n_files=4)
-
-    files = sorted((tmp_path / "clustered").glob("*.parquet"))
-    assert len(files) == 4
-    ranges = []
-    for f in files:
-        md = pq.ParquetFile(str(f)).metadata
-        col0 = md.row_group(0).column(0)
-        assert col0.path_in_schema == "k"
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(0).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        ranges.append((min(mins), max(maxs)))
-    # files hold disjoint ranges (range partitioning) — a point/range
-    # filter on k prunes whole files via footer stats
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2
-    # and the union covers everything
-    assert ranges[0][0] == 0 and ranges[-1][1] == 9_999
-    # round-trips intact
-    assert spark.read.parquet(out).count() == 10_000
-
-
-def test_zorder_narrows_footer_stats_on_both_columns(spark, tmp_path):
-    """Linear clustering on x leaves y unpruned (every file spans the
-    full y range); z-order narrows BOTH columns' per-file ranges."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from yahoofinancedatalake_spark.sources.parquet_io import (
-        write_clustered,
-        write_zordered,
-    )
-
-    n = 50_000
-    df = spark.range(0, n).select(
-        (F.xxhash64(F.col("id")) % 1000).alias("x"),
-        (F.xxhash64(F.col("id") + 7) % 1000).alias("y"),
-    )
-
-    def per_file_spans(path, col_idx):
-        spans = []
-        for f in sorted(path.glob("*.parquet")):
-            md = pq.ParquetFile(str(f)).metadata
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            spans.append(max(maxs) - min(mins))
-        return spans
-
-    lin = tmp_path / "linear"
-    write_clustered(df, str(lin), ["x"], n_files=16)
-    zo = tmp_path / "zorder"
-    write_zordered(df, str(zo), ["x", "y"], n_files=16)
-
-    full = 2000  # x/y span ~[-1000, 1000)
-    lin_y = per_file_spans(lin, 1)
-    zo_x = per_file_spans(zo, 0)
-    zo_y = per_file_spans(zo, 1)
-    # linear-on-x: y is unclustered — files span ~the whole y range
-    assert sum(lin_y) / len(lin_y) > 0.8 * full
-    # z-order: BOTH columns' average per-file span shrinks
-    assert sum(zo_x) / len(zo_x) < 0.6 * full
-    assert sum(zo_y) / len(zo_y) < 0.6 * full
-    # layout-only: the rows themselves round-trip intact
-    assert spark.read.parquet(str(zo)).count() == n
-
-
 def test_schema_evolution_merge_read(spark, tmp_path):
     from pyspark.sql import functions as F
 

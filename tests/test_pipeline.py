@@ -93,6 +93,41 @@ def test_day_without_news_lands_an_empty_partition(spark, tmp_path):
     quiet.format("2024-04-01")
 
 
+def test_lake_whose_first_day_has_no_news_matches_full_recompute(
+    spark, tmp_path
+):
+    """A lake whose first day fetches no news finishes that day and a
+    later day that has news, and after each day its gold, serving and
+    predictions tables equal a full recompute over the same bronze.
+    (The fixture's GOOGL news is all from 2024 and WMT has none, so the
+    2023 window is empty.)"""
+    from yahoofinancedatalake_spark.sources.parquet_io import read_parquet
+
+    symbols = ["GOOGL", "WMT"]
+    daily = Pipeline(spark, str(tmp_path / "daily"), symbols=symbols)
+    full = Pipeline(spark, str(tmp_path / "full"), symbols=symbols)
+    for day, has_news in (("2023-01-31", False), ("2024-04-01", True)):
+        assert (daily.run(day)["news"] > 0) == has_news
+        full.ingest(day)
+        full.format(None)
+        full.combine()
+        full.predict()
+        full.serve()
+        for layer, table in (
+            ("gold", "enriched_stocks"),
+            ("gold", "predictions"),
+            ("serving", "stock_analysis"),
+            ("serving", "stock_news"),
+            ("serving", "predictions"),
+        ):
+            got, want = (
+                read_parquet(spark, p.cat.path(layer, table))
+                for p in (daily, full)
+            )
+            assert got.schema == want.schema, (day, table)
+            assert sorted(got.collect()) == sorted(want.collect()), (day, table)
+
+
 def test_lake_reads_run_no_job_and_keep_the_inferred_schema(spark, lake):
     """The stages read every silver, gold and serving table with its
     footer schema: building the frame runs no Spark job, and the

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from yahoofinancedatalake_spark.operators.quality import (
     check,
     in_range,
-    matches,
     not_null,
     one_of,
 )
@@ -16,12 +15,12 @@ from yahoofinancedatalake_spark.sources.parquet_io import compact_parquet
 
 def test_check_counts_planted_violations(spark):
     rows = [
-        (1, 5.0, "A", "x1"),
-        (2, None, "B", "x2"),     # null price, bad flag
-        (None, -1.0, "A", "y3"),  # null id, negative price, bad code
-        (4, 200.0, "A", "x4"),    # price out of range
+        (1, 5.0, "A"),
+        (2, None, "B"),     # null price, bad flag
+        (None, -1.0, "A"),  # null id, negative price
+        (4, 200.0, "A"),    # price out of range
     ]
-    df = spark.createDataFrame(rows, "id long, price double, flag string, code string")
+    df = spark.createDataFrame(rows, "id long, price double, flag string")
     out = {
         r.rule: (r.n_rows, r.n_violations, r.violation_rate)
         for r in check(
@@ -30,14 +29,12 @@ def test_check_counts_planted_violations(spark):
                 not_null("id"),
                 in_range("price", 0.0, 100.0),
                 one_of("flag", ["A"]),
-                matches("code", "^x[0-9]$"),
             ],
         ).collect()
     }
     assert out["not_null_id"] == (4, 1, 0.25)
     assert out["range_price"] == (4, 3, 0.75)  # null, negative, 200
     assert out["one_of_flag"] == (4, 1, 0.25)
-    assert out["matches_code"] == (4, 1, 0.25)
     # one aggregation pass: the plan has exactly one aggregate pair
     plan = check(df, [not_null("id")])._jdf.queryExecution().executedPlan().toString()
     assert plan.count("HashAggregate") <= 2  # partial + final, one scan

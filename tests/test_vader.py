@@ -1,12 +1,12 @@
 """VADER rule-engine tests (functions/vader.py).
 
-Pins (a) expr == Python twin == pandas_udf on crafted rule-path cases
-and on the real documents table, and (b) each published VADER rule's
-directional behavior (Hutto & Gilbert 2014): boosters, dampeners,
-negation incl. contractions and double negation, 'never so' / 'without
-doubt' / 'at least' specials, ALL-CAPS emphasis under cap-mix,
-but-clause reweighting, punctuation amplification with caps, and the
-alpha=15 normalization bounds.
+Pins (a) expr == the plain-Python twin (``tests/sentiment_refs.py``)
+on crafted rule-path cases and on the real documents table, and (b)
+each published VADER rule's directional behavior (Hutto & Gilbert
+2014): boosters, dampeners, negation incl. contractions and double
+negation, 'never so' / 'without doubt' / 'at least' specials, ALL-CAPS
+emphasis under cap-mix, but-clause reweighting, punctuation
+amplification with caps, and the alpha=15 normalization bounds.
 """
 
 from __future__ import annotations
@@ -14,9 +14,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.sentiment_refs import _compound_py
 from yahoofinancedatalake_spark.functions.vader import (
-    _compound_py,
-    vader_compound_udf,
     vader_label,
     with_vader_compound,
 )
@@ -66,77 +65,73 @@ def scores(spark):
     )
     rows = (
         with_vader_compound(df, "text", compound_col="c")
-        .withColumn("u", vader_compound_udf("text"))
-        .select("id", "c", "u")
+        .select("id", "c")
         .collect()
     )
-    return {CASES[r["id"]]: (r["c"], r["u"]) for r in rows}
+    return {CASES[r["id"]]: r["c"] for r in rows}
 
 
-def test_expr_matches_python_twin_and_udf(scores):
+def test_expr_matches_python_twin(scores):
     for text in CASES:
-        c, u = scores[text]
-        py = _compound_py(text)
-        assert c == pytest.approx(py, abs=1e-12), text
-        assert u == pytest.approx(py, abs=1e-12), text
+        assert scores[text] == pytest.approx(_compound_py(text), abs=1e-12), text
 
 
 def test_lexicon_hit_is_vader_normalized(scores):
     # good = 1.9 on the VADER scale -> 1.9 / sqrt(1.9^2 + 15) = 0.4404,
     # the published compound for a bare positive unigram sentence.
-    assert scores["good"][0] == pytest.approx(0.4404)
+    assert scores["good"] == pytest.approx(0.4404)
 
 
 def test_booster_and_dampener(scores):
-    assert scores["very good"][0] > scores["good"][0]
-    assert 0 < scores["slightly good"][0] < scores["good"][0]
+    assert scores["very good"] > scores["good"]
+    assert 0 < scores["slightly good"] < scores["good"]
 
 
 def test_negation(scores):
-    assert scores["not good"][0] < 0
-    assert scores["not not good"][0] > 0  # double negation re-flips
-    assert scores["isn't good"][0] < 0  # n't contraction
-    assert scores["can't fail"][0] > 0  # negated negative
-    assert scores["stocks didn't gain"][0] < 0  # n't before a lexicon word
+    assert scores["not good"] < 0
+    assert scores["not not good"] > 0  # double negation re-flips
+    assert scores["isn't good"] < 0  # n't contraction
+    assert scores["can't fail"] > 0  # negated negative
+    assert scores["stocks didn't gain"] < 0  # n't before a lexicon word
     # no stemming, faithful to VADER: 'profits'/'grow' miss the lexicon
-    assert scores["profits don't grow"][0] == 0.0
+    assert scores["profits don't grow"] == 0.0
 
 
 def test_never_without_least_specials(scores):
-    assert scores["never good"][0] < 0
-    assert scores["never so good"][0] > scores["good"][0]  # x1.25 intensifier
-    assert scores["never this bad"][0] < scores["bad"][0]
-    assert scores["without doubt great"][0] > 0  # no negation
-    assert scores["without great"][0] < 0  # plain 'without' negates
-    assert scores["at least good"][0] > 0  # 'at least' protected
-    assert scores["least good"][0] < 0
+    assert scores["never good"] < 0
+    assert scores["never so good"] > scores["good"]  # x1.25 intensifier
+    assert scores["never this bad"] < scores["bad"]
+    assert scores["without doubt great"] > 0  # no negation
+    assert scores["without great"] < 0  # plain 'without' negates
+    assert scores["at least good"] > 0  # 'at least' protected
+    assert scores["least good"] < 0
 
 
 def test_caps_emphasis_requires_cap_mix(scores):
-    assert scores["GOOD day"][0] > scores["good day"][0]
+    assert scores["GOOD day"] > scores["good day"]
     # all-caps doc: no cap differential -> no emphasis
-    assert scores["GOOD DAY"][0] == scores["good day"][0]
+    assert scores["GOOD DAY"] == scores["good day"]
 
 
 def test_but_clause(scores):
     # after-but clause dominates (x1.5 vs x0.5)
-    assert scores["good but bad"][0] < 0
-    assert scores["bad but good"][0] > 0
+    assert scores["good but bad"] < 0
+    assert scores["bad but good"] > 0
 
 
 def test_punctuation_amplification(scores):
-    assert scores["good!"][0] > scores["good"][0]
-    assert scores["good!!!!"][0] == scores["good!!!!!"][0]  # capped at 4
-    assert scores["bad??"][0] < scores["bad"][0]  # amplifies negative
+    assert scores["good!"] > scores["good"]
+    assert scores["good!!!!"] == scores["good!!!!!"]  # capped at 4
+    assert scores["bad??"] < scores["bad"]  # amplifies negative
 
 
 def test_null_and_empty(scores):
-    assert scores[None][0] == 0.0
-    assert scores[""][0] == 0.0
+    assert scores[None] == 0.0
+    assert scores[""] == 0.0
 
 
 def test_normalization_bounds(scores):
-    big = scores[" ".join(["great"] * 200)][0]
+    big = scores[" ".join(["great"] * 200)]
     assert 0.99 <= big <= 1.0
 
 
@@ -146,13 +141,12 @@ def test_matches_twin_on_documents(spark):
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").limit(200)
     rows = (
         with_vader_compound(docs, "text", compound_col="c")
-        .withColumn("u", vader_compound_udf("text"))
-        .select("c", "u")
+        .select("text", "c")
         .collect()
     )
     assert rows
     for r in rows:
-        assert r["c"] == pytest.approx(r["u"], abs=1e-12)
+        assert r["c"] == pytest.approx(_compound_py(r["text"]), abs=1e-12)
 
 
 def test_label_thresholds(spark):
@@ -265,26 +259,23 @@ def test_idiom_rule_paths(spark):
     )
     rows = (
         with_vader_compound(df, "text", compound_col="c")
-        .withColumn("u", vader_compound_udf("text"))
-        .select("id", "c", "u")
+        .select("id", "c")
         .collect()
     )
-    got = {IDIOM_CASES[r["id"]]: (r["c"], r["u"]) for r in rows}
-    for text, (c, u) in got.items():
-        py = _compound_py(text)
-        assert c == pytest.approx(py, abs=1e-12), text
-        assert u == pytest.approx(py, abs=1e-12), text
-    assert got["the project is the bomb"][0] > 0.5  # valence 3.0
+    got = {IDIOM_CASES[r["id"]]: r["c"] for r in rows}
+    for text, c in got.items():
+        assert c == pytest.approx(_compound_py(text), abs=1e-12), text
+    assert got["the project is the bomb"] > 0.5  # valence 3.0
     # caps'd idiom gets C_INCR under cap-mix: 3.0 + 0.733
-    assert got["THE BOMB indeed"][0] > got["the project is the bomb"][0]
-    assert got["a kiss of death for the deal"][0] < 0  # valence -1.5
-    assert got["yeah right that will work"][0] < 0  # valence -2.0
+    assert got["THE BOMB indeed"] > got["the project is the bomb"]
+    assert got["a kiss of death for the deal"] < 0  # valence -1.5
+    assert got["yeah right that will work"] < 0  # valence -2.0
     # dampener idiom: weaker than bare 'good' but still positive
     bare = _compound_py("this is good")
-    assert 0 < got["this is kind of good"][0] < bare
-    assert got["sort of bad really"][0] > _compound_py("bad really")
-    assert got["to die for"][0] > 0.5  # valence 3.0
-    assert got["mankind of sorts"][0] == 0.0
+    assert 0 < got["this is kind of good"] < bare
+    assert got["sort of bad really"] > _compound_py("bad really")
+    assert got["to die for"] > 0.5  # valence 3.0
+    assert got["mankind of sorts"] == 0.0
 
 
 # ---------------------------------------------------------------------------
@@ -321,8 +312,8 @@ def test_lexicon_loader_and_swap(tmp_path, spark):
     old = V.set_lexicon(lex)
     try:
         # swapped-in word scores; dropped built-in word goes neutral
-        assert V._compound_py("gloomy") < 0
-        assert V._compound_py("good") == 0.0
+        assert _compound_py("gloomy") < 0
+        assert _compound_py("good") == 0.0
         # SPECIAL-CASE idiom precedence survives the swap, as in
         # vaderSentiment (file said 0.1; idiom table says 1.5)
         assert V.VADER_LEXICON["badass"] == 1.5
@@ -337,11 +328,11 @@ def test_lexicon_loader_and_swap(tmp_path, spark):
             .collect()
         }
         for text, c in got.items():
-            assert c == pytest.approx(V._compound_py(text), abs=1e-12)
-        assert got["very gloomy"] < V._compound_py("gloomy") < 0
+            assert c == pytest.approx(_compound_py(text), abs=1e-12)
+        assert got["very gloomy"] < _compound_py("gloomy") < 0
     finally:
         V.set_lexicon(old)
-    assert V._compound_py("good") > 0  # restored
+    assert _compound_py("good") > 0  # restored
 
 
 def test_lexicon_autoload_env(tmp_path, monkeypatch):

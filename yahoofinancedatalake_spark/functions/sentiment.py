@@ -7,23 +7,16 @@ deterministic lexicon scorer with the same *interface contract*:
 ``score ∈ [-1, 1]`` rounded to 4 decimals (finnhub_news.py:49) and
 the ±0.05 label thresholds (finnhub_news.py:41-46).
 
-Two implementations of the same semantics:
-
-- :func:`sentiment_score_expr` — pure Column expression (token
-  filter + count). Stays JVM-side in whole-stage codegen; this is
-  the 100 TB path and is SQL-oracle-checkable.
-- :func:`sentiment_score_udf` — Arrow-batched ``pandas_udf`` with
-  the identical lexicon, demonstrating the X1 integration shape so a
-  real VADER (or any Python model) can be dropped in: swap the
-  ``_score_batch`` body, broadcast the lexicon.
+The scorer is :func:`sentiment_score_expr`, a pure Column expression
+(token filter + count). It stays JVM-side in whole-stage codegen; this
+is the 100 TB path and is SQL-oracle-checkable. The tests pin it
+against a plain-Python twin (``tests/sentiment_refs.py``).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Deterministic mini-lexicon (public-domain word lists). Scoring:
 # score = clip((pos_hits - neg_hits) / max(n_tokens, 1) * SCALE, -1, 1)
@@ -38,9 +31,6 @@ NEGATIVE_WORDS = (
     "worst sad hate slow big hard"
 ).split()
 SCALE = 5.0
-
-_POS = set(POSITIVE_WORDS)
-_NEG = set(NEGATIVE_WORDS)
 
 
 def _tokens(col: Column) -> Column:
@@ -64,30 +54,3 @@ def sentiment_score_expr(text: Column | str) -> Column:
     n = F.greatest(F.size(toks), F.lit(1))
     raw = (pos - neg).cast("double") / n * SCALE
     return dround(F.greatest(F.lit(-1.0), F.least(F.lit(1.0), raw)), 4)
-
-
-def _score_batch(texts: pd.Series) -> pd.Series:
-    """Vectorized Python scorer — same semantics as the expression."""
-    import math  # noqa: PLC0415
-    import re  # noqa: PLC0415
-
-    split = re.compile(r"[^a-z0-9']+")
-
-    def score(t: str | None) -> float:
-        if t is None:
-            t = ""
-        toks = [w for w in split.split(t.strip().lower()) if w]
-        n = max(len(toks), 1)
-        raw = (
-            sum(w in _POS for w in toks) - sum(w in _NEG for w in toks)
-        ) / n * SCALE
-        clipped = max(-1.0, min(1.0, raw))
-        return math.floor(clipped * 10000.0 + 0.5) / 10000.0  # dround(x, 4)
-
-    return texts.map(score)
-
-
-@F.pandas_udf(T.DoubleType())
-def sentiment_score_udf(texts: pd.Series) -> pd.Series:
-    """X1 as an Arrow-batched Pandas UDF (the VADER drop-in point)."""
-    return _score_batch(texts)

@@ -26,6 +26,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from yahoofinancedatalake_spark.functions.scalars import (
+    daily_change_pct,
+    daily_range,
+)
+
 
 def format_stocks(raw: DataFrame) -> DataFrame:
     """Bronze stocks → silver: explicit casts + UTC parse + date type.
@@ -181,22 +186,16 @@ def combine(
     plan independent of statistics — at 100 TB the fact side must
     never become the build side).
 
-    Derived metrics (combine_sources.py:94-98, README.md:157):
-    ``daily_range = high - low``;
-    ``daily_change_pct = (close - open) / open * 100``.
+    Derived metrics (combine_sources.py:94-98, README.md:157) are the
+    F7 scalars :func:`~yahoofinancedatalake_spark.functions.scalars.daily_range`
+    and :func:`~yahoofinancedatalake_spark.functions.scalars.daily_change_pct`.
     """
     dim = company.select("symbol", "name", "sector", "industry", "market_cap")
     enriched = (
         stocks.join(F.broadcast(dim), "symbol", "left")
         .join(F.broadcast(news_agg), "symbol", "left")
-        .withColumn("daily_range", F.col("high") - F.col("low"))
-        .withColumn(
-            "daily_change_pct",
-            F.when(
-                F.col("open") != 0,
-                (F.col("close") - F.col("open")) / F.col("open") * 100.0,
-            ),
-        )
+        .withColumn("daily_range", daily_range())
+        .withColumn("daily_change_pct", daily_change_pct())
     )
     return enriched.select(
         "symbol",

@@ -7,11 +7,11 @@ stages. The Spark-side plumbing here — schemas, ``mapInPandas``
 pipelines, batch shapes, partition sizing — is real and tested. The
 codec registry (:func:`register_decoder`) raises loudly for formats
 needing external libraries (the container ships no Pillow/soundfile/
-pyav), but two stdlib-only codecs decode for REAL — PCM WAV
-(:func:`wav_feature_decoder`) and uncompressed 24-bit BMP
-(:func:`bmp_feature_decoder`) — so the pipeline is exercised
-end-to-end on genuine media bytes; a deterministic fake decoder backs
-the batch-shape tests besides.
+pyav), but a stdlib-only PCM WAV codec (:func:`wav_feature_decoder`)
+decodes for REAL, so the pipeline is exercised end-to-end on genuine
+media bytes; uncompressed 24-bit BMP pixels decode with
+:func:`bmp_decode`, and a deterministic fake decoder backs the
+batch-shape tests besides.
 
 Design rules for the hot path:
 
@@ -310,22 +310,3 @@ def resize_nearest(px: np.ndarray, max_side: int) -> np.ndarray:
     rows = (np.arange(nh) * h // nh).astype(np.int64)
     cols = (np.arange(nw) * w // nw).astype(np.int64)
     return px[rows][:, cols]
-
-
-def bmp_feature_decoder(payload: bytes, fmt: str) -> np.ndarray:
-    """Image Decoder: 24-bit BMP → 8-dim feature vector
-    [width, height, mean_r, mean_g, mean_b, luma_mean, luma_std,
-    edge_energy (mean abs horizontal gradient of luma)]."""
-    if fmt != "bmp":
-        raise NotImplementedError(
-            f"image format {fmt!r}: register a Pillow decoder"
-        )
-    px = bmp_decode(payload).astype(np.float64)
-    h, w = px.shape[:2]
-    luma = 0.2126 * px[..., 0] + 0.7152 * px[..., 1] + 0.0722 * px[..., 2]
-    edge = float(np.abs(np.diff(luma, axis=1)).mean()) if w > 1 else 0.0
-    return np.array(
-        [float(w), float(h), float(px[..., 0].mean()),
-         float(px[..., 1].mean()), float(px[..., 2].mean()),
-         float(luma.mean()), float(luma.std()), edge]
-    )

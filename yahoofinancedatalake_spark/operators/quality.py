@@ -38,11 +38,6 @@ def in_range(col: str, lo, hi) -> Rule:
     return Rule(f"range_{col}", c.isNotNull() & (c >= lo) & (c <= hi))
 
 
-def matches(col: str, pattern: str) -> Rule:
-    c = F.col(col)
-    return Rule(f"matches_{col}", c.isNotNull() & c.rlike(pattern))
-
-
 def one_of(col: str, values: list) -> Rule:
     c = F.col(col)
     return Rule(f"one_of_{col}", c.isNotNull() & c.isin(values))

@@ -18,9 +18,9 @@ Vector math on the *bulk* paths (hyperplane signatures, candidate
 cosine verify, IVF assignment) runs as Arrow-batched numpy
 ``pandas_udf`` matmuls — Spark's array higher-order functions
 evaluate interpreted (no codegen), which loses by ~10-100x on wide
-vectors. The HOF forms (:func:`dot`, :func:`l2_norm`,
-:func:`cosine`) are kept for the broadcast brute-force baseline and
-per-candidate use, where they stay off the hot path.
+vectors. The HOF forms (:func:`dot`, :func:`l2_norm`) are kept for
+the broadcast brute-force baseline and per-candidate use, where they
+stay off the hot path.
 """
 
 from __future__ import annotations
@@ -147,14 +147,6 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; null (not DIVIDE_BY_ZERO — ANSI mode is on
-    by default in Spark 4) when either vector has zero norm. A null
-    cosine fails every threshold filter and sorts last in top-k."""
-    da, db = _as_double(a), _as_double(b)
-    return dot(da, db) / F.nullif(l2_norm(da) * l2_norm(db), F.lit(0.0))
-
-
 def brute_force_cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -262,8 +254,8 @@ def band_values(
 def pair_cosine(a: Column, b: Column, round_to: int | None = 4) -> Column:
     """Exact cosine for candidate *pairs*, vectorized: one Arrow batch
     → row-wise einsum + norms in numpy (the verify step after LSH/IVF
-    blocking — runs on candidates only). Null on zero-norm inputs,
-    matching :func:`cosine`."""
+    blocking — runs on candidates only). Null on zero-norm inputs, so
+    such a pair fails every threshold filter and sorts last in top-k."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
@@ -648,35 +640,6 @@ def train_pq_codebooks(
     return books
 
 
-def _pq_encode_udf(codebooks: "list[list[list[float]]]"):
-    """Vectorized PQ encoder: per subspace, argmin L2 distance to the
-    (tiny, closure-captured) codebook. One matmul-sized numpy op per
-    Arrow batch; output is ``m`` small ints — the 4-8 byte compressed
-    representation that replaces the 256-byte float vector in every
-    downstream scan and shuffle."""
-    import numpy as np  # noqa: PLC0415
-    import pandas as pd  # noqa: PLC0415
-    from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
-
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    dsub = books[0].shape[1]
-
-    def encode(batch):
-        x = np.asarray(batch.tolist(), dtype=np.float64)
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for s in range(m):
-            xs = x[:, s * dsub : (s + 1) * dsub]
-            # ||xs - c||² = ||xs||² - 2 xs·c + ||c||²; ||xs||² constant
-            # per row → argmin over (-2 xs·c + ||c||²), one matmul
-            d2 = -2.0 * (xs @ books[s].T) + (books[s] ** 2).sum(1)[None, :]
-            codes[:, s] = d2.argmin(1)
-        return pd.Series(list(codes))
-
-    encode.__annotations__ = {"batch": pd.Series, "return": pd.Series}
-    return pandas_udf(encode, "array<int>")
-
-
 def pq_cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -780,9 +743,9 @@ def pq_cosine_topk(
             if not len(pdf):
                 continue
             ids = pdf[id_col].to_numpy()
-            # inline PQ encode (was a separate ArrowEvalPython stage):
-            # per subspace, argmin ||xs - c||² via the one-matmul
-            # expansion — bit-identical to _pq_encode_udf
+            # PQ encode: per subspace, argmin ||xs - c||² via the
+            # one-matmul expansion ||xs||² - 2 xs·c + ||c||², whose
+            # ||xs||² term is constant per row and dropped
             x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
             c = np.empty((len(x), m), dtype=np.int64)  # (n, m)
             for s in range(m):
@@ -1001,7 +964,7 @@ def ivfpq_cosine_topk(
             cand = (
                 probe_mask.astype(np.int32) @ row_mask.T.astype(np.int32)
             ) > 0  # (Q, n)
-            # PQ encode — same one-matmul expansion as _pq_encode_udf
+            # PQ encode — the same one-matmul expansion as pq_cosine_topk
             codes = np.empty((n, m), dtype=np.int64)
             for s in range(m):
                 xs = x[:, s * dsub : (s + 1) * dsub]

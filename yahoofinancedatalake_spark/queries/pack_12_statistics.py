@@ -638,11 +638,9 @@ def _zorder_oracle_sql() -> str:
 @_register(
     "zorder_layout",
     _zorder_oracle_sql(),
-    doc="Z-order data-layout audit — the oracle-gated effectiveness "
-    "measurement for the engine's Morton-curve writer "
-    "(sources/parquet_io.py write_zordered, which range-partitions "
-    "and locally sorts by the same interleave before landing "
-    "files): "
+    doc="Z-order data-layout audit — an oracle-gated measurement of "
+    "how well a Morton-curve file layout would prune, computed over "
+    "lineitem without landing any files: "
     "both probe dimensions are min/max-scaled onto a 16-bit grid "
     "(integer-exact arithmetic from a 1-row stats aggregate folded "
     "in via the data-derived constant-key broadcast join, never a "

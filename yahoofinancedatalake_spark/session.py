@@ -101,9 +101,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # Spark still defaults timestamp output to deprecated INT96,
         # which parquet writes WITHOUT column statistics — no footer
-        # min/max, no row-group pruning, no manifest skipping on any
-        # timestamp column. INT64 micros is the modern type every
-        # reader (pyarrow, DuckDB, Trino) stats-prunes.
+        # min/max and no row-group pruning on any timestamp column.
+        # INT64 micros is the modern type every reader (pyarrow,
+        # DuckDB, Trino) stats-prunes.
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
         # The whole-stage-codegen class cache defaults to 100 entries

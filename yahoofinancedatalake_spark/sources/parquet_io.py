@@ -12,9 +12,34 @@ Elasticsearch indices with keyed upserts (to_elasticsearch.py). Here:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+
+#: The Parquet summary file that holds a partitioned table's schema
+#: while the table has no rows. Spark and pyarrow list it as metadata,
+#: never as data.
+_SUMMARY = "_common_metadata"
+
+
+def _keep_schema(df: DataFrame, path: str, partition_by: Sequence[str]) -> None:
+    """A partitioned write of no rows lands no data file, so the table
+    would have no schema to read back. Write ``df``'s schema to the
+    table's summary file then, partition columns last (where Spark
+    puts them on read), for :func:`read_parquet`."""
+    import pyarrow.parquet as pq  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+    from pyspark.sql.types import StructType  # noqa: PLC0415
+
+    if any(Path(path).rglob("*.parquet")):  # stops at the first file
+        return
+    fields = [f for f in df.schema if f.name not in partition_by]
+    fields += [df.schema[c] for c in partition_by]
+    pq.write_metadata(
+        to_arrow_schema(StructType(fields)), os.path.join(path, _SUMMARY)
+    )
 
 
 def write_parquet(
@@ -28,6 +53,8 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+    if partition_by:
+        _keep_schema(df, path, partition_by)
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -38,8 +65,9 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     without it, Spark's schema inference launches a merge-schemas job
     on every read. Hive partition columns are not in the footer: Spark
     discovers them from the directory listing, as it does without a
-    schema. A path with no data file is read without a schema, so
-    Spark raises as it would.
+    schema. A table with no data file is read empty with the schema of
+    its summary file (see :func:`_keep_schema`); a path with neither is
+    read without a schema, so Spark raises as it would.
 
     Every zone-less timestamp column is read as TimestampType, the
     engine's single timestamp truth (Spark would infer TIMESTAMP_NTZ):
@@ -50,12 +78,16 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """
     import pyarrow as pa  # noqa: PLC0415
     import pyarrow.dataset as ds  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
     from pyspark.sql import functions as F  # noqa: PLC0415
     from pyspark.sql.pandas.types import from_arrow_schema  # noqa: PLC0415
 
     arrow = ds.dataset(path, format="parquet").schema
     if not arrow.names:
-        return spark.read.parquet(path)
+        summary = os.path.join(path, _SUMMARY)
+        if not os.path.isfile(summary):
+            return spark.read.parquet(path)
+        arrow = pq.read_schema(summary)
     nanos = [
         f.name for f in arrow
         if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
@@ -87,6 +119,7 @@ def upsert_by_partition(
         .partitionBy(partition_col)
         .parquet(path)
     )
+    _keep_schema(df, path, [partition_col])
 
 
 def compact_parquet(
@@ -213,97 +246,6 @@ def upsert_rows(
         swapped.append(name)
     fs.delete(spath, True)
     return sorted(swapped)
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: Sequence[str],
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Data-layout sink: range-partition then sort each file by
-    ``cluster_cols`` so parquet row-group min/max statistics become
-    selective — the plain-parquet version of Delta/Iceberg
-    ``CLUSTER BY`` (linear clustering; a Z-order curve generalizes
-    this to multi-column predicates).
-
-    Why it matters at 100 TB: a filter on the cluster column prunes
-    at THREE levels — partition files (each holds a disjoint range,
-    from ``repartitionByRange``), row groups inside each file
-    (min/max footer stats, from ``sortWithinPartitions``), and pages.
-    On unclustered data the same filter scans every file because each
-    one spans the full value range. The write costs one range
-    exchange (sampled boundaries) + a per-partition sort — both
-    spill-safe — and is the standard once-per-table investment for
-    scan-heavy workloads keyed by time/id.
-    """
-    out = df.repartitionByRange(
-        *( [n_files] if n_files else [] ), *cluster_cols
-    ).sortWithinPartitions(*cluster_cols)
-    out.write.mode(mode).parquet(path)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    n_files: int | None = None,
-    bits: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order (Morton-curve) clustered write: multi-column locality.
-
-    :func:`write_clustered` gives perfect pruning on ONE column and
-    none on the others; interleaving the bits of each column's
-    bin id makes files cover hyper-rectangles of the combined space,
-    so min/max footer stats prune on EVERY clustered column — the
-    Delta ``ZORDER BY`` / Iceberg sort-order idea on plain parquet.
-
-    Mechanics: each column is min/max-scaled into ``2^bits`` uniform
-    bins (one tiny 1-row agg to fetch the ranges — metadata, like a
-    table-stats pass; rank-based binning via approx quantiles is the
-    upgrade for heavily skewed columns), the bin ids' bits are
-    interleaved JVM-side into the Morton value, and the write range-
-    partitions + locally sorts by it. The z column is dropped from
-    the files.
-    """
-    from pyspark.sql import functions as F  # noqa: PLC0415
-
-    stats = df.agg(
-        *[F.min(c).cast("double").alias(f"__mn_{i}") for i, c in enumerate(cols)],
-        *[F.max(c).cast("double").alias(f"__mx_{i}") for i, c in enumerate(cols)],
-    ).collect()[0]
-    n_bins = (1 << bits) - 1
-    bin_cols = []
-    for i, c in enumerate(cols):
-        mn, mx = stats[f"__mn_{i}"], stats[f"__mx_{i}"]
-        span = (mx - mn) or 1.0
-        bin_cols.append(
-            F.least(
-                F.lit(n_bins),
-                F.floor(
-                    (F.col(c).cast("double") - F.lit(mn))
-                    / F.lit(span) * F.lit(n_bins + 1)
-                ).cast("int"),
-            )
-        )
-    # Morton interleave: output bit (b * n_cols + j) takes bit b of
-    # column j's bin id — a pure JVM bitwise expression, no UDF
-    z = F.lit(0).cast("long")
-    for b in range(bits):
-        for j, bc in enumerate(bin_cols):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(bc.cast("long"), b).bitwiseAND(F.lit(1)),
-                    b * len(cols) + j,
-                )
-            )
-    tagged = df.withColumn("__z", z)
-    out = tagged.repartitionByRange(
-        *( [n_files] if n_files else [] ), "__z"
-    ).sortWithinPartitions("__z").drop("__z")
-    out.write.mode(mode).parquet(path)
 
 
 def read_parquet_evolving(
